@@ -104,27 +104,10 @@ object Engine {
     * truncates the same way); TIMESTAMP without UTC adjustment arrives as
     * TIMESTAMP_NTZ and casts to the session-UTC timestamp, the same wall
     * clock DuckDB reads. */
-  /** Path → read schema of a WAREHOUSE INPUT ($dir/$name.parquet — the
-    * driver's read-only test data, immutable for a whole run): every
-    * fresh-session registration and cross-session query was re-paying a
-    * parquet footer-inference Spark job per table (10 per session
-    * recycle, 12 in one registry-persistence query); the first open's
-    * schema serves `spark.read.schema(...)` thereafter (guide §5 — a
-    * metadata constant should not cost a job per read). */
-  private val tableSchemas = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val p = s"$dir/$name.parquet"
-    val known = tableSchemas.get(p)
-    val df =
-      if (known != null) spark.read.schema(known).parquet(p)
-      else {
-        val d = spark.read.parquet(p)
-        tableSchemas.put(p, d.schema)
-        d
-      }
+    val df = spark.read.schema(operators.MetaCache.schema(spark, p)).parquet(p)
     if (name == "events") df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
@@ -142,16 +125,8 @@ object Engine {
     * pinned long schema). One footer probe, no data read. */
   def eventsTsMicrosExpr(spark: SparkSession, dir: String): String = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val p = s"$dir/events.parquet"
-    val known = tableSchemas.get(p)
-    val schema =
-      if (known != null) known
-      else {
-        val s = spark.read.parquet(p).schema
-        tableSchemas.put(p, s)
-        s
-      }
-    schema("ts").dataType match {
+    operators.MetaCache.schema(spark, s"$dir/events.parquet")("ts")
+      .dataType match {
       case org.apache.spark.sql.types.LongType => "ts DIV 1000"
       case _ => "ts"
     }

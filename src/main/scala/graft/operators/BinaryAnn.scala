@@ -205,8 +205,8 @@ object BinaryAnn {
     // pre-generation flat layout left by an older build at the same path
     fsOf(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
     encodeFull(corpus).write.parquet(s"$path/agen=0")
-    StoreRelCache.purge(path) // full rebuild
-    StoreRelCache.get(spark, path)
+    MetaCache.purge(path) // full rebuild
+    MetaCache.get(spark, path)
   }
 
   /** Train-free incremental ingest — the binary index's whole `add` step
@@ -232,7 +232,7 @@ object BinaryAnn {
   def addBatch(batch: DataFrame, path: String): Unit = {
     val g = nextGen(batch.sparkSession, path)
     encodeFull(batch).write.parquet(s"$path/agen=$g")
-    StoreRelCache.invalidate(path) // writer-invalidation contract
+    MetaCache.invalidate(path) // writer-invalidation contract
   }
 
   /** O(batch) delete — append the removed ids as a tombstone generation
@@ -249,17 +249,14 @@ object BinaryAnn {
     val g = nextGen(ids.sparkSession, path)
     // tombstones are bounded by delete volume since the last compaction —
     // one small file per batch, the IvfPq.removeIds discipline (and like
-    // it, small long-typed batches write that file driver-side via
-    // [[LocalParquet]] instead of paying a Spark job)
-    val localOk = ids.schema.head.dataType ==
-      org.apache.spark.sql.types.LongType
-    val local = if (localOk) ids.distinct().take(65537) else Array.empty[org.apache.spark.sql.Row]
-    if (localOk && local.length <= 65536 && !local.exists(_.isNullAt(0)))
+    // it, small batches write that file driver-side)
+    val distinctIds = ids.distinct()
+    LocalParquet.writeSmall(distinctIds) { local =>
       LocalParquet.writeFile(ids.sparkSession,
         s"$path/_tombstones/tgen=$g/part-${java.util.UUID.randomUUID()}.parquet",
         Seq("id" -> "long"), local.iterator.map(r => Seq[Any](r.getLong(0))))
-    else ids.distinct().coalesce(1).write.parquet(s"$path/_tombstones/tgen=$g")
-    StoreRelCache.invalidate(path)
+    } { distinctIds.coalesce(1).write.parquet(s"$path/_tombstones/tgen=$g") }
+    MetaCache.invalidate(path)
   }
 
   /** The live view of a store: every (id, code, qe, n2, agen) row not
@@ -270,11 +267,11 @@ object BinaryAnn {
     * partition metadata, zero bytes per row). */
   def openIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val idx = StoreRelCache.get(spark, path)
+    val idx = MetaCache.get(spark, path)
     val tp = s"$path/_tombstones"
     if (!fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(tp))) idx
     else {
-      val t = StoreRelCache.get(spark, tp)
+      val t = MetaCache.get(spark, tp)
         .select(col("id").as("_tid"), col("tgen"))
       idx.join(broadcast(t),
         idx("id") === col("_tid") && col("tgen") > idx("agen"), "left_anti")
@@ -285,9 +282,7 @@ object BinaryAnn {
     * store back to a single generation, after which probes pay zero mask
     * cost again. Purely physical: probe results are identical before and
     * after (spec-pinned). Crash-safe: the new store is fully written
-    * beside the old, then swapped by rename — a failure at any step
-    * leaves the old or the new index fully intact (the [[IvfPq
-    * .compactIndex]] / KV-handler generation discipline). */
+    * beside the old, then swapped in by [[Stores.publish]]. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     val fs = fsOf(spark, path)
@@ -297,25 +292,13 @@ object BinaryAnn {
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     openIndex(spark, path).select("id", "code", "qe", "n2")
       .write.parquet(s"$tmp/agen=0")
-    val live = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(s"${path}_old")
-    fs.delete(old, true) // stale leftover from a previous failed compaction
-    require(fs.rename(live, old),
-      s"compactIndex: rename $live -> $old failed; index left untouched")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), live)) {
-      fs.rename(old, live) // restore the original generation before failing
-      throw new IllegalStateException(
-        s"compactIndex: rename $tmp -> $live failed; original restored")
-    }
-    fs.delete(old, true)
-    StoreRelCache.invalidate(path) // whole store swapped
+    Stores.publish(fs, tmp, path) // whole store swapped
   }
 
   /** Search a [[buildIndex]] store: Hamming over the pruned (id, code)
     * read, exact rescore over an id-pushed fetch of shortlist rows only
-    * (InSet below the 65536 cap, broadcast-join fallback above — the
-    * [[IvfPq]] shortlist-fetch discipline). Tombstoned rows are masked
-    * BEFORE the shortlist heap (a dead row must not occupy a shortlist
+    * ([[Stores.fetchIds]]). Tombstoned rows are masked BEFORE the
+    * shortlist heap (a dead row must not occupy a shortlist
     * slot). Identical results to the one-shot [[hammingTopK]] over the
     * live rows by construction (shared stages, spec-asserted): the index
     * changes WHERE bytes are read, never a score. */
@@ -331,10 +314,7 @@ object BinaryAnn {
                              // the Hamming scan per branch
     // bounded-collect contract: |Q|×shortlist ids, like IvfPq's shortlist
     val ids = short.select("cid").distinct().as[Long].collect()
-    val fetched =
-      (if (ids.length <= 65536)
-        idx.filter(col("id").isin(ids.toSeq: _*))
-      else idx.join(broadcast(ids.toSeq.toDF("id")), "id"))
+    val fetched = Stores.fetchIds(idx, "id", ids)
         .localCheckpoint(true) // bounded (≤ |Q|×shortlist rows); eager, so
                                // the guard count and the rescore share ONE
                                // execution of the id-pruned store read

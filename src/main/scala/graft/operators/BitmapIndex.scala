@@ -75,25 +75,19 @@ object BitmapIndex {
       .reduce(_ unionByName _)
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dataPath/$INDEX_DIR")
-    // writer-invalidation: drop cached relations/schemas and probe memos
-    // for this sidecar (a rebuild may cover different columns)
-    StoreRelCache.purge(s"$dataPath/$INDEX_DIR")
-    probeTyp.keySet.removeIf(_._1 == dataPath)
+    // a rebuild may cover different columns: purge the sidecar's schema
+    // and probe memos with its relations
+    MetaCache.purge(s"$dataPath/$INDEX_DIR")
   }
 
-  /** (dataPath, column) → Some(typ) from the sidecar, or None when the
-    * column is not covered — a per-sidecar constant ([[BloomIndex]]'s
-    * probe-memo discipline: re-reading it per probe is a pure fixed-
-    * overhead Spark job); [[collect]] drops the memo on rewrite. */
-  private val probeTyp = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Option[String]]()
-
+  /** Some(typ) of `column` in the sidecar, or None when the column is not
+    * covered — a per-sidecar constant, read once per sidecar. */
   private def typOf(st: DataFrame, dataPath: String,
       column: String): Option[String] =
-    probeTyp.computeIfAbsent((dataPath, column), _ => {
+    MetaCache.memo(s"$dataPath/$INDEX_DIR", column) {
       val hd = st.select("typ").limit(1).collect()
       if (hd.isEmpty) None else Some(hd.head.getString(0))
-    })
+    }
 
   /** SQL literal for a probe value (mirrors [[BloomIndex]]'s rule). */
   private def litSql(v: Any): String = v match {
@@ -120,7 +114,8 @@ object BitmapIndex {
     val sp = new org.apache.hadoop.fs.Path(s"$dataPath/$INDEX_DIR")
     val f = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(sp)) return None
-    val st = StoreRelCache.get(spark, sp.toString).filter(col("col") === column)
+    val st = MetaCache.get(spark, s"$dataPath/$INDEX_DIR")
+      .filter(col("col") === column)
     val typ = typOf(st, dataPath, column)
     if (typ.isEmpty) return None // column not covered by this sidecar
     Some(st.filter(probePred(typ.get, values))
@@ -136,7 +131,8 @@ object BitmapIndex {
     val sp = new org.apache.hadoop.fs.Path(s"$dataPath/$INDEX_DIR")
     val f = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(sp)) return Map.empty
-    val st = StoreRelCache.get(spark, sp.toString).filter(col("col") === column)
+    val st = MetaCache.get(spark, s"$dataPath/$INDEX_DIR")
+      .filter(col("col") === column)
     val typ = typOf(st, dataPath, column)
     if (typ.isEmpty) return Map.empty
     st.filter(probePred(typ.get, values))

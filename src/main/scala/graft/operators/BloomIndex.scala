@@ -140,20 +140,10 @@ object BloomIndex {
           lit(types(c)).as(s"typ_$c"))): _*)
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dataPath/$INDEX_DIR")
-    // writer-invalidation: a rebuilt sidecar may carry DIFFERENT columns
-    // (cols/m are caller choices), so drop cached relations AND schemas
-    // AND the probe-side (typ, k) memo for this sidecar
-    StoreRelCache.purge(s"$dataPath/$INDEX_DIR")
-    probeMeta.keySet.removeIf(_._1 == dataPath)
+    // a rebuilt sidecar may carry DIFFERENT columns (cols/m are caller
+    // choices): purge its schema and probe memos with its relations
+    MetaCache.purge(s"$dataPath/$INDEX_DIR")
   }
-
-  /** (dataPath, column) → Some((typ, k)) from the sidecar's first row, or
-    * None for an empty sidecar — these are PER-SIDECAR CONSTANTS (collect
-    * writes one literal m/k/typ per row), so paying a limit(1) Spark job
-    * to re-read them on EVERY probe of the same directory is pure fixed
-    * overhead (guide §5); [[collect]] drops the memo when it rewrites. */
-  private val probeMeta = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Option[(String, Int)]]()
 
   /** `mayContain` predicate over a sidecar row for one probe value:
     * all k double-hashed bits set in `bits_<c>`. Pure Spark expressions;
@@ -190,18 +180,19 @@ object BloomIndex {
   def survivors(spark: SparkSession, dataPath: String, column: String,
       values: Seq[Any]): Option[Seq[String]] = {
     require(values.nonEmpty, "probe at least one value")
-    val sp = new Path(s"$dataPath/$INDEX_DIR")
+    val dir = s"$dataPath/$INDEX_DIR"
+    val sp = new Path(dir)
     val f = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(sp)) return None
-    // cached relation (skips the footer-inference job per probe); the
-    // sidecar stays a DISTRIBUTED filter — at 100 TB it is GBs of bit
+    // the sidecar stays a DISTRIBUTED filter — at 100 TB it is GBs of bit
     // arrays, a metadata-side table but not a driver-side one
-    val st = StoreRelCache.get(spark, sp.toString)
+    val st = MetaCache.get(spark, dir)
     if (!st.columns.contains(s"bits_$column")) return None
-    val meta = probeMeta.computeIfAbsent((dataPath, column), _ => {
+    // (typ, k) are per-sidecar constants (one literal per row), read once
+    val meta = MetaCache.memo(dir, column) {
       val hd = st.select(col(s"typ_$column"), col("k")).limit(1).collect()
       if (hd.isEmpty) None else Some((hd.head.getString(0), hd.head.getInt(1)))
-    })
+    }
     if (meta.isEmpty) return Some(Nil)
     val (typ, k) = meta.get
     val pred = values.map(v => mayContain(column, typ, v, k)).reduce(_ || _)

@@ -125,16 +125,9 @@ object GraphAnn {
     * where its bytes come from (the [[BinaryAnn.probeIndex]] contract). */
   private[operators] type IdFetch = (DataFrame, String, Array[Long]) => DataFrame
 
-  /** InSet pushdown below the 65536 cap, join fallback above (the
-    * [[IvfPq]] shortlist-fetch discipline). */
-  private[operators] val defaultFetch: IdFetch = (df, idCol, ids) => {
-    if (ids.length <= 65536) df.filter(col(idCol).isin(ids.toSeq: _*))
-    else {
-      val spark = df.sparkSession
-      import spark.implicits._
-      df.join(broadcast(ids.toSeq.toDF(idCol)), idCol)
-    }
-  }
+  /** The plain capped id fetch ([[Stores.fetchIds]]). */
+  private[operators] val defaultFetch: IdFetch =
+    (df, idCol, ids) => Stores.fetchIds(df, idCol, ids)
 
   /** `corpus` in the pre-quantized at-rest shape (id, qe, n2[, bucket])
     * instead of raw (id, embedding)? Decides both whether to run the
@@ -775,9 +768,7 @@ object GraphAnn {
       (s"m=${mt.m}\nm1=${mt.m1}\nnBuckets=${mt.nBuckets}\n" +
         s"layers=${mt.layers}\ngen=${mt.gen}\n").getBytes("UTF-8"))
     finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(s"$path/_meta")
-    f.delete(dst, false)
-    require(f.rename(tmp, dst), s"could not publish $path/_meta")
+    Stores.publish(f, tmp.toString, s"$path/_meta")
   }
 
   private def readMeta(spark: org.apache.spark.sql.SparkSession,
@@ -797,9 +788,35 @@ object GraphAnn {
   private def bucketed(df: DataFrame, idCol: String, n: Int): DataFrame =
     df.withColumn("bucket", pmod(col(idCol), lit(n.toLong)))
 
-  /** Write one layer's adjacency at `<path>/adj<l>` (bucketed by src),
-    * maintaining the reverse sidecar `<path>/radj<l>` (same rows,
-    * bucketed by DST) WHEN IT EXISTS. The reverse form serves one
+  /** Write one layer's full adjacency at `<path>/adj<l>` (bucketed by
+    * src, overwriting) — the builds and compaction's tmp layers; appends
+    * go through [[writeAdjLocal]]. Nothing to invalidate: a build has
+    * purged `path` first, and compaction publishes the tmp layer. */
+  private def writeAdj(edges: DataFrame, path: String, layer: Int,
+      gen: Long, n: Int): Unit =
+    // co-locate each bucket's rows before the partitioned write: ONE
+    // file per bucket per generation instead of (shuffle partitions ×
+    // buckets) shards — the probe's listing cost follows generations,
+    // not writer parallelism (and at scale this is the co-located
+    // bucket-write shape anyway)
+    bucketed(edges.select(col("src"), col("dst")).withColumn("gen", lit(gen)),
+        "src", n)
+      .repartition(n, col("bucket"))
+      .write.partitionBy("bucket")
+      .mode("overwrite").parquet(s"$path/adj$layer")
+
+  /** [[writeAdj]] for edge sets that are ALREADY driver state (the
+    * [[trimLocalRows]] outputs: bounded O(batch·degree) by the insert /
+    * remove algebra) — writes the identical bucketed at-rest form
+    * ([[LocalParquet]]: same `bucket=<pmod(src, n)>` directories, same
+    * optional-int64 (src, dst, gen) schema, session codec, footer stats)
+    * with ZERO Spark jobs instead of a shuffle + partitioned-write job
+    * per layer (guide §5: don't spin up a job for data the driver
+    * already holds). Append-only — exactly the persisted-DML call sites'
+    * mode; full builds keep the distributed [[writeAdj]].
+    *
+    * Appends also maintain the reverse sidecar `<path>/radj<l>` (same
+    * rows, bucketed by DST) WHEN IT EXISTS. The reverse form serves one
     * consumer — [[removeBatch]]'s in-edge discovery, a dst predicate
     * src-bucketing cannot prune — and is LAZY: a fresh build writes
     * nothing (a write-mostly index never pays for it — the eager form
@@ -813,61 +830,24 @@ object GraphAnn {
     * generation resolution of its own, only the mirror discipline
     * (every edge appended to adj lands in radj in the same call once
     * radj exists). */
-  private def writeAdj(edges: DataFrame, path: String, layer: Int,
-      gen: Long, n: Int, append: Boolean): Unit = {
-    val mode = if (append) "append" else "overwrite"
-    val stamped = edges.select(col("src"), col("dst"))
-      .withColumn("gen", lit(gen))
-    // co-locate each bucket's rows before the partitioned write: ONE
-    // file per bucket per generation instead of (shuffle partitions ×
-    // buckets) shards — the probe's listing cost follows generations,
-    // not writer parallelism (and at scale this is the co-located
-    // bucket-write shape anyway)
-    bucketed(stamped, "src", n)
-      .repartition(n, col("bucket"))
-      .write.partitionBy("bucket")
-      .mode(mode).parquet(s"$path/adj$layer")
-    val spark = edges.sparkSession
-    val radjDir = s"$path/radj$layer"
-    if (append &&
-        hfs(spark, path).exists(new org.apache.hadoop.fs.Path(radjDir)))
-      bucketed(stamped, "dst", n)
-        .repartition(n, col("bucket"))
-        .write.partitionBy("bucket")
-        .mode("append").parquet(radjDir)
-    StoreRelCache.invalidate(path) // writer-invalidation contract
-  }
-
-  /** [[writeAdj]] for edge sets that are ALREADY driver state (the
-    * [[trimLocalRows]] outputs: bounded O(batch·degree) by the insert /
-    * remove algebra) — writes the identical bucketed at-rest form
-    * ([[LocalParquet]]: same `bucket=<pmod(src, n)>` directories, same
-    * optional-int64 (src, dst, gen) schema, session codec, footer stats)
-    * with ZERO Spark jobs instead of a shuffle + partitioned-write job
-    * per layer (guide §5: don't spin up a job for data the driver
-    * already holds). Append-only — exactly the persisted-DML call sites'
-    * mode; full builds keep the distributed [[writeAdj]]. The radj
-    * mirror discipline is unchanged: once the sidecar exists, every
-    * adjacency append lands its dst-bucketed mirror in the same call. */
   private def writeAdjLocal(spark: org.apache.spark.sql.SparkSession,
       edges: Seq[(Long, Long)], path: String, layer: Int,
       gen: Long, n: Int): Unit = {
-    def pm(id: Long): Long = { val r = id % n; if (r < 0) r + n else r }
     val fields = Seq("src" -> "long", "dst" -> "long", "gen" -> "long")
     val rows: Seq[Seq[Any]] = edges.map { case (s, d) => Seq[Any](s, d, gen) }
     LocalParquet.writeBucketed(spark, s"$path/adj$layer", "bucket", fields,
-      rows, r => pm(r.head.asInstanceOf[Long]))
+      rows, r => Math.floorMod(r.head.asInstanceOf[Long], n.toLong))
     if (hfs(spark, path).exists(
         new org.apache.hadoop.fs.Path(s"$path/radj$layer")))
       LocalParquet.writeBucketed(spark, s"$path/radj$layer", "bucket", fields,
-        rows, r => pm(r(1).asInstanceOf[Long]))
-    StoreRelCache.invalidate(path) // writer-invalidation contract
+        rows, r => Math.floorMod(r(1).asInstanceOf[Long], n.toLong))
+    MetaCache.invalidate(path) // writer-invalidation contract
   }
 
   /** Materialize (or open) layer `l`'s reverse-adjacency sidecar: one
     * dst-bucketed copy of the full adjacency on first use, pruned point
-    * fetches forever after. Idempotent; publish is tmp + atomic rename
-    * so a racing reader never sees a half-built sidecar. */
+    * fetches forever after. Idempotent; written to tmp and published, so
+    * a racing reader never sees a half-built sidecar. */
   private def ensureRadj(spark: org.apache.spark.sql.SparkSession,
       path: String, layer: Int, n: Int): DataFrame = {
     val f = hfs(spark, path)
@@ -879,34 +859,27 @@ object GraphAnn {
           .select(col("src"), col("dst"), col("gen")), "dst", n)
         .repartition(n, col("bucket"))
         .write.partitionBy("bucket").parquet(tmp)
-      require(f.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(dir)),
-        s"could not publish $dir")
+      Stores.publish(f, tmp, dir)
     }
-    StoreRelCache.get(spark, dir)
+    MetaCache.get(spark, dir)
   }
 
   private def writeEntries(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: Array[Long]): Unit = {
-    // tmp + swap so a reader never sees a half-written sidecar; the id
+    // tmp + publish so a reader never sees a half-written sidecar; the id
     // list is bounded (ENTRY_CAP) driver state — LocalParquet, no job
     val tmp = s"$path/.entries_tmp"
-    val f0 = hfs(spark, path)
-    f0.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    val f = hfs(spark, path)
+    f.delete(new org.apache.hadoop.fs.Path(tmp), true)
     LocalParquet.writeFile(spark, s"$tmp/part-00000.parquet",
       Seq("id" -> "long"), ids.iterator.map(Seq[Any](_)))
-    val f = f0
-    val dst = new org.apache.hadoop.fs.Path(s"$path/entries")
-    f.delete(dst, true)
-    require(f.rename(new org.apache.hadoop.fs.Path(tmp), dst),
-      s"could not publish $path/entries")
-    StoreRelCache.invalidate(s"$path/entries")
+    Stores.publish(f, tmp, s"$path/entries")
   }
 
   private def readEntries(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Long] = {
     import spark.implicits._
-    StoreRelCache.get(spark, s"$path/entries").select("id").as[Long]
+    MetaCache.get(spark, s"$path/entries").select("id").as[Long]
       .collect().sorted
   }
 
@@ -920,7 +893,7 @@ object GraphAnn {
       // bounded-collect contract: tombstones grow with DELETED ids only
       // (the IvfPq.removeIds posture); a compaction folding them into a
       // rewritten store is the long-run answer, as for every LSM design
-      StoreRelCache.get(spark, s"$path/tombstones").select("id").as[Long]
+      MetaCache.get(spark, s"$path/tombstones").select("id").as[Long]
         .collect().distinct.sorted
     }
   }
@@ -943,20 +916,11 @@ object GraphAnn {
     * can assert the PartitionFilters plan property directly. */
   private[graft] def indexFetch(nBuckets: Int,
       tombs: Array[Long]): IdFetch = (df, idCol, ids) => {
-    val bks = ids.map(i => ((i % nBuckets) + nBuckets) % nBuckets)
-      .distinct.toSeq
-    val pruned = df.filter(col("bucket").isin(bks: _*))
-    val base =
-      if (ids.length <= 65536) pruned.filter(col(idCol).isin(ids.toSeq: _*))
-      else {
-        val spark = df.sparkSession
-        import spark.implicits._
-        pruned.join(broadcast(ids.toSeq.toDF(idCol)), idCol)
-      }
+    val base = Stores.fetchIds(df, idCol, ids, nBuckets)
     if (df.columns.contains("gen")) {
       val flagged =
         if (tombs.isEmpty) base.withColumn("tomb", lit(false))
-        else if (tombs.length <= 65536)
+        else if (tombs.length <= Stores.ID_CAP)
           base.withColumn("tomb", col("dst").isin(tombs.toSeq: _*))
         else {
           val spark = df.sparkSession
@@ -1059,7 +1023,7 @@ object GraphAnn {
     val spark = corpus.sparkSession
     import spark.implicits._
     hfs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
-    StoreRelCache.purge(path) // full rebuild: drop relations AND schemas
+    MetaCache.purge(path) // full rebuild: drop relations AND schemas
     // callers holding prebuilt layer graphs (a fixture cache, a prior
     // export) pass them in; the contract is degree-m over `corpus` /
     // degree-m1 over its layer-1 draw — identical to what would be built
@@ -1100,9 +1064,9 @@ object GraphAnn {
       (() => bucketed(AnnSearch.quantized(corpus), "id", nBuckets)
         .repartition(nBuckets, col("bucket"))
         .write.partitionBy("bucket").parquet(s"$path/vectors")) +:
-      (() => writeAdj(g0, path, 0, 1L, nBuckets, append = false)) +:
+      (() => writeAdj(g0, path, 0, 1L, nBuckets)) +:
       layerGraphs.map { case (ll, gl) =>
-        () => writeAdj(gl, path, ll, 1L, nBuckets, append = false)
+        () => writeAdj(gl, path, ll, 1L, nBuckets)
       }: _*)
     val ents = topNodes.select(col(topNodes.columns.head).as("id"))
       .orderBy("id").limit(ENTRY_CAP).as[Long].collect()
@@ -1129,15 +1093,15 @@ object GraphAnn {
     val mt = readMeta(spark, path)
     val tombs = readTombs(spark, path)
     val fetch = indexFetch(mt.nBuckets, tombs)
-    val vec = StoreRelCache.get(spark, s"$path/vectors")
-    val adj0 = StoreRelCache.get(spark, s"$path/adj0")
+    val vec = MetaCache.get(spark, s"$path/vectors")
+    val adj0 = MetaCache.get(spark, s"$path/adj0")
     val ents = readEntries(spark, path).filterNot(tombs.contains).take(ef1)
     require(ents.nonEmpty,
       s"probeIndex: entry sidecar exhausted at $path — rebuild the index")
     var seeds: Option[Map[Long, Array[Long]]] = None
     for (l <- mt.layers to 1 by -1) {
       val beam = beamWalkArr(queries, vec,
-        StoreRelCache.get(spark, s"$path/adj$l"), ef1, hops1,
+        MetaCache.get(spark, s"$path/adj$l"), ef1, hops1,
         if (seeds.isEmpty) Some(ents) else None, seeds, fetch)
       seeds = Some(beam.groupBy(_._1).map { case (q, a) => q -> a.map(_._2) })
     }
@@ -1188,22 +1152,21 @@ object GraphAnn {
       // (its ids/beams are collected below) — append the Spark-computed
       // quantized rows driver-side ([[LocalParquet]], same id-bucketed
       // layout) instead of a shuffle + partitioned-write job (guide §5)
-      AnnSearch.quantized(batch).collect().groupBy { r =>
-        val m = r.getLong(0) % mt.nBuckets
-        if (m < 0) m + mt.nBuckets else m
-      }.foreach { case (bucket, rs) =>
-        LocalParquet.writeFile(spark,
-          s"$path/vectors/bucket=$bucket/part-${java.util.UUID.randomUUID()}.parquet",
-          Seq("id" -> "long", "qe" -> "array<long>", "n2" -> "long"),
-          rs.iterator.map(r =>
-            Seq[Any](r.getLong(0), r.getSeq[Long](1), r.getLong(2))))
-      }
+      AnnSearch.quantized(batch).collect()
+        .groupBy(r => Math.floorMod(r.getLong(0), mt.nBuckets))
+        .foreach { case (bucket, rs) =>
+          LocalParquet.writeFile(spark,
+            s"$path/vectors/bucket=$bucket/part-${java.util.UUID.randomUUID()}.parquet",
+            Seq("id" -> "long", "qe" -> "array<long>", "n2" -> "long"),
+            rs.iterator.map(r =>
+              Seq[Any](r.getLong(0), r.getSeq[Long](1), r.getLong(2))))
+        }
     })
-    StoreRelCache.invalidate(s"$path/vectors")
-    val vec = StoreRelCache.get(spark, s"$path/vectors")
-    val adj0 = StoreRelCache.get(spark, s"$path/adj0")
+    MetaCache.invalidate(s"$path/vectors")
+    val vec = MetaCache.get(spark, s"$path/vectors")
+    val adj0 = MetaCache.get(spark, s"$path/adj0")
     val adjL = (1 to mt.layers).map(l =>
-      l -> StoreRelCache.get(spark, s"$path/adj$l")).toMap
+      l -> MetaCache.get(spark, s"$path/adj$l")).toMap
     val ents = readEntries(spark, path).filterNot(tombs.contains).take(ef1)
     require(ents.nonEmpty,
       s"addBatch: entry sidecar exhausted at $path — rebuild the index")
@@ -1302,12 +1265,6 @@ object GraphAnn {
     val mt = readMeta(spark, path)
     val tombs = readTombs(spark, path)
     val f = hfs(spark, path)
-    def swap(tmp: String, dst: String): Unit = {
-      val d = new org.apache.hadoop.fs.Path(dst)
-      f.delete(d, true)
-      require(f.rename(new org.apache.hadoop.fs.Path(tmp), d),
-        s"compactIndex: could not publish $dst")
-    }
     val tombDf = tombs.toSeq.toDF("tid")
     for (l <- 0 to mt.layers) {
       val adj = spark.read.parquet(s"$path/adj$l")
@@ -1325,23 +1282,23 @@ object GraphAnn {
       // the compacted adjacency; absent sidecars stay absent (lazy)
       val hadRadj = f.exists(
         new org.apache.hadoop.fs.Path(s"$path/radj$l"))
-      writeAdj(live, s"$path/.compact", l, 1L, mt.nBuckets, append = false)
+      writeAdj(live, s"$path/.compact", l, 1L, mt.nBuckets)
       if (hadRadj) {
         bucketed(spark.read.parquet(s"$path/.compact/adj$l")
             .select(col("src"), col("dst"), col("gen")), "dst", mt.nBuckets)
           .repartition(mt.nBuckets, col("bucket"))
           .write.partitionBy("bucket").parquet(s"$path/.compact/radj$l")
-        swap(s"$path/.compact/radj$l", s"$path/radj$l")
+        Stores.publish(f, s"$path/.compact/radj$l", s"$path/radj$l")
       } else
         f.delete(new org.apache.hadoop.fs.Path(s"$path/radj$l"), true)
-      swap(s"$path/.compact/adj$l", s"$path/adj$l")
+      Stores.publish(f, s"$path/.compact/adj$l", s"$path/adj$l")
     }
     val liveVec = spark.read.parquet(s"$path/vectors")
       .join(broadcast(tombDf), col("id") === col("tid"), "left_anti")
       .select("id", "qe", "n2", "bucket")
     liveVec.repartition(mt.nBuckets, col("bucket"))
       .write.partitionBy("bucket").parquet(s"$path/.vec_compact")
-    swap(s"$path/.vec_compact", s"$path/vectors")
+    Stores.publish(f, s"$path/.vec_compact", s"$path/vectors")
     f.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
     f.delete(new org.apache.hadoop.fs.Path(s"$path/.compact"), true)
     val ents = levelNodes(
@@ -1350,7 +1307,7 @@ object GraphAnn {
     require(ents.nonEmpty, s"compactIndex: no live top-level nodes at $path")
     writeEntries(spark, path, ents)
     writeMeta(spark, path, mt.copy(gen = 1L))
-    StoreRelCache.invalidate(path) // every store under path was rewritten
+    MetaCache.invalidate(path) // tombstones and radj dirs dropped too
   }
 
   def removeBatch(path: String, removed: DataFrame): Unit = {
@@ -1365,7 +1322,7 @@ object GraphAnn {
     val rIds = removed.select(col(removed.columns.head).cast("long"))
       .as[Long].collect().distinct
     require(rIds.nonEmpty, "removeBatch: empty removed set")
-    val vec = StoreRelCache.get(spark, s"$path/vectors")
+    val vec = MetaCache.get(spark, s"$path/vectors")
 
     /** Bridge-repair one layer; returns the gen+1 rows for its bridged
       * sources, materialized (same lineage rule as addBatch). The live
@@ -1404,7 +1361,7 @@ object GraphAnn {
         (keptTouched ++ bridge).distinct.toSeq, mDeg))
     }
 
-    val adj0 = StoreRelCache.get(spark, s"$path/adj0")
+    val adj0 = MetaCache.get(spark, s"$path/adj0")
     repair(adj0, ensureRadj(spark, path, 0, mt.nBuckets), rIds, mt.m)
       .foreach(r => writeAdjLocal(spark, r, path, 0, newGen, mt.nBuckets))
     for (l <- 1 to mt.layers) {
@@ -1412,7 +1369,7 @@ object GraphAnn {
       // guard BEFORE ensureRadj: a level the batch never drew into should
       // not pay the one-time sidecar materialization
       if (rl.nonEmpty)
-        repair(StoreRelCache.get(spark, s"$path/adj$l"),
+        repair(MetaCache.get(spark, s"$path/adj$l"),
             ensureRadj(spark, path, l, mt.nBuckets), rl, mt.m1).foreach(r =>
           writeAdjLocal(spark, r, path, l, newGen, mt.nBuckets))
     }
@@ -1421,7 +1378,7 @@ object GraphAnn {
     LocalParquet.writeFile(spark,
       s"$path/tombstones/part-${java.util.UUID.randomUUID()}.parquet",
       Seq("id" -> "long"), rIds.iterator.map(Seq[Any](_)))
-    StoreRelCache.invalidate(s"$path/tombstones")
+    MetaCache.invalidate(s"$path/tombstones")
     // the sidecar invariant is "lowest min(cap, live) TOP-level ids": a
     // deletion touching it forces a rebuild from the store (rare, and an
     // id-column-only scan), so the probe entry rule stays exactly the

@@ -172,7 +172,7 @@ object IndexZooSql {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     // a later CREATE may land a fresh store at the SAME path — retire any
     // cached relations for it now (the writer-invalidation contract)
-    StoreRelCache.purge(path)
+    MetaCache.purge(path)
   }
 
   private def show(spark: SparkSession): DataFrame = {

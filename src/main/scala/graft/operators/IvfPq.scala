@@ -55,13 +55,6 @@ object IvfPq {
     * sidecar (the [[GraphAnn]] bucket discipline). */
   private val VEC_BUCKETS = 16
 
-  /** Batches at or below this many rows append their inverted-list codes
-    * and rescore vectors DRIVER-side ([[LocalParquet]] — zero shuffle/
-    * write jobs for a few hundred rows); above it the distributed
-    * partitioned append runs (the 100 TB ingest path). The bound matches
-    * [[probeIndex]]'s bounded-shortlist heuristic. */
-  private val LOCAL_APPEND_CAP = 65536
-
   /** Coarse centroids + residual PQ codebook, both broadcast-sized. */
   private[operators] final case class Book(
       coarse: Array[(Long, Array[Long])], // (cent_id, vector), sorted
@@ -164,7 +157,7 @@ object IvfPq {
       collectBook(cc, centroidStride, m, ncent, pqStride, pqIters))
     probeEncoded(queries, encodeAll(cc, book), book, k, nprobe, shortlist,
       ids =>
-        if (ids.length <= 65536 && ids.nonEmpty)
+        if (ids.length <= Stores.ID_CAP && ids.nonEmpty)
           AnnSearch.quantized(corpus.filter(col("id").isin(ids.toSeq: _*)))
         else AnnSearch.quantized(corpus))
   }
@@ -191,7 +184,7 @@ object IvfPq {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    StoreRelCache.purge(path) // full rebuild: drop relations AND schemas
+    MetaCache.purge(path) // full rebuild: drop relations AND schemas
     val book = collectBook(AnnSearch.quantized(sample),
       centroidStride, m, ncent, pqStride, pqIters)
     // the codebook is broadcast-sized driver state by construction —
@@ -211,10 +204,10 @@ object IvfPq {
   private def loadBook(spark: org.apache.spark.sql.SparkSession,
       path: String): Book = {
     import spark.implicits._
-    val coarse = StoreRelCache.get(spark, s"$path/_book/coarse")
+    val coarse = MetaCache.get(spark, s"$path/_book/coarse")
       .as[(Long, Seq[Long])].collect()
       .map { case (i, e) => (i, e.toArray) }.sortBy(_._1)
-    val pq = StoreRelCache.get(spark, s"$path/_book/pq")
+    val pq = MetaCache.get(spark, s"$path/_book/pq")
       .as[(Int, Int, Seq[Long])].collect()
     val m = pq.map(_._1).max + 1
     val ncent = pq.map(_._2).max + 1
@@ -244,17 +237,14 @@ object IvfPq {
     // in `vectors` (rescore only ever fetches live shortlisted ids), so
     // compaction need not rewrite it.
     //
-    // SMALL batches (≤ LOCAL_APPEND_CAP encoded rows — an early-exiting
-    // take decides) write both stores driver-side ([[LocalParquet]]):
-    // the Spark-computed encode/quantize values land in the identical
-    // one-file-per-touched-list / per-bucket layout with zero shuffle
-    // and zero write jobs — a per-batch append was paying two shuffles
-    // plus partitioned commits to move a few hundred rows (guide §5).
-    // Large batches keep the distributed form, overlapped (guide §2.6).
+    // SMALL batches ([[LocalParquet.writeSmall]]) write both stores
+    // driver-side: the Spark-computed encode/quantize values land in the
+    // identical one-file-per-touched-list / per-bucket layout with zero
+    // shuffle and zero write jobs — a per-batch append was paying two
+    // shuffles plus partitioned commits to move a few hundred rows.
+    // Large batches keep the distributed form, overlapped.
     try {
-      val enc = encodeAll(cc, book)
-      val encLocal = enc.take(LOCAL_APPEND_CAP + 1)
-      if (encLocal.length <= LOCAL_APPEND_CAP) {
+      LocalParquet.writeSmall(encodeAll(cc, book)) { encLocal =>
         encLocal.groupBy(_.getLong(1)).foreach { case (centId, rs) =>
           LocalParquet.writeFile(spark,
             s"$path/lists/cent_id=$centId/part-${java.util.UUID.randomUUID()}.parquet",
@@ -262,29 +252,29 @@ object IvfPq {
             rs.iterator.map(r =>
               Seq[Any](r.getLong(0), r.getSeq[Int](2), r.getLong(3))))
         }
-        cc.collect().groupBy { r =>
-          val id = r.getLong(0); val m = id % VEC_BUCKETS
-          if (m < 0) m + VEC_BUCKETS else m
-        }.foreach { case (bucket, rs) =>
-          LocalParquet.writeFile(spark,
-            s"$path/vectors/bucket=$bucket/part-${java.util.UUID.randomUUID()}.parquet",
-            Seq("id" -> "long", "qe" -> "array<long>", "n2" -> "long"),
-            rs.iterator.map(r =>
-              Seq[Any](r.getLong(0), r.getSeq[Long](1), r.getLong(2))))
-        }
-      } else ParallelWrites.all(
-        () => encodeAll(cc, book)
-          .repartition(col("cent_id")).write.mode("append")
-          .partitionBy("cent_id").parquet(s"$path/lists"),
-        () => cc.withColumn("bucket", pmod(col("id"), lit(VEC_BUCKETS.toLong)))
-          .repartition(VEC_BUCKETS, col("bucket"))
-          .write.mode("append").partitionBy("bucket").parquet(s"$path/vectors"))
+        cc.collect().groupBy(r => Math.floorMod(r.getLong(0), VEC_BUCKETS))
+          .foreach { case (bucket, rs) =>
+            LocalParquet.writeFile(spark,
+              s"$path/vectors/bucket=$bucket/part-${java.util.UUID.randomUUID()}.parquet",
+              Seq("id" -> "long", "qe" -> "array<long>", "n2" -> "long"),
+              rs.iterator.map(r =>
+                Seq[Any](r.getLong(0), r.getSeq[Long](1), r.getLong(2))))
+          }
+      } {
+        ParallelWrites.all(
+          () => encodeAll(cc, book)
+            .repartition(col("cent_id")).write.mode("append")
+            .partitionBy("cent_id").parquet(s"$path/lists"),
+          () => cc.withColumn("bucket", pmod(col("id"), lit(VEC_BUCKETS.toLong)))
+            .repartition(VEC_BUCKETS, col("bucket"))
+            .write.mode("append").partitionBy("bucket").parquet(s"$path/vectors"))
+      }
     }
     // the writes are the terminal actions — the per-batch book broadcast
     // is dead after them; without this a long ingest session leaks one
     // book per addBatch call
     finally book.destroy()
-    StoreRelCache.invalidate(path) // writer-invalidation contract
+    MetaCache.invalidate(path) // writer-invalidation contract
   }
 
   /** Open a persisted index for probing (the `faiss.read_index` analog). */
@@ -308,16 +298,13 @@ object IvfPq {
         " wide frame would tombstone the wrong values")
     val cids = ids.select(col(ids.columns.head).cast("long").as("cid"))
     // a delete is O(ids) by contract — small batches append their
-    // tombstone file driver-side (the [[LocalParquet]] discipline; zero
-    // write jobs); anything big, null-bearing, or over the cap keeps the
-    // Spark append
-    val local = cids.take(LOCAL_APPEND_CAP + 1)
-    if (local.length <= LOCAL_APPEND_CAP && !local.exists(_.isNullAt(0)))
+    // tombstone file driver-side, anything else keeps the Spark append
+    LocalParquet.writeSmall(cids) { local =>
       LocalParquet.writeFile(ids.sparkSession,
         s"$path/tombstones/part-${java.util.UUID.randomUUID()}.parquet",
         Seq("cid" -> "long"), local.iterator.map(r => Seq[Any](r.getLong(0))))
-    else cids.coalesce(1).write.mode("append").parquet(s"$path/tombstones")
-    StoreRelCache.invalidate(s"$path/tombstones")
+    } { cids.coalesce(1).write.mode("append").parquet(s"$path/tombstones") }
+    MetaCache.invalidate(s"$path/tombstones")
   }
 
   /** Compaction: physically drop tombstoned codes from every inverted list
@@ -333,35 +320,20 @@ object IvfPq {
     val kept = spark.read.parquet(s"$path/lists")
       .select("cid", "cent_id", "codes", "rn2")
       .join(spark.read.parquet(s"$path/tombstones"), Seq("cid"), "left_anti")
-    val compact = new org.apache.hadoop.fs.Path(s"$path/lists_compact")
+    val compact = s"$path/lists_compact"
     if (kept.isEmpty)
       // tombstones covered every row: partitionBy over zero rows writes NO
       // data file and the next open would die on parquet schema inference —
       // write the empty frame unpartitioned instead (cent_id stays a real
       // column, so the footer carries the full schema and probes return
       // zero rows cleanly)
-      kept.write.mode("overwrite").parquet(compact.toString)
+      kept.write.mode("overwrite").parquet(compact)
     else
       kept.repartition(col("cent_id")).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(compact.toString)
-    // crash-safe swap: the live lists are MOVED ASIDE, never deleted before
-    // the new generation is in place — a failure at any step leaves either
-    // the old or the new index fully intact (the KV handler's generation
-    // discipline; deleting live data first risked total index loss)
-    val lists = new org.apache.hadoop.fs.Path(s"$path/lists")
-    val old = new org.apache.hadoop.fs.Path(s"$path/lists_old")
-    fs.delete(old, true) // stale leftover from a previous failed compaction
-    require(fs.rename(lists, old),
-      s"compactIndex: rename $lists -> $old failed; index left untouched")
-    if (!fs.rename(compact, lists)) {
-      // restore the original generation before failing
-      fs.rename(old, lists)
-      throw new IllegalStateException(
-        s"compactIndex: rename $compact -> $lists failed; original restored")
-    }
-    fs.delete(old, true)
+        .partitionBy("cent_id").parquet(compact)
+    Stores.publish(fs, compact, s"$path/lists")
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    StoreRelCache.invalidate(path) // lists swapped, tombstones gone
+    MetaCache.invalidate(s"$path/tombstones")
   }
 
   /** One-shot build = train on the full corpus + add it as one batch — the
@@ -385,10 +357,10 @@ object IvfPq {
   def probeIndex(queries: DataFrame, corpus: DataFrame, index: IvfPqIndex,
       k: Int, nprobe: Int, shortlist: Int = 64): DataFrame =
     probeWithFetch(queries, index, k, nprobe, shortlist, ids =>
-      // 65536 literals is where an InSet stops being obviously cheap; a
+      // past ID_CAP literals an InSet stops being obviously cheap; a
       // wider shortlist (the brute-equivalence spec's ∞) falls back to
       // the full corpus scan
-      if (ids.length <= 65536 && ids.nonEmpty)
+      if (ids.length <= Stores.ID_CAP && ids.nonEmpty)
         AnnSearch.quantized(corpus.filter(col("id").isin(ids.toSeq: _*)))
       else AnnSearch.quantized(corpus))
 
@@ -402,26 +374,16 @@ object IvfPq {
   def probeIndex(queries: DataFrame, index: IvfPqIndex,
       k: Int, nprobe: Int, shortlist: Int): DataFrame = {
     val spark = queries.sparkSession
-    probeWithFetch(queries, index, k, nprobe, shortlist, ids => {
-      val vec = StoreRelCache.get(spark, s"${index.path}/vectors")
-      val bks = ids.map(i => ((i % VEC_BUCKETS) + VEC_BUCKETS) % VEC_BUCKETS)
-        .distinct.toSeq
-      val pruned = vec.filter(col("bucket").isin(bks: _*))
-      val hit =
-        if (ids.length <= 65536) pruned.filter(col("id").isin(ids.toSeq: _*))
-        else {
-          import spark.implicits._
-          pruned.join(broadcast(ids.toSeq.toDF("id")), "id")
-        }
-      hit.select("id", "qe", "n2")
-    })
+    probeWithFetch(queries, index, k, nprobe, shortlist, ids =>
+      Stores.fetchIds(MetaCache.get(spark, s"${index.path}/vectors"), "id",
+        ids, VEC_BUCKETS).select("id", "qe", "n2"))
   }
 
   private def probeWithFetch(queries: DataFrame, index: IvfPqIndex,
       k: Int, nprobe: Int, shortlist: Int,
       fetchQuantized: Array[Long] => DataFrame): DataFrame = {
     val spark = queries.sparkSession
-    val encoded0 = StoreRelCache.get(spark, s"${index.path}/lists")
+    val encoded0 = MetaCache.get(spark, s"${index.path}/lists")
       .select("cid", "cent_id", "codes", "rn2") // partition col re-ordered
     // tombstone mask ([[removeIds]]): removed rows never reach the ADC
     // scan, so they cannot shortlist or surface; the delete set is
@@ -430,7 +392,7 @@ object IvfPq {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val encoded =
       if (fs.exists(new org.apache.hadoop.fs.Path(s"${index.path}/tombstones")))
-        encoded0.join(StoreRelCache.get(spark, s"${index.path}/tombstones"),
+        encoded0.join(MetaCache.get(spark, s"${index.path}/tombstones"),
           Seq("cid"), "left_anti")
       else encoded0
     probeEncoded(queries, encoded, index.book, k, nprobe, shortlist,

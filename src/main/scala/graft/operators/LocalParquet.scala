@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Driver-side parquet writer for BOUNDED, ALREADY-DRIVER-RESIDENT row
   * sets — the manifest/sidecar write discipline of the table formats
@@ -203,4 +203,18 @@ object LocalParquet {
       writeFile(spark, file, fields, rs)
     }
   }
+
+  /** The small-write gate of the store appends: an early-exiting
+    * `take(ID_CAP + 1)` over `df`; when the rows fit [[Stores.ID_CAP]]
+    * and the long key in `df`'s first column has no null, `local` writes
+    * them driver-side (no Spark job), otherwise `distributed` runs the
+    * Spark write. A non-long key skips the take: this writer would change
+    * its at-rest type. */
+  def writeSmall(df: DataFrame)(local: Array[Row] => Unit)(
+      distributed: => Unit): Unit =
+    Some(df).filter(_.schema.head.dataType ==
+        org.apache.spark.sql.types.LongType)
+      .map(_.take(Stores.ID_CAP + 1))
+      .filter(rs => rs.length <= Stores.ID_CAP && !rs.exists(_.isNullAt(0)))
+      .fold(distributed)(local)
 }

@@ -246,17 +246,11 @@ object Retrieval {
     * batch files rewrite as one file — so a long-ingested index reads
     * like a one-shot build again. Purely physical: the probe already
     * delta-folds at query time, so results are IDENTICAL before and
-    * after (spec-pinned; q385 probes across a compact). tmp + atomic
-    * rename per store, the [[GraphAnn.compactIndex]] discipline. */
+    * after (spec-pinned; q385 probes across a compact). Each store is
+    * written to tmp and swapped in by [[Stores.publish]]. */
   def bm25CompactIndex(spark: SparkSession, path: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def swap(tmp: String, dst: String): Unit = {
-      val d = new org.apache.hadoop.fs.Path(dst)
-      fs.delete(d, true)
-      require(fs.rename(new org.apache.hadoop.fs.Path(tmp), d),
-        s"bm25CompactIndex: could not publish $dst")
-    }
     val st = spark.read.parquet(s"$path/stats")
       .agg(sum("n_docs").cast("long").as("n_docs"),
         sum("dl_sum").cast("long").as("dl_sum"),
@@ -281,9 +275,9 @@ object Retrieval {
     LocalParquet.writeFile(spark, s"$path/.stats_c/part-00000.parquet",
       Seq("n_docs" -> "long", "dl_sum" -> "long", "n_buckets" -> "int"),
       Iterator(Seq[Any](st.getLong(0), st.getLong(1), nb)))
-    swap(s"$path/.postings_c", s"$path/postings")
-    swap(s"$path/.terms_c", s"$path/terms")
-    swap(s"$path/.stats_c", s"$path/stats")
+    Stores.publish(fs, s"$path/.postings_c", s"$path/postings")
+    Stores.publish(fs, s"$path/.terms_c", s"$path/terms")
+    Stores.publish(fs, s"$path/.stats_c", s"$path/stats")
   }
 
   /** Probe a materialized BM25 index: identical scores to [[bm25TopK]]
@@ -778,10 +772,7 @@ object Retrieval {
     spark.read.parquet(s"$path/positions")
       .repartition(nBuckets, col("tb"))
       .write.partitionBy("tb").parquet(s"$path/.positions_c")
-    val d = new org.apache.hadoop.fs.Path(s"$path/positions")
-    fs.delete(d, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(s"$path/.positions_c"), d),
-      s"phraseCompactIndex: could not publish $path/positions")
+    Stores.publish(fs, s"$path/.positions_c", s"$path/positions")
   }
 
   /** Probe the positional index: identical results to [[phraseTopK]], but

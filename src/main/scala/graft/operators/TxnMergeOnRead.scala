@@ -697,6 +697,7 @@ object TxnMergeOnRead {
   def create(spark: SparkSession, root: String, df: DataFrame): Unit = {
     val f = fs(spark, root)
     f.delete(new Path(root), true)
+    MetaCache.purge(root)
     val dir = s"base_${UUID.randomUUID().toString.take(12)}"
     withRid(df, 1L).write.parquet(s"$root/$dir")
     DataSkipping.collect(spark, s"$root/$dir")
@@ -741,83 +742,10 @@ object TxnMergeOnRead {
       addConstraintImpl(spark, root, s"$GEN$n", s"$n <=> ($e)") }
   }
 
-  /** Cached parquet RELATIONS for committed data dirs. A base/delta dir is
-    * immutable once its log entry is visible (uuid-named, written before
-    * commit, deleted only by vacuum), so the relation — file listing +
-    * footer schema, the two driver round-trips `spark.read.parquet` pays
-    * eagerly — is reusable across every later snapshot/CDC/conflict read.
-    * Measured (JobProfile, q217 at sf0.1): 22 footer-read jobs per
-    * lifecycle run, ~0.5 s of job time plus the driver-side listings, all
-    * of it re-deriving metadata of dirs that cannot have changed. The
-    * cache mirrors what Spark's own `filesourcePartitionFileCacheSize`
-    * does for catalog tables (optimization guide §6) — metadata caching,
-    * never row data, never keyed on input-corpus content. Callers that
-    * need absence-tolerance still check existence first; a vacuumed dir's
-    * entry is dropped on the next miss (size-capped against leak). */
-  private val relCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private def readParquetCached(spark: SparkSession, path: String): DataFrame = {
-    // Hygiene (r18, VERDICT r17 item 4): key on the session UUID (a plain
-    // string — the map's KEYS no longer pin recycled SparkSessions), and
-    // evict incrementally instead of the previous full clear() (which
-    // forced a thundering re-list of every live table at once). Under cap
-    // pressure, entries of STOPPED sessions go first (their plans are
-    // dead weight — this is also what un-pins a recycled session's
-    // DataFrames); if the cap is still exceeded, a bounded arbitrary
-    // quarter of entries drops — each costs one re-list on next touch,
-    // never all of them.
-    if (relCache.size > 4096) {
-      val it = relCache.entrySet().iterator()
-      while (it.hasNext) {
-        if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-      }
-      if (relCache.size > 4096) {
-        val it2 = relCache.keySet().iterator()
-        var drop = relCache.size / 4
-        while (it2.hasNext && drop > 0) { it2.next(); it2.remove(); drop -= 1 }
-      }
-    }
-    // key = session identity hash (a string, so the map's keys never pin a
-    // session object); identity hashes can in principle be reused after a
-    // session is GC'd, so a hit is additionally verified to belong to the
-    // CALLING session (`eq`) and recomputed otherwise — correctness never
-    // rides on the key alone
-    val key = (System.identityHashCode(spark).toHexString, path)
-    val hit = relCache.get(key)
-    if (hit != null && (hit.sparkSession eq spark)) hit
-    else {
-      val df = spark.read.parquet(path)
-      relCache.put(key, df)
-      df
-    }
-  }
-
-  /** Spec observability: cached relation paths under `prefix`. */
-  private[graft] def cachedPathsUnder(prefix: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val it = relCache.keySet().iterator()
-    while (it.hasNext) {
-      val k = it.next()
-      if (k._2.startsWith(prefix)) out += k._2
-    }
-    out.result()
-  }
-
-  /** Drop cached relations under `root` — called by [[vacuum]] after it
-    * deletes data dirs, so a retired dir's entry leaves the cache at
-    * retirement time (not at the next existence-check miss) and without
-    * clearing anything else. Exposed private[graft] for the spec. */
-  private[graft] def invalidateCached(root: String): Unit = {
-    val it = relCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._2.startsWith(root)) it.remove()
-    }
-  }
-
   private def readDir(spark: SparkSession, root: String, dir: String,
       kind: String): Option[DataFrame] = {
     val p = s"$root/$dir/$kind"
-    if (fs(spark, root).exists(new Path(p))) Some(readParquetCached(spark, p))
+    if (fs(spark, root).exists(new Path(p))) Some(MetaCache.get(spark, p))
     else None
   }
 
@@ -831,7 +759,7 @@ object TxnMergeOnRead {
   private def declaredFields(spark: SparkSession, f: FileSystem, root: String,
       view: View): Seq[org.apache.spark.sql.types.StructField] = {
     val (base, _) = liveStateV(f, root, view)
-    val baseSchema = readParquetCached(spark, s"$root/$base").schema
+    val baseSchema = MetaCache.get(spark, s"$root/$base").schema
     val added = addedColsV(f, root, view)
       .filterNot { case (n, _) => baseSchema.fieldNames.contains(n) }
     baseSchema.fields.filter(_.name != RID).toSeq ++
@@ -849,7 +777,7 @@ object TxnMergeOnRead {
       view: View): DataFrame = {
     val f = fs(spark, root)
     val (base, deltas) = liveStateV(f, root, view)
-    val baseDf = readParquetCached(spark, s"$root/$base")
+    val baseDf = MetaCache.get(spark, s"$root/$base")
     val withIns = deltas.values.toSeq.flatMap(e => readDir(spark, root, e.dir, "insert"))
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .fold(baseDf)(ins => baseDf.unionByName(ins, allowMissingColumns = true))
@@ -1039,7 +967,7 @@ object TxnMergeOnRead {
     val view = readView(f, root)
     val (base, deltas) = liveStateV(f, root, view)
     val basePath = s"$root/$base"
-    val schemaDf = readParquetCached(spark, basePath)
+    val schemaDf = MetaCache.get(spark, basePath)
     val parts = loadDirPrunedBy(spark, root, basePath, surv).toSeq ++
       deltas.values.toSeq.flatMap(e =>
         loadDirPrunedBy(spark, root, s"$root/${e.dir}/insert", surv))
@@ -1142,7 +1070,7 @@ object TxnMergeOnRead {
       // the prefix): events from before an ADD COLUMNS read NULL there
       val prefix = truncateView(f, root, view, toV)
       val (b, _) = liveStateV(f, root, prefix)
-      val baseCols = readParquetCached(spark, s"$root/$b").columns
+      val baseCols = MetaCache.get(spark, s"$root/$b").columns
         .filter(_ != RID).toSeq
       val added = addedColsV(f, root, prefix).filterNot(c => baseCols.contains(c._1))
       val filled = added.foldLeft(df) { case (d, (n, t)) =>
@@ -1176,7 +1104,7 @@ object TxnMergeOnRead {
     * MERGE): provably disjoint from everything. */
   private def footprint(spark: SparkSession, root: String, dir: String): String = {
     if (!fs(spark, root).exists(new Path(s"$root/$dir/delete"))) return "-"
-    val rows = readParquetCached(spark, s"$root/$dir/delete")
+    val rows = MetaCache.get(spark, s"$root/$dir/delete")
       .groupBy(col(s"$RID.txn").as("t"))
       .agg(min(col(s"$RID.seq")).as("lo"), max(col(s"$RID.seq")).as("hi"))
       .limit(FP_MAX_TAGS + 1).collect()
@@ -1943,7 +1871,7 @@ object TxnMergeOnRead {
         () // a commit (possibly a RESTORE) landed while planning: recompute
       } else {
         doomed.foreach(d => f.delete(new Path(s"$root/$d"), true))
-        if (doomed.nonEmpty) invalidateCached(root)
+        if (doomed.nonEmpty) MetaCache.purge(root)
         // dead writers' unfinished commit temp files
         f.listStatus(new Path(s"$root/$LOG_DIR")).toSeq.map(_.getPath)
           .filter(_.getName.startsWith(".tmp_"))

@@ -295,6 +295,7 @@ object TxnSql {
       tables.remove(name.toLowerCase)
       indexes.remove(name.toLowerCase)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+      MetaCache.purge(root)
       spark.emptyDataFrame
     } else if (up.startsWith("CREATE INDEX") || up.startsWith("DROP INDEX") ||
         up.startsWith("ALTER INDEX")) {

@@ -273,8 +273,8 @@ object AnnScale {
     // PRODUCTION shortlist (64): the knob a deployment actually turns. On
     // the UN-duplicated corpus — the ×64 replica corpus needs the shortlist
     // scaled ×64 to absorb duplicate neighbors, which overflows the
-    // shortlist-id pushdown (>65536 ids → full-corpus rescore fetch) and
-    // drowns the curve in a constant; recall here is the honest
+    // shortlist-id pushdown (> Stores.ID_CAP ids → full-corpus rescore
+    // fetch) and drowns the curve in a constant; recall here is the honest
     // single-copy figure.
     for ((dim, c1, q1) <- Seq((64, base, queries), (1024, wide(base), queriesW))
          if full) {

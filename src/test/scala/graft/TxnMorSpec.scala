@@ -5,7 +5,7 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import scala.util.{Failure, Success, Try}
 
-import graft.operators.TxnMergeOnRead
+import graft.operators.{MetaCache, TxnMergeOnRead}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -748,7 +748,9 @@ class TxnMorSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("vacuum drops this root's cached relations only — no global clear") {
     val rootA = s"$base/cacheA"
     val rootB = s"$base/cacheB"
-    for (r <- Seq(rootA, rootB)) {
+    // shares A's path prefix but not its directory
+    val rootA2 = s"$base/cacheA2"
+    for (r <- Seq(rootA, rootB, rootA2)) {
       org.apache.commons.io.FileUtils.deleteQuietly(new File(r))
       TxnMergeOnRead.create(spark, r,
         spark.range(0, 50).select(col("id").as("k"), lit(0L).as("v")))
@@ -756,15 +758,17 @@ class TxnMorSpec extends AnyFunSuite with BeforeAndAfterAll {
         spark.range(50, 60).select(col("id").as("k"), lit(1L).as("v")))
       TxnMergeOnRead.read(spark, r).count() // populate the relation cache
     }
-    assert(TxnMergeOnRead.cachedPathsUnder(rootB).nonEmpty,
+    assert(MetaCache.cachedPathsUnder(rootB).nonEmpty,
       "reads must have populated B's cache entries")
     // retire A's history (compact folds, vacuum deletes the retired dirs)
     TxnMergeOnRead.compact(spark, rootA)
     TxnMergeOnRead.vacuum(spark, rootA, retainVersions = 1)
-    assert(TxnMergeOnRead.cachedPathsUnder(rootA).isEmpty,
+    assert(MetaCache.cachedPathsUnder(rootA).isEmpty,
       "vacuum must drop the vacuumed root's cached relations eagerly")
-    assert(TxnMergeOnRead.cachedPathsUnder(rootB).nonEmpty,
+    assert(MetaCache.cachedPathsUnder(rootB).nonEmpty,
       "vacuuming A must NOT clear B's entries (the r17 full-clear papercut)")
+    assert(MetaCache.cachedPathsUnder(rootA2).nonEmpty,
+      "vacuuming A must NOT clear a root that merely shares its prefix")
     // and the vacuumed table still reads correctly (entries repopulate)
     assert(TxnMergeOnRead.read(spark, rootA).count() === 60)
   }
