@@ -164,61 +164,39 @@ object BinaryAnn {
       .toDF("id", "code", "qe", "n2")
   }
 
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val KIND = "BINARY"
 
-  /** Next write generation = 1 + the highest generation any ADD or REMOVE
-    * has used — derived from pure FS listings (`agen=K` store dirs,
-    * `tgen=K` tombstone dirs), so neither ingest nor delete ever READS
-    * index data to sequence itself. Single writer, like every index in
-    * the family. */
-  private def nextGen(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    val fs = fsOf(spark, path)
-    def maxGen(dir: String, prefix: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      if (!fs.exists(p)) -1
-      else fs.listStatus(p).map(_.getPath.getName).filter(_.startsWith(prefix))
-        .map(_.stripPrefix(prefix).toInt).foldLeft(-1)(math.max)
-    }
-    math.max(maxGen(path, "agen="),
-      maxGen(s"$path/_tombstones", "tgen=")) + 1
-  }
-
-  /** Persist the codec at rest: one compiled pass derives BOTH the packed
-    * code and the quantized vector per row and writes (id, code, qe, n2)
-    * parquet under the generation-0 store dir (`agen=0/`) — no second
-    * corpus scan, no join. This is where the 1-bit claim becomes a plan
-    * property: parquet is columnar, so [[probeIndex]]'s Hamming stage
-    * reads ONLY the (id, code) columns — dim/8 bytes of code per
-    * candidate instead of the raw floats — and the full-width qe column
-    * is decoded for shortlist rows alone. The generation lives in the
-    * DIRECTORY name (a partition column), so liveness resolution against
-    * tombstones costs zero extra bytes per row. The one-shot
-    * [[hammingTopK]] cannot beat a brute scan (it must read and quantize
-    * the whole float corpus per call, twice); the indexed probe is the
-    * production path, same as [[IvfPq]]'s build/probe split. */
+  /** Persist the codec at rest as an [[IndexStore]] of kind BINARY: one
+    * compiled pass derives BOTH the packed code and the quantized vector
+    * per row and writes (id, code, qe, n2) parquet under generation 0
+    * (`agen=0/`) of the `vectors` store — no second corpus scan, no join.
+    * This is where the 1-bit claim becomes a plan property: parquet is
+    * columnar, so [[probeIndex]]'s Hamming stage reads ONLY the (id, code)
+    * columns — dim/8 bytes of code per candidate instead of the raw
+    * floats — and the full-width qe column is decoded for shortlist rows
+    * alone. The generation lives in the DIRECTORY name (a partition
+    * column), so liveness resolution against tombstones costs zero extra
+    * bytes per row. The one-shot [[hammingTopK]] cannot beat a brute scan
+    * (it must read and quantize the whole float corpus per call, twice);
+    * the indexed probe is the production path, same as [[IvfPq]]'s
+    * build/probe split. */
   def buildIndex(corpus: DataFrame, path: String): DataFrame = {
     val spark = corpus.sparkSession
-    // a rebuild replaces the whole index: clear store, tombstones, and any
-    // pre-generation flat layout left by an older build at the same path
-    fsOf(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
-    encodeFull(corpus).write.parquet(s"$path/agen=0")
-    MetaCache.purge(path) // full rebuild
-    MetaCache.get(spark, path)
+    val ch = IndexStore.rebuild(spark, path, KIND)
+    encodeFull(corpus).write.parquet(s"${ch.fresh("vectors")}/agen=0")
+    IndexStore.rel(spark, ch.commit(0L), "vectors")
   }
 
   /** Train-free incremental ingest — the binary index's whole `add` step
     * is a parquet APPEND of the batch's (id, code, qe, n2) rows under a
-    * fresh `agen=G/` store dir. Unlike [[IvfPq.addBatch]] (which must
-    * encode against frozen codebooks) or [[GraphAnn.insertBatch]] (which
-    * must walk and re-trim), the 1-bit codec has NO trained state: each
-    * row's code depends only on its own embedding, so batches commute,
-    * nothing is re-read, and a batch-built index probes identically to a
-    * one-shot build (spec-asserted). This is the codec's operational
-    * advantage at 100 TB — ingest cost is exactly the batch's own encode
-    * pass, forever.
+    * fresh `agen=G/` dir of the store. Unlike [[IvfPq.addBatch]] (which
+    * must encode against frozen codebooks) or [[GraphAnn.insertBatch]]
+    * (which must walk and re-trim), the 1-bit codec has NO trained state:
+    * each row's code depends only on its own embedding, so batches
+    * commute, nothing is re-read, and a batch-built index probes
+    * identically to a one-shot build (spec-asserted). This is the codec's
+    * operational advantage at 100 TB — ingest cost is exactly the batch's
+    * own encode pass, forever.
     *
     * INGEST CONTRACT: batch ids must be NEW or tombstoned-dead — the
     * append path has no dedup (deduping would require reading the store,
@@ -230,33 +208,25 @@ object BinaryAnn {
     * discipline), which is what makes an UPDATE = removeBatch + addBatch
     * of the same id — the CDC consumption pattern (q389). */
   def addBatch(batch: DataFrame, path: String): Unit = {
-    val g = nextGen(batch.sparkSession, path)
-    encodeFull(batch).write.parquet(s"$path/agen=$g")
-    MetaCache.invalidate(path) // writer-invalidation contract
+    val ch = IndexStore.change(batch.sparkSession, path, KIND)
+    encodeFull(batch).write.mode("append")
+      .parquet(s"${ch.dir("vectors")}/agen=${ch.gen}")
+    ch.commit(ch.gen)
   }
 
-  /** O(batch) delete — append the removed ids as a tombstone generation
-    * under the hidden `_tombstones/tgen=G/` sidecar (underscore-prefixed,
-    * so the store's parquet discovery never sees it). A tombstone at
-    * generation G kills exactly the rows of that id added at agen < G:
-    * later re-adds survive, so remove/re-add sequences resolve by
-    * generation comparison alone — no read, no rewrite, no scan of the
-    * store, ever. Ids need not be live (removing an absent id is a
-    * no-op mask row). [[compactIndex]] folds tombstones away. */
+  /** O(batch) delete — append the removed ids as tombstones at generation
+    * G ([[IndexStore]]'s one format). A tombstone at generation G kills
+    * exactly the rows of that id added at agen < G: later re-adds
+    * survive, so remove/re-add sequences resolve by generation comparison
+    * alone — no read, no rewrite, no scan of the store, ever. Ids need not
+    * be live (removing an absent id is a no-op mask row). [[compactIndex]]
+    * folds them away. */
   def removeBatch(ids: DataFrame, path: String): Unit = {
     require(ids.columns.toSeq == Seq("id"),
       s"removeBatch wants a bare (id) frame, got ${ids.columns.mkString(",")}")
-    val g = nextGen(ids.sparkSession, path)
-    // tombstones are bounded by delete volume since the last compaction —
-    // one small file per batch, the IvfPq.removeIds discipline (and like
-    // it, small batches write that file driver-side)
-    val distinctIds = ids.distinct()
-    LocalParquet.writeSmall(distinctIds) { local =>
-      LocalParquet.writeFile(ids.sparkSession,
-        s"$path/_tombstones/tgen=$g/part-${java.util.UUID.randomUUID()}.parquet",
-        Seq("id" -> "long"), local.iterator.map(r => Seq[Any](r.getLong(0))))
-    } { distinctIds.coalesce(1).write.parquet(s"$path/_tombstones/tgen=$g") }
-    MetaCache.invalidate(path)
+    val ch = IndexStore.change(ids.sparkSession, path, KIND)
+    IndexStore.addTombstones(ch, ids.distinct())
+    ch.commit(ch.gen)
   }
 
   /** The live view of a store: every (id, code, qe, n2, agen) row not
@@ -267,12 +237,10 @@ object BinaryAnn {
     * partition metadata, zero bytes per row). */
   def openIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val idx = MetaCache.get(spark, path)
-    val tp = s"$path/_tombstones"
-    if (!fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(tp))) idx
-    else {
-      val t = MetaCache.get(spark, tp)
-        .select(col("id").as("_tid"), col("tgen"))
+    val m = IndexStore.open(spark, path, KIND)
+    val idx = IndexStore.rel(spark, m, "vectors")
+    IndexStore.tombstones(spark, m).fold(idx) { t0 =>
+      val t = t0.select(col("id").as("_tid"), col("tgen"))
       idx.join(broadcast(t),
         idx("id") === col("_tid") && col("tgen") > idx("agen"), "left_anti")
     }
@@ -281,18 +249,17 @@ object BinaryAnn {
   /** Compaction — physically drop tombstone-killed rows and fold the
     * store back to a single generation, after which probes pay zero mask
     * cost again. Purely physical: probe results are identical before and
-    * after (spec-pinned). Crash-safe: the new store is fully written
-    * beside the old, then swapped in by [[Stores.publish]]. */
+    * after (spec-pinned). The folded store is written to a fresh dir and
+    * the tombstones leave the index in the same commit. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val fs = fsOf(spark, path)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_tombstones")))
-      return
-    val tmp = s"${path}_compact"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    openIndex(spark, path).select("id", "code", "qe", "n2")
-      .write.parquet(s"$tmp/agen=0")
-    Stores.publish(fs, tmp, path) // whole store swapped
+    val ch = IndexStore.change(spark, path, KIND, compaction = true)
+    if (ch.has(IndexStore.TOMBS)) {
+      openIndex(spark, path).select("id", "code", "qe", "n2")
+        .write.parquet(s"${ch.fresh("vectors")}/agen=0")
+      ch.drop(IndexStore.TOMBS)
+    }
+    ch.commit(ch.base.gen)
   }
 
   /** Search a [[buildIndex]] store: Hamming over the pruned (id, code)

@@ -632,9 +632,9 @@ object GraphAnn {
     // [[trimLocal]] reads only endpoint vectors (one pruned fetch)
     val old = g0.join(touched, Seq("src"), "left_semi")
       .as[(Long, Long)].collect()
-    val trimmed = trimLocal(spark, quantizedView(corpus), defaultFetch,
-      (old ++ newE ++ backE).distinct.toSeq, m)
-    untouched.unionByName(trimmed)
+    untouched.unionByName(trimLocal(spark, quantizedView(corpus),
+      defaultFetch, (old ++ newE ++ backE).distinct.toSeq, m)
+      .toDF("src", "dst"))
   }
 
   /** GRAPH-INDEX DELETE with repair — the lifecycle's last step (IVF-PQ
@@ -696,206 +696,109 @@ object GraphAnn {
   // =====================================================================
   // THE AT-REST FORM — the graph index as files, not a DataFrame
   // (VERDICT r15 task 2/3: "what q370 did for the binary codec — the
-  // claim as a plan property"). Layout under one root:
+  // claim as a plan property"). An [[IndexStore]] of kind GRAPH: the
+  // manifest holds the build constants (m, m1, n_buckets, layers), the
+  // write generation, the entry ids and the dir of every logical store:
   //
-  //   <path>/vectors/bucket=B/…   (id, qe, n2)    bucket = pmod(id, nB)
-  //   <path>/adj0/bucket=B/…      (src, dst, gen) bucket = pmod(src, nB)
-  //   <path>/radj<l>/bucket=B/…   reverse adjacency (same rows as adj<l>,
-  //                               bucket = pmod(DST, nB)) — delete
-  //                               repair's in-edge discovery fetches it
-  //                               partition-pruned by removed id; any-gen
-  //                               discovery state, live truth stays adj.
-  //                               LAZY: absent until the first
-  //                               removeBatch materializes it (a
-  //                               write-mostly index never pays for it);
-  //                               appends maintain it once it exists
-  //   <path>/adj<l>/bucket=B/…    level-l adjacency (l = 1..layers),
-  //                               same shape — the hierarchy STACKS:
-  //                               levels are added while a level holds
-  //                               > LEVEL_CAP nodes, because a flat walk
-  //                               of a big single upper layer re-creates
-  //                               the radius problem one level up
-  //                               (GraphScale measured the fixed 2-layer
-  //                               probe collapsing to recall 0.13 at ×64
-  //                               while the stacked descent holds 0.76)
-  //   <path>/entries/…            lowest live TOP-level ids (≤ ENTRY_CAP)
-  //   <path>/tombstones/…         deleted node ids (append-only)
-  //   <path>/_meta                m, m1, nBuckets, layers, gen
+  //   vectors   bucket=B/…  (id, qe, n2)    bucket = pmod(id, nB)
+  //   adj0      bucket=B/…  (src, dst, gen) bucket = pmod(src, nB)
+  //   adj<l>    bucket=B/…  level-l adjacency (l = 1..layers), same
+  //                         shape — the hierarchy STACKS (LEVEL_CAP)
+  //   radj<l>   bucket=B/…  reverse adjacency (adj<l>'s rows, bucket =
+  //                         pmod(DST, nB)): delete repair's in-edge
+  //                         discovery; LAZY ([[writeAdjLocal]])
+  //   tombstones            deleted node ids ([[IndexStore]]'s format)
+  //   entries (manifest)    lowest live TOP-level ids (≤ ENTRY_CAP)
   //
   // Probe cost is a PLAN PROPERTY: every walk fetch filters on the bucket
   // partition column first (PartitionFilters — spec-asserted), so a hop
   // reads only the buckets its ≤ |Q|·ef ids live in, never the store.
   // Mutations never rewrite the store: an insert/delete batch APPENDS the
-  // re-trimmed edge sets of the touched sources at generation gen+1 and
-  // the reader resolves max-gen-per-src over its (bounded, pruned) fetch —
-  // the [[IvfPq.addBatch]]/tombstone discipline applied to adjacency.
-  // Levels need no storage at all: the HNSW layer draw ([[levelNodes]])
-  // is a pure keyed-hash function of the id, so layer membership is
-  // derivable forever, and only the layer GRAPHS are materialized.
+  // re-trimmed edge sets of the touched sources at generation gen+1, the
+  // reader resolves max-gen-per-src over its (bounded, pruned) fetch, and
+  // the batch's commit bumps the manifest's generation — the
+  // [[IvfPq.addBatch]]/tombstone discipline applied to adjacency. Builds
+  // and compactions write fresh dirs and commit once. Levels need no
+  // storage at all: the HNSW layer draw ([[levelNodes]]) is a pure
+  // keyed-hash function of the id, so layer membership is derivable
+  // forever, and only the layer GRAPHS are materialized.
   //
-  // Single-writer contract (the [[TxnMergeOnRead]] counterpart is
-  // deliberately out of scope here, as for [[IvfPq]]): concurrent
-  // addBatch/removeBatch calls race the generation counter. Ingested ids
-  // must be NEW ([[BinaryAnn.addBatch]]'s unique-id contract) — a re-used
-  // id would alias its vector row and corrupt trims silently.
+  // Single writer, as every [[IndexStore]]. Ingested ids must be NEW
+  // ([[BinaryAnn.addBatch]]'s unique-id contract) — a re-used id would
+  // alias its vector row and corrupt trims silently.
   // =====================================================================
 
-  /** Lowest live layer-1 ids kept in the entry sidecar. The cap bounds
-    * the sidecar read at probe time; semantics are ALWAYS "the lowest
-    * min(cap, live) layer-1 ids" — [[removeBatch]] rebuilds the sidecar
-    * from the store whenever a deletion touches it, so the oracle rule
-    * (lowest ef1 LIVE layer-1 ids) holds at every generation. */
+  private val KIND = "GRAPH"
+
+  /** Lowest live top-level ids kept in the manifest. The cap bounds the
+    * list; semantics are ALWAYS "the lowest min(cap, live) top-level
+    * ids" — [[removeBatch]] rebuilds the list from the store whenever a
+    * deletion touches it, so the oracle rule (lowest ef1 LIVE top-level
+    * ids) holds at every generation. */
   private val ENTRY_CAP = 256
 
   /** Stack another level while the current top holds more nodes than
-    * this (≈ 8·ef1·m1, the [[hnswTopK]] scaladoc's stacking rule). */
+    * this (≈ 8·ef1·m1, the [[hnswTopK]] scaladoc's stacking rule): a
+    * flat walk of a big single upper layer re-creates the radius problem
+    * one level up (GraphScale measured the fixed 2-layer probe collapsing
+    * to recall 0.13 at ×64 while the stacked descent holds 0.76). */
   private val LEVEL_CAP = 256
 
-  private case class IndexMeta(m: Int, m1: Int, nBuckets: Int,
-    layers: Int, gen: Long)
-
-  private def hfs(spark: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, mt: IndexMeta): Unit = {
-    val f = hfs(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$path/.meta_tmp_${java.util.UUID.randomUUID.toString.take(12)}")
-    val out = f.create(tmp, true)
-    try out.write(
-      (s"m=${mt.m}\nm1=${mt.m1}\nnBuckets=${mt.nBuckets}\n" +
-        s"layers=${mt.layers}\ngen=${mt.gen}\n").getBytes("UTF-8"))
-    finally out.close()
-    Stores.publish(f, tmp.toString, s"$path/_meta")
-  }
-
-  private def readMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): IndexMeta = {
-    val f = hfs(spark, path)
-    val p = new org.apache.hadoop.fs.Path(s"$path/_meta")
-    require(f.exists(p), s"no graph index at $path (missing _meta)")
-    val in = f.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val kv = txt.linesIterator.filter(_.contains("="))
-      .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
-    IndexMeta(kv("m").toInt, kv("m1").toInt, kv("nBuckets").toInt,
-      kv("layers").toInt, kv("gen").toLong)
-  }
-
-  private def bucketed(df: DataFrame, idCol: String, n: Int): DataFrame =
-    df.withColumn("bucket", pmod(col(idCol), lit(n.toLong)))
-
-  /** Write one layer's full adjacency at `<path>/adj<l>` (bucketed by
-    * src, overwriting) — the builds and compaction's tmp layers; appends
-    * go through [[writeAdjLocal]]. Nothing to invalidate: a build has
-    * purged `path` first, and compaction publishes the tmp layer. */
-  private def writeAdj(edges: DataFrame, path: String, layer: Int,
-      gen: Long, n: Int): Unit =
-    // co-locate each bucket's rows before the partitioned write: ONE
-    // file per bucket per generation instead of (shuffle partitions ×
-    // buckets) shards — the probe's listing cost follows generations,
-    // not writer parallelism (and at scale this is the co-located
-    // bucket-write shape anyway)
-    bucketed(edges.select(col("src"), col("dst")).withColumn("gen", lit(gen)),
-        "src", n)
+  /** Write `df` into the fresh dir `dir`, partitioned by `bucket =
+    * pmod(key, n)` — the builds and compaction; appends go through
+    * [[writeAdjLocal]]. Each bucket's rows are co-located before the
+    * partitioned write: ONE file per bucket per generation instead of
+    * (shuffle partitions × buckets) shards — the probe's listing cost
+    * follows generations, not writer parallelism (and at scale this is
+    * the co-located bucket-write shape anyway). */
+  private def writeBucketed(df: DataFrame, key: String, n: Int,
+      dir: String): Unit =
+    df.withColumn("bucket", pmod(col(key), lit(n.toLong)))
       .repartition(n, col("bucket"))
-      .write.partitionBy("bucket")
-      .mode("overwrite").parquet(s"$path/adj$layer")
+      .write.partitionBy("bucket").parquet(dir)
+
+  /** One layer's full adjacency at generation `gen`, bucketed by src. */
+  private def writeAdj(edges: DataFrame, dir: String, gen: Long,
+      n: Int): Unit =
+    writeBucketed(edges.select(col("src"), col("dst"))
+      .withColumn("gen", lit(gen)), "src", n, dir)
 
   /** [[writeAdj]] for edge sets that are ALREADY driver state (the
-    * [[trimLocalRows]] outputs: bounded O(batch·degree) by the insert /
-    * remove algebra) — writes the identical bucketed at-rest form
+    * [[trimLocal]] outputs: bounded O(batch·degree) by the insert /
+    * remove algebra) — appends the identical bucketed at-rest form
     * ([[LocalParquet]]: same `bucket=<pmod(src, n)>` directories, same
-    * optional-int64 (src, dst, gen) schema, session codec, footer stats)
-    * with ZERO Spark jobs instead of a shuffle + partitioned-write job
-    * per layer (guide §5: don't spin up a job for data the driver
-    * already holds). Append-only — exactly the persisted-DML call sites'
-    * mode; full builds keep the distributed [[writeAdj]].
-    *
-    * Appends also maintain the reverse sidecar `<path>/radj<l>` (same
-    * rows, bucketed by DST) WHEN IT EXISTS. The reverse form serves one
-    * consumer — [[removeBatch]]'s in-edge discovery, a dst predicate
-    * src-bucketing cannot prune — and is LAZY: a fresh build writes
-    * nothing (a write-mostly index never pays for it — the eager form
-    * measured the q382/q384 build-heavy lifecycles 1.5–1.8× slower for
-    * a sidecar their queries never read), the FIRST removeBatch
-    * materializes it from the adjacency ([[ensureRadj]], one O(layer)
-    * copy paid once per index), and every later append maintains it
-    * here. `radj` is append-only DISCOVERY state: it may carry
-    * stale-generation rows (a superseded source's old edges), which the
-    * pruned LIVE re-fetch against `adj` already drops — so it needs no
-    * generation resolution of its own, only the mirror discipline
-    * (every edge appended to adj lands in radj in the same call once
-    * radj exists). */
+    * optional-int64 (src, dst, gen) schema) with ZERO Spark jobs instead
+    * of a shuffle + partitioned-write job per layer (guide §5). Appends
+    * also maintain the reverse store `radj<l>` WHEN THE CHANGE HAS IT:
+    * the store is lazy (the eager form measured the q382/q384 build-heavy
+    * lifecycles 1.5–1.8× slower for a store their queries never read),
+    * [[ensureRadj]] materializes it once per index, and from then on
+    * every edge appended to adj lands in radj in the same change. radj
+    * is append-only DISCOVERY state: its stale-generation rows are
+    * dropped by the pruned LIVE re-fetch against `adj`, so it needs no
+    * generation resolution of its own. */
   private def writeAdjLocal(spark: org.apache.spark.sql.SparkSession,
-      edges: Seq[(Long, Long)], path: String, layer: Int,
-      gen: Long, n: Int): Unit = {
+      ch: IndexStore.Change, edges: Seq[(Long, Long)], layer: Int,
+      n: Int): Unit = {
     val fields = Seq("src" -> "long", "dst" -> "long", "gen" -> "long")
-    val rows: Seq[Seq[Any]] = edges.map { case (s, d) => Seq[Any](s, d, gen) }
-    LocalParquet.writeBucketed(spark, s"$path/adj$layer", "bucket", fields,
+    val rows: Seq[Seq[Any]] = edges.map { case (s, d) => Seq[Any](s, d, ch.gen) }
+    LocalParquet.writeBucketed(spark, ch.dir(s"adj$layer"), "bucket", fields,
       rows, r => Math.floorMod(r.head.asInstanceOf[Long], n.toLong))
-    if (hfs(spark, path).exists(
-        new org.apache.hadoop.fs.Path(s"$path/radj$layer")))
-      LocalParquet.writeBucketed(spark, s"$path/radj$layer", "bucket", fields,
-        rows, r => Math.floorMod(r(1).asInstanceOf[Long], n.toLong))
-    MetaCache.invalidate(path) // writer-invalidation contract
+    if (ch.has(s"radj$layer"))
+      LocalParquet.writeBucketed(spark, ch.dir(s"radj$layer"), "bucket",
+        fields, rows, r => Math.floorMod(r(1).asInstanceOf[Long], n.toLong))
   }
 
-  /** Materialize (or open) layer `l`'s reverse-adjacency sidecar: one
-    * dst-bucketed copy of the full adjacency on first use, pruned point
-    * fetches forever after. Idempotent; written to tmp and published, so
-    * a racing reader never sees a half-built sidecar. */
-  private def ensureRadj(spark: org.apache.spark.sql.SparkSession,
-      path: String, layer: Int, n: Int): DataFrame = {
-    val f = hfs(spark, path)
-    val dir = s"$path/radj$layer"
-    if (!f.exists(new org.apache.hadoop.fs.Path(dir))) {
-      val tmp = s"$path/.radj${layer}_tmp"
-      f.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      bucketed(spark.read.parquet(s"$path/adj$layer")
-          .select(col("src"), col("dst"), col("gen")), "dst", n)
-        .repartition(n, col("bucket"))
-        .write.partitionBy("bucket").parquet(tmp)
-      Stores.publish(f, tmp, dir)
-    }
-    MetaCache.get(spark, dir)
-  }
-
-  private def writeEntries(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: Array[Long]): Unit = {
-    // tmp + publish so a reader never sees a half-written sidecar; the id
-    // list is bounded (ENTRY_CAP) driver state — LocalParquet, no job
-    val tmp = s"$path/.entries_tmp"
-    val f = hfs(spark, path)
-    f.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    LocalParquet.writeFile(spark, s"$tmp/part-00000.parquet",
-      Seq("id" -> "long"), ids.iterator.map(Seq[Any](_)))
-    Stores.publish(f, tmp, s"$path/entries")
-  }
-
-  private def readEntries(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Long] = {
-    import spark.implicits._
-    MetaCache.get(spark, s"$path/entries").select("id").as[Long]
-      .collect().sorted
-  }
-
-  private def readTombs(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Long] = {
-    val f = hfs(spark, path)
-    if (!f.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones")))
-      Array.emptyLongArray
-    else {
-      import spark.implicits._
-      // bounded-collect contract: tombstones grow with DELETED ids only
-      // (the IvfPq.removeIds posture); a compaction folding them into a
-      // rewritten store is the long-run answer, as for every LSM design
-      MetaCache.get(spark, s"$path/tombstones").select("id").as[Long]
-        .collect().distinct.sorted
-    }
+  /** Layer `l`'s reverse adjacency in this change: one dst-bucketed copy
+    * of the full adjacency into a fresh dir on first use (visible with
+    * the change's commit), pruned point fetches forever after. */
+  private def ensureRadj(ch: IndexStore.Change, layer: Int,
+      n: Int): DataFrame = {
+    val store = s"radj$layer"
+    if (!ch.has(store))
+      writeBucketed(ch.rel(s"adj$layer").select("src", "dst", "gen"), "dst",
+        n, ch.fresh(store))
+    ch.rel(store)
   }
 
   /** The at-rest fetch: bucket partition pruning first (bucket =
@@ -933,28 +836,18 @@ object GraphAnn {
     } else base
   }
 
-  /** Driver-side uniform trim for the at-rest mutation paths: fetch the
-    * edge set's endpoint vectors ONCE (bucket-pruned, collected — they
-    * are bounded by the same contract as the walks' probe batch), score
-    * every edge with the exact int64 cosine, keep each source's top-`m`
-    * under (cos desc, dst) — [[trimEdges]]' algebra with zero joins,
-    * windows, or checkpoints (each cost a scheduling round-trip per trim;
-    * the result rows are a LOCAL relation, so the append below has no
-    * file lineage to guard). The fetched-row count doubles as the
-    * unique-id ingest guard (the [[BinaryAnn.probeIndex]] discipline):
-    * a re-used id would alias a vector and corrupt trims silently. */
+  /** Driver-side uniform trim for the insert and at-rest mutation paths:
+    * fetch the edge set's endpoint vectors ONCE (bucket-pruned, collected
+    * — they are bounded by the same contract as the walks' probe batch),
+    * score every edge with the exact int64 cosine, keep each source's
+    * top-`m` under (cos desc, dst) — [[trimEdges]]' algebra with zero
+    * joins, windows, or checkpoints (each cost a scheduling round-trip
+    * per trim). The trimmed edges STAY driver state, so persisted-index
+    * writers hand them straight to [[LocalParquet]]. The fetched-row
+    * count doubles as the unique-id ingest guard (the
+    * [[BinaryAnn.probeIndex]] discipline): a re-used id would alias a
+    * vector and corrupt trims silently. */
   private def trimLocal(spark: org.apache.spark.sql.SparkSession,
-      vec: DataFrame, fetch: IdFetch, toTrim: Seq[(Long, Long)],
-      mDeg: Int): DataFrame = {
-    import spark.implicits._
-    trimLocalRows(spark, vec, fetch, toTrim, mDeg).toDF("src", "dst")
-  }
-
-  /** [[trimLocal]] without the DataFrame wrapper: the trimmed edge set
-    * STAYS driver state, so persisted-index writers can hand it straight
-    * to [[LocalParquet]] (zero Spark jobs) instead of round-tripping
-    * through a local relation + shuffle + write job. */
-  private def trimLocalRows(spark: org.apache.spark.sql.SparkSession,
       vec: DataFrame, fetch: IdFetch, toTrim: Seq[(Long, Long)],
       mDeg: Int): Seq[(Long, Long)] = {
     import spark.implicits._
@@ -1003,16 +896,19 @@ object GraphAnn {
         .select("src", "dst")
     }
 
+
   /** Build and persist the index: one quantize pass writes the bucketed
     * vector store, every layer graph lands bucketed-by-src at generation
-    * 1, and the entry sidecar records the lowest TOP-level ids.
-    * `centroidStride` switches the layer-0 build to [[blockedKnnGraph]] —
-    * the 100 TB build path; None = exact [[knnGraph]] (the fixture-gold
-    * standard). Upper levels stack while a level holds > LEVEL_CAP nodes
-    * (up to `maxLayers` — fixture queries pin 1 so their oracles replay a
-    * fixed two-layer descent at any data size); level ≥ 2 graphs build
-    * blocked when `centroidStride` is set (√n-sized strides), exact
-    * otherwise. */
+    * 1, and the manifest records the lowest TOP-level ids as the entry
+    * set. Every store goes to a fresh dir and the build commits once, so
+    * a rebuild over an existing index leaves the old one readable until
+    * the commit. `centroidStride` switches the layer-0 build to
+    * [[blockedKnnGraph]] — the 100 TB build path; None = exact
+    * [[knnGraph]] (the fixture-gold standard). Upper levels stack while
+    * a level holds > LEVEL_CAP nodes (up to `maxLayers` — fixture queries
+    * pin 1 so their oracles replay a fixed two-layer descent at any data
+    * size); level ≥ 2 graphs build blocked when `centroidStride` is set
+    * (√n-sized strides), exact otherwise. */
   def writeIndex(corpus: DataFrame, path: String, m: Int = 8, m1: Int = 4,
       nBuckets: Int = 16, centroidStride: Option[Int] = None,
       g0Opt: Option[DataFrame] = None,
@@ -1022,8 +918,7 @@ object GraphAnn {
       "bad index parameters")
     val spark = corpus.sparkSession
     import spark.implicits._
-    hfs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
-    MetaCache.purge(path) // full rebuild: drop relations AND schemas
+    val ch = IndexStore.rebuild(spark, path, KIND)
     // callers holding prebuilt layer graphs (a fixture cache, a prior
     // export) pass them in; the contract is degree-m over `corpus` /
     // degree-m1 over its layer-1 draw — identical to what would be built
@@ -1033,13 +928,13 @@ object GraphAnn {
     // Decide the level stack FIRST (cheap counts), then run every store
     // write — vectors + each layer's adjacency, all lazy plans over
     // corpus draws, landing in DISJOINT dirs with no ordering contract
-    // until this method returns — CONCURRENTLY (guide §2.6). The build
-    // was paying its heaviest jobs (the knn-graph kernels and the
-    // quantize+bucket write) strictly serially.
+    // until the commit — CONCURRENTLY (guide §2.6). The build was paying
+    // its heaviest jobs (the knn-graph kernels and the quantize+bucket
+    // write) strictly serially.
     var topNodes: DataFrame = null
     var l = 1
     var done = false
-    var layerGraphs = List.empty[(Int, DataFrame)]
+    var layerGraphs = List((0, g0))
     while (!done) {
       val nodes = levelNodes(corpus, l)
       val nl = nodes.count()
@@ -1060,23 +955,22 @@ object GraphAnn {
           levelNodes(corpus, l + 1).count() >= 2) l += 1
       else done = true
     }
+    val vecDir = ch.fresh("vectors")
+    val adjDirs = layerGraphs.map { case (ll, gl) => (ch.fresh(s"adj$ll"), gl) }
     ParallelWrites.all(
-      (() => bucketed(AnnSearch.quantized(corpus), "id", nBuckets)
-        .repartition(nBuckets, col("bucket"))
-        .write.partitionBy("bucket").parquet(s"$path/vectors")) +:
-      (() => writeAdj(g0, path, 0, 1L, nBuckets)) +:
-      layerGraphs.map { case (ll, gl) =>
-        () => writeAdj(gl, path, ll, 1L, nBuckets)
-      }: _*)
+      (() => writeBucketed(AnnSearch.quantized(corpus), "id", nBuckets,
+        vecDir)) +:
+      adjDirs.map { case (d, gl) => () => writeAdj(gl, d, 1L, nBuckets) }: _*)
     val ents = topNodes.select(col(topNodes.columns.head).as("id"))
       .orderBy("id").limit(ENTRY_CAP).as[Long].collect()
-    writeEntries(spark, path, ents)
-    writeMeta(spark, path, IndexMeta(m, m1, nBuckets, l, 1L))
+    ch.commit(1L, consts = Map("m" -> m.toString, "m1" -> m1.toString,
+      "n_buckets" -> nBuckets.toString, "layers" -> l.toString),
+      entries = ents.toSeq)
   }
 
   /** Probe the persisted index — the HNSW descent with every byte coming
-    * from pruned reads: the top-level walk starts at the entry sidecar's
-    * ef1 lowest live ids, each level's per-query winners seed the next
+    * from pruned reads: the top-level walk starts at the manifest's ef1
+    * lowest live entry ids, each level's per-query winners seed the next
     * level down (narrow ef1/hops1 walks — one per stored level), and the
     * final layer-0 walk runs at ef/hops. All walks are driver-paced
     * ([[beamTopK]] — probe batches are bounded by contract) and every
@@ -1090,86 +984,69 @@ object GraphAnn {
     require(ef1 >= 1 && ef >= k, s"need ef1 >= 1 and ef=$ef >= k=$k")
     val spark = queries.sparkSession
     import spark.implicits._
-    val mt = readMeta(spark, path)
-    val tombs = readTombs(spark, path)
-    val fetch = indexFetch(mt.nBuckets, tombs)
-    val vec = MetaCache.get(spark, s"$path/vectors")
-    val adj0 = MetaCache.get(spark, s"$path/adj0")
-    val ents = readEntries(spark, path).filterNot(tombs.contains).take(ef1)
+    val mt = IndexStore.open(spark, path, KIND)
+    val tombs = IndexStore.tombIds(spark, mt)
+    val fetch = indexFetch(mt.int("n_buckets"), tombs)
+    val vec = IndexStore.rel(spark, mt, "vectors")
+    val ents = mt.entries.filterNot(tombs.contains).take(ef1).toArray
     require(ents.nonEmpty,
-      s"probeIndex: entry sidecar exhausted at $path — rebuild the index")
+      s"probeIndex: entry set exhausted at $path — rebuild the index")
     var seeds: Option[Map[Long, Array[Long]]] = None
-    for (l <- mt.layers to 1 by -1) {
+    for (l <- mt.int("layers") to 1 by -1) {
       val beam = beamWalkArr(queries, vec,
-        MetaCache.get(spark, s"$path/adj$l"), ef1, hops1,
+        IndexStore.rel(spark, mt, s"adj$l"), ef1, hops1,
         if (seeds.isEmpty) Some(ents) else None, seeds, fetch)
       seeds = Some(beam.groupBy(_._1).map { case (q, a) => q -> a.map(_._2) })
     }
-    val finalBeam = beamWalkArr(queries, vec, adj0, ef, hops,
-      None, seeds, fetch)
+    val finalBeam = beamWalkArr(queries, vec,
+      IndexStore.rel(spark, mt, "adj0"), ef, hops, None, seeds, fetch)
     AnnSearch.rankTopK(finalBeam.toSeq.toDF("qid", "cid", "cos"), k)
   }
 
   /** HNSW-style LEVEL-AWARE incremental insertion against the persisted
     * index (VERDICT r15 task 3). One upper walk serves two purposes: every
-    * batch node descends layer 1 from the entry sidecar to find its
-    * layer-0 seeds (HNSW's descent — the search structure is its own
-    * build tool), and the walk's top-m1 per LAYER-1 batch node are that
-    * node's layer-1 out-edges. Each layer then applies the uniform
-    * [[insertBatch]] algebra — back-edges + touched-source re-trim — and
-    * APPENDS the re-trimmed sources at gen+1; untouched sources' rows are
-    * never rewritten (max-gen-per-src resolution at read). All walks run
+    * batch node descends layer 1 from the entry set to find its layer-0
+    * seeds (HNSW's descent — the search structure is its own build tool),
+    * and the walk's top-m1 per LAYER-1 batch node are that node's layer-1
+    * out-edges. Each layer then applies the uniform [[insertBatch]]
+    * algebra — back-edges + touched-source re-trim — and APPENDS the
+    * re-trimmed sources at gen+1; untouched sources' rows are never
+    * rewritten (max-gen-per-src resolution at read). All walks run
     * against the PRE-batch generations, so inserts within a batch commute
     * (the [[IvfPq.addBatch]] order-independence contract) and the whole
     * step replays in the oracle. Cost: the batch's own schedule-bounded
     * walks + two O(batch·m) trims + appends — never a rebuild, flat in
     * corpus size (GraphScale's insert discipline). */
-  // env-guarded phase timer for tools/GraphIndexProbe tuning runs only
-  private def phased[A](label: String)(f: => A): A =
-    if (!sys.env.contains("GRAFT_GRAPH_PHASES")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[phase] $label%-18s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-
   def addBatch(path: String, batch: DataFrame, ef1: Int = 8,
       hops1: Int = 2, ef: Int = 16, hops: Int = 2): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val mt = readMeta(spark, path)
-    require(mt.m1 <= ef1 && mt.m <= ef,
-      s"walk widths must cover edge degrees (m=${mt.m} ef=$ef, " +
-        s"m1=${mt.m1} ef1=$ef1)")
-    val newGen = mt.gen + 1
-    val tombs = readTombs(spark, path)
-    val fetch = indexFetch(mt.nBuckets, tombs)
+    val ch = IndexStore.change(spark, path, KIND)
+    val mt = ch.base
+    val (mDeg, m1, nb, layers) = (mt.int("m"), mt.int("m1"),
+      mt.int("n_buckets"), mt.int("layers"))
+    require(m1 <= ef1 && mDeg <= ef,
+      s"walk widths must cover edge degrees (m=$mDeg ef=$ef, " +
+        s"m1=$m1 ef1=$ef1)")
+    val tombs = IndexStore.tombIds(spark, mt)
+    val fetch = indexFetch(nb, tombs)
     // vectors first: the trims below fetch BOTH endpoints (incl. batch
-    // ids) from the store; the walks only ever fetch pre-batch candidates
-    phased("vec append")({
-      // the batch is driver-collectable by this method's own contract
-      // (its ids/beams are collected below) — append the Spark-computed
-      // quantized rows driver-side ([[LocalParquet]], same id-bucketed
-      // layout) instead of a shuffle + partitioned-write job (guide §5)
-      AnnSearch.quantized(batch).collect()
-        .groupBy(r => Math.floorMod(r.getLong(0), mt.nBuckets))
-        .foreach { case (bucket, rs) =>
-          LocalParquet.writeFile(spark,
-            s"$path/vectors/bucket=$bucket/part-${java.util.UUID.randomUUID()}.parquet",
-            Seq("id" -> "long", "qe" -> "array<long>", "n2" -> "long"),
-            rs.iterator.map(r =>
-              Seq[Any](r.getLong(0), r.getSeq[Long](1), r.getLong(2))))
-        }
-    })
-    MetaCache.invalidate(s"$path/vectors")
-    val vec = MetaCache.get(spark, s"$path/vectors")
-    val adj0 = MetaCache.get(spark, s"$path/adj0")
-    val adjL = (1 to mt.layers).map(l =>
-      l -> MetaCache.get(spark, s"$path/adj$l")).toMap
-    val ents = readEntries(spark, path).filterNot(tombs.contains).take(ef1)
+    // ids) from the store; the walks only ever fetch pre-batch candidates.
+    // The batch is driver-collectable by this method's own contract (its
+    // ids/beams are collected below) — append the Spark-computed
+    // quantized rows driver-side ([[LocalParquet]], same id-bucketed
+    // layout) instead of a shuffle + partitioned-write job (guide §5)
+    LocalParquet.writeBucketed(spark, ch.dir("vectors"), "bucket",
+      Seq("id" -> "long", "qe" -> "array<long>", "n2" -> "long"),
+      AnnSearch.quantized(batch).collect().toSeq
+        .map(r => Seq[Any](r.getLong(0), r.getSeq[Long](1), r.getLong(2))),
+      r => Math.floorMod(r.head.asInstanceOf[Long], nb.toLong))
+    val vec = ch.rel("vectors")
+    val adj0 = ch.rel("adj0")
+    val adjL = (1 to layers).map(l => l -> ch.rel(s"adj$l")).toMap
+    val ents = mt.entries.filterNot(tombs.contains).take(ef1).toArray
     require(ents.nonEmpty,
-      s"addBatch: entry sidecar exhausted at $path — rebuild the index")
+      s"addBatch: entry set exhausted at $path — rebuild the index")
 
     /** Per-query top-`deg` edge selection from a walk beam — driver-side
       * over beams that are driver state already (the beamWalkArr rule). */
@@ -1186,72 +1063,51 @@ object GraphAnn {
       * so the whole candidate edge set is driver state and [[trimLocal]]
       * reads only endpoint vectors. */
     def layerRows(adj: DataFrame, newE: Seq[(Long, Long)],
-        mDeg: Int): Seq[(Long, Long)] = {
+        deg: Int): Seq[(Long, Long)] = {
       val backE = newE.map { case (s0, d0) => (d0, s0) }
       val touchedIds = (newE.iterator.map(_._1) ++ backE.iterator.map(_._1))
         .toArray.distinct
       val old = resolveLive(fetch(adj, "src", touchedIds))
         .as[(Long, Long)].collect()
-      trimLocalRows(spark, vec, fetch, (old ++ newE ++ backE).distinct.toSeq,
-        mDeg)
+      trimLocal(spark, vec, fetch, (old ++ newE ++ backE).distinct.toSeq,
+        deg)
     }
 
     // batch node ids per level (the keyed draw; level sets are nested)
-    val bIdsAt = (1 to mt.layers).map(l => l -> levelNodes(batch, l)
+    val bIdsAt = (1 to layers).map(l => l -> levelNodes(batch, l)
       .select(col(batch.columns.head).cast("long")).as[Long]
       .collect().toSet).toMap
     // ONE walk per stored level, descending: each level's beam both seeds
     // the next level down (HNSW's insert descent) and supplies the
     // top-m1 edge selection for batch nodes drawn AT that level
     var seeds: Option[Map[Long, Array[Long]]] = None
-    val newEAt = (mt.layers to 1 by -1).map { l =>
-      val beam = phased(s"walk L$l")(beamWalkArr(batch, vec, adjL(l), ef1,
-        hops1, if (seeds.isEmpty) Some(ents) else None, seeds, fetch))
+    val newEAt = (layers to 1 by -1).map { l =>
+      val beam = beamWalkArr(batch, vec, adjL(l), ef1, hops1,
+        if (seeds.isEmpty) Some(ents) else None, seeds, fetch)
       seeds = Some(beam.groupBy(_._1).map { case (q, a) => q -> a.map(_._2) })
-      l -> topEdges(beam, mt.m1, bIdsAt(l).contains)
+      l -> topEdges(beam, m1, bIdsAt(l).contains)
     }.toMap
-    val w0Beam = phased("lower walk")(beamWalkArr(batch, vec, adj0, ef,
-      hops, None, seeds, fetch))
+    val w0Beam = beamWalkArr(batch, vec, adj0, ef, hops, None, seeds, fetch)
 
-    val rows0 = phased("trim L0")(
-      layerRows(adj0, topEdges(w0Beam, mt.m, _ => true), mt.m))
-    val rowsAt = (1 to mt.layers).flatMap { l =>
+    val rows0 = layerRows(adj0, topEdges(w0Beam, mDeg, _ => true), mDeg)
+    val rowsAt = (1 to layers).flatMap { l =>
       if (bIdsAt(l).isEmpty) None
-      else Some(l -> phased(s"trim L$l")(
-        layerRows(adjL(l), newEAt(l), mt.m1)))
+      else Some(l -> layerRows(adjL(l), newEAt(l), m1))
     }
-    phased("adj0 append")(
-      writeAdjLocal(spark, rows0, path, 0, newGen, mt.nBuckets))
-    rowsAt.foreach { case (l, r) => phased(s"adj$l append")(
-      writeAdjLocal(spark, r, path, l, newGen, mt.nBuckets)) }
-    if (bIdsAt(mt.layers).nonEmpty)
-      phased("entries")(writeEntries(spark, path,
-        (readEntries(spark, path) ++ bIdsAt(mt.layers)).distinct.sorted
-          .take(ENTRY_CAP)))
-    writeMeta(spark, path, mt.copy(gen = newGen))
+    writeAdjLocal(spark, ch, rows0, 0, nb)
+    rowsAt.foreach { case (l, r) => writeAdjLocal(spark, ch, r, l, nb) }
+    ch.commit(ch.gen, entries =
+      if (bIdsAt(layers).isEmpty) mt.entries
+      else (mt.entries ++ bIdsAt(layers)).distinct.sorted.take(ENTRY_CAP))
   }
 
-  /** Graph-index DELETE against the persisted form — [[removeNodes]]'
-    * bridge-repair algebra per layer, expressed as appends: removed ids
-    * land in the tombstone sidecar (readers mask dead DESTINATIONS at
-    * fetch, which realizes the "kept" edge drop for untouched sources
-    * without rewriting them), and every BRIDGED source's re-trimmed edge
-    * set appends at gen+1. In-edge discovery reads the dst-bucketed
-    * `radj` sidecar — a bucket-partition-pruned fetch by removed id
-    * (candidate sources with any-gen edges into the removed set,
-    * O(batch·in-degree) rows; the pruned live re-fetch against `adj`
-    * then drops stale-generation false positives) — closing the one
-    * full-scan FreshDiskANN trade the r16 form documented. `removed`:
-    * a single id column, batch-bounded (the [[IvfPq.removeIds]] guard). */
   /** COMPACTION — fold every layer's generation chain into one live
     * generation and physically drop tombstoned rows (the
     * [[IvfPq.compactIndex]] discipline applied to adjacency): per layer,
     * the FULL gen-carrying scan resolves max-gen-per-src, masks
-    * tombstoned sources and destinations, and rewrites adj+radj at gen 1
-    * via tmp + swap (a reader mid-swap sees old or new, never half);
-    * the vector store drops tombstoned ids the same way; tombstones
-    * clear; entries rebuild to the lowest live top-level ids; gen resets.
-    * Probe results are IDENTICAL before and after (the live view is
+    * tombstoned sources and destinations, and rewrites adj (and radj, if
+    * any) at gen 1; the vector store drops tombstoned ids; tombstones go;
+    * the entry set rebuilds — all fresh dirs and ONE commit. Probe results are IDENTICAL before and after (the live view is
     * unchanged — compaction is physical, spec-pinned); what changes is
     * the bill: GraphScale's churn run measured the probe wall doubling
     * across 9 accumulated generations (4.3 → 8.1 s at ×16) because every
@@ -1262,67 +1118,67 @@ object GraphAnn {
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     import spark.implicits._
-    val mt = readMeta(spark, path)
-    val tombs = readTombs(spark, path)
-    val f = hfs(spark, path)
-    val tombDf = tombs.toSeq.toDF("tid")
-    for (l <- 0 to mt.layers) {
-      val adj = spark.read.parquet(s"$path/adj$l")
+    val ch = IndexStore.change(spark, path, KIND, compaction = true)
+    val mt = ch.base
+    val nb = mt.int("n_buckets")
+    val tombDf = IndexStore.tombIds(spark, mt).toSeq.toDF("tid")
+    val noTombs = !mt.has(IndexStore.TOMBS)
+    for (l <- 0 to mt.int("layers")) {
+      val adj = IndexStore.rel(spark, mt, s"adj$l")
       // tomb flag via broadcast join, not an isin literal list — the
       // tombstone set is unbounded by the time compaction runs
       val flagged =
-        if (tombs.isEmpty) adj.withColumn("tomb", lit(false))
+        if (noTombs) adj.withColumn("tomb", lit(false))
         else adj.join(broadcast(tombDf.withColumn("_t", lit(true))),
             col("dst") === col("tid"), "left")
           .withColumn("tomb", coalesce(col("_t"), lit(false)))
           .drop("tid", "_t")
       val live = resolveLive(flagged)
         .join(broadcast(tombDf), col("src") === col("tid"), "left_anti")
-      // a lazily-materialized radj must survive compaction as a mirror of
-      // the compacted adjacency; absent sidecars stay absent (lazy)
-      val hadRadj = f.exists(
-        new org.apache.hadoop.fs.Path(s"$path/radj$l"))
-      writeAdj(live, s"$path/.compact", l, 1L, mt.nBuckets)
-      if (hadRadj) {
-        bucketed(spark.read.parquet(s"$path/.compact/adj$l")
-            .select(col("src"), col("dst"), col("gen")), "dst", mt.nBuckets)
-          .repartition(mt.nBuckets, col("bucket"))
-          .write.partitionBy("bucket").parquet(s"$path/.compact/radj$l")
-        Stores.publish(f, s"$path/.compact/radj$l", s"$path/radj$l")
-      } else
-        f.delete(new org.apache.hadoop.fs.Path(s"$path/radj$l"), true)
-      Stores.publish(f, s"$path/.compact/adj$l", s"$path/adj$l")
+      writeAdj(live, ch.fresh(s"adj$l"), 1L, nb)
+      // a lazily-materialized radj survives compaction as a mirror of the
+      // compacted adjacency; an absent one stays absent (lazy)
+      if (mt.has(s"radj$l"))
+        writeBucketed(ch.rel(s"adj$l").select("src", "dst", "gen"), "dst",
+          nb, ch.fresh(s"radj$l"))
     }
-    val liveVec = spark.read.parquet(s"$path/vectors")
+    writeBucketed(IndexStore.rel(spark, mt, "vectors")
       .join(broadcast(tombDf), col("id") === col("tid"), "left_anti")
-      .select("id", "qe", "n2", "bucket")
-    liveVec.repartition(mt.nBuckets, col("bucket"))
-      .write.partitionBy("bucket").parquet(s"$path/.vec_compact")
-    Stores.publish(f, s"$path/.vec_compact", s"$path/vectors")
-    f.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    f.delete(new org.apache.hadoop.fs.Path(s"$path/.compact"), true)
-    val ents = levelNodes(
-        spark.read.parquet(s"$path/vectors").select(col("id")), mt.layers)
+      .select("id", "qe", "n2"), "id", nb, ch.fresh("vectors"))
+    ch.drop(IndexStore.TOMBS)
+    val ents = levelNodes(ch.rel("vectors").select(col("id")),
+        mt.int("layers"))
       .orderBy("id").limit(ENTRY_CAP).as[Long].collect()
     require(ents.nonEmpty, s"compactIndex: no live top-level nodes at $path")
-    writeEntries(spark, path, ents)
-    writeMeta(spark, path, mt.copy(gen = 1L))
-    MetaCache.invalidate(path) // tombstones and radj dirs dropped too
+    ch.commit(1L, entries = ents.toSeq)
   }
 
+  /** Graph-index DELETE against the persisted form — [[removeNodes]]'
+    * bridge-repair algebra per layer, expressed as appends: removed ids
+    * land in the tombstones (readers mask dead DESTINATIONS at fetch,
+    * which realizes the "kept" edge drop for untouched sources without
+    * rewriting them), and every BRIDGED source's re-trimmed edge set
+    * appends at gen+1. In-edge discovery reads the dst-bucketed `radj`
+    * store — a bucket-partition-pruned fetch by removed id (candidate
+    * sources with any-gen edges into the removed set, O(batch·in-degree)
+    * rows; the pruned live re-fetch against `adj` then drops
+    * stale-generation false positives) — closing the one full-scan
+    * FreshDiskANN trade the r16 form documented. `removed`: a single id
+    * column, batch-bounded (the [[IvfPq.removeIds]] guard). */
   def removeBatch(path: String, removed: DataFrame): Unit = {
     require(removed.columns.length == 1,
       s"removed must be a single id column (got ${removed.columns.mkString(", ")})")
     val spark = removed.sparkSession
     import spark.implicits._
-    val mt = readMeta(spark, path)
-    val newGen = mt.gen + 1
-    val oldTombs = readTombs(spark, path)
-    val fetch = indexFetch(mt.nBuckets, oldTombs)
+    val ch = IndexStore.change(spark, path, KIND)
+    val mt = ch.base
+    val nb = mt.int("n_buckets")
+    val oldTombs = IndexStore.tombIds(spark, mt)
+    val fetch = indexFetch(nb, oldTombs)
     val rIds = removed.select(col(removed.columns.head).cast("long"))
       .as[Long].collect().distinct
     require(rIds.nonEmpty, "removeBatch: empty removed set")
-    val vec = MetaCache.get(spark, s"$path/vectors")
+    val vec = ch.rel("vectors")
 
     /** Bridge-repair one layer; returns the gen+1 rows for its bridged
       * sources, materialized (same lineage rule as addBatch). The live
@@ -1334,11 +1190,10 @@ object GraphAnn {
       if (rSet.isEmpty) return None
       val rs = rSet.toSet
       // candidate in-edge sources: a bucket-pruned any-gen fetch of the
-      // dst-bucketed reverse sidecar (tombs empty on purpose — discovery
+      // dst-bucketed reverse store (tombs empty on purpose — discovery
       // wants EVERY edge ever written into the removed set; the pruned
       // LIVE re-fetch below drops stale-generation false positives)
-      val candSrc = indexFetch(mt.nBuckets, Array.emptyLongArray)(
-          radj, "dst", rSet)
+      val candSrc = indexFetch(nb, Array.emptyLongArray)(radj, "dst", rSet)
         .filter(!col("src").isin(rSet.toSeq: _*))
         .select("src").distinct().as[Long].collect()
       if (candSrc.isEmpty) return None
@@ -1357,42 +1212,38 @@ object GraphAnn {
       if (touched.isEmpty) return None
       val keptTouched = candLive.filter { case (s0, d0) =>
         touched(s0) && !rs(d0) }
-      Some(trimLocalRows(spark, vec, fetch,
+      Some(trimLocal(spark, vec, fetch,
         (keptTouched ++ bridge).distinct.toSeq, mDeg))
     }
 
-    val adj0 = MetaCache.get(spark, s"$path/adj0")
-    repair(adj0, ensureRadj(spark, path, 0, mt.nBuckets), rIds, mt.m)
-      .foreach(r => writeAdjLocal(spark, r, path, 0, newGen, mt.nBuckets))
-    for (l <- 1 to mt.layers) {
+    repair(ch.rel("adj0"), ensureRadj(ch, 0, nb), rIds, mt.int("m"))
+      .foreach(r => writeAdjLocal(spark, ch, r, 0, nb))
+    for (l <- 1 to mt.int("layers")) {
       val rl = levelNodes(rIds.toSeq.toDF("id"), l).as[Long].collect()
       // guard BEFORE ensureRadj: a level the batch never drew into should
-      // not pay the one-time sidecar materialization
+      // not pay the one-time reverse-store materialization
       if (rl.nonEmpty)
-        repair(MetaCache.get(spark, s"$path/adj$l"),
-            ensureRadj(spark, path, l, mt.nBuckets), rl, mt.m1).foreach(r =>
-          writeAdjLocal(spark, r, path, l, newGen, mt.nBuckets))
+        repair(ch.rel(s"adj$l"), ensureRadj(ch, l, nb), rl, mt.int("m1"))
+          .foreach(r => writeAdjLocal(spark, ch, r, l, nb))
     }
-    // the removed-id list is driver state (collected above) — append its
-    // tombstone file without a Spark job
-    LocalParquet.writeFile(spark,
-      s"$path/tombstones/part-${java.util.UUID.randomUUID()}.parquet",
-      Seq("id" -> "long"), rIds.iterator.map(Seq[Any](_)))
-    MetaCache.invalidate(s"$path/tombstones")
-    // the sidecar invariant is "lowest min(cap, live) TOP-level ids": a
+    // the removed-id list is driver state (collected above) — its
+    // tombstone file is written without a Spark job
+    IndexStore.addTombstones(ch, rIds)
+    // the entry invariant is "lowest min(cap, live) TOP-level ids": a
     // deletion touching it forces a rebuild from the store (rare, and an
     // id-column-only scan), so the probe entry rule stays exactly the
     // oracle's "lowest ef1 LIVE top-level ids" at every generation
-    val ents = readEntries(spark, path)
-    if (ents.exists(rIds.contains)) {
-      val allTombs = (oldTombs ++ rIds).distinct
-      val live = levelNodes(vec.select(col("id")), mt.layers)
-        .filter(!col("id").isin(allTombs.toSeq: _*))
-        .orderBy("id").limit(ENTRY_CAP).as[Long].collect()
-      require(live.nonEmpty,
-        s"removeBatch: no live top-level nodes remain at $path")
-      writeEntries(spark, path, live)
-    }
-    writeMeta(spark, path, mt.copy(gen = newGen))
+    val ents =
+      if (!mt.entries.exists(rIds.contains)) mt.entries
+      else {
+        val allTombs = (oldTombs ++ rIds).distinct
+        val live = levelNodes(vec.select(col("id")), mt.int("layers"))
+          .filter(!col("id").isin(allTombs.toSeq: _*))
+          .orderBy("id").limit(ENTRY_CAP).as[Long].collect()
+        require(live.nonEmpty,
+          s"removeBatch: no live top-level nodes remain at $path")
+        live.toSeq
+      }
+    ch.commit(ch.gen, entries = ents)
   }
 }

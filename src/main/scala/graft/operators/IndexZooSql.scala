@@ -41,10 +41,11 @@ import org.apache.spark.sql.functions._
   * an at-rest index here would misrepresent what is persisted.
   *
   * THE REGISTRY IS PERSISTED (VERDICT r16 task 4 — the metastore analog
-  * made literal): every CREATE writes a `_registry/<name>` sidecar file
-  * under [[managedRoot]] (the [[GraphAnn]] `_meta` k=v discipline,
-  * tmp + atomic rename), every statement resolves against the directory
-  * listing, and DROP retires the file with the index — so an index
+  * made literal): every CREATE writes a `_registry/<name>` k=v file
+  * under [[managedRoot]] (the [[IndexStore]] manifest's codec and
+  * commit: temp write + no-overwrite rename), every statement resolves
+  * against the directory listing, and DROP retires the file with the
+  * index — so an index
   * created in one session probes from a fresh one with no re-CREATE, and
   * the old JVM-global in-memory map (two sessions silently sharing
   * definitions that then died with the process) is gone. Each entry also
@@ -85,28 +86,17 @@ object IndexZooSql {
       .map("%02x".format(_)).mkString
   }
 
-  private def writeEntry(spark: SparkSession, e: Entry): Unit = {
-    val f = hfs(spark, registryDir)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$registryDir/.${e.name}_tmp_${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = f.create(tmp, true)
-    try out.write(
-      (s"name=${e.name}\nfamily=${e.family}\nkind=${e.kind}\n" +
-        s"table=${e.table}\ncol=${e.col}\npath=${e.path}\n" +
-        s"fingerprint=${e.fingerprint}\n").getBytes("UTF-8"))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(s"$registryDir/${e.name}")
-    f.delete(dst, false)
-    require(f.rename(tmp, dst), s"could not publish $registryDir/${e.name}")
-  }
+  private def writeEntry(spark: SparkSession, e: Entry): Unit =
+    require(Stores.commitOnce(hfs(spark, registryDir),
+      new org.apache.hadoop.fs.Path(s"$registryDir/${e.name}"),
+      IndexStore.encode(Seq("name" -> e.name, "family" -> e.family,
+        "kind" -> e.kind, "table" -> e.table, "col" -> e.col,
+        "path" -> e.path, "fingerprint" -> e.fingerprint))),
+      s"index ${e.name} already exists")
 
   private def readEntry(spark: SparkSession,
       p: org.apache.hadoop.fs.Path): Entry = {
-    val in = hfs(spark, registryDir).open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val kv = txt.linesIterator.filter(_.contains("="))
-      .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
+    val kv = IndexStore.readKv(hfs(spark, registryDir), p)
     Entry(kv("name"), kv("family"), kv("kind"), kv("table"), kv("col"),
       kv("path"), kv.getOrElse("fingerprint", "-"))
   }
@@ -117,12 +107,6 @@ object IndexZooSql {
     if (!f.exists(d)) Nil
     else f.listStatus(d).toSeq.filter(s => !s.getPath.getName.startsWith("."))
       .map(s => readEntry(spark, s.getPath))
-  }
-
-  private def lookup(spark: SparkSession, name: String): Option[Entry] = {
-    val f = hfs(spark, registryDir)
-    val p = new org.apache.hadoop.fs.Path(s"$registryDir/$name")
-    if (f.exists(p)) Some(readEntry(spark, p)) else None
   }
 
   def handles(sqlText: String): Boolean = {
@@ -166,14 +150,6 @@ object IndexZooSql {
 
   private def intOpt(o: Map[String, String], k: String, dflt: Int): Int =
     o.get(k).map(_.toInt).getOrElse(dflt)
-
-  private def deleteDir(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    // a later CREATE may land a fresh store at the SAME path — retire any
-    // cached relations for it now (the writer-invalidation contract)
-    MetaCache.purge(path)
-  }
 
   private def show(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -227,7 +203,8 @@ object IndexZooSql {
     require(validKinds(kind),
       s"$family index kind must be one of ${validKinds.mkString("|")} " +
         s"(got '$kind'; SQ8 is a per-probe codec — see q360): $s")
-    require(lookup(spark, name).isEmpty, s"index $name already exists")
+    require(!entries(spark).exists(_.name == name),
+      s"index $name already exists")
     val clashKinds = if (family == "VECTOR") validKinds else Set(kind)
     entries(spark).find(e => e.family == family && clashKinds(e.kind) &&
         e.table == table.toLowerCase && e.col == cname.toLowerCase)
@@ -236,8 +213,9 @@ object IndexZooSql {
     val df = spark.table(table)
     require(df.columns.map(_.toLowerCase).contains(cname.toLowerCase),
       s"column $cname does not exist on $table")
+    // the build commits a new manifest at `path`, replacing (and then
+    // deleting) whatever index was there
     val path = opts.getOrElse("path", s"$managedRoot/$name")
-    deleteDir(spark, path)
     family match {
       case "VECTOR" =>
         val vdf = df.select(col("id"), df(cname).as("embedding"))
@@ -299,7 +277,7 @@ object IndexZooSql {
     val action = m.group(3).trim.split("\\s+")(0).toUpperCase
     val view = Option(m.group(4)).orElse(Option(m.group(5)))
     val opts = parseOpts(m.group(6), s)
-    val e = lookup(spark, name).getOrElse(
+    val e = entries(spark).find(_.name == name).getOrElse(
       fail(s, s"no ${family.toLowerCase} index $name"))
     require(e.family == family, s"index $name is a ${e.family} index")
     action match {
@@ -348,13 +326,13 @@ object IndexZooSql {
       "([A-Za-z_][A-Za-z0-9_]*)\\s*$").r.findFirstMatchIn(s)
       .getOrElse(fail(s, "DROP VECTOR|FULLTEXT INDEX <i> expected"))
     val name = m.group(2).toLowerCase
-    val e = lookup(spark, name).getOrElse(
+    val e = entries(spark).find(_.name == name).getOrElse(
       fail(s, s"no ${m.group(1).toLowerCase} index $name"))
     require(e.family == m.group(1).toUpperCase,
       s"index $name is a ${e.family} index")
     hfs(spark, registryDir)
       .delete(new org.apache.hadoop.fs.Path(s"$registryDir/$name"), false)
-    deleteDir(spark, e.path) // managed semantics, as TxnSql's DROP TABLE
+    IndexStore.drop(spark, e.path) // managed semantics, as TxnSql's DROP TABLE
     show(spark)
   }
 

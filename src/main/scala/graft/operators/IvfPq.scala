@@ -50,9 +50,10 @@ import org.apache.spark.sql.functions._
   */
 object IvfPq {
 
-  /** Fixed id-bucket count for the rescore vector store — pmod(id, 16)
-    * is derivable from any shortlist, so the constant needs no meta
-    * sidecar (the [[GraphAnn]] bucket discipline). */
+  private val KIND = "IVF_PQ"
+
+  /** Id-bucket count of a new index's rescore vector store (the manifest
+    * constant `vec_buckets`; the [[GraphAnn]] bucket discipline). */
   private val VEC_BUCKETS = 16
 
   /** Coarse centroids + residual PQ codebook, both broadcast-sized. */
@@ -162,52 +163,60 @@ object IvfPq {
         else AnnSearch.quantized(corpus))
   }
 
-  /** A built IVF-PQ index: codes on disk partitioned by coarse list under
-    * `path/lists`, the frozen codebook persisted under `path/_book`, plus
-    * the broadcast copy — the `faiss.write_index` analog. */
+  /** A built IVF-PQ index — an [[IndexStore]] of kind IVF_PQ at `path`
+    * (stores `lists` by coarse list, `book`, id-bucketed `vectors`,
+    * `tombstones`) plus the broadcast book: the `faiss.write_index`
+    * analog. Probes read the latest manifest. */
   final class IvfPqIndex private[IvfPq] (
       val path: String,
       private[IvfPq] val book: org.apache.spark.broadcast.Broadcast[Book])
 
   /** TRAIN step of the FAISS lifecycle (`index.train(sample)`): derive the
     * coarse + residual codebooks from `sample` and FREEZE them into the
-    * `_book` sidecar (coarse rows + per-subspace residual centroids, two
+    * `book` store (coarse rows + per-subspace residual centroids, two
     * tiny parquet files). Every later [[addBatch]] encodes against this
     * frozen book — which is exactly what makes incremental ingest
     * order-independent and bit-equal to a one-shot build: codes are a pure
-    * per-row function of (vector, book). Destroys anything at `path`. */
+    * per-row function of (vector, book). Replaces any index at `path` at
+    * its commit. */
   def trainIndex(sample: DataFrame, path: String, centroidStride: Int,
       m: Int = 16, ncent: Int = 16, pqStride: Int = 7,
-      pqIters: Int = 0): Unit = {
+      pqIters: Int = 0): Unit =
+    build(sample, None, path, centroidStride, m, ncent, pqStride, pqIters)
+
+  /** Train on `sample`, add `batch` if given, commit once. */
+  private def build(sample: DataFrame, batch: Option[DataFrame], path: String,
+      centroidStride: Int, m: Int, ncent: Int, pqStride: Int,
+      pqIters: Int): Book = {
     val spark = sample.sparkSession
-    import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    MetaCache.purge(path) // full rebuild: drop relations AND schemas
+    val ch = IndexStore.rebuild(spark, path, KIND)
     val book = collectBook(AnnSearch.quantized(sample),
       centroidStride, m, ncent, pqStride, pqIters)
     // the codebook is broadcast-sized driver state by construction —
-    // write its two sidecar files driver-side ([[LocalParquet]]), not as
-    // two coalesce(1) Spark jobs over local relations
-    LocalParquet.writeFile(spark, s"$path/_book/coarse/part-00000.parquet",
+    // write its two files driver-side ([[LocalParquet]]), not as two
+    // coalesce(1) Spark jobs over local relations
+    val dir = ch.fresh("book")
+    LocalParquet.writeFile(spark, s"$dir/coarse/part-00000.parquet",
       Seq("cent_id" -> "long", "ce" -> "array<long>"),
       book.coarse.iterator.map { case (id, e) => Seq[Any](id, e.toSeq) })
-    LocalParquet.writeFile(spark, s"$path/_book/pq/part-00000.parquet",
+    LocalParquet.writeFile(spark, s"$dir/pq/part-00000.parquet",
       Seq("mi" -> "int", "j" -> "int", "cent" -> "array<long>"),
       (for (mi <- 0 until book.m; j <- 0 until book.ncent)
         yield Seq[Any](mi, j, book.cents(mi)(j).toSeq)).iterator)
+    batch.foreach(add(ch, _, book, VEC_BUCKETS))
+    ch.commit(0L, consts = Map("vec_buckets" -> VEC_BUCKETS.toString))
+    book
   }
 
-  /** Load the frozen `_book` sidecar back into the broadcast-sized form.
+  /** Load the frozen `book` store back into the broadcast-sized form.
     * O(nlist·dim + m·ncent·ds) — codebook-sized by construction. */
   private def loadBook(spark: org.apache.spark.sql.SparkSession,
-      path: String): Book = {
+      mt: IndexStore.Manifest): Book = {
     import spark.implicits._
-    val coarse = MetaCache.get(spark, s"$path/_book/coarse")
+    val coarse = IndexStore.rel(spark, mt, "book", "coarse")
       .as[(Long, Seq[Long])].collect()
       .map { case (i, e) => (i, e.toArray) }.sortBy(_._1)
-    val pq = MetaCache.get(spark, s"$path/_book/pq")
+    val pq = IndexStore.rel(spark, mt, "book", "pq")
       .as[(Int, Int, Seq[Long])].collect()
     val m = pq.map(_._1).max + 1
     val ncent = pq.map(_._2).max + 1
@@ -227,8 +236,17 @@ object IvfPq {
     * per-row scores. */
   def addBatch(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
+    val ch = IndexStore.change(spark, path, KIND)
+    add(ch, batch, loadBook(spark, ch.base), ch.base.int("vec_buckets"))
+    ch.commit(ch.gen)
+  }
+
+  private def add(ch: IndexStore.Change, batch: DataFrame, bk: Book,
+      vecBuckets: Int): Unit = {
+    val spark = batch.sparkSession
     val cc = AnnSearch.quantized(batch)
-    val book = spark.sparkContext.broadcast(loadBook(spark, path))
+    val book = spark.sparkContext.broadcast(bk)
+    val (lists, vectors) = (ch.dir("lists"), ch.dir("vectors"))
     // the inverted-list append and the rescore vector-store append (the
     // GraphAnn/BinaryAnn posture: exact quantized vectors land id-bucketed
     // so [[probeIndex]]'s shortlist rescore is a partition-pruned point
@@ -245,110 +263,100 @@ object IvfPq {
     // Large batches keep the distributed form, overlapped.
     try {
       LocalParquet.writeSmall(encodeAll(cc, book)) { encLocal =>
-        encLocal.groupBy(_.getLong(1)).foreach { case (centId, rs) =>
-          LocalParquet.writeFile(spark,
-            s"$path/lists/cent_id=$centId/part-${java.util.UUID.randomUUID()}.parquet",
-            Seq("cid" -> "long", "codes" -> "array<int>", "rn2" -> "long"),
-            rs.iterator.map(r =>
-              Seq[Any](r.getLong(0), r.getSeq[Int](2), r.getLong(3))))
-        }
-        cc.collect().groupBy(r => Math.floorMod(r.getLong(0), VEC_BUCKETS))
-          .foreach { case (bucket, rs) =>
-            LocalParquet.writeFile(spark,
-              s"$path/vectors/bucket=$bucket/part-${java.util.UUID.randomUUID()}.parquet",
-              Seq("id" -> "long", "qe" -> "array<long>", "n2" -> "long"),
-              rs.iterator.map(r =>
-                Seq[Any](r.getLong(0), r.getSeq[Long](1), r.getLong(2))))
-          }
+        LocalParquet.writeBucketed(spark, lists, "cent_id",
+          Seq("cid" -> "long", "codes" -> "array<int>", "rn2" -> "long"),
+          encLocal.toSeq.map(r =>
+            Seq[Any](r.getLong(0), r.getSeq[Int](2), r.getLong(3), r.getLong(1))),
+          _(3).asInstanceOf[Long])
+        LocalParquet.writeBucketed(spark, vectors, "bucket",
+          Seq("id" -> "long", "qe" -> "array<long>", "n2" -> "long"),
+          cc.collect().toSeq.map(r =>
+            Seq[Any](r.getLong(0), r.getSeq[Long](1), r.getLong(2))),
+          r => Math.floorMod(r.head.asInstanceOf[Long], vecBuckets.toLong))
       } {
         ParallelWrites.all(
           () => encodeAll(cc, book)
             .repartition(col("cent_id")).write.mode("append")
-            .partitionBy("cent_id").parquet(s"$path/lists"),
-          () => cc.withColumn("bucket", pmod(col("id"), lit(VEC_BUCKETS.toLong)))
-            .repartition(VEC_BUCKETS, col("bucket"))
-            .write.mode("append").partitionBy("bucket").parquet(s"$path/vectors"))
+            .partitionBy("cent_id").parquet(lists),
+          () => cc.withColumn("bucket", pmod(col("id"), lit(vecBuckets.toLong)))
+            .repartition(vecBuckets, col("bucket"))
+            .write.mode("append").partitionBy("bucket").parquet(vectors))
       }
     }
     // the writes are the terminal actions — the per-batch book broadcast
     // is dead after them; without this a long ingest session leaks one
     // book per addBatch call
     finally book.destroy()
-    MetaCache.invalidate(path) // writer-invalidation contract
   }
 
   /** Open a persisted index for probing (the `faiss.read_index` analog). */
   def openIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): IvfPqIndex =
-    new IvfPqIndex(path, spark.sparkContext.broadcast(loadBook(spark, path)))
+    new IvfPqIndex(path, spark.sparkContext.broadcast(
+      loadBook(spark, IndexStore.open(spark, path, KIND))))
 
   /** REMOVE step (`index.remove_ids` — FAISS `IndexIVF.remove_ids`): LSM
-    * tombstones under `tombstones`, applied as an anti-join before the ADC
-    * scan so removed rows never shortlist — the same mask-then-compact
-    * discipline as the KV handler and the merge-on-read DML. FAISS
-    * compacts its inverted lists in place on remove; here the rewrite is
-    * deferred to [[compactIndex]] so a delete is O(ids), not O(index).
-    * Contract: ids are unique per index lifetime — re-adding a removed id
-    * without compacting first stays masked (document-id reuse is a corpus
-    * bug, not an index feature). */
+    * tombstones ([[IndexStore]]'s format), applied as an anti-join before
+    * the ADC scan so removed rows never shortlist — the same
+    * mask-then-compact discipline as the KV handler and the merge-on-read
+    * DML. FAISS compacts its inverted lists in place on remove; here the
+    * rewrite is deferred to [[compactIndex]] so a delete is O(ids), not
+    * O(index). Contract: ids are unique per index lifetime — re-adding a
+    * removed id without compacting first stays masked (document-id reuse
+    * is a corpus bug, not an index feature). */
   def removeIds(ids: DataFrame, path: String): Unit = {
     require(ids.columns.length == 1,
       s"removeIds wants a single id column, got (${ids.columns.mkString(", ")})" +
         " — select the id explicitly; silently taking the first column of a" +
         " wide frame would tombstone the wrong values")
-    val cids = ids.select(col(ids.columns.head).cast("long").as("cid"))
-    // a delete is O(ids) by contract — small batches append their
+    val ch = IndexStore.change(ids.sparkSession, path, KIND)
+    // a delete is O(ids) by contract — small batches write their
     // tombstone file driver-side, anything else keeps the Spark append
-    LocalParquet.writeSmall(cids) { local =>
-      LocalParquet.writeFile(ids.sparkSession,
-        s"$path/tombstones/part-${java.util.UUID.randomUUID()}.parquet",
-        Seq("cid" -> "long"), local.iterator.map(r => Seq[Any](r.getLong(0))))
-    } { cids.coalesce(1).write.mode("append").parquet(s"$path/tombstones") }
-    MetaCache.invalidate(s"$path/tombstones")
+    IndexStore.addTombstones(ch, ids.select(col(ids.columns.head).cast("long").as("id")))
+    ch.commit(ch.gen)
   }
 
   /** Compaction: physically drop tombstoned codes from every inverted list
     * and clear the tombstones — one distributed anti-join + partitioned
-    * rewrite (no driver materialization), after which probes pay zero mask
-    * cost again. Probe results are identical before and after
-    * (spec-pinned). */
+    * rewrite into a fresh `lists` dir (no driver materialization),
+    * committed together with the tombstones' removal, after which probes
+    * pay zero mask cost again. Probe results are identical before and
+    * after (spec-pinned). */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones"))) return
-    val kept = spark.read.parquet(s"$path/lists")
-      .select("cid", "cent_id", "codes", "rn2")
-      .join(spark.read.parquet(s"$path/tombstones"), Seq("cid"), "left_anti")
-    val compact = s"$path/lists_compact"
-    if (kept.isEmpty)
-      // tombstones covered every row: partitionBy over zero rows writes NO
-      // data file and the next open would die on parquet schema inference —
-      // write the empty frame unpartitioned instead (cent_id stays a real
-      // column, so the footer carries the full schema and probes return
-      // zero rows cleanly)
-      kept.write.mode("overwrite").parquet(compact)
-    else
-      kept.repartition(col("cent_id")).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(compact)
-    Stores.publish(fs, compact, s"$path/lists")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    MetaCache.invalidate(s"$path/tombstones")
+    val ch = IndexStore.change(spark, path, KIND, compaction = true)
+    IndexStore.tombstones(spark, ch.base).foreach { t =>
+      val kept = IndexStore.rel(spark, ch.base, "lists")
+        .select("cid", "cent_id", "codes", "rn2")
+        .join(t.select(col("id").as("cid")), Seq("cid"), "left_anti")
+      val compact = ch.fresh("lists")
+      if (kept.isEmpty)
+        // tombstones covered every row: partitionBy over zero rows writes
+        // NO data file and the next open would die on parquet schema
+        // inference — write the empty frame unpartitioned instead (cent_id
+        // stays a real column, so the footer carries the full schema and
+        // probes return zero rows cleanly)
+        kept.write.parquet(compact)
+      else
+        kept.repartition(col("cent_id")).write
+          .partitionBy("cent_id").parquet(compact)
+      ch.drop(IndexStore.TOMBS)
+    }
+    ch.commit(ch.base.gen)
   }
 
-  /** One-shot build = train on the full corpus + add it as one batch — the
-    * production cost model: the encode pass (corpus × nlist coarse argmax
-    * + corpus × m×ncent residual argmin) is paid at ingest, while each
-    * query batch pays only its probes. Same on-disk layout as incremental
-    * ingest ([[trainIndex]]/[[addBatch]]), so [[probeIndex]] serves both
-    * and equality is structural (and still spec-pinned). */
+  /** One-shot build = train on the full corpus + add it as one batch, in
+    * one commit — the production cost model: the encode pass (corpus ×
+    * nlist coarse argmax + corpus × m×ncent residual argmin) is paid at
+    * ingest, while each query batch pays only its probes. Same on-disk
+    * layout as incremental ingest ([[trainIndex]]/[[addBatch]]), so
+    * [[probeIndex]] serves both and equality is structural (and still
+    * spec-pinned). */
   def buildIndex(corpus: DataFrame, path: String, centroidStride: Int,
       m: Int = 16, ncent: Int = 16, pqStride: Int = 7,
-      pqIters: Int = 0): IvfPqIndex = {
-    trainIndex(corpus, path, centroidStride, m, ncent, pqStride, pqIters)
-    addBatch(corpus, path)
-    openIndex(corpus.sparkSession, path)
-  }
+      pqIters: Int = 0): IvfPqIndex =
+    new IvfPqIndex(path, corpus.sparkSession.sparkContext.broadcast(build(
+      corpus, Some(corpus), path, centroidStride, m, ncent, pqStride, pqIters)))
 
   /** Probe a built index: partition-pruned ADC scan of the probed lists +
     * exact rescore against `corpus` (the caller's vector table). Results
@@ -356,7 +364,7 @@ object IvfPq {
     * (spec-pinned). */
   def probeIndex(queries: DataFrame, corpus: DataFrame, index: IvfPqIndex,
       k: Int, nprobe: Int, shortlist: Int = 64): DataFrame =
-    probeWithFetch(queries, index, k, nprobe, shortlist, ids =>
+    probeWithFetch(queries, index, k, nprobe, shortlist, _ => ids =>
       // past ID_CAP literals an InSet stops being obviously cheap; a
       // wider shortlist (the brute-equivalence spec's ∞) falls back to
       // the full corpus scan
@@ -372,31 +380,25 @@ object IvfPq {
     * [[probeIndex]] by construction (same codes, same exact vectors —
     * spec-pinned). */
   def probeIndex(queries: DataFrame, index: IvfPqIndex,
-      k: Int, nprobe: Int, shortlist: Int): DataFrame = {
-    val spark = queries.sparkSession
-    probeWithFetch(queries, index, k, nprobe, shortlist, ids =>
-      Stores.fetchIds(MetaCache.get(spark, s"${index.path}/vectors"), "id",
-        ids, VEC_BUCKETS).select("id", "qe", "n2"))
-  }
+      k: Int, nprobe: Int, shortlist: Int): DataFrame =
+    probeWithFetch(queries, index, k, nprobe, shortlist, mt => ids =>
+      Stores.fetchIds(IndexStore.rel(queries.sparkSession, mt, "vectors"),
+        "id", ids, mt.int("vec_buckets")).select("id", "qe", "n2"))
 
-  private def probeWithFetch(queries: DataFrame, index: IvfPqIndex,
-      k: Int, nprobe: Int, shortlist: Int,
-      fetchQuantized: Array[Long] => DataFrame): DataFrame = {
+  private def probeWithFetch(queries: DataFrame, index: IvfPqIndex, k: Int,
+      nprobe: Int, shortlist: Int,
+      fetchAt: IndexStore.Manifest => Array[Long] => DataFrame): DataFrame = {
     val spark = queries.sparkSession
-    val encoded0 = MetaCache.get(spark, s"${index.path}/lists")
+    val mt = IndexStore.open(spark, index.path, KIND)
+    val encoded0 = IndexStore.rel(spark, mt, "lists")
       .select("cid", "cent_id", "codes", "rn2") // partition col re-ordered
     // tombstone mask ([[removeIds]]): removed rows never reach the ADC
     // scan, so they cannot shortlist or surface; the delete set is
     // O(removals) and AQE broadcasts it under the anti-join
-    val fs = new org.apache.hadoop.fs.Path(index.path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val encoded =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"${index.path}/tombstones")))
-        encoded0.join(MetaCache.get(spark, s"${index.path}/tombstones"),
-          Seq("cid"), "left_anti")
-      else encoded0
+    val encoded = IndexStore.tombstones(spark, mt).fold(encoded0)(t =>
+      encoded0.join(t.select(col("id").as("cid")), Seq("cid"), "left_anti"))
     probeEncoded(queries, encoded, index.book, k, nprobe, shortlist,
-      fetchQuantized)
+      fetchAt(mt))
   }
 
   /** Encode: (cid, coarse cent_id, codes, reconstructed norm²). One

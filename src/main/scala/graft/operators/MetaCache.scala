@@ -21,13 +21,16 @@ import org.apache.spark.sql.types.StructType
   *  - a writer that may change a path's SCHEMA or constants, or deletes
   *    the path for good, calls [[purge]]: relations, schema and memos go.
   *
-  * Why that is sound: every store mutator lives in this package and runs
-  * under the stores' single-writer contract, so a file-set change is
-  * always followed by its invalidation before the next read; appends,
-  * tombstones and compactions keep a store's columns, which is why an
-  * invalidation may keep the schema; and the paths that do change schema
-  * (rebuilds, drops, a registry path reused by another index kind) all
-  * purge. Paths that are never rewritten — warehouse inputs, uuid-named
+  * Why that is sound: index-store relations are keyed by the version of
+  * their committed manifest ([[IndexStore]]), so a commit — by this JVM
+  * or another — makes the next open miss (the committing JVM also drops
+  * the older versions, which only bounds the heap), and a rewritten
+  * store lands in a fresh uuid-named dir. The other mutators —
+  * transactional tables, bloom/bitmap sidecars — live in this package
+  * under a single-writer contract, so a file-set change is always
+  * followed by its invalidation before the next read, and the paths that
+  * change schema or go away for good purge. Paths that are never
+  * rewritten — warehouse inputs, uuid-named
   * transactional dirs — need no call until they are deleted. Only
   * metadata is held, never rows: plans stay lazy and every action
   * re-reads parquet. Prefixes match on a path boundary, so `/w/t1` never
@@ -42,28 +45,33 @@ private[graft] object MetaCache {
 
   private val CAP = 4096
 
-  /** (session identity hash, path) → relation. The key is a string so the
-    * map never pins a session; identity hashes can repeat after a GC, so
-    * a hit is also checked `eq` against the calling session. */
-  private val rels =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** (session identity hash, path, version) → relation. The key is a
+    * string so the map never pins a session; identity hashes can repeat
+    * after a GC, so a hit is also checked `eq` against the calling
+    * session. */
+  private val rels = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, Long), DataFrame]()
 
   /** (path, key) → per-path constant; key "" is the at-rest schema. */
   private val consts =
     new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]()
 
   /** The parquet relation at `path` for this session; a miss re-lists the
-    * files and reuses the remembered schema when there is one. */
-  def get(spark: SparkSession, path: String): DataFrame = {
-    val key = (System.identityHashCode(spark).toHexString, path)
+    * files and reuses the remembered schema when there is one. An index
+    * store passes its manifest `version` (a relation is never served at
+    * another) and keeps its schema under `schemaAt` instead of `path`. */
+  def get(spark: SparkSession, path: String, version: Long = 0L,
+      schemaAt: String = null): DataFrame = {
+    val key = (System.identityHashCode(spark).toHexString, path, version)
     val hit = rels.get(key)
     if (hit != null && (hit.sparkSession eq spark)) hit
     else {
-      val df = consts.get((path, "")) match {
+      val sk = Option(schemaAt).getOrElse(path)
+      val df = consts.get((sk, "")) match {
         case s: StructType => spark.read.schema(s).parquet(path)
         case _ =>
           val d = spark.read.parquet(path)
-          memo(path, "")(d.schema)
+          memo(sk, "")(d.schema)
           d
       }
       trim(CAP)

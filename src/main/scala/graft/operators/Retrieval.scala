@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   *  - [[bm25WriteIndex]] is the amortized ONE-TIME build: postings
   *    `(term, doc_id, tf, dl)` and term stats `(term, df)` written
   *    hash-partitioned by term bucket (`tb`), plus a scalar delta file
-  *    (n_docs, dl_sum, nBuckets). Two partial-aggregated shuffles over the
-  *    token stream, once — and [[bm25AddBatch]] grows the index per batch
+  *    (n_docs, dl_sum), under one manifest ([[IndexStore]]). Two
+  *    partial-aggregated shuffles over the token stream, once — and
+  *    [[bm25AddBatch]] grows the index per batch
   *    (postings append, df/N/avgdl delta-fold at probe) so a growing
   *    corpus never rebuilds.
   *  - [[bm25TopKIndexed]] touches ONLY the probed terms' buckets: the
@@ -144,21 +145,27 @@ object Retrieval {
     bm25RankTail(scored, k)
   }
 
+  private val BM25 = "BM25"
+  private val POSITIONAL = "POSITIONAL"
+
   /** Materialize the BM25 inverted index at `path` — the one-time build a
-    * 100 TB corpus amortizes over every later probe:
-    *  - `$path/postings`: (term, doc_id, tf, dl) partitioned by term bucket
+    * 100 TB corpus amortizes over every later probe — as an
+    * [[IndexStore]] of kind BM25 whose manifest holds `n_buckets`:
+    *  - `postings`: (term, doc_id, tf, dl) partitioned by term bucket
     *    `tb = pmod(hash(term), nBuckets)` — one directory per bucket, so a
     *    probe partition-prunes to its terms' buckets;
-    *  - `$path/terms`: (term, df) partitioned the same way — one row per
-    *    term PER INGEST BATCH (the probe sums df over its pruned buckets,
-    *    so [[bm25AddBatch]] appends instead of merging);
-    *  - `$path/stats`: one row per build/batch (n_docs, dl_sum, n_buckets)
-    *    — the probe folds N = Σ n_docs and avgdl = Σ dl_sum / Σ n_docs,
-    *    keeping the index self-contained with no side-channel metadata
-    *    (the [[AnnSearch.ivfWriteIndex]] convention). */
+    *  - `terms`: (term, df) partitioned the same way — one row per term
+    *    PER INGEST BATCH (the probe sums df over its pruned buckets, so
+    *    [[bm25AddBatch]] appends instead of merging);
+    *  - `stats`: one row per build/batch (n_docs, dl_sum) — the probe
+    *    folds N = Σ n_docs and avgdl = Σ dl_sum / Σ n_docs.
+    * The stores go to fresh dirs and the build commits once, so a rebuild
+    * over an existing index leaves it readable until then. */
   def bm25WriteIndex(docs: DataFrame, path: String, nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1 (got $nBuckets)")
-    bm25WriteBatch(docs, path, nBuckets, append = false)
+    val ch = IndexStore.rebuild(docs.sparkSession, path, BM25)
+    bm25WriteBatch(docs, ch, nBuckets, append = false)
+    ch.commit(0L, consts = Map("n_buckets" -> nBuckets.toString))
   }
 
   /** INCREMENTAL BM25 INGEST — append a new document batch to a persisted
@@ -178,19 +185,17 @@ object Retrieval {
     * Contract (the [[BinaryAnn.addBatch]]/[[IvfPq.addBatch]] unique-id
     * rule): batch doc_ids must be NEW — a re-ingested doc_id would sum a
     * second posting row into its (query, doc) score silently. Single
-    * writer; concurrent ingests race the appends. */
+    * writer; concurrent ingests race the manifest commit. */
   def bm25AddBatch(batch: DataFrame, path: String): Unit = {
-    val spark = batch.sparkSession
-    val nb = spark.read.parquet(s"$path/stats")
-      .agg(min("n_buckets"), max("n_buckets")).head()
-    require(nb.getInt(0) == nb.getInt(1),
-      s"corrupt stats at $path: inconsistent n_buckets")
-    bm25WriteBatch(batch, path, nb.getInt(0), append = true)
+    val ch = IndexStore.change(batch.sparkSession, path, BM25)
+    bm25WriteBatch(batch, ch, ch.base.int("n_buckets"), append = true)
+    ch.commit(ch.gen)
   }
 
-  private def bm25WriteBatch(docs: DataFrame, path: String, nBuckets: Int,
-      append: Boolean): Unit = {
-    val mode = if (append) "append" else "overwrite"
+  private def bm25WriteBatch(docs: DataFrame, ch: IndexStore.Change,
+      nBuckets: Int, append: Boolean): Unit = {
+    val mode = if (append) "append" else "errorifexists"
+    val (pd, td, sd) = (ch.dir("postings"), ch.dir("terms"), ch.dir("stats"))
     val tok = postings(docs)
     // tf feeds all THREE stores (postings directly, terms via a groupBy,
     // stats via dl) and is recomputed per write. Measured alternatives
@@ -216,7 +221,7 @@ object Retrieval {
       if (append) df.repartition(nBuckets, col("tb")) else df
     // The three stores are INDEPENDENT actions over disjoint directories
     // (postings/terms/stats) with no visibility ordering between them — a
-    // batch is published only by this method returning. Submitting them
+    // batch is published only by the caller's commit. Submitting them
     // from driver threads (guide §2.6) overlaps each write's shuffle tail,
     // planning and commit wall instead of paying the three serially; the
     // shared tf lineage is still recomputed per write (the r18-measured
@@ -225,18 +230,17 @@ object Retrieval {
     ParallelWrites.all(
       () => aligned(tf.join(dl, Seq("doc_id"))
           .withColumn("tb", pmod(hash(col("term")), lit(nBuckets))))
-        .write.mode(mode).partitionBy("tb").parquet(s"$path/postings"),
+        .write.mode(mode).partitionBy("tb").parquet(pd),
       () => aligned(tf.groupBy("term").agg(count(lit(1)).as("df"))
           .withColumn("tb", pmod(hash(col("term")), lit(nBuckets))))
-        .write.mode(mode).partitionBy("tb").parquet(s"$path/terms"),
+        .write.mode(mode).partitionBy("tb").parquet(td),
       // per-batch scalar deltas; the probe folds them (Σ, Σ, then one
       // division) so an N-batch index and the one-shot build read the same
       // (n_docs, avgdl). An empty frame still writes its (0, 0) row — the
       // fold is unaffected and the build stays replayable.
       () => dl.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum("dl"), lit(0L)).cast("long").as("dl_sum"),
-          lit(nBuckets).as("n_buckets"))
-        .write.mode(mode).parquet(s"$path/stats"))
+          coalesce(sum("dl"), lit(0L)).cast("long").as("dl_sum"))
+        .write.mode(mode).parquet(sd))
   }
 
   /** COMPACTION for the BM25 index — the LSM step completing the
@@ -246,38 +250,33 @@ object Retrieval {
     * batch files rewrite as one file — so a long-ingested index reads
     * like a one-shot build again. Purely physical: the probe already
     * delta-folds at query time, so results are IDENTICAL before and
-    * after (spec-pinned; q385 probes across a compact). Each store is
-    * written to tmp and swapped in by [[Stores.publish]]. */
+    * after (spec-pinned; q385 probes across a compact). The three stores
+    * are rewritten into fresh dirs and replaced in one commit. */
   def bm25CompactIndex(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = spark.read.parquet(s"$path/stats")
-      .agg(sum("n_docs").cast("long").as("n_docs"),
-        sum("dl_sum").cast("long").as("dl_sum"),
-        min("n_buckets").as("nb0"), max("n_buckets").as("nb1")).head()
-    require(st.getInt(2) == st.getInt(3),
-      s"corrupt stats at $path: inconsistent n_buckets")
-    val nb = st.getInt(2)
-    // the three folded rewrites read DISJOINT source dirs and land in
-    // DISJOINT tmp dirs — overlap them (guide §2.6); the atomic swaps
-    // stay sequential after the barrier, so a reader still sees each
-    // store either pre- or post-compaction, never half-written
+    val ch = IndexStore.change(spark, path, BM25, compaction = true)
+    val mt = ch.base
+    val nb = mt.int("n_buckets")
+    val st = IndexStore.rel(spark, mt, "stats")
+      .agg(sum("n_docs").cast("long"), sum("dl_sum").cast("long")).head()
+    val (pd, td, sd) = (ch.fresh("postings"), ch.fresh("terms"),
+      ch.fresh("stats"))
+    // the two folded rewrites read DISJOINT source dirs and land in
+    // DISJOINT fresh dirs — overlap them (guide §2.6); nothing is visible
+    // before the commit below
     ParallelWrites.all(
-      () => spark.read.parquet(s"$path/postings")
+      () => IndexStore.rel(spark, mt, "postings")
         .repartition(nb, col("tb"))
-        .write.partitionBy("tb").parquet(s"$path/.postings_c"),
-      () => spark.read.parquet(s"$path/terms")
+        .write.partitionBy("tb").parquet(pd),
+      () => IndexStore.rel(spark, mt, "terms")
         .groupBy("tb", "term").agg(sum("df").as("df"))
         .repartition(nb, col("tb"))
-        .write.partitionBy("tb").parquet(s"$path/.terms_c"))
+        .write.partitionBy("tb").parquet(td))
     // the folded 1-row stats file is a driver constant (st was collected
     // above) — LocalParquet, no job
-    LocalParquet.writeFile(spark, s"$path/.stats_c/part-00000.parquet",
-      Seq("n_docs" -> "long", "dl_sum" -> "long", "n_buckets" -> "int"),
-      Iterator(Seq[Any](st.getLong(0), st.getLong(1), nb)))
-    Stores.publish(fs, s"$path/.postings_c", s"$path/postings")
-    Stores.publish(fs, s"$path/.terms_c", s"$path/terms")
-    Stores.publish(fs, s"$path/.stats_c", s"$path/stats")
+    LocalParquet.writeFile(spark, s"$sd/part-00000.parquet",
+      Seq("n_docs" -> "long", "dl_sum" -> "long"),
+      Iterator(Seq[Any](st.getLong(0), st.getLong(1))))
+    ch.commit(mt.gen)
   }
 
   /** Probe a materialized BM25 index: identical scores to [[bm25TopK]]
@@ -292,18 +291,15 @@ object Retrieval {
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(queries.nonEmpty, "need at least one query")
     import spark.implicits._
+    val mt = IndexStore.open(spark, indexPath, BM25)
     // fold the per-batch scalar deltas ([[bm25AddBatch]]): exact integer
     // sums, then the ONE IEEE division — bit-identical to a one-shot build
-    val stats = spark.read.parquet(s"$indexPath/stats")
-      .agg(sum("n_docs").cast("long").as("n_docs"),
-        sum("dl_sum").cast("long").as("dl_sum"),
-        min("n_buckets").as("nb0"), max("n_buckets").as("nb1")).head()
-    val nDocs = stats.getAs[Long]("n_docs")
+    val stats = IndexStore.rel(spark, mt, "stats")
+      .agg(sum("n_docs").cast("long"), sum("dl_sum").cast("long")).head()
+    val nDocs = stats.getLong(0)
     require(nDocs > 0, s"empty BM25 index at $indexPath")
-    val avgdl = stats.getAs[Long]("dl_sum").toDouble / nDocs
-    val nBuckets = stats.getAs[Int]("nb0")
-    require(nBuckets == stats.getAs[Int]("nb1"),
-      s"corrupt stats at $indexPath: inconsistent n_buckets")
+    val avgdl = stats.getLong(1).toDouble / nDocs
+    val nBuckets = mt.int("n_buckets")
 
     val qt = queryTerms(spark, queries)
     // the probed buckets — evaluated through Spark's own hash() so the ids
@@ -311,9 +307,9 @@ object Retrieval {
     val buckets = qt.select(
         pmod(hash(col("term")), lit(nBuckets)).as("tb"))
       .distinct().as[Int].collect().toSeq
-    val post = spark.read.parquet(s"$indexPath/postings")
+    val post = IndexStore.rel(spark, mt, "postings")
       .filter(col("tb").isin(buckets.map(Int.box): _*))
-    val terms = spark.read.parquet(s"$indexPath/terms")
+    val terms = IndexStore.rel(spark, mt, "terms")
       .filter(col("tb").isin(buckets.map(Int.box): _*))
 
     // df delta-fold: a multi-batch index holds one (term, df) row PER
@@ -580,20 +576,20 @@ object Retrieval {
     * ([[phraseWriteIndex]]) — the scan partition-prunes to the phrase
     * terms' buckets, the [[phraseTopKIndexed]] contract. */
   /** Positions scan pruned to `terms`' buckets — THE one copy of the
-    * positional-index probe contract (stats → Spark-hash bucket ids →
-    * static IN on the `tb` partition column); every indexed probe goes
-    * through here so a layout change cannot silently miss one caller.
-    * Returns (pruned, all): the pruned scan plus the unpruned positional
-    * table for callers that also fetch non-query tokens. */
+    * positional-index probe contract (manifest `n_buckets` → Spark-hash
+    * bucket ids → static IN on the `tb` partition column); every indexed
+    * probe goes through here so a layout change cannot silently miss one
+    * caller. Returns (pruned, all): the pruned scan plus the unpruned
+    * positional table for callers that also fetch non-query tokens. */
   private def prunedPositions(spark: SparkSession, indexPath: String,
       terms: Seq[String]): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val nBuckets = spark.read.parquet(s"$indexPath/stats")
-      .head().getAs[Int]("n_buckets")
+    val mt = IndexStore.open(spark, indexPath, POSITIONAL)
+    val nBuckets = mt.int("n_buckets")
     val buckets = terms.distinct.toDF("term")
       .select(pmod(hash(col("term")), lit(nBuckets)).as("tb"))
       .distinct().as[Int].collect().toSeq
-    val all = spark.read.parquet(s"$indexPath/positions")
+    val all = IndexStore.rel(spark, mt, "positions")
     (all.filter(col("tb").isin(buckets.map(Int.box): _*)), all)
   }
 
@@ -724,55 +720,45 @@ object Retrieval {
         col("snippet"), col("rk").cast("bigint").as("rk"))
   }
 
-  /** Persist the positional index: (doc_id, pos, term) hash-partitioned by
-    * term bucket — the [[bm25WriteIndex]] pruning discipline applied to
-    * positions (plus the 1-row stats file making the index
-    * self-contained). */
+  /** Persist the positional index — an [[IndexStore]] of kind POSITIONAL:
+    * (doc_id, pos, term) hash-partitioned by term bucket in the
+    * `positions` store, the [[bm25WriteIndex]] pruning discipline applied
+    * to positions, with `n_buckets` in the manifest. */
   def phraseWriteIndex(docs: DataFrame, path: String,
       nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1 (got $nBuckets)")
+    val ch = IndexStore.rebuild(docs.sparkSession, path, POSITIONAL)
     positionalPostings(docs)
       .withColumn("tb", pmod(hash(col("term")), lit(nBuckets)))
-      .write.mode("overwrite").partitionBy("tb").parquet(s"$path/positions")
-    // the 1-row stats file is a driver constant — LocalParquet, no job
-    // (overwrite semantics: fresh dir)
-    val f = new org.apache.hadoop.fs.Path(s"$path/stats")
-      .getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-    f.delete(new org.apache.hadoop.fs.Path(s"$path/stats"), true)
-    LocalParquet.writeFile(docs.sparkSession,
-      s"$path/stats/part-00000.parquet",
-      Seq("n_buckets" -> "int"), Iterator(Seq[Any](nBuckets)))
+      .write.partitionBy("tb").parquet(ch.fresh("positions"))
+    ch.commit(0L, consts = Map("n_buckets" -> nBuckets.toString))
   }
 
   /** INCREMENTAL POSITIONAL INGEST — the [[bm25AddBatch]] counterpart for
     * the phrase/proximity/snippet index. Positional state is purely
     * per-document (doc_id, pos, term), so a new batch is ONE
-    * bucket-partitioned append; no stats fold is needed (n_buckets is
-    * build-constant). Batches commute and any batch split probes
+    * bucket-partitioned append; no stats fold is needed (n_buckets is a
+    * manifest constant). Batches commute and any batch split probes
     * identically to the one-shot build (RetrievalSpec pins it). Same
     * unique-doc_id single-writer contract as [[bm25AddBatch]]. */
   def phraseAddBatch(batch: DataFrame, path: String): Unit = {
-    val spark = batch.sparkSession
-    val nBuckets = spark.read.parquet(s"$path/stats")
-      .head().getAs[Int]("n_buckets")
+    val ch = IndexStore.change(batch.sparkSession, path, POSITIONAL)
     positionalPostings(batch)
-      .withColumn("tb", pmod(hash(col("term")), lit(nBuckets)))
-      .write.mode("append").partitionBy("tb").parquet(s"$path/positions")
+      .withColumn("tb", pmod(hash(col("term")), lit(ch.base.int("n_buckets"))))
+      .write.mode("append").partitionBy("tb").parquet(ch.dir("positions"))
+    ch.commit(ch.gen)
   }
 
   /** [[bm25CompactIndex]]'s positional counterpart — positional state is
     * purely per-document, so compaction is one partitioned rewrite
-    * folding each bucket's batch files into one (results identical;
-    * q386 probes across it). */
+    * folding each bucket's batch files into one fresh dir, replaced in
+    * one commit (results identical; q386 probes across it). */
   def phraseCompactIndex(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nBuckets = spark.read.parquet(s"$path/stats")
-      .head().getAs[Int]("n_buckets")
-    spark.read.parquet(s"$path/positions")
-      .repartition(nBuckets, col("tb"))
-      .write.partitionBy("tb").parquet(s"$path/.positions_c")
-    Stores.publish(fs, s"$path/.positions_c", s"$path/positions")
+    val ch = IndexStore.change(spark, path, POSITIONAL, compaction = true)
+    IndexStore.rel(spark, ch.base, "positions")
+      .repartition(ch.base.int("n_buckets"), col("tb"))
+      .write.partitionBy("tb").parquet(ch.fresh("positions"))
+    ch.commit(ch.base.gen)
   }
 
   /** Probe the positional index: identical results to [[phraseTopK]], but

@@ -5,7 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Helpers the at-rest stores (IVF-PQ, binary, graph, BM25/positional)
-  * share for driver-bounded id sets and for publishing a rewritten store. */
+  * and the transactional log share: driver-bounded id sets and the one
+  * commit primitive. */
 private[graft] object Stores {
 
   /** The largest id set the driver handles itself: an `isin` InSet up to
@@ -31,25 +32,29 @@ private[graft] object Stores {
     }
   }
 
-  /** Replace `dst` with the fully written `tmp`. The live `dst` is moved
-    * aside, never deleted first, so a failure at any step leaves the old
-    * or the new store readable at `dst`: if the second rename fails the
-    * old one is moved back. Finishes by invalidating `dst`'s cached
-    * relations. Recovering a publish that died between the renames (old
-    * store left at `<dst>_old`) is not done here. */
-  def publish(fs: FileSystem, tmp: String, dst: String): Unit = {
-    val live = new Path(dst)
-    val old = new Path(s"${dst}_old")
-    fs.delete(old, true) // leftover of an earlier failed publish
-    val hadLive = fs.exists(live)
-    if (hadLive) require(fs.rename(live, old),
-      s"publish: rename $live -> $old failed; $dst left untouched")
-    if (!fs.rename(new Path(tmp), live)) {
-      if (hadLive) fs.rename(old, live)
-      throw new IllegalStateException(
-        s"publish: rename $tmp -> $live failed; original restored")
-    }
-    if (hadLive) fs.delete(old, true)
-    MetaCache.invalidate(dst)
-  }
+  /** Serializes commits into one directory within this JVM. */
+  private val dirLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** The one commit of the txn log, the index manifests and the index
+    * registry: create `dst` holding `body` — temp file beside it, then a
+    * rename — or return false if it exists. A visible `dst` is always
+    * complete. The local FS's rename can clobber, so commits into one dir
+    * also serialize through a JVM lock (exact for local[n]; elsewhere the
+    * contract is an FS whose rename never overwrites, as HDFS). */
+  def commitOnce(fs: FileSystem, dst: Path, body: String): Boolean =
+    dirLocks.computeIfAbsent(dst.getParent.toString, _ => new Object)
+      .synchronized {
+        if (fs.exists(dst)) false
+        else {
+          val tmp = new Path(dst.getParent,
+            s".tmp_${java.util.UUID.randomUUID().toString.take(12)}")
+          val out = fs.create(tmp, true)
+          try out.write(body.getBytes("UTF-8")) finally out.close()
+          val ok = try fs.rename(tmp, dst)
+          catch { case _: java.io.IOException => false } // lost the race
+          if (!ok) fs.delete(tmp, false)
+          ok
+        }
+      }
 }

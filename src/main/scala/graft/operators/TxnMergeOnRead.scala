@@ -267,19 +267,6 @@ object TxnMergeOnRead {
     Ckpt(version, base, deltas, batch, cols, constraints)
   }
 
-  /** Write a checkpoint file via temp + rename; content at a version is
-    * deterministic, so two writers racing the same checkpoint are
-    * idempotent and the loser's rename failure is ignored. */
-  private def writeCkptFile(f: FileSystem, root: String, c: Ckpt): Unit = {
-    val p = ckptPath(root, c.version)
-    if (f.exists(p)) return
-    val tmp = new Path(s"$root/$LOG_DIR/.tmp_${UUID.randomUUID().toString.take(12)}")
-    val out = f.create(tmp, true)
-    try out.write(renderCkpt(c).getBytes("UTF-8")) finally out.close()
-    val ok = try f.rename(tmp, p) catch { case _: java.io.IOException => false }
-    if (!ok) f.delete(tmp, false)
-  }
-
   // ---- view loading ------------------------------------------------------
 
   private def prunedError(root: String, oldest: Long): Nothing =
@@ -542,9 +529,11 @@ object TxnMergeOnRead {
       version: Long): Unit = {
     val view = truncateView(f, root, readView(f, root), version)
     val (b, d) = liveStateV(f, root, view)
-    writeCkptFile(f, root,
+    // content at a version is deterministic, so two writers racing the
+    // same checkpoint are idempotent and the loser's false is ignored
+    Stores.commitOnce(f, ckptPath(root, version), renderCkpt(
       Ckpt(version, b, d, batchCanonOf(view), addedColsV(f, root, view),
-        constraintsV(f, root, view)))
+        constraintsV(f, root, view))))
   }
 
   /** Explicitly checkpoint the current head (vacuum and tooling hook; the
@@ -658,32 +647,12 @@ object TxnMergeOnRead {
     * is reachable. No-op in production. */
   private[graft] var pauseAfterInsertStage: () => Unit = () => ()
 
-  /** Serialize local-FS commits per root within this JVM (see scaladoc). */
-  private val rootLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockFor(root: String): Object =
-    rootLocks.computeIfAbsent(root, _ => new Object)
-
-  /** Try to commit `e` at exactly version `e.version` by temp-write +
-    * atomic no-overwrite rename. True iff this writer won that ordinal.
-    * A visible entry is always complete: a writer dying anywhere in here
-    * leaves at most an invisible `.tmp_*` file, never a claimed-but-empty
+  /** Try to commit `e` at exactly version `e.version` ([[Stores.commitOnce]]:
+    * temp write + no-overwrite rename). True iff this writer won that
+    * ordinal. A visible entry is always complete, never a claimed-but-empty
     * ordinal, so co-writers can never livelock on a dead writer's commit. */
   private def tryCommit(f: FileSystem, root: String, e: Entry): Boolean = {
-    val won = lockFor(root).synchronized {
-      val p = entryPath(root, e.version)
-      if (f.exists(p)) false
-      else {
-        val tmp = new Path(
-          s"$root/$LOG_DIR/.tmp_${UUID.randomUUID().toString.take(12)}")
-        val out = f.create(tmp, true)
-        try out.write(Entry.render(e).getBytes("UTF-8")) finally out.close()
-        val ok = try f.rename(tmp, p)
-        catch { case _: java.io.IOException => false } // lost the race
-        if (!ok) f.delete(tmp, false)
-        ok
-      }
-    }
+    val won = Stores.commitOnce(f, entryPath(root, e.version), Entry.render(e))
     if (won) maybeCheckpoint(f, root, e.version)
     won
   }

@@ -1883,9 +1883,10 @@ object Pipeline {
     // THE GRAPH INDEX AT REST ([[GraphAnn.writeIndex]]/[[GraphAnn
     // .probeIndex]] — the persisted form the q361–q367 family was
     // missing): both HNSW layer graphs land as src-bucketed parquet, the
-    // vector store as id-bucketed parquet, entries/tombstones as sidecars
-    // — and the probe walks the descent with every fetch bucket-
-    // partition-pruned (PartitionFilters, GraphIndexSpec). The result is
+    // vector store as id-bucketed parquet, tombstones as one more store,
+    // entry ids in the index manifest — and the probe walks the descent
+    // with every fetch bucket-partition-pruned (PartitionFilters,
+    // GraphIndexSpec). The result is
     // the SAME two-layer descent as q366 by construction (spec-pinned row
     // parity), so the oracle is the q366 replay: level split → both
     // builds → upper walk from the lowest-ef1 layer-1 entries → per-query
@@ -1936,7 +1937,7 @@ object Pipeline {
     // ([[GraphAnn.addBatch]] — q367's train-once/add-forever discipline,
     // now with the hierarchy maintained): the index is built on half the
     // corpus, two batches add a quarter each — every batch node DESCENDS
-    // the pre-batch hierarchy (one upper walk from the entry sidecar
+    // the pre-batch hierarchy (one upper walk from the manifest's entries
     // doubles as the layer-1 edge selection for layer-1 draw nodes, and
     // seeds each node's layer-0 walk), then both layers run the uniform
     // back-edge + re-trim algebra and APPEND their touched sources at
@@ -2038,7 +2039,7 @@ object Pipeline {
     // repair against the at-rest form, on BOTH layers): every 10th node
     // (residue 3) is tombstoned; surviving sources that edged into a
     // removed node bridge through it and re-trim at gen+1, per layer; the
-    // entry sidecar rebuilds to the lowest LIVE layer-1 ids because the
+    // entry set rebuilds to the lowest LIVE layer-1 ids because the
     // deletion touched it. The probe walks the repaired hierarchy with
     // tombstoned destinations masked at fetch — the oracle replays both
     // layers' kept ∪ bridge → re-trim and the survivor-scored descent.

@@ -498,7 +498,7 @@ object StreamOps {
             .filter(col("change") === "insert")
             .select(col("doc_id"), col("text"))
             .localCheckpoint(true)
-          if (!new java.io.File(s"$idxDir/stats").exists())
+          if (graft.operators.IndexStore.latest(spark, idxDir).isEmpty)
             Retrieval.bm25WriteIndex(fresh, idxDir, nBuckets = 16)
           else Retrieval.bm25AddBatch(fresh, idxDir)
           vDone = v

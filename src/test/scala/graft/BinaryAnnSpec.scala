@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AnnSearch, BinaryAnn}
+import graft.operators.{AnnSearch, BinaryAnn, IndexStore}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -185,13 +185,15 @@ class BinaryAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
       "churned index (add/remove/re-add) must probe like a fresh live build")
     // compaction folds tombstones physically; probe result is unchanged
     BinaryAnn.compactIndex(spark, path)
-    assert(!new java.io.File(s"$path/_tombstones").exists(),
+    val compacted = IndexStore.latest(spark, path).get
+    assert(!compacted.has(IndexStore.TOMBS) &&
+      !new java.io.File(path).list().exists(_.startsWith("tombstones")),
       "compaction must clear the tombstone sidecar")
     val post = BinaryAnn.probeIndex(queries, path, 10, 32)
       .collect().map(_.toSeq).toSet
     assert(post == expect, "compaction must never change a probe result")
     // the compacted store is a single generation again
-    val gens = new java.io.File(path).listFiles()
+    val gens = new java.io.File(compacted.dir("vectors")).listFiles()
       .map(_.getName).filter(_.startsWith("agen=")).toSeq
     assert(gens == Seq("agen=0"), s"compacted store gens: $gens")
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AnnSearch, GraphAnn}
+import graft.operators.{AnnSearch, GraphAnn, IndexStore}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,6 +30,10 @@ class GraphIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     p
   }
 
+  /** The physical dir of logical `store`, resolved from the manifest. */
+  private def store(path: String, name: String): String =
+    IndexStore.latest(spark, path).get.dir(name)
+
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.select("qid", "cid", "rk", "cos")
       .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._3))
@@ -53,7 +57,7 @@ class GraphIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("probe fetches are bucket-partition-pruned (the plan property)") {
     val path = tmp("prune")
     GraphAnn.writeIndex(emb, path, m = 8, m1 = 4, nBuckets = 8)
-    val adj0 = spark.read.parquet(s"$path/adj0")
+    val adj0 = spark.read.parquet(store(path, "adj0"))
     val fetched = GraphAnn.indexFetch(8, Array.emptyLongArray)(
       adj0, "src", Array(3L, 11L))
     val plan = fetched.queryExecution.executedPlan.toString
@@ -63,7 +67,7 @@ class GraphIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fetched.select("src").distinct().as[Long].collect().toSet ==
       Set(3L, 11L))
     // vectors store prunes the same way
-    val vec = spark.read.parquet(s"$path/vectors")
+    val vec = spark.read.parquet(store(path, "vectors"))
     val vplan = GraphAnn.indexFetch(8, Array.emptyLongArray)(
       vec, "id", Array(5L)).queryExecution.executedPlan.toString
     assert(vplan.contains("PartitionFilters") && vplan.contains("bucket"))
@@ -80,7 +84,7 @@ class GraphIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       ef1 = 8, hops1 = 2, ef = 16, hops = 2)
     // generation resolution: a multi-gen src resolves to exactly its
     // latest generation's rows, degree-bounded
-    val adj0 = spark.read.parquet(s"$path/adj0")
+    val adj0 = spark.read.parquet(store(path, "adj0"))
     val multiGen = adj0.groupBy("src")
       .agg(countDistinct("gen").as("ng"), max("gen").as("mg"))
       .filter(col("ng") > 1)
@@ -143,19 +147,18 @@ class GraphIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val recall = (b & o).size.toDouble / b.size
     assert(recall >= 0.5, s"post-delete recall=$recall")
     // repair appended a new generation for at least one bridged source
-    val adj0 = spark.read.parquet(s"$path/adj0")
+    val adj0 = spark.read.parquet(store(path, "adj0"))
     assert(adj0.filter(col("gen") === 2L).count() > 0,
       "delete repaired no sources")
     // deleting an ENTRY id rebuilds the sidecar to live layer-1 lowest
-    val entsBefore = spark.read.parquet(s"$path/entries")
-      .select("id").as[Long].collect().toSet
+    val entsBefore = IndexStore.latest(spark, path).get.entries.toSet
     assert(!entsBefore.exists(removedSet.contains),
       "entry sidecar still lists a removed id")
     // the reverse sidecar mirrors the adjacency row-for-row (every write
     // lands in both) and the in-edge discovery fetch is PARTITION-PRUNED
     // on the dst bucket — the plan property that makes delete repair
     // O(batch·in-degree) instead of a full index scan per layer
-    val radj0 = spark.read.parquet(s"$path/radj0")
+    val radj0 = spark.read.parquet(store(path, "radj0"))
     assert(adj0.select("src", "dst", "gen").as[(Long, Long, Long)]
         .collect().sorted.toSeq ==
       radj0.select("src", "dst", "gen").as[(Long, Long, Long)]
@@ -212,12 +215,13 @@ class GraphIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       ef = 16, hops = 2).withColumn("rk", col("rk").cast("long")))
     assert(before.nonEmpty && before.sameElements(after),
       "compaction changed probe results — it must be purely physical")
-    val adj0 = spark.read.parquet(s"$path/adj0")
+    val adj0 = spark.read.parquet(store(path, "adj0"))
     assert(adj0.select("gen").distinct().as[Long].collect().toSeq == Seq(1L),
       "generations did not fold to one")
-    assert(!new java.io.File(s"$path/tombstones").exists(),
+    assert(!IndexStore.latest(spark, path).get.has(IndexStore.TOMBS) &&
+      !new java.io.File(path).list().exists(_.startsWith("tombstones")),
       "tombstones not cleared")
-    val radj0 = spark.read.parquet(s"$path/radj0")
+    val radj0 = spark.read.parquet(store(path, "radj0"))
     assert(adj0.select("src", "dst", "gen").as[(Long, Long, Long)]
         .collect().sorted.toSeq ==
       radj0.select("src", "dst", "gen").as[(Long, Long, Long)]

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AnnSearch, IndexZooSql, Retrieval}
+import graft.operators.{AnnSearch, IndexStore, IndexZooSql, Retrieval}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -199,7 +199,8 @@ class IndexZooSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     val churned = IndexZooSql.sql(spark, probe)
       .collect().map(_.toSeq).toSet
     IndexZooSql.sql(spark, "ALTER VECTOR INDEX izs_avi COMPACT")
-    assert(!new java.io.File(s"$root/avi/_tombstones").exists(),
+    assert(!IndexStore.latest(spark, s"$root/avi").get.has(IndexStore.TOMBS) &&
+      !new java.io.File(s"$root/avi").list().exists(_.startsWith("tombstones")),
       "COMPACT must fold the tombstone sidecar away")
     assert(IndexZooSql.sql(spark, probe).collect().map(_.toSeq).toSet
       == churned, "COMPACT must never change a probe result")

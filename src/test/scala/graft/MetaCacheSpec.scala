@@ -12,12 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** [[graft.operators.MetaCache]] — the one metadata cache — and
-  * [[graft.operators.Stores.publish]]. Contract under test: relations are
-  * per (session, path); [[MetaCache.invalidate]] keeps the schema, so a
+  * [[graft.operators.Stores.commitOnce]], the publish that a cached
+  * relation's version follows. Contract under test: relations are per
+  * (session, path); [[MetaCache.invalidate]] keeps the schema, so a
   * re-open costs no footer-inference job; [[MetaCache.purge]] forgets
   * schema and memos; the eviction loop drops stopped sessions' relations
-  * first; a publish whose second rename fails leaves the old store live.
-  * The eviction test stops the suite's session, so it runs last.
+  * first; a publish whose rename fails leaves the old version live. The
+  * eviction test stops the suite's session, so it runs last.
   */
 class MetaCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -126,32 +127,29 @@ class MetaCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("publish: when the second rename fails, dst still holds the old contents") {
-    val dir = fresh("publish")
+    val dir = new Path(fresh("publish"))
     val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    def put(p: String, body: String): Unit = {
-      val out = local.create(new Path(p), true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
-    def read(p: String): String = {
-      val in = local.open(new Path(p))
+    def read(p: Path): String = {
+      val in = local.open(p)
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     }
-    put(s"$dir/dst/part", "old")
-    put(s"$dir/tmp/part", "new")
+    def names: Set[String] = local.listStatus(dir).map(_.getPath.getName).toSet
+    val v1 = new Path(dir, "1")
+    val v2 = new Path(dir, "2")
+    assert(Stores.commitOnce(local, v1, "old"))
     val failing = new FilterFileSystem(local) {
       override def rename(src: Path, dst: Path): Boolean =
-        if (src.getName == "tmp") false else super.rename(src, dst)
+        if (dst == v2) false else super.rename(src, dst)
     }
-    intercept[IllegalStateException](
-      Stores.publish(failing, s"$dir/tmp", s"$dir/dst"))
-    assert(read(s"$dir/dst/part") === "old")
-    assert(read(s"$dir/tmp/part") === "new", "the new store is left for a retry")
-    assert(!local.exists(new Path(s"$dir/dst_old")))
-    Stores.publish(local, s"$dir/tmp", s"$dir/dst")
-    assert(read(s"$dir/dst/part") === "new")
-    assert(!local.exists(new Path(s"$dir/tmp")))
-    assert(!local.exists(new Path(s"$dir/dst_old")))
+    assert(!Stores.commitOnce(failing, v2, "new"))
+    assert(read(v1) === "old")
+    assert(names === Set("1"), "no new version and no temp file is left")
+    assert(!Stores.commitOnce(local, v1, "new"), "a published name is never overwritten")
+    assert(read(v1) === "old")
+    assert(Stores.commitOnce(local, v2, "new"))
+    assert(read(v1) === "old" && read(v2) === "new")
+    assert(names === Set("1", "2"))
   }
 
   test("over the cap, entries of stopped sessions are evicted first") {

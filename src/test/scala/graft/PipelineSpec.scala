@@ -134,7 +134,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the persisted index must answer exactly like the one-shot path")
     // one data file per cent_id dir — the small-files discipline the build
     // repartition exists for (a probe pays per-file open cost)
-    val dirs = new java.io.File(s"$path/lists").listFiles()
+    val dirs = new java.io.File(
+        IndexStore.latest(spark, path).get.dir("lists")).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cent_id="))
     assert(dirs.nonEmpty)
     dirs.foreach { d =>
@@ -222,10 +223,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(masked != before, "removals must change the top-k on this corpus")
     // compaction: same results, tombstones gone, codes physically absent
     IvfPq.compactIndex(spark, root)
-    assert(!new java.io.File(s"$root/tombstones").exists())
+    val compacted = IndexStore.latest(spark, root).get
+    assert(!compacted.has(IndexStore.TOMBS) &&
+      !new java.io.File(root).list().exists(_.startsWith("tombstones")))
     assert(probe() == masked,
       "compaction must not change any probe result")
-    assert(spark.read.parquet(s"$root/lists")
+    assert(spark.read.parquet(compacted.dir("lists"))
       .filter(col("cid") % 7 === 0).isEmpty,
       "compaction must drop tombstoned codes from the lists")
     // a second compact with no tombstones is a no-op

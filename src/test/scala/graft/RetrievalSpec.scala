@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AnnSearch, CorpusOps, Dedup, Retrieval}
+import graft.operators.{AnnSearch, CorpusOps, Dedup, IndexStore, Retrieval}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -125,10 +125,11 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Retrieval.bm25TopKIndexed(spark, cp, qs, k = 10)
       .collect().map(_.toSeq).toSet == ref,
       "bm25 compaction changed probe results")
-    val terms = spark.read.parquet(s"$cp/terms")
+    val compacted = IndexStore.latest(spark, cp).get
+    val terms = spark.read.parquet(compacted.dir("terms"))
     assert(terms.groupBy("term").count().filter(col("count") > 1).isEmpty,
       "compaction left multiple df rows for one term")
-    assert(spark.read.parquet(s"$cp/stats").count() == 1,
+    assert(spark.read.parquet(compacted.dir("stats")).count() == 1,
       "compaction left multiple stats deltas")
     val pp = "/root/repo/target/phraseindex/ingest_012"
     Retrieval.phraseCompactIndex(spark, pp)
