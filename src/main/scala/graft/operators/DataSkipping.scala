@@ -257,48 +257,16 @@ object DataSkipping {
       }
     }
     // Sidecar publish. The rows are driver state already (decoded from
-    // footers above); [[LocalParquet]] writes the identical one-file
-    // overwrite form — same nullable schema, same type mapping — with
-    // zero Spark jobs, removing the last per-commit job of the stats
-    // path (guide §5). Spark fallback only for types LocalParquet does
-    // not cover (decimal precision > 18 — not in this schema family).
-    def localType(dt: DataType): Option[String] = dt match {
-      case LongType => Some("long")
-      case IntegerType => Some("int")
-      case DoubleType => Some("double")
-      case FloatType => Some("float")
-      case BooleanType => Some("boolean")
-      case StringType => Some("string")
-      case DateType => Some("date")
-      case TimestampType => Some("timestamp")
-      case TimestampNTZType => Some("timestampntz")
-      case d: DecimalType if d.precision <= 18 =>
-        Some(s"decimal(${d.precision},${d.scale})")
-      case _ => None
-    }
-    val localFields: Option[Seq[(String, String)]] = {
-      val perCol = cols.map(c => localType(c.dataType))
-      if (perCol.exists(_.isEmpty)) None
-      else Some(("file" -> "string?") +: ("cnt" -> "long?") +:
-        cols.zip(perCol).flatMap { case (c, t) =>
-          Seq(s"min_${c.name}" -> s"${t.get}?", s"max_${c.name}" -> s"${t.get}?") })
-    }
-    localFields match {
-      case Some(fs) =>
-        val sp = new Path(s"$dataPath/$STATS_DIR")
-        f.delete(sp, true) // overwrite semantics, same as the Spark path
-        LocalParquet.writeFile(spark, s"$dataPath/$STATS_DIR/part-00000.parquet",
-          fs, rowsOut.iterator.map(_.toSeq))
-      case None =>
-        val schema = StructType(
-          StructField("file", StringType) +: StructField("cnt", LongType) +:
-            cols.flatMap(c => Seq(StructField(s"min_${c.name}", c.dataType),
-              StructField(s"max_${c.name}", c.dataType))))
-        spark.createDataFrame(
-            java.util.Arrays.asList(rowsOut.toSeq: _*), schema)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$dataPath/$STATS_DIR")
-    }
+    // footers above); [[LocalParquet]] writes the one-file overwrite form
+    // Spark's writer would — same nullable schema, same type mapping —
+    // with zero Spark jobs, removing the last per-commit job of the stats
+    // path (guide §5).
+    f.delete(new Path(s"$dataPath/$STATS_DIR"), true)
+    LocalParquet.writeFile(spark, s"$dataPath/$STATS_DIR/part-00000.parquet",
+      StructType(StructField("file", StringType) +: StructField("cnt", LongType) +:
+        cols.flatMap(c => Seq(StructField(s"min_${c.name}", c.dataType),
+          StructField(s"max_${c.name}", c.dataType)))),
+      rowsOut.iterator)
     true
   }
 

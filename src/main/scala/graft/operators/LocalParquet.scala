@@ -15,107 +15,58 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * should not be spun up for data that never leaves the driver). This
   * writer produces the exact same at-rest form with zero jobs.
   *
-  * Compatibility contract (readers are plain `spark.read.parquet`):
-  *  - field repetition mirrors what Spark's writer would emit for the
-  *    replaced frame: REQUIRED for the non-nullable product/primitive
-  *    collections (a `?` suffix opts a field into OPTIONAL for frames
-  *    whose Catalyst schema was nullable — e.g. the stats sidecar's
-  *    min/max columns, NULL for all-NULL chunks);
-  *  - physical/logical types are exactly Spark's parquet output mapping
-  *    (standard mode, `TIMESTAMP_MICROS` session posture): int32/int64/
-  *    float/double/boolean plain; string = BINARY(UTF8); date = INT32
-  *    (DATE); timestamp = INT64 (TIMESTAMP(MICROS, adjusted=true));
-  *    timestampntz = INT64 (TIMESTAMP(MICROS, adjusted=false));
-  *    decimal(p≤9) = INT32, decimal(p≤18) = INT64 (unscaled, DECIMAL(p,s)
-  *    annotation) — wider decimals are deliberately unsupported (callers
-  *    keep the Spark write path);
-  *  - `array<long>` uses the standard 3-level LIST form with the
-  *    `list`/`element` names Spark writes and reads natively (optional
-  *    group — Seq-typed product fields are nullable in Catalyst — with
-  *    required elements);
-  *  - the compression codec follows the session's
-  *    `spark.sql.parquet.compression.codec` so files in one directory
-  *    stay uniform;
-  *  - partitioned layouts are plain `col=value` subdirectories — the same
-  *    names Spark's partitioned writer produces, so partition discovery
-  *    and pruning behave identically;
-  *  - parquet-mr records min/max column statistics by default, same as
-  *    the Spark write path (footer-stats consumers keep working).
+  * Compatibility contract (readers are plain `spark.read.parquet`): the
+  * rows go through Spark's own `ParquetWriteSupport`, set up from the
+  * session as Spark's parquet writer sets it up, so a file written here
+  * has the footer — parquet types, repetition, the Spark schema metadata
+  * — a Spark write of the same frame has, for every Catalyst type. The
+  * compression codec follows the session's
+  * `spark.sql.parquet.compression.codec`; partitioned layouts are plain
+  * `col=value` subdirectories, the names Spark's partitioned writer
+  * produces, so discovery and pruning see one store.
   *
-  * Field type strings: "long", "int", "double", "float", "boolean",
-  * "string", "date", "timestamp", "timestampntz", "decimal(p,s)",
-  * "array<long>"; append `?` for an optional (nullable) field. Anything
-  * else must keep the Spark write path.
+  * Callers hand either Catalyst rows with their `StructType`
+  * ([[writeRows]], the transactional stage) or external values with
+  * field type strings ([[writeFile]]): "long", "int", "double", "float",
+  * "boolean", "string", "date", "timestamp", "timestampntz",
+  * "decimal(p,s)", "array<long>", "array<int>"; a `?` suffix makes a field
+  * nullable (OPTIONAL), as the replaced frame's Catalyst schema had it.
   */
 object LocalParquet {
 
-  import org.apache.parquet.schema.{MessageType, Type, Types, LogicalTypeAnnotation}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-  import org.apache.parquet.example.data.simple.SimpleGroupFactory
-  import org.apache.parquet.hadoop.example.ExampleParquetWriter
+  import org.apache.hadoop.conf.Configuration
+  import org.apache.hadoop.fs.{FileSystem, Path}
+  import org.apache.parquet.conf.ParquetConfiguration
+  import org.apache.parquet.hadoop.ParquetWriter
+  import org.apache.parquet.hadoop.api.WriteSupport
   import org.apache.parquet.hadoop.metadata.CompressionCodecName
+  import org.apache.parquet.hadoop.util.HadoopStreams
+  import org.apache.parquet.io.{OutputFile, PositionOutputStream}
+  import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+  import org.apache.spark.sql.internal.SQLConf
+  import org.apache.spark.sql.types._
 
   private val DecimalRe = raw"decimal\((\d+),(\d+)\)".r
 
-  /** Spark external value → epoch micros, the TIMESTAMP_MICROS write form. */
-  private def instantMicros(i: java.time.Instant): Long =
-    Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-      (i.getNano / 1000L))
-  private def ldtMicros(t: java.time.LocalDateTime): Long =
-    instantMicros(t.toInstant(java.time.ZoneOffset.UTC))
+  private val Prims: Map[String, DataType] = Map("long" -> LongType,
+    "int" -> IntegerType, "double" -> DoubleType, "float" -> FloatType,
+    "boolean" -> BooleanType, "string" -> StringType, "date" -> DateType,
+    "timestamp" -> TimestampType, "timestampntz" -> TimestampNTZType,
+    "array<long>" -> ArrayType(LongType, containsNull = false),
+    "array<int>" -> ArrayType(IntegerType, containsNull = false))
 
-  private def primType(base: String, rep: Type.Repetition,
-      name: String): Type = {
-    def b(p: PrimitiveTypeName) = Types.primitive(p, rep)
-    base match {
-      case "long" => b(PrimitiveTypeName.INT64).named(name)
-      case "int" => b(PrimitiveTypeName.INT32).named(name)
-      case "double" => b(PrimitiveTypeName.DOUBLE).named(name)
-      case "float" => b(PrimitiveTypeName.FLOAT).named(name)
-      case "boolean" => b(PrimitiveTypeName.BOOLEAN).named(name)
-      case "string" => b(PrimitiveTypeName.BINARY)
-        .as(LogicalTypeAnnotation.stringType()).named(name)
-      case "date" => b(PrimitiveTypeName.INT32)
-        .as(LogicalTypeAnnotation.dateType()).named(name)
-      case "timestamp" => b(PrimitiveTypeName.INT64)
-        .as(LogicalTypeAnnotation.timestampType(true,
-          LogicalTypeAnnotation.TimeUnit.MICROS)).named(name)
-      case "timestampntz" => b(PrimitiveTypeName.INT64)
-        .as(LogicalTypeAnnotation.timestampType(false,
-          LogicalTypeAnnotation.TimeUnit.MICROS)).named(name)
-      case DecimalRe(p, s) =>
-        val (prec, scale) = (p.toInt, s.toInt)
-        require(prec >= 1 && prec <= 18 && scale >= 0 && scale <= prec,
-          s"LocalParquet: decimal($prec,$scale) out of the supported range")
-        b(if (prec <= 9) PrimitiveTypeName.INT32 else PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.decimalType(scale, prec)).named(name)
-      case other => throw new IllegalArgumentException(
-        s"LocalParquet: unsupported field type $other for $name")
+  /** ("name", "type[?]") → the Catalyst field Spark would write for it.
+    * Arrays are always nullable (Seq-typed product fields are). */
+  private def field(name: String, tpe: String): StructField = {
+    val (base, opt) =
+      if (tpe.endsWith("?")) (tpe.dropRight(1), true) else (tpe, false)
+    val dt = base match {
+      case DecimalRe(p, s) => DecimalType(p.toInt, s.toInt)
+      case other => Prims.getOrElse(other, throw new IllegalArgumentException(
+        s"LocalParquet: unsupported field type $other for $name"))
     }
-  }
-
-  /** ("name", "type[?]") → (base type, optional?). */
-  private def parse(tpe: String): (String, Boolean) =
-    if (tpe.endsWith("?")) (tpe.dropRight(1), true) else (tpe, false)
-
-  private def messageType(fields: Seq[(String, String)]): MessageType = {
-    val b = Types.buildMessage()
-    fields.foreach { case (name, tpe) =>
-      val (base, opt) = parse(tpe)
-      val rep = if (opt) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
-      base match {
-        case "array<long>" => b.addField(
-          Types.optionalList()
-            .element(Types.required(PrimitiveTypeName.INT64).named("element"))
-            .named(name))
-        case "array<int>" => b.addField(
-          Types.optionalList()
-            .element(Types.required(PrimitiveTypeName.INT32).named("element"))
-            .named(name))
-        case _ => b.addField(primType(base, rep, name))
-      }
-    }
-    b.named("spark_schema")
+    StructField(name, dt, opt || dt.isInstanceOf[ArrayType])
   }
 
   private def codec(spark: SparkSession): CompressionCodecName =
@@ -128,64 +79,72 @@ object LocalParquet {
       case _ => CompressionCodecName.SNAPPY
     }
 
-  /** Write `rows` as ONE parquet file at `file` (created, parents
-    * included; fails if it exists — callers generate unique names).
-    * Row values align positionally with `fields` and use the Spark
-    * EXTERNAL types (java.time.LocalDate / Instant / LocalDateTime,
-    * java.math.BigDecimal, boxed primitives, String, Seq[Long]); null is
+  /** A new file at `p` on `fs` (fails if it exists, creates parents). */
+  private def outputFile(fs: FileSystem, p: Path): OutputFile = new OutputFile {
+    def create(blockSizeHint: Long): PositionOutputStream =
+      HadoopStreams.wrap(fs.create(p, false))
+    def createOrOverwrite(blockSizeHint: Long): PositionOutputStream =
+      HadoopStreams.wrap(fs.create(p, true))
+    def supportsBlockSize(): Boolean = false
+    def defaultBlockSize(): Long = 0L
+    override def getPath(): String = p.toString
+  }
+
+  private final class Builder(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, Builder](file) {
+    override protected def self(): Builder = this
+    override protected def getWriteSupport(
+        conf: Configuration): WriteSupport[InternalRow] = new ParquetWriteSupport
+    override protected def getWriteSupport(
+        conf: ParquetConfiguration): WriteSupport[InternalRow] = new ParquetWriteSupport
+  }
+
+  /** Write Catalyst rows of `schema` as ONE parquet file at `file`
+    * through Spark's own `ParquetWriteSupport`, configured from the
+    * session as Spark's parquet writer configures it — so the footer,
+    * the type mapping (every type, nested ones included) and the Spark
+    * schema metadata are the ones a Spark write of the same frame
+    * produces. The file is created (parents included) and must not
+    * exist; no `.crc` sidecar is written beside it ([[Stores.bare]]). */
+  private[graft] def writeRows(spark: SparkSession, file: String,
+      schema: StructType, rows: Iterator[InternalRow]): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val sql = spark.sessionState.conf
+    Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT -> sql.writeLegacyParquetFormat,
+      SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE -> sql.parquetOutputTimestampType,
+      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED -> sql.parquetFieldIdWriteEnabled,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> sql.legacyParquetNanosAsLong,
+      SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE ->
+        sql.parquetAnnotateVariantLogicalType)
+      .foreach { case (k, v) => conf.set(k.key, v.toString) }
+    ParquetWriteSupport.setSchema(schema, conf)
+    val p = new Path(file)
+    val writer = new Builder(outputFile(Stores.bare(p.getFileSystem(conf)), p))
+      .withConf(conf).withCompressionCodec(codec(spark)).build()
+    try rows.foreach(writer.write) finally writer.close()
+  }
+
+  /** Write `rows` as ONE parquet file at `file` ([[writeRows]]). Row
+    * values align positionally with `fields` and use the Spark EXTERNAL
+    * types (java.time.LocalDate / Instant / LocalDateTime,
+    * java.math.BigDecimal, boxed primitives, String, Seq); values past
+    * the last field are not written (a bucketed row's key); null is
     * allowed only for `?`-suffixed fields. */
   def writeFile(spark: SparkSession, file: String,
-      fields: Seq[(String, String)], rows: IterableOnce[Seq[Any]]): Unit = {
-    val schema = messageType(fields)
-    val parsed = fields.map { case (n, t) => val (b, o) = parse(t); (n, b, o) }
-    val conf = spark.sessionState.newHadoopConf()
-    val writer = ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-          new org.apache.hadoop.fs.Path(file), conf))
-      .withConf(conf).withType(schema)
-      .withCompressionCodec(codec(spark))
-      .build()
-    val factory = new SimpleGroupFactory(schema)
-    try rows.iterator.foreach { r =>
-      val g = factory.newGroup()
-      var i = 0
-      while (i < parsed.length) {
-        val v = r(i)
-        val (name, base, opt) = parsed(i)
-        if (v == null) require(opt,
-          s"LocalParquet: null for required field $name")
-        else base match {
-          case "long" => g.add(i, v.asInstanceOf[Long])
-          case "int" => g.add(i, v.asInstanceOf[Int])
-          case "double" => g.add(i, v.asInstanceOf[Double])
-          case "float" => g.add(i, v.asInstanceOf[Float])
-          case "boolean" => g.add(i, v.asInstanceOf[Boolean])
-          case "string" => g.add(i, v.asInstanceOf[String])
-          case "date" =>
-            g.add(i, v.asInstanceOf[java.time.LocalDate].toEpochDay.toInt)
-          case "timestamp" =>
-            g.add(i, instantMicros(v.asInstanceOf[java.time.Instant]))
-          case "timestampntz" =>
-            g.add(i, ldtMicros(v.asInstanceOf[java.time.LocalDateTime]))
-          case DecimalRe(p, s) =>
-            val bd = v.asInstanceOf[java.math.BigDecimal]
-            require(bd.scale == s.toInt,
-              s"LocalParquet: decimal scale ${bd.scale} != declared $s for $name")
-            val unscaled = bd.unscaledValue.longValueExact
-            if (p.toInt <= 9) g.add(i, unscaled.toInt) else g.add(i, unscaled)
-          case "array<long>" =>
-            val lg = g.addGroup(i)
-            v.asInstanceOf[Seq[Long]].foreach(e =>
-              lg.addGroup("list").add("element", e))
-          case "array<int>" =>
-            val lg = g.addGroup(i)
-            v.asInstanceOf[Seq[Int]].foreach(e =>
-              lg.addGroup("list").add("element", e))
-        }
-        i += 1
-      }
-      writer.write(g)
-    } finally writer.close()
+      fields: Seq[(String, String)], rows: IterableOnce[Seq[Any]]): Unit =
+    writeFile(spark, file, StructType(fields.map { case (n, t) => field(n, t) }),
+      rows.iterator.map(r => Row.fromSeq(r.take(fields.length))))
+
+  /** [[writeFile]] for external rows of `schema`. */
+  def writeFile(spark: SparkSession, file: String, schema: StructType,
+      rows: Iterator[Row]): Unit = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    writeRows(spark, file, schema, rows.map { r =>
+      schema.fields.indices.foreach(i => require(
+        !r.isNullAt(i) || schema.fields(i).nullable,
+        s"LocalParquet: null for required field ${schema.fields(i).name}"))
+      toCatalyst(r).asInstanceOf[InternalRow]
+    })
   }
 
   /** Write `rows` under `dir` partitioned by a derived long key: one file
@@ -204,17 +163,20 @@ object LocalParquet {
     }
   }
 
-  /** The small-write gate of the store appends: an early-exiting
-    * `take(ID_CAP + 1)` over `df`; when the rows fit [[Stores.ID_CAP]]
+  /** The small-write gate of the store appends: one bounded action over
+    * `df` ([[Stores.boundedRows]]); when the rows fit [[Stores.ID_CAP]]
     * and the long key in `df`'s first column has no null, `local` writes
     * them driver-side (no Spark job), otherwise `distributed` runs the
-    * Spark write. A non-long key skips the take: this writer would change
-    * its at-rest type. */
+    * Spark write. A non-long key skips the action: this writer would
+    * change its at-rest type. */
   def writeSmall(df: DataFrame)(local: Array[Row] => Unit)(
       distributed: => Unit): Unit =
-    Some(df).filter(_.schema.head.dataType ==
-        org.apache.spark.sql.types.LongType)
-      .map(_.take(Stores.ID_CAP + 1))
-      .filter(rs => rs.length <= Stores.ID_CAP && !rs.exists(_.isNullAt(0)))
+    Some(df).filter(_.schema.head.dataType == LongType)
+      .flatMap(Stores.boundedRows)
+      .filter(rs => !rs.exists(_.isNullAt(0)))
+      .map { rs =>
+        val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+        rs.map(toRow(_).asInstanceOf[Row])
+      }
       .fold(distributed)(local)
 }

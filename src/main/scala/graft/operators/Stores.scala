@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** Helpers the at-rest stores (IVF-PQ, binary, graph, BM25/positional)
@@ -10,9 +13,40 @@ import org.apache.spark.sql.functions._
 private[graft] object Stores {
 
   /** The largest id set the driver handles itself: an `isin` InSet up to
-    * here, a broadcast join above; likewise the row bound of a
-    * driver-side [[LocalParquet.writeSmall]]. */
+    * here, a broadcast join above; likewise the row bound of
+    * [[boundedRows]], so of a driver-side [[LocalParquet.writeSmall]] and
+    * of a transactional stage written from the driver
+    * (`TxnMergeOnRead.stage`: a DML statement staging at most this many
+    * rows writes them without a Spark write job). */
   val ID_CAP = 65536
+
+  /** The rows of `df` when it has at most [[ID_CAP]] of them, else None —
+    * one bounded action. `limit(ID_CAP + 1)` plans a `CollectLimitExec`,
+    * whose `execute` is ONE job (a local limit per partition, then a
+    * single partition) where `collect`/`take` go through `executeTake`
+    * and run one job per scale-up round when fewer rows exist than were
+    * asked for. A plan the optimizer folds to a `LocalRelation` (inline
+    * VALUES, a projection of one) runs no job at all. */
+  def boundedRows(df: DataFrame): Option[Array[InternalRow]] = {
+    val qe = df.limit(ID_CAP + 1).queryExecution
+    val rows = qe.optimizedPlan match {
+      case l: LocalRelation => l.data.toArray
+      case _ => SQLExecution.withNewExecutionId(qe, Some("bounded rows")) {
+        qe.toRdd.map(_.copy()).collect()
+      }
+    }
+    Some(rows).filter(_.length <= ID_CAP)
+  }
+
+  /** `fs` without a client-side checksum layer. The local filesystem
+    * writes a `.crc` sidecar beside every file, which doubles the file
+    * count of the small driver-written files (log entries, manifests,
+    * stages); HDFS and object stores checksum below the client and are
+    * returned as they are. */
+  def bare(fs: FileSystem): FileSystem = fs match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
 
   /** Rows of `df` whose `idCol` is in `ids`: an InSet pushdown within
     * [[ID_CAP]], a broadcast join above. With `nBuckets > 0` the store is
@@ -38,11 +72,15 @@ private[graft] object Stores {
 
   /** The one commit of the txn log, the index manifests and the index
     * registry: create `dst` holding `body` — temp file beside it, then a
-    * rename — or return false if it exists. A visible `dst` is always
-    * complete. The local FS's rename can clobber, so commits into one dir
-    * also serialize through a JVM lock (exact for local[n]; elsewhere the
-    * contract is an FS whose rename never overwrites, as HDFS). */
-  def commitOnce(fs: FileSystem, dst: Path, body: String): Boolean =
+    * no-overwrite publish — or return false if it exists. A visible `dst`
+    * is always complete. The local filesystem's rename(2) replaces an
+    * existing file, so two processes could both "win" one name there: on
+    * `file:` the publish is a hard link (link(2) fails on an existing
+    * name, atomically, across processes), elsewhere a rename (HDFS never
+    * renames over a file). Commits into one dir also serialize through a
+    * JVM lock. */
+  def commitOnce(fs0: FileSystem, dst: Path, body: String): Boolean = {
+    val fs = bare(fs0)
     dirLocks.computeIfAbsent(dst.getParent.toString, _ => new Object)
       .synchronized {
         if (fs.exists(dst)) false
@@ -51,10 +89,21 @@ private[graft] object Stores {
             s".tmp_${java.util.UUID.randomUUID().toString.take(12)}")
           val out = fs.create(tmp, true)
           try out.write(body.getBytes("UTF-8")) finally out.close()
-          val ok = try fs.rename(tmp, dst)
-          catch { case _: java.io.IOException => false } // lost the race
-          if (!ok) fs.delete(tmp, false)
+          val (ok, linked) = fs match {
+            case local: RawLocalFileSystem if local.getUri.getScheme == "file" =>
+              val won = try {
+                java.nio.file.Files.createLink(local.pathToFile(dst).toPath,
+                  local.pathToFile(tmp).toPath)
+                true
+              } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+              (won, true)
+            case _ =>
+              (try fs.rename(tmp, dst)
+               catch { case _: java.io.IOException => false }, false) // lost the race
+          }
+          if (!ok || linked) fs.delete(tmp, false)
           ok
         }
       }
+  }
 }

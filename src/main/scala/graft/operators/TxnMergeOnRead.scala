@@ -7,7 +7,12 @@ import scala.util.{Success, Try}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, JoinedRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.types.StructType
 
 /** Merge-on-read DML under **concurrent writers**: an optimistic
   * transaction log giving snapshot-isolated reads and first-committer-wins
@@ -35,6 +40,12 @@ import org.apache.spark.sql.functions._
   *   root/delta_<uuid>/{insert,delete}/       uncommitted until a log entry
   *                                            references the dir
   * }}}
+  *
+  * A write stages its rows with one bounded action ([[stage]]): a stage
+  * of at most [[Stores.ID_CAP]] rows — every OLTP-sized statement — is
+  * one driver-written parquet file per half (`insert/part-00000.parquet`,
+  * `delete/part-00000.parquet`), the form a Spark write of the same frame
+  * has; a larger stage keeps the Spark write and its part files.
   *
   * Surface (one lakehouse table in ~15 calls):
   * {{{
@@ -460,21 +471,29 @@ object TxnMergeOnRead {
   }
 
   /** Fail iff `rows` violates any constraint in force — SQL semantics: a
-    * CHECK passes on TRUE **or NULL**, violates only on FALSE. One
-    * aggregate job counts every constraint at once over the STAGED rows
-    * only (never the table); all violated names are reported together. */
+    * CHECK passes on TRUE **or NULL**, violates only on FALSE — over the
+    * STAGED rows only (never the table); all violated names are reported
+    * together. Rows in hand (`local`: a [[LocalRelation]]) are checked by
+    * a projection the optimizer folds into the relation, so no job runs;
+    * otherwise one aggregate job counts every constraint at once. */
   private def enforceConstraints(rows: DataFrame,
-      constraints: Seq[(String, String)], op: String, root: String): Unit = {
+      constraints: Seq[(String, String)], op: String, root: String,
+      local: Boolean): Unit = {
     if (constraints.isEmpty) return
-    val counts = rows.agg(
-      sum(when(!coalesce(expr(constraints.head._2), lit(true)), 1L)
-        .otherwise(0L)).as(constraints.head._1),
-      constraints.tail.map { case (n, c) =>
-        sum(when(!coalesce(expr(c), lit(true)), 1L)).as(n) }: _*).head()
-    val violated = constraints.indices
-      .filter(i => !counts.isNullAt(i) && counts.getLong(i) > 0)
+    val bad = rows.select(constraints.map { case (n, c) =>
+      when(!coalesce(expr(c), lit(true)), 1L).otherwise(0L).as(n) }: _*)
+    val counts: Seq[Long] =
+      if (local) {
+        val rs = bad.collect()
+        constraints.indices.map(i => rs.iterator.map(_.getLong(i)).sum)
+      } else {
+        val r = bad.agg(sum(bad.columns.head), bad.columns.tail.map(sum): _*)
+          .head()
+        constraints.indices.map(r.getLong)
+      }
+    val violated = constraints.indices.filter(counts(_) > 0)
       .map(i => s"${constraints(i)._1} CHECK (${constraints(i)._2}): " +
-        s"${counts.getLong(i)} row(s)")
+        s"${counts(i)} row(s)")
     if (violated.nonEmpty) throw new IllegalArgumentException(
       s"$op on $root violates constraint(s) ${violated.mkString("; ")}")
   }
@@ -660,6 +679,14 @@ object TxnMergeOnRead {
   private def withRid(df: DataFrame, txn: Long): DataFrame =
     df.withColumn(RID, struct(lit(txn).as("txn"),
       monotonically_increasing_id().as("seq")))
+
+  /** Every row of `df` as a new row ([[BORN]]) of a [[stage]]. */
+  private def asBorn(df: DataFrame): DataFrame =
+    df.select(struct(df.columns.map(col): _*).as(BORN))
+
+  /** Every row of `df` as a delete event ([[DEAD]]) of a [[stage]]. */
+  private def asDead(df: DataFrame): DataFrame =
+    df.select(struct(df.columns.map(col): _*).as(DEAD))
 
   /** Create the table: base data + log entry 1. Not concurrency-safe against
     * itself (two creates of the same table is a caller bug, reported). */
@@ -1052,14 +1079,102 @@ object TxnMergeOnRead {
         .drop(RID).withColumn("change", lit("")).limit(0))
   }
 
-  /** Stage delete/insert halves under a uuid dir. The dir is invisible until
-    * a log entry references it, so staging needs no temp-dir dance. */
-  private def stage(spark: SparkSession, root: String,
-      delete: Option[DataFrame], insert: Option[DataFrame]): String = {
+  /** The columns of a write's staged-rows frame, one row per source row:
+    * [[DEAD]] is a full old row with its rid (a delete event), [[BORN]] a
+    * new row, [[MATCHED]] (MERGE only) the rid of a matched target row; a
+    * null struct stages nothing for its half. */
+  private val DEAD = "__dead"
+  private val BORN = "__born"
+  private val MATCHED = "__matched"
+
+  /** A staged delta dir and the footprint summary of its delete half. */
+  private case class Staged(dir: String, fp: String)
+
+  /** Stage one write under a fresh uuid dir — invisible until a log entry
+    * references it, so staging needs no temp-dir dance. `rows` is the
+    * write's staged-rows frame ([[DEAD]]/[[BORN]]/[[MATCHED]]); `tag`
+    * gives the born rows fresh rids under that writer tag (None: they
+    * carry theirs). New rows must pass `cons`. None when nothing is
+    * staged; with `emptyOk` every half the frame has is written, empty
+    * or not (an insert commits even with no rows, a fold always commits).
+    *
+    * One bounded action ([[Stores.boundedRows]]) computes the rows. When
+    * they fit [[Stores.ID_CAP]] — the OLTP case — the rest is driver work
+    * on the rows in hand: the MERGE cardinality check, fresh rid seqs,
+    * the CHECK constraints (over a [[LocalRelation]]), one
+    * [[LocalParquet.writeRows]] file per half and the footprint. Above
+    * the cap each half is a Spark write, with the checks and the
+    * footprint as their own jobs. Either way the new dirs' schemas go into
+    * [[MetaCache]], so no later open of the stage runs a footer-inference
+    * job; both paths write the same Spark schema. */
+  private def stage(spark: SparkSession, root: String, rows: DataFrame,
+      tag: Option[Long], cons: Seq[(String, String)], op: String,
+      emptyOk: Boolean = false): Option[Staged] = {
     val dir = s"delta_${UUID.randomUUID().toString.take(12)}"
-    delete.foreach(_.write.parquet(s"$root/$dir/delete"))
-    insert.foreach(_.write.parquet(s"$root/$dir/insert"))
-    dir
+    def half(c: String): Option[DataFrame] =
+      if (!rows.columns.contains(c)) None
+      else Some(rows.filter(col(c).isNotNull).select(s"$c.*"))
+    // the new rows as constrained (no rid) and as written
+    val born = half(BORN)
+    val halves = Seq("delete" -> half(DEAD),
+      "insert" -> born.map(b => tag.fold(b)(withRid(b, _))))
+      .collect { case (k, Some(df)) => k -> df }
+    val at = (k: String) => s"$root/$dir/$k"
+    val dupError = s"MERGE cardinality violation: a row of $root " +
+      "matches more than one source row"
+    def remember(k: String, schema: StructType): Unit =
+      MetaCache.memo(at(k), "")(ColumnBridge.asNullable(schema))
+    Stores.boundedRows(rows) match {
+      case Some(local) =>
+        def structs(c: String): Array[InternalRow] = {
+          val i = rows.schema.fieldIndex(c)
+          val n = rows.schema(i).dataType.asInstanceOf[StructType].length
+          local.filter(!_.isNullAt(i)).map(_.getStruct(i, n))
+        }
+        if (rows.columns.contains(MATCHED)) {
+          val ids = structs(MATCHED).map(r => (r.getLong(0), r.getLong(1)))
+          require(ids.distinct.length == ids.length, dupError)
+        }
+        val newRows = born.map(_ => structs(BORN))
+        val inHand = halves.map { case (k, df) =>
+          (k, df, if (k == "delete") structs(DEAD)
+            else tag.fold(newRows.get)(t => newRows.get.zipWithIndex.map {
+              case (r, i) => new JoinedRow(r, InternalRow(InternalRow(t, i.toLong)))
+            }))
+        }.filter(h => emptyOk || h._3.nonEmpty)
+        if (inHand.isEmpty) return None
+        for (b <- born; rs <- newRows) {
+          val attrs = b.schema.map(fd =>
+            AttributeReference(fd.name, fd.dataType, fd.nullable)())
+          enforceConstraints(ColumnBridge.ofRows(spark,
+            LocalRelation(attrs, rs.toSeq)), cons, op, root, local = true)
+        }
+        inHand.foreach { case (k, df, rs) =>
+          LocalParquet.writeRows(spark, s"${at(k)}/part-00000.parquet",
+            df.schema, rs.iterator)
+          remember(k, df.schema)
+        }
+        Some(Staged(dir, inHand.collectFirst { case ("delete", df, rs) =>
+          val ri = df.schema.fieldIndex(RID)
+          footprintOf(rs.toSeq.map { r =>
+            val rid = r.getStruct(ri, 2)
+            (rid.getLong(0), rid.getLong(1))
+          })
+        }.getOrElse("-")))
+      case None =>
+        if (rows.columns.contains(MATCHED))
+          require(rows.filter(col(MATCHED).isNotNull).groupBy(MATCHED)
+            .count().filter(col("count") > 1).isEmpty, dupError)
+        val written = halves.filter { case (_, df) => emptyOk || !df.isEmpty }
+        if (written.isEmpty) return None
+        born.filter(_ => written.exists(_._1 == "insert"))
+          .foreach(enforceConstraints(_, cons, op, root, local = false))
+        written.foreach { case (k, df) =>
+          df.write.parquet(at(k))
+          remember(k, df.schema)
+        }
+        Some(Staged(dir, footprint(spark, root, dir)))
+    }
   }
 
   /** Footprint summaries with more tags than this collapse to `*` (always
@@ -1071,16 +1186,22 @@ object TxnMergeOnRead {
     * only the rid column), collected driver-side at ≤ FP_MAX_TAGS+1 rows.
     * `-` encodes the EMPTY footprint (no delete half — an insert-only
     * MERGE): provably disjoint from everything. */
-  private def footprint(spark: SparkSession, root: String, dir: String): String = {
-    if (!fs(spark, root).exists(new Path(s"$root/$dir/delete"))) return "-"
-    val rows = MetaCache.get(spark, s"$root/$dir/delete")
+  private def footprint(spark: SparkSession, root: String, dir: String): String =
+    if (!fs(spark, root).exists(new Path(s"$root/$dir/delete"))) "-"
+    else footprintOf(MetaCache.get(spark, s"$root/$dir/delete")
       .groupBy(col(s"$RID.txn").as("t"))
       .agg(min(col(s"$RID.seq")).as("lo"), max(col(s"$RID.seq")).as("hi"))
-      .limit(FP_MAX_TAGS + 1).collect()
-    if (rows.isEmpty) "-"
-    else if (rows.length > FP_MAX_TAGS) "*"
-    else rows.map(r => s"${r.getLong(0)}:${r.getLong(1)}:${r.getLong(2)}")
-      .sorted.mkString(";")
+      .limit(FP_MAX_TAGS + 1).collect().toSeq.flatMap(r =>
+        Seq((r.getLong(0), r.getLong(1)), (r.getLong(0), r.getLong(2)))))
+
+  /** The footprint of deleted `(txn, seq)` rids (or of each tag's
+    * `(txn, lo)` and `(txn, hi)`, which fold to the same summary). */
+  private def footprintOf(rids: Seq[(Long, Long)]): String = {
+    val byTag = rids.groupBy(_._1)
+    if (byTag.isEmpty) "-"
+    else if (byTag.size > FP_MAX_TAGS) "*"
+    else byTag.map { case (t, rs) =>
+      s"$t:${rs.map(_._2).min}:${rs.map(_._2).max}" }.toSeq.sorted.mkString(";")
   }
 
   private def fpParse(s: String): Option[Map[Long, (Long, Long)]] =
@@ -1174,18 +1295,16 @@ object TxnMergeOnRead {
     // later snapshot's unionByName against other writers' files fails
     // analysis / silently coerces
     val genApplied = applyGens(rows, gensFrom(cons))
-    def castStage(evolvedTypes: Map[String, String]): DataFrame = {
-      val staged = genApplied.select(
-        fields.map(fd => col(fd.name).cast(fd.dataType).as(fd.name)) ++
-          newCols.map { case (n, t) =>
-            col(n).cast(evolvedTypes.getOrElse(n.toLowerCase, t)).as(n) }: _*)
-      enforceConstraints(staged, cons, "INSERT", root)
-      staged
-    }
     // rid txn = a fresh uuid-derived tag, not the commit version (unknown
     // until the race resolves); uniqueness is all the id contract needs
     val tag = UUID.randomUUID().getLeastSignificantBits & Long.MaxValue
-    var dir = stage(spark, root, None, Some(withRid(castStage(Map.empty), tag)))
+    def castStage(evolvedTypes: Map[String, String]): String =
+      stage(spark, root, asBorn(genApplied.select(
+        fields.map(fd => col(fd.name).cast(fd.dataType).as(fd.name)) ++
+          newCols.map { case (n, t) =>
+            col(n).cast(evolvedTypes.getOrElse(n.toLowerCase, t)).as(n) }: _*)),
+        Some(tag), cons, "INSERT", emptyOk = true).get.dir
+    var dir = castStage(Map.empty)
     pauseAfterInsertStage()
     val marker = if (newCols.isEmpty) ""
       else "c:" + newCols.map { case (n, t) => s"$n=$t" }.mkString(";")
@@ -1231,7 +1350,7 @@ object TxnMergeOnRead {
           // the superseded stage dir is referenced by nothing — delete it
           // before re-staging or every retry leaks an orphan dir
           f.delete(new Path(s"$root/$dir"), true)
-          dir = stage(spark, root, None, Some(withRid(castStage(winning), tag)))
+          dir = castStage(winning)
         }
       }
     }
@@ -1426,10 +1545,10 @@ object TxnMergeOnRead {
     val bview = readView(f, root)
     val cols = declaredFields(spark, f, root, bview).map(_.name)
     val cons = constraintsV(f, root, bview)
-    val staged = applyGens(rows, gensFrom(cons)).select(cols.map(col): _*)
-    enforceConstraints(staged, cons, "INSERT BATCH", root)
     val tag = UUID.randomUUID().getLeastSignificantBits & Long.MaxValue
-    val dir = stage(spark, root, None, Some(withRid(staged, tag)))
+    val dir = stage(spark, root,
+      asBorn(applyGens(rows, gensFrom(cons)).select(cols.map(col): _*)),
+      Some(tag), cons, "INSERT BATCH", emptyOk = true).get.dir
     var attempts = 0
     var done = false
     var appended = false
@@ -1454,14 +1573,14 @@ object TxnMergeOnRead {
     * snapshot, then commit unless a version above the snapshot deleted one
     * of the SAME rows (row-overlap conflict → recompute; disjoint
     * concurrent mutations commit without recompute — see the isolation
-    * scaladoc). `stageFrom` returns None when the predicate matches
-    * nothing — committing an empty mutation would serialize against other
-    * writers for no effect, so it no-ops. The conflict scan opens ONLY the
-    * entries above the pinned snapshot (selected by file name) — O(what
-    * landed since), never a log replay. Returns the number of snapshot
+    * scaladoc). `stageFrom` maps the snapshot to the staged-rows frame
+    * ([[stage]]); when it stages nothing — committing an empty mutation
+    * would serialize against other writers for no effect — it no-ops.
+    * The conflict scan opens ONLY the entries above the pinned snapshot
+    * (selected by file name) — O(what landed since), never a log replay. Returns the number of snapshot
     * computations (1 = committed without recompute). */
-  private def mutate(spark: SparkSession, root: String,
-      stageFrom: DataFrame => Option[(Option[DataFrame], Option[DataFrame])]): Int = {
+  private def mutate(spark: SparkSession, root: String, op: String,
+      stageFrom: DataFrame => DataFrame): Int = {
     val f = fs(spark, root)
     var attempts = 0
     var done = false
@@ -1471,16 +1590,14 @@ object TxnMergeOnRead {
       val view0 = readView(f, root)
       val snapV = view0.lastVersion
       pauseAfterSnapshot()
-      stageFrom(snapshotAtV(spark, root, view0)) match {
+      // the new versions an UPDATE/MERGE writes must satisfy the
+      // constraints in force at the pinned snapshot (deletes cannot
+      // violate a CHECK)
+      val tag = UUID.randomUUID().getLeastSignificantBits & Long.MaxValue
+      stage(spark, root, stageFrom(snapshotAtV(spark, root, view0)),
+          Some(tag), constraintsV(f, root, view0), op) match {
         case None => done = true // nothing matched on this snapshot
-        case Some((del, ins)) =>
-          // the new versions an UPDATE/MERGE writes must satisfy the
-          // constraints in force at the pinned snapshot (deletes cannot
-          // violate a CHECK)
-          ins.foreach(i => enforceConstraints(i.drop(RID),
-            constraintsV(f, root, view0), "UPDATE/MERGE", root))
-          val dir = stage(spark, root, del, ins)
-          val myFp = footprint(spark, root, dir)
+        case Some(Staged(dir, myFp)) =>
           // versions proven row-disjoint stay cleared across ordinal races
           val cleared = scala.collection.mutable.Set.empty[Long]
           var v = snapV + 1
@@ -1519,10 +1636,8 @@ object TxnMergeOnRead {
     * no-table-scan contract; readers prune back down to the id column.
     * Returns the snapshot-computation count (1 = no recompute). */
   def delete(spark: SparkSession, root: String, cond: String): Int =
-    mutate(spark, root, { snap =>
-      val del = snap.filter(coalesce(expr(cond), lit(false)))
-      if (del.isEmpty) None else Some((Some(del), None))
-    })
+    mutate(spark, root, "DELETE",
+      snap => asDead(snap.filter(coalesce(expr(cond), lit(false)))))
 
   /** UPDATE SET ... WHERE cond under snapshot isolation: delete events plus
     * re-inserted new versions, the reference's two-event UPDATE encoding.
@@ -1537,7 +1652,7 @@ object TxnMergeOnRead {
         s"cannot UPDATE SET generated column '$k' (it is recomputed " +
           "from its defining expression)")
     }
-    mutate(spark, root, { snap =>
+    mutate(spark, root, "UPDATE/MERGE", { snap =>
       val matched = snap.filter(coalesce(expr(cond), lit(false)))
       val cols = snap.columns.filter(_ != RID).toSeq
       val byLower = cols.map(c => c.toLowerCase -> c).toMap
@@ -1545,21 +1660,16 @@ object TxnMergeOnRead {
         byLower.getOrElse(k.toLowerCase, throw new IllegalArgumentException(
           s"UPDATE SET references unknown column '$k'")) -> v
       }.toMap
-      // no persist needed for half-consistency: the snapshot is a pinned
-      // log prefix over immutable files, so the delete and insert halves
-      // evaluate `matched` to the same rows by determinism
-      if (matched.isEmpty) None
-      else {
-        val tag = UUID.randomUUID().getLeastSignificantBits & Long.MaxValue
-        // SET sees the pre-update row; generated columns are then
-        // recomputed over the POST-set values (Delta's behavior when a
-        // base column changes) — withColumn keeps their position
-        val newVersions = gens.foldLeft(matched.select(cols.map { c =>
-          setMap.get(c).map(e => expr(e).as(c)).getOrElse(col(c))
-        }: _*)) { case (d, (n, e)) => d.withColumn(n, expr(e)) }
-        Some((Option(matched), // full old rows: the CDC delete events
-          Option(withRid(newVersions, tag))))
-      }
+      // one row per matched row carries both events: the full old row
+      // (the CDC delete event) and its new version. SET sees the
+      // pre-update row; generated columns are then recomputed over the
+      // POST-set values (Delta's behavior when a base column changes) —
+      // withColumn keeps their position
+      gens.foldLeft(matched.select(cols.map { c =>
+        setMap.get(c).map(e => expr(e).as(c)).getOrElse(col(c))
+      } :+ struct(snap.columns.map(col): _*).as(DEAD): _*)) {
+        case (d, (n, e)) => d.withColumn(n, expr(e))
+      }.select(col(DEAD), struct(cols.map(col): _*).as(BORN))
     })
   }
 
@@ -1609,85 +1719,75 @@ object TxnMergeOnRead {
         s"cannot MERGE SET generated column '$k' (it is recomputed " +
           "from its defining expression)")
     }
-    mutate(spark, root, { snap =>
+    // ONE plan stages the whole merge: a single join (left outer when
+    // there is an insert clause: unmatched source rows come out with a
+    // null target rid) yields, per joined row, the dead target row, its
+    // new version or the inserted row, and the matched rid the
+    // cardinality check counts — where the dead rows, the new rows and
+    // the probes used to run the join once each
+    mutate(spark, root, "UPDATE/MERGE", { snap =>
       val tcols = snap.columns.filter(_ != RID).toSeq
       val byLower = tcols.map(c => c.toLowerCase -> c).toMap
-      val src = source
-      val j = snap.as(targetAlias).join(src.as(sourceAlias), expr(onCond), "inner")
+      def resolve(k: String, clause: String): String =
+        byLower.getOrElse(k.toLowerCase, throw new IllegalArgumentException(
+          s"MERGE $clause references unknown column '$k'"))
+      val setMap = matchedSet.map { case (k, v) => resolve(k, "SET") -> v }.toMap
+      // INSERT values and the NOT MATCHED guard see the source row only,
+      // so they are computed on the source side, before the join
+      val ins = notMatchedInsert.map { clause =>
+        val resolved = clause.map { case (k, v) => resolve(k, "INSERT") -> v }
+        require(resolved.map(_._1).distinct.size == resolved.size,
+          "MERGE INSERT assigns the same column more than once")
+        require(tcols.forall(c =>
+          resolved.exists(_._1 == c) || genLower(c.toLowerCase)),
+          s"INSERT clause must cover all target columns of $root")
+        resolved.toMap
+      }
+      val insCols = ins.toSeq.flatMap(_.keys).zipWithIndex
+        .map { case (c, i) => c -> s"__ins$i" }.toMap
+      val src = source.as(sourceAlias).select(col(s"$sourceAlias.*") +:
+        (ins.toSeq.flatMap(_.toSeq).map { case (c, e) => expr(e).as(insCols(c)) } :+
+          notMatchedCond.fold(lit(true))(c => coalesce(expr(c), lit(false)))
+            .as("__insok")): _*)
+      val j = src.as(sourceAlias).join(snap.as(targetAlias), expr(onCond),
+        if (ins.isDefined) "left_outer" else "inner")
+      val tRid = col(s"$targetAlias.$RID")
+      val matched = tRid.isNotNull
       val delCond = matchedDelete
         .map(c => coalesce(expr(c), lit(false))).getOrElse(lit(false))
       val updCond = matchedSetCond
         .map(c => coalesce(expr(c), lit(false))).getOrElse(lit(true))
-      val toDelete = j.filter(delCond)
-      val toUpdate =
-        if (matchedSet.nonEmpty) j.filter(!delCond && updCond) else j.limit(0)
-      // dead rows keep their rid + full old values (CDC delete events);
-      // project the t side BEFORE the union (the joined frame carries both
-      // aliases' columns, whose names may collide)
-      def tSide(df: DataFrame) = df.select(
-        (tcols.map(c => col(s"$targetAlias.$c").as(c)) :+
-          col(s"$targetAlias.$RID").as(RID)): _*)
-      val dead = tSide(toDelete).unionByName(tSide(toUpdate))
-      val setMap = matchedSet.map { case (k, v) =>
-        byLower.getOrElse(k.toLowerCase, throw new IllegalArgumentException(
-          s"MERGE SET references unknown column '$k'")) -> v
-      }.toMap
-      // generated columns recompute over the POST-set values (SET on them
-      // is rejected above), keeping their position via withColumn
-      val updatedNew = gens.foldLeft(toUpdate.select(tcols.map { c =>
-        setMap.get(c).map(e => expr(e).as(c))
-          .getOrElse(col(s"$targetAlias.$c").as(c))
-      }: _*)) { case (d, (n, e)) => d.withColumn(n, expr(e)) }
-      val inserted = notMatchedInsert.map { ins =>
-        val resolved = ins.map { case (k, v) =>
-          byLower.getOrElse(k.toLowerCase, throw new IllegalArgumentException(
-            s"MERGE INSERT references unknown column '$k'")) -> v
-        }
-        require(resolved.map(_._1).distinct.size == resolved.size,
-          "MERGE INSERT assigns the same column more than once")
-        val insMap = resolved.toMap
-        // a generated column may be omitted (computed) or supplied
-        // (verified by its reserved CHECK); data columns must be covered
-        require(tcols.forall(c => insMap.contains(c) || genLower(c.toLowerCase)),
-          s"INSERT clause must cover all target columns of $root")
-        val unmatched = src.as(sourceAlias)
-          .join(snap.as(targetAlias), expr(onCond), "left_anti")
-        val base = notMatchedCond
-          .map(c => unmatched.filter(coalesce(expr(c), lit(false))))
-          .getOrElse(unmatched)
-          .select(tcols.filter(insMap.contains)
-            .map(c => expr(insMap(c)).as(c)): _*)
-        applyGens(base, gens).select(tcols.map(col): _*)
+      val isDel = matched && delCond
+      val isUpd = if (matchedSet.nonEmpty) matched && !delCond && updCond
+        else lit(false)
+      val isIns = if (ins.isDefined) !matched && col("__insok") else lit(false)
+      // dead rows keep their rid + full old values (CDC delete events)
+      val dead = when(isDel || isUpd, struct(
+        (tcols.map(c => col(s"$targetAlias.$c").as(c)) :+ tRid.as(RID)): _*))
+      // the new row's columns under their own names, so generated columns
+      // recompute over the POST-set values (SET on them is rejected
+      // above) and an INSERT may omit them (computed) or supply them
+      // (verified by the reserved CHECK)
+      val newRow = tcols.map { c =>
+        val upd = setMap.get(c).map(expr)
+          .getOrElse(col(s"$targetAlias.$c"))
+        insCols.get(c).fold(when(isUpd, upd))(i =>
+          when(isUpd, upd).when(isIns, col(i))).as(c)
       }
-      val newRows = inserted.fold(updatedNew)(updatedNew.unionByName(_))
-      // ONE probe job for the three data-dependent decisions (r18): the
-      // cardinality check, dead-row existence and new-row existence each
-      // ran as their own action — three AQE-planned jobs per merge attempt
-      // on a lifecycle that runs many merges (JobProfile: 34 such probe
-      // jobs across q222's replication loop). A union of limit-1 branches
-      // answers all three in one job; each branch scans the same join
-      // subplan either way (Catalyst never shared it across the separate
-      // actions), so total scan work is unchanged and per-job
-      // plan/schedule overhead drops 3x.
-      val probes = Seq(
-        dead.limit(1).select(lit("dead").as("p")),
-        newRows.limit(1).select(lit("new").as("p"))) ++
-        (if (checkCardinality)
-          Seq(j.groupBy(col(s"$targetAlias.$RID")).count()
-            .filter(col("count") > 1).limit(1).select(lit("dup").as("p")))
-        else Nil)
-      val hit = probes.reduce(_ union _).collect()
-        .iterator.map(_.getString(0)).toSet
-      require(!hit("dup"), s"MERGE cardinality violation: a row of $root " +
-        "matches more than one source row")
-      val anyDead = hit("dead")
-      val anyNew = hit("new")
-      if (!anyDead && !anyNew) None // merge matched/inserted nothing: no-op
-      else {
-        val tag = UUID.randomUUID().getLeastSignificantBits & Long.MaxValue
-        (Some((if (anyDead) Some(dead) else None,
-          if (anyNew) Some(withRid(newRows, tag)) else None)))
-      }
+      val staged = j.filter(isDel || isUpd || isIns ||
+          (if (checkCardinality) matched else lit(false)))
+        .select(newRow ++ Seq(dead.as(DEAD), isUpd.as("__upd"),
+          isIns.as("__ins")) ++
+          (if (checkCardinality) Seq(when(matched, tRid).as(MATCHED))
+           else Nil): _*)
+      gens.foldLeft(staged) { case (d, (n, e)) =>
+        d.withColumn(n,
+          if (insCols.contains(n)) when(col("__upd"), expr(e)).otherwise(col(n))
+          else expr(e))
+      }.select(Seq(col(DEAD),
+          when(col("__upd") || col("__ins"), struct(tcols.map(col): _*))
+            .as(BORN)) ++
+        (if (checkCardinality) Seq(col(MATCHED)) else Nil): _*)
     })
   }
 
@@ -1770,7 +1870,11 @@ object TxnMergeOnRead {
       del.fold(i)(d => i.join(d.select(col(RID)), Seq(RID), "left_anti")))
     val netDel = del.map(d =>
       ins.fold(d)(i => d.join(i.select(col(RID)), Seq(RID), "left_anti")))
-    val dir = stage(spark, root, netDel, netIns)
+    // both halves keep their rids; a fold commits even when all nets out
+    val dir = (netDel.map(asDead) ++ netIns.map(asBorn))
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .flatMap(stage(spark, root, _, None, Nil, "MINOR COMPACT", emptyOk = true))
+      .fold(s"delta_${UUID.randomUUID().toString.take(12)}")(_.dir)
     val won = commitFold(f, root, snapV, v => Entry(v, "minor", dir, snapV))
     if (!won) f.delete(new Path(s"$root/$dir"), true)
     else if (netIns.nonEmpty) DataSkipping.collect(spark, s"$root/$dir/insert")

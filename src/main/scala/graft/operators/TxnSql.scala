@@ -518,15 +518,16 @@ object TxnSql {
           .map(_.trim)
         require(tuples.nonEmpty && tuples.forall(_.startsWith("(")),
           s"VALUES needs parenthesized tuples: $rest")
-        val selects = tuples.map { t =>
+        tuples.foreach { t =>
           val close = matchParen(t, 0).getOrElse(fail(s, s"unbalanced tuple: $t"))
-          val exprs = splitTopCommas(t.substring(1, close)).map(_.trim)
-          require(exprs.length == cols.length, s"INSERT arity mismatch: " +
-            s"${cols.length} columns, ${exprs.length} values: $t")
-          "SELECT " + exprs.zip(cols).map { case (e, c) => s"$e AS `$c`" }
-            .mkString(", ")
+          val n = splitTopCommas(t.substring(1, close)).length
+          require(n == cols.length, s"INSERT arity mismatch: " +
+            s"${cols.length} columns, $n values: $t")
         }
-        spark.sql(selects.mkString(" UNION ALL "))
+        // one inline table: analysis resolves it to a LocalRelation (column
+        // types widened across the tuples), which stages without a job
+        spark.sql("SELECT * FROM VALUES " + tuples.mkString(", ") +
+          cols.map(c => s"`$c`").mkString(" AS t(", ", ", ")"))
       } else if (up.startsWith("SELECT") || up.startsWith("WITH") ||
           up.startsWith("(")) {
         val text = if (rest.startsWith("(")) {

@@ -27,6 +27,11 @@ object ColumnBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `schema` as a file-source read reports it: every field, element and
+    * value nullable (private[spark] `StructType.asNullable`). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** The analyzed logical plan of a DataFrame (private[sql] in Spark 4). */
   def logicalPlan(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan
