@@ -105,7 +105,7 @@ object LocalParquet {
     * the type mapping (every type, nested ones included) and the Spark
     * schema metadata are the ones a Spark write of the same frame
     * produces. The file is created (parents included) and must not
-    * exist; no `.crc` sidecar is written beside it ([[Stores.bare]]). */
+    * exist. */
   private[graft] def writeRows(spark: SparkSession, file: String,
       schema: StructType, rows: Iterator[InternalRow]): Unit = {
     val conf = spark.sessionState.newHadoopConf()
@@ -119,7 +119,7 @@ object LocalParquet {
       .foreach { case (k, v) => conf.set(k.key, v.toString) }
     ParquetWriteSupport.setSchema(schema, conf)
     val p = new Path(file)
-    val writer = new Builder(outputFile(Stores.bare(p.getFileSystem(conf)), p))
+    val writer = new Builder(outputFile(p.getFileSystem(conf), p))
       .withConf(conf).withCompressionCodec(codec(spark)).build()
     try rows.foreach(writer.write) finally writer.close()
   }
@@ -172,7 +172,7 @@ object LocalParquet {
   def writeSmall(df: DataFrame)(local: Array[Row] => Unit)(
       distributed: => Unit): Unit =
     Some(df).filter(_.schema.head.dataType == LongType)
-      .flatMap(Stores.boundedRows)
+      .map(Stores.boundedRows).filter(_.rest.isEmpty).map(_.held)
       .filter(rs => !rs.exists(_.isNullAt(0)))
       .map { rs =>
         val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)

@@ -1,11 +1,20 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileSystem}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.util.Failure
+
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.spark.FutureAction
+import org.apache.spark.rdd.PartitionPruningRDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 
 /** Helpers the at-rest stores (IVF-PQ, binary, graph, BM25/positional)
   * and the transactional log share: driver-bounded id sets and the one
@@ -20,32 +29,66 @@ private[graft] object Stores {
     * rows writes them without a Spark write job). */
   val ID_CAP = 65536
 
-  /** The rows of `df` when it has at most [[ID_CAP]] of them, else None —
-    * one bounded action. `limit(ID_CAP + 1)` plans a `CollectLimitExec`,
-    * whose `execute` is ONE job (a local limit per partition, then a
-    * single partition) where `collect`/`take` go through `executeTake`
-    * and run one job per scale-up round when fewer rows exist than were
-    * asked for. A plan the optimizer folds to a `LocalRelation` (inline
-    * VALUES, a projection of one) runs no job at all. */
-  def boundedRows(df: DataFrame): Option[Array[InternalRow]] = {
-    val qe = df.limit(ID_CAP + 1).queryExecution
-    val rows = qe.optimizedPlan match {
-      case l: LocalRelation => l.data.toArray
+  /** What [[boundedRows]] computed: `held`, rows in hand on the driver,
+    * and `rest`, the rows it did not hand over (None: `held` is every row
+    * of the frame). */
+  final case class Bounded(held: Array[InternalRow], rest: Option[DataFrame])
+
+  /** The rows of `df` in ONE job, in hand while they fit [[ID_CAP]]. Each
+    * task returns its partition's rows (at most ID_CAP + 1, copied); the
+    * driver keeps whole partitions while their sum fits the cap and
+    * cancels the job at the first one that does not, so a frame over the
+    * cap computes about ID_CAP rows before the answer is known — as
+    * `take(ID_CAP + 1)` does, but `take` runs one job per scale-up round
+    * when fewer rows exist than it asked for. `rest` reads the partitions
+    * not in hand from the same RDD, so a shuffle the plan already ran is
+    * read again, not rerun. A plan the optimizer folds to a
+    * `LocalRelation` (inline VALUES, a projection of one) runs no job. */
+  def boundedRows(df: DataFrame): Bounded = {
+    val qe = df.queryExecution
+    qe.optimizedPlan match {
+      case l: LocalRelation =>
+        if (l.data.length <= ID_CAP) Bounded(l.data.toArray, None)
+        else Bounded(Array.empty, Some(df))
       case _ => SQLExecution.withNewExecutionId(qe, Some("bounded rows")) {
-        qe.toRdd.map(_.copy()).collect()
+        val rdd = qe.toRdd
+        val cap = ID_CAP
+        val parts = new Array[Array[InternalRow]](rdd.getNumPartitions)
+        var held = 0L
+        val over = new AtomicBoolean(false)
+        val job = new AtomicReference[FutureAction[Unit]]()
+        // results arrive one at a time on the scheduler's thread
+        job.set(rdd.sparkContext.submitJob(rdd,
+          (it: Iterator[InternalRow]) => {
+            val rows = it.take(cap + 1).map(_.copy()).toArray
+            if (rows.length > cap) null else rows
+          },
+          rdd.partitions.indices,
+          (p: Int, rows: Array[InternalRow]) => if (!over.get) {
+            if (rows != null && held + rows.length <= cap) {
+              parts(p) = rows
+              held += rows.length
+            } else {
+              over.set(true)
+              Option(job.get).foreach(_.cancel())
+            }
+          }, ()))
+        if (over.get) job.get.cancel()
+        Await.ready(job.get, Duration.Inf).value.get match {
+          case Failure(e) if !over.get => throw e
+          case _ =>
+        }
+        if (!over.get) Bounded(parts.flatten, None)
+        else {
+          // the filter ships with every task of `rest`: a set of ids, not
+          // the rows in hand
+          val notHeld = parts.indices.filter(parts(_) == null).toSet
+          Bounded(parts.filter(_ != null).flatten, Some(ColumnBridge.ofRdd(
+            df.sparkSession, PartitionPruningRDD.create(rdd, notHeld),
+            df.schema)))
+        }
       }
     }
-    Some(rows).filter(_.length <= ID_CAP)
-  }
-
-  /** `fs` without a client-side checksum layer. The local filesystem
-    * writes a `.crc` sidecar beside every file, which doubles the file
-    * count of the small driver-written files (log entries, manifests,
-    * stages); HDFS and object stores checksum below the client and are
-    * returned as they are. */
-  def bare(fs: FileSystem): FileSystem = fs match {
-    case c: ChecksumFileSystem => c.getRawFileSystem
-    case other => other
   }
 
   /** Rows of `df` whose `idCol` is in `ids`: an InSet pushdown within
@@ -76,11 +119,11 @@ private[graft] object Stores {
     * is always complete. The local filesystem's rename(2) replaces an
     * existing file, so two processes could both "win" one name there: on
     * `file:` the publish is a hard link (link(2) fails on an existing
-    * name, atomically, across processes), elsewhere a rename (HDFS never
-    * renames over a file). Commits into one dir also serialize through a
-    * JVM lock. */
-  def commitOnce(fs0: FileSystem, dst: Path, body: String): Boolean = {
-    val fs = bare(fs0)
+    * name, atomically, across processes) and the temp file's `.crc`
+    * sidecar is then renamed to `dst`'s; elsewhere it is a rename (HDFS
+    * never renames over a file). Commits into one dir also serialize
+    * through a JVM lock. */
+  def commitOnce(fs: FileSystem, dst: Path, body: String): Boolean =
     dirLocks.computeIfAbsent(dst.getParent.toString, _ => new Object)
       .synchronized {
         if (fs.exists(dst)) false
@@ -89,21 +132,26 @@ private[graft] object Stores {
             s".tmp_${java.util.UUID.randomUUID().toString.take(12)}")
           val out = fs.create(tmp, true)
           try out.write(body.getBytes("UTF-8")) finally out.close()
-          val (ok, linked) = fs match {
-            case local: RawLocalFileSystem if local.getUri.getScheme == "file" =>
+          val ok = fs match {
+            case local: LocalFileSystem =>
+              val raw = local.getRawFileSystem
               val won = try {
                 java.nio.file.Files.createLink(local.pathToFile(dst).toPath,
                   local.pathToFile(tmp).toPath)
                 true
               } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-              (won, true)
+              if (won) {
+                val crc = local.getChecksumFile(tmp)
+                if (raw.exists(crc)) raw.rename(crc, local.getChecksumFile(dst))
+                raw.delete(tmp, false)
+              }
+              won
             case _ =>
-              (try fs.rename(tmp, dst)
-               catch { case _: java.io.IOException => false }, false) // lost the race
+              try fs.rename(tmp, dst)
+              catch { case _: java.io.IOException => false } // lost the race
           }
-          if (!ok || linked) fs.delete(tmp, false)
+          if (!ok) fs.delete(tmp, false)
           ok
         }
       }
-  }
 }

@@ -45,7 +45,8 @@ import org.apache.spark.sql.types.StructType
   * of at most [[Stores.ID_CAP]] rows — every OLTP-sized statement — is
   * one driver-written parquet file per half (`insert/part-00000.parquet`,
   * `delete/part-00000.parquet`), the form a Spark write of the same frame
-  * has; a larger stage keeps the Spark write and its part files.
+  * has; in a larger stage the rows the action handed over are that file
+  * and Spark writes the rest as its part files beside it.
   *
   * Surface (one lakehouse table in ~15 calls):
   * {{{
@@ -1103,78 +1104,89 @@ object TxnMergeOnRead {
     * on the rows in hand: the MERGE cardinality check, fresh rid seqs,
     * the CHECK constraints (over a [[LocalRelation]]), one
     * [[LocalParquet.writeRows]] file per half and the footprint. Above
-    * the cap each half is a Spark write, with the checks and the
-    * footprint as their own jobs. Either way the new dirs' schemas go into
+    * the cap the rows in hand are still written that way, and Spark
+    * writes the partitions the action did not hand over (their new rows
+    * under a second fresh tag), so no row is computed twice; there the
+    * cardinality check, the constraints of the Spark-written rows, an
+    * emptiness probe of a half the rows in hand do not show and the
+    * footprint are jobs. Either way the new dirs' schemas go into
     * [[MetaCache]], so no later open of the stage runs a footer-inference
     * job; both paths write the same Spark schema. */
   private def stage(spark: SparkSession, root: String, rows: DataFrame,
       tag: Option[Long], cons: Seq[(String, String)], op: String,
       emptyOk: Boolean = false): Option[Staged] = {
     val dir = s"delta_${UUID.randomUUID().toString.take(12)}"
-    def half(c: String): Option[DataFrame] =
-      if (!rows.columns.contains(c)) None
-      else Some(rows.filter(col(c).isNotNull).select(s"$c.*"))
-    // the new rows as constrained (no rid) and as written
-    val born = half(BORN)
-    val halves = Seq("delete" -> half(DEAD),
-      "insert" -> born.map(b => tag.fold(b)(withRid(b, _))))
-      .collect { case (k, Some(df)) => k -> df }
+    val cols = Seq("delete" -> DEAD, "insert" -> BORN)
+      .filter(c => rows.columns.contains(c._2))
+    def half(frame: DataFrame, c: String): DataFrame =
+      frame.filter(col(c).isNotNull).select(s"$c.*")
+    // a half as written: the new rows with fresh rids under tag `t`
+    def asWritten(frame: DataFrame, c: String, t: Option[Long]): DataFrame =
+      if (c == BORN) t.fold(half(frame, c))(withRid(half(frame, c), _))
+      else half(frame, c)
     val at = (k: String) => s"$root/$dir/$k"
     val dupError = s"MERGE cardinality violation: a row of $root " +
       "matches more than one source row"
-    def remember(k: String, schema: StructType): Unit =
-      MetaCache.memo(at(k), "")(ColumnBridge.asNullable(schema))
-    Stores.boundedRows(rows) match {
-      case Some(local) =>
-        def structs(c: String): Array[InternalRow] = {
-          val i = rows.schema.fieldIndex(c)
-          val n = rows.schema(i).dataType.asInstanceOf[StructType].length
-          local.filter(!_.isNullAt(i)).map(_.getStruct(i, n))
-        }
-        if (rows.columns.contains(MATCHED)) {
-          val ids = structs(MATCHED).map(r => (r.getLong(0), r.getLong(1)))
-          require(ids.distinct.length == ids.length, dupError)
-        }
-        val newRows = born.map(_ => structs(BORN))
-        val inHand = halves.map { case (k, df) =>
-          (k, df, if (k == "delete") structs(DEAD)
-            else tag.fold(newRows.get)(t => newRows.get.zipWithIndex.map {
-              case (r, i) => new JoinedRow(r, InternalRow(InternalRow(t, i.toLong)))
-            }))
-        }.filter(h => emptyOk || h._3.nonEmpty)
-        if (inHand.isEmpty) return None
-        for (b <- born; rs <- newRows) {
-          val attrs = b.schema.map(fd =>
-            AttributeReference(fd.name, fd.dataType, fd.nullable)())
-          enforceConstraints(ColumnBridge.ofRows(spark,
-            LocalRelation(attrs, rs.toSeq)), cons, op, root, local = true)
-        }
-        inHand.foreach { case (k, df, rs) =>
-          LocalParquet.writeRows(spark, s"${at(k)}/part-00000.parquet",
-            df.schema, rs.iterator)
-          remember(k, df.schema)
-        }
-        Some(Staged(dir, inHand.collectFirst { case ("delete", df, rs) =>
-          val ri = df.schema.fieldIndex(RID)
-          footprintOf(rs.toSeq.map { r =>
-            val rid = r.getStruct(ri, 2)
-            (rid.getLong(0), rid.getLong(1))
-          })
-        }.getOrElse("-")))
-      case None =>
-        if (rows.columns.contains(MATCHED))
-          require(rows.filter(col(MATCHED).isNotNull).groupBy(MATCHED)
-            .count().filter(col("count") > 1).isEmpty, dupError)
-        val written = halves.filter { case (_, df) => emptyOk || !df.isEmpty }
-        if (written.isEmpty) return None
-        born.filter(_ => written.exists(_._1 == "insert"))
-          .foreach(enforceConstraints(_, cons, op, root, local = false))
-        written.foreach { case (k, df) =>
-          df.write.parquet(at(k))
-          remember(k, df.schema)
-        }
-        Some(Staged(dir, footprint(spark, root, dir)))
+    val Stores.Bounded(held, rest) = Stores.boundedRows(rows)
+    def attrs(schema: StructType): Seq[AttributeReference] =
+      schema.map(fd => AttributeReference(fd.name, fd.dataType, fd.nullable)())
+    def structs(c: String): Array[InternalRow] = {
+      val i = rows.schema.fieldIndex(c)
+      val n = rows.schema(i).dataType.asInstanceOf[StructType].length
+      held.filter(!_.isNullAt(i)).map(_.getStruct(i, n))
     }
+    // the rows in hand, per half as written: the new rows get rid seqs
+    // 0, 1, … under `tag`
+    val inHand = cols.map { case (k, c) =>
+      val rs = structs(c)
+      (k, tag.filter(_ => k == "insert").fold(rs)(t => rs.zipWithIndex.map {
+        case (r, i) => new JoinedRow(r, InternalRow(InternalRow(t, i.toLong)))
+      }))
+    }.filter(h => h._2.nonEmpty || (emptyOk && rest.isEmpty))
+    // MERGE cardinality: a matched target rid occurs once, counted over
+    // the rows in hand and, above the cap, the partitions not in hand
+    if (rows.columns.contains(MATCHED)) rest match {
+      case None =>
+        val ids = structs(MATCHED).map(r => (r.getLong(0), r.getLong(1)))
+        require(ids.distinct.length == ids.length, dupError)
+      case Some(r) =>
+        val m = r.select(MATCHED).filter(col(MATCHED).isNotNull)
+        require(ColumnBridge.ofRows(spark, LocalRelation(attrs(m.schema),
+            structs(MATCHED).toSeq.map(InternalRow(_)))).union(m)
+          .groupBy(MATCHED).count().filter(col("count") > 1).isEmpty, dupError)
+    }
+    if (rows.columns.contains(BORN)) enforceConstraints(ColumnBridge.ofRows(
+      spark, LocalRelation(attrs(half(rows, BORN).schema), structs(BORN).toSeq)),
+      cons, op, root, local = true)
+    // the partitions not in hand (above the cap): Spark's halves
+    val spilled = rest.toSeq.flatMap { r =>
+      val restTag = tag.map(_ => UUID.randomUUID().getLeastSignificantBits & Long.MaxValue)
+      val out = cols.map { case (k, c) => k -> asWritten(r, c, restTag) }
+        .filter { case (k, df) =>
+          emptyOk || inHand.exists(_._1 == k) || !df.isEmpty }
+      if (out.exists(_._1 == "insert"))
+        enforceConstraints(half(r, BORN), cons, op, root, local = false)
+      out
+    }
+    if (inHand.isEmpty && spilled.isEmpty) return None
+    val schemas = cols.map { case (k, c) => k -> asWritten(rows, c, tag).schema }
+      .toMap
+    inHand.foreach { case (k, rs) =>
+      LocalParquet.writeRows(spark, s"${at(k)}/part-00000.parquet",
+        schemas(k), rs.iterator)
+    }
+    spilled.foreach { case (k, df) => df.write.mode("append").parquet(at(k)) }
+    (inHand.map(_._1) ++ spilled.map(_._1)).distinct.foreach(k =>
+      MetaCache.memo(at(k), "")(ColumnBridge.asNullable(schemas(k))))
+    Some(Staged(dir,
+      if (spilled.nonEmpty) footprint(spark, root, dir)
+      else inHand.collectFirst { case ("delete", rs) =>
+        val ri = schemas("delete").fieldIndex(RID)
+        footprintOf(rs.toSeq.map { r =>
+          val rid = r.getStruct(ri, 2)
+          (rid.getLong(0), rid.getLong(1))
+        })
+      }.getOrElse("-")))
   }
 
   /** Footprint summaries with more tags than this collapse to `*` (always

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
 /** Textual DML surface for the concurrent-writer transaction log — the
   * reference's actual ACID interface is SQL, not an API
@@ -518,16 +518,26 @@ object TxnSql {
           .map(_.trim)
         require(tuples.nonEmpty && tuples.forall(_.startsWith("(")),
           s"VALUES needs parenthesized tuples: $rest")
-        tuples.foreach { t =>
+        val values = tuples.map { t =>
           val close = matchParen(t, 0).getOrElse(fail(s, s"unbalanced tuple: $t"))
-          val n = splitTopCommas(t.substring(1, close)).length
-          require(n == cols.length, s"INSERT arity mismatch: " +
-            s"${cols.length} columns, $n values: $t")
+          val exprs = splitTopCommas(t.substring(1, close)).map(_.trim)
+          require(exprs.length == cols.length, s"INSERT arity mismatch: " +
+            s"${cols.length} columns, ${exprs.length} values: $t")
+          exprs
         }
-        // one inline table: analysis resolves it to a LocalRelation (column
-        // types widened across the tuples), which stages without a job
-        spark.sql("SELECT * FROM VALUES " + tuples.mkString(", ") +
+        // one inline table: analysis resolves it to a LocalRelation, which
+        // stages without a job. An inline table takes foldable values only
+        // and widens a column's types without promoting to string; where
+        // it does not resolve (a scalar subquery, a column of numbers and
+        // strings) the UNION ALL of one-row SELECTs does, widening as a
+        // union does
+        try spark.sql("SELECT * FROM VALUES " + tuples.mkString(", ") +
           cols.map(c => s"`$c`").mkString(" AS t(", ", ", ")"))
+        catch { case _: AnalysisException =>
+          spark.sql(values.map(exprs => "SELECT " + exprs.zip(cols)
+            .map { case (e, c) => s"$e AS `$c`" }.mkString(", "))
+            .mkString(" UNION ALL "))
+        }
       } else if (up.startsWith("SELECT") || up.startsWith("WITH") ||
           up.startsWith("(")) {
         val text = if (rest.startsWith("(")) {

@@ -1185,11 +1185,7 @@ object Dml {
         col("o_custkey").cast("bigint").as("ck"),
         round(col("o_totalprice"), 2).as("price"))
       TxnMergeOnRead.create(s, root, orders.filter(col("ok") % 3 === 0))
-      // a small delta is one file, so the ok % 3 = 1 third lands in two
-      // commits: the ok % 6 = 4 delta holds no probed key and its file
-      // is the one the probe must prune
-      TxnMergeOnRead.insert(s, root, orders.filter(col("ok") % 6 === 1))
-      TxnMergeOnRead.insert(s, root, orders.filter(col("ok") % 6 === 4))
+      TxnMergeOnRead.insert(s, root, orders.filter(col("ok") % 3 === 1))
       TxnMergeOnRead.insert(s, root, orders.filter(col("ok") % 3 === 2))
       TxnMergeOnRead.update(s, root,
         Seq("price" -> "round(price + 1000, 2)"), "ok % 11 = 0")

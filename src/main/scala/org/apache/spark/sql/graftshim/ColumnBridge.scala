@@ -27,6 +27,14 @@ object ColumnBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A DataFrame over Catalyst rows of `schema` (private[sql]
+    * `internalCreateDataFrame`): an RDD an executed plan produced, read
+    * as it is. */
+  def ofRdd(spark: SparkSession,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
   /** `schema` as a file-source read reports it: every field, element and
     * value nullable (private[spark] `StructType.asNullable`). */
   def asNullable(schema: org.apache.spark.sql.types.StructType)

@@ -18,8 +18,9 @@ import org.scalatest.BeforeAndAfterAll
 /** The transactional stage ([[TxnMergeOnRead]]'s one write path for
   * INSERT, INSERT BATCH, UPDATE, DELETE, MERGE and MINOR compaction).
   *
-  * A stage of at most [[Stores.ID_CAP]] rows is written from the driver,
-  * a larger one by Spark. On a table holding every column type a txn
+  * A stage of at most [[Stores.ID_CAP]] rows is written from the driver;
+  * in a larger one Spark writes the rows its bounded action did not hand
+  * over. On a table holding every column type a txn
   * table accepts, the same statements run once on the driver path and
   * once with `ID_CAP + 1` extra rows per statement (the Spark path): the
   * snapshot, the change feed and the footers' schemas must agree. Each
@@ -166,7 +167,8 @@ class TxnStageSpec extends AnyFunSuite with BeforeAndAfterAll {
         .filter(mine)), s"changes above version $v")
     }
     // per statement and half: one driver-written file against Spark's
-    // part files, with identical footer schemas; and the schema the
+    // part files (beside the rows the big stage's action handed over),
+    // with identical footer schemas; and the schema the
     // stage left in MetaCache is the one a footer read infers
     val pairs = entryDirs(small).drop(1).zip(entryDirs(big).drop(1))
     assert(pairs.size == 6)
@@ -175,11 +177,11 @@ class TxnStageSpec extends AnyFunSuite with BeforeAndAfterAll {
       val fb = dataFiles(new File(s"$big/$db/$half"))
       assert(fs.size == fb.size.min(1), s"version $v $half: files")
       assert(fs.map(_.getName).forall(_ == "part-00000.parquet"))
-      assert(!Option(new File(s"$small/$ds/$half").list()).toSeq.flatten
-        .exists(_.endsWith(".crc")))
+      fs.foreach(f => assert(new File(f.getParent, s".${f.getName}.crc").isFile,
+        s"version $v $half: no checksum beside the driver-written file"))
       if (fs.nonEmpty) {
-        assert(fb.size >= 1 && !fb.exists(_.getName == "part-00000.parquet"),
-          s"version $v $half: the Spark path wrote no part files")
+        assert(fb.exists(_.getName != "part-00000.parquet"),
+          s"version $v $half: Spark wrote no part files above the cap")
         val want = footer(fs.head)
         fb.foreach(f => assert(footer(f) == want, s"version $v $half footer"))
         for (root <- Seq(small, big); dir <- Seq(ds, db)
@@ -188,6 +190,49 @@ class TxnStageSpec extends AnyFunSuite with BeforeAndAfterAll {
             spark.read.parquet(s"$root/$dir/$half").schema)
       }
     }
+  }
+
+  test("INSERT VALUES widens mixed-type tuples as a union does and takes " +
+      "scalar subqueries") {
+    val root = s"$base/values"
+    FileUtils.deleteQuietly(new File(root))
+    TxnMergeOnRead.create(spark, root, spark.range(0).selectExpr("id",
+      "CAST(NULL AS STRING) AS s", "CAST(NULL AS DOUBLE) AS x"))
+    TxnSql.register("stage_values", root)
+    spark.range(10).createOrReplaceTempView("stage_values_src")
+    // id: int and string widen to string, s: string and int to string,
+    // x: decimal and int to decimal — each then cast to the declared type
+    TxnSql.exec(spark, "INSERT INTO stage_values VALUES (1, 'a', 1.5), " +
+      "('2', 3, 2)")
+    TxnSql.exec(spark, "INSERT INTO stage_values VALUES " +
+      "((SELECT max(id) FROM stage_values_src) + 1, 'q', 0.25), (11, 'r', 1)")
+    TxnSql.exec(spark, "INSERT INTO stage_values (id, x) VALUES " +
+      "(12, 1), (13, NULL)")
+    assert(TxnMergeOnRead.read(spark, root).orderBy("id").collect().toSeq
+      .map(r => (r.getLong(0), Option(r.getString(1)),
+        Option(r.get(2)).map(_.asInstanceOf[Double]))) == Seq(
+      (1L, Some("a"), Some(1.5)), (2L, Some("3"), Some(2.0)),
+      (10L, Some("q"), Some(0.25)), (11L, Some("r"), Some(1.0)),
+      (12L, None, Some(1.0)), (13L, None, None)))
+  }
+
+  test("above the cap, a MERGE that matches a target row twice still " +
+      "fails its cardinality check") {
+    val root = s"$base/dup"
+    mkTable("stage_dup", root)
+    rowsOf(3, 1).union(rowsOf(3, 1)).union(rowsOf(1000000, Filler))
+      .createOrReplaceTempView("stage_dup_src")
+    val before = json(TxnMergeOnRead.read(spark, root))
+    val e = intercept[IllegalArgumentException](TxnSql.exec(spark,
+      """MERGE INTO stage_dup AS tgt USING stage_dup_src AS src
+        |ON tgt.id = src.id
+        |WHEN MATCHED THEN UPDATE SET i = src.i
+        |WHEN NOT MATCHED THEN INSERT (id, i, d, dm, dw, str, dt, ts, b,
+        |  bin, arr, m, st) VALUES (src.id, src.i, src.d, src.dm, src.dw,
+        |  src.str, src.dt, src.ts, src.b, src.bin, src.arr, src.m,
+        |  src.st)""".stripMargin))
+    assert(e.getMessage.contains("cardinality violation"))
+    assert(json(TxnMergeOnRead.read(spark, root)) == before)
   }
 
   /** Spark jobs started by `body` (a marked sentinel job brackets it, so
