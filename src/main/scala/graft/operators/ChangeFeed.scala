@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,14 +23,16 @@ import org.apache.spark.sql.functions._
   * has an insert are the old halves of updates — dropped by an anti-join —
   * leaving exactly one action per key: upsert or delete.
   *
-  * Delivery contract: the cursor (last applied source version) commits to
-  * `checkpointDir/cursor` AFTER the merge, temp-then-rename. A crash
-  * between merge and cursor write redelivers the same range; re-applying
-  * is value-idempotent (upserts rewrite identical values, deletes miss),
-  * so the replica converges to exactly-once EFFECT under at-least-once
-  * delivery — the foreachBatch discipline, applied table-to-table. The
-  * replica does commit a new (no-value-change) version on such a replay;
-  * consumers of the replica's own feed see a self-cancelling update.
+  * Delivery contract: the cursor (last applied source version) commits
+  * AFTER the merge as `checkpointDir/cursor_<version>`, through the one
+  * commit primitive ([[Stores.commitOnce]]); the highest committed cursor
+  * is the live one. A crash between merge and cursor write redelivers the
+  * same range; re-applying is value-idempotent (upserts rewrite identical
+  * values, deletes miss), so the replica converges to exactly-once EFFECT
+  * under at-least-once delivery — the foreachBatch discipline, applied
+  * table-to-table. The replica does commit a new (no-value-change) version
+  * on such a replay; consumers of the replica's own feed see a
+  * self-cancelling update.
   *
   * Schema evolution replicates: a sync whose range includes an ADD
   * COLUMNS commits the same columns on the replica before merging
@@ -49,38 +51,34 @@ object ChangeFeed {
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def cursorPath(checkpointDir: String) =
-    new Path(s"$checkpointDir/cursor")
+  private val CursorName = """cursor_(\d+)""".r
 
-  /** Last applied source version, or None before [[init]]. */
-  def cursor(spark: SparkSession, checkpointDir: String): Option[Long] = {
-    val f = fs(spark, checkpointDir)
-    val p = cursorPath(checkpointDir)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        Some(new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toLong)
-      } finally in.close()
-    }
+  /** The committed cursors under `checkpointDir`: (source version, file). */
+  private def cursors(f: FileSystem, checkpointDir: String): Seq[(Long, Path)] = {
+    val d = new Path(checkpointDir)
+    if (!f.exists(d)) Nil
+    else f.listStatus(d).toSeq.map(_.getPath).flatMap(p => p.getName match {
+      case CursorName(v) => Some(v.toLong -> p)
+      case _ => None
+    })
   }
 
-  private def writeCursor(spark: SparkSession, checkpointDir: String,
+  /** Last applied source version, or None before [[init]]. */
+  def cursor(spark: SparkSession, checkpointDir: String): Option[Long] =
+    cursors(fs(spark, checkpointDir), checkpointDir).map(_._1).maxOption
+
+  /** Commit cursor `v` as its own file ([[Stores.commitOnce]]), then delete
+    * the superseded ones. The live cursor is never removed before a newer
+    * one is visible, so a crash at any step leaves the old or the new
+    * cursor readable; a racing sync at the same version already committed
+    * the same value. */
+  private def writeCursor(f: FileSystem, checkpointDir: String,
       v: Long): Unit = {
-    val f = fs(spark, checkpointDir)
-    val tmp = new Path(s"$checkpointDir/.cursor_tmp_${java.util.UUID
-      .randomUUID().toString.take(8)}")
-    val out = f.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    if (!f.rename(tmp, cursorPath(checkpointDir))) {
-      // a concurrent sync won the rename — ours points at the same or an
-      // older version; drop the temp and let the next read re-resolve
-      f.delete(cursorPath(checkpointDir), false)
-      if (!f.rename(tmp, cursorPath(checkpointDir)))
-        throw new IllegalStateException(
-          s"cannot commit replication cursor at $checkpointDir")
-    }
+    val p = new Path(checkpointDir, f"cursor_$v%020d")
+    if (!Stores.commitOnce(f, p, v.toString) && !f.exists(p))
+      throw new IllegalStateException(
+        s"cannot commit replication cursor at $checkpointDir")
+    cursors(f, checkpointDir).filter(_._1 < v).foreach(c => f.delete(c._2, false))
   }
 
   /** Bootstrap: replica := source snapshot at a PINNED version (the source
@@ -92,9 +90,9 @@ object ChangeFeed {
     TxnMergeOnRead.create(spark, dstRoot,
       TxnMergeOnRead.readAt(spark, srcRoot, v))
     val f = fs(spark, checkpointDir)
-    f.delete(cursorPath(checkpointDir), false)
+    cursors(f, checkpointDir).foreach(c => f.delete(c._2, false))
     f.mkdirs(new Path(checkpointDir))
-    writeCursor(spark, checkpointDir, v)
+    writeCursor(f, checkpointDir, v)
     v
   }
 
@@ -122,7 +120,7 @@ object ChangeFeed {
             "re-bootstrap with ChangeFeed.init", e)
       }
     applyNet(spark, dstRoot, changes, keyCols)
-    writeCursor(spark, checkpointDir, to)
+    writeCursor(fs(spark, checkpointDir), checkpointDir, to)
     Some((from, to))
   }
 

@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.StructType
 
-/** Merge-on-read DML under **concurrent writers**: an optimistic
-  * transaction log giving snapshot-isolated reads and first-committer-wins
-  * writes, closing the single-writer assumption [[MergeOnReadDml]] documents.
+/** Merge-on-read DML under **concurrent writers** — the engine's one ACID
+  * table format, which SQL DML, the DML queries and streaming ingest
+  * ([[graft.streaming.StreamOps.replayIntoTxn]]) all commit into: an
+  * optimistic transaction log giving snapshot-isolated reads and
+  * first-committer-wins writes.
   *
   * The reference serializes writers through the metastore's transaction
   * manager: `metastore/.../txn/TxnHandler.java:104` hands out write ids from

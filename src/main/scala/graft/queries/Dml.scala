@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Engine
-import graft.operators.{CopyOnWriteDml, MergeOnReadDml, TxnMergeOnRead}
+import graft.operators.{CopyOnWriteDml, TxnMergeOnRead}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -109,10 +109,11 @@ object Dml {
       s.sql(s"SELECT ck, nm, bal FROM $tbl ORDER BY ck")
     },
 
-    // Merge-on-read: UPDATE (delete-event + insert-delta pair), DELETE
-    // (delete-delta), INSERT (insert-delta) — base files never rewritten; the
-    // snapshot read merges them via a stats-driven anti-join. The oracle
-    // replays the same transaction sequence as chained CTEs.
+    // Merge-on-read on the txn log ([[TxnMergeOnRead]]): UPDATE (delete-event
+    // + insert-delta pair), DELETE (delete-delta), INSERT (insert-delta) —
+    // base files never rewritten; the snapshot read merges them via a
+    // stats-driven anti-join. The oracle replays the same transaction
+    // sequence as chained CTEs.
     Qd("q151_dml_merge_on_read",
       """WITH t0 AS (SELECT CAST(c_custkey AS BIGINT) AS ck, c_name AS nm,
         |            round(c_acctbal, 2) AS bal, c_mktsegment AS seg FROM customer),
@@ -130,20 +131,20 @@ object Dml {
       val src = Engine.table(s, dir, "customer").select(
         col("c_custkey").cast("bigint").as("ck"), col("c_name").as("nm"),
         round(col("c_acctbal"), 2).as("bal"), col("c_mktsegment").as("seg"))
-      MergeOnReadDml.create(s, root, src)
-      MergeOnReadDml.update(s, root,
+      TxnMergeOnRead.create(s, root, src)
+      TxnMergeOnRead.update(s, root,
         set = Seq("bal" -> "round(bal * 1.1, 2)"),
         cond = "seg = 'BUILDING' AND ck % 2 = 0")
-      MergeOnReadDml.delete(s, root,
+      TxnMergeOnRead.delete(s, root,
         "seg = 'AUTOMOBILE' OR (seg = 'MACHINERY' AND ck % 3 = 0)")
-      MergeOnReadDml.insert(s, root, src.filter(col("ck") <= 50).select(
+      TxnMergeOnRead.insert(s, root, src.filter(col("ck") <= 50).select(
         (col("ck") + 100000).as("ck"), lit("late-arrival").as("nm"),
         lit(0.0).as("bal"), lit("NEW").as("seg")))
-      MergeOnReadDml.read(s, root).orderBy("ck")
+      TxnMergeOnRead.read(s, root).orderBy("ck")
     },
 
     // Major compaction folds the deltas into a new base (reads become plain
-    // scans again — asserted in MergeOnReadSpec), and NEW deltas stack on the
+    // scans again — asserted in TxnMorSpec), and NEW deltas stack on the
     // compacted base: the post-compaction UPDATE must see folded state.
     Qd("q152_dml_mor_compaction",
       """WITH t0 AS (SELECT CAST(c_custkey AS BIGINT) AS ck, c_name AS nm,
@@ -161,16 +162,16 @@ object Dml {
       val src = Engine.table(s, dir, "customer").select(
         col("c_custkey").cast("bigint").as("ck"), col("c_name").as("nm"),
         round(col("c_acctbal"), 2).as("bal"), col("c_mktsegment").as("seg"))
-      MergeOnReadDml.create(s, root, src)
-      MergeOnReadDml.update(s, root,
+      TxnMergeOnRead.create(s, root, src)
+      TxnMergeOnRead.update(s, root,
         set = Seq("bal" -> "round(bal * 1.1, 2)"),
         cond = "seg = 'BUILDING' AND ck % 2 = 0")
-      MergeOnReadDml.delete(s, root, "seg = 'AUTOMOBILE'")
-      MergeOnReadDml.compact(s, root)
-      MergeOnReadDml.update(s, root,
+      TxnMergeOnRead.delete(s, root, "seg = 'AUTOMOBILE'")
+      TxnMergeOnRead.compact(s, root)
+      TxnMergeOnRead.update(s, root,
         set = Seq("bal" -> "0.0"),
         cond = "seg = 'HOUSEHOLD' AND bal < 0")
-      MergeOnReadDml.read(s, root).orderBy("ck")
+      TxnMergeOnRead.read(s, root).orderBy("ck")
     },
 
     // CONCURRENT writers under the optimistic transaction log
@@ -1176,7 +1177,7 @@ object Dml {
         |                ELSE price END AS price
         |         FROM t WHERE ok % 13 <> 0)
         |SELECT ok, ck, CAST(price AS DOUBLE) AS price FROM live
-        |WHERE ok IN (1, 7, 33, 65, 26)
+        |WHERE ok IN (1, 7, 33, 13, 52)
         |ORDER BY ok""") { (s, dir) =>
       val (sf, loc) = ctx(s, dir)
       val root = s"$loc/g252_txn"
@@ -1191,10 +1192,11 @@ object Dml {
         Seq("price" -> "round(price + 1000, 2)"), "ok % 11 = 0")
       TxnMergeOnRead.delete(s, root, "ok % 13 = 0")
       TxnMergeOnRead.analyzeBloom(s, root, Seq("ok"))
-      // 1,7,33 live; 65 = 5*13 deleted (its file survives the index, the
-      // delete anti-join must still erase it); 26 = 2*13 deleted; 33 = 3*11
-      // updated (probe must see the NEW price)
-      val keys = Seq(1L, 7L, 33L, 65L, 26L)
+      // 1,7,33 live; 13 and 52 = 4*13 deleted (their file survives the
+      // index, the delete anti-join must still erase them); 33 = 3*11
+      // updated (probe must see the NEW price). Every probed key is
+      // ok % 3 <> 2, so the ok % 3 = 2 delta holds none and is pruned
+      val keys = Seq(1L, 7L, 33L, 13L, 52L)
       val p = TxnMergeOnRead.scanProfilePoint(s, root, "ok", keys)
       require(p._1 < p._2, s"point probe must prune files, scanned $p")
       TxnMergeOnRead.readPrunedPoint(s, root, "ok", keys)

@@ -59,20 +59,22 @@ object StreamingQ {
     },
 
     // Transactional streaming ingest (HiveEndPoint/TransactionBatch analog):
-    // 4 micro-batches each committing one merge-on-read insert-delta, minor
-    // compaction folding them, then a read-side aggregate that must equal
-    // the batch answer — exactly-once across the per-batch transactions.
+    // 4 micro-batches each committing one insert-delta into the txn log
+    // (each delivered twice; the burned batch key absorbs the second),
+    // minor compaction folding them, then a read-side aggregate that must
+    // equal the batch answer — exactly-once across the per-batch
+    // transactions.
     Qd("q153_stream_mor_ingest",
       """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |  CAST(count(DISTINCT event_id) AS BIGINT) AS n_ids,
         |  ROUND(sum(value), 4) AS sv
         |FROM events GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
-      import graft.operators.MergeOnReadDml
+      import graft.operators.TxnMergeOnRead
       val sf = new java.io.File(dir).getName.replace(".", "_")
       val root = s"/root/repo/target/ddl/$sf/g153_mor_ingest"
       StreamOps.morIngest(s, dir, root, nFiles = 4)
-      MergeOnReadDml.compactMinor(s, root)
-      MergeOnReadDml.read(s, root)
+      TxnMergeOnRead.compactMinor(s, root)
+      TxnMergeOnRead.read(s, root)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           countDistinct(col("event_id")).as("n_ids"),

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.TxnMergeOnRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -298,107 +299,123 @@ object StreamOps {
     runToMemory(spark, agg, "graft_stream_dedup", OutputMode.Complete())
   }
 
-  /** Transactional streaming ingest into a merge-on-read table — the DIRECT
-    * analog of the reference's streaming-ingest API
-    * (`hcatalog/streaming/HiveEndPoint.java`, `TransactionBatch.java`): each
-    * micro-batch commits as ONE ACID transaction (here: one insert-delta of
-    * [[graft.operators.MergeOnReadDml]]), queries see only committed
-    * batches, and the compactor later folds the accumulated per-batch deltas
-    * (`streaming/mutate/` + `txn/compactor/Worker.java`).
-    *
-    * The replay splits the events table into `nFiles` parquet files and
-    * streams them with `maxFilesPerTrigger=1`, so the run commits `nFiles`
-    * separate transactions — a deterministic stand-in for a live feed, same
-    * shape as production where an agent hands batches to the endpoint. The
-    * file-stream source's exactly-once file tracking plays the
-    * TransactionBatch commit/abort contract. Returns the table root; callers
-    * read the final state via [[graft.operators.MergeOnReadDml.read]].
-    */
-  def morIngest(spark: SparkSession, dir: String, root: String,
-      nFiles: Int = 4): String = {
-    import graft.operators.MergeOnReadDml
-    val events = {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("event_type"), col("value"))
-    }
-    val inDir = s"${root}__in"
-    val ckpt = s"${root}__ckpt"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(inDir))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    events.repartitionByRange(nFiles, col("event_id"))
-      .write.mode("overwrite").parquet(inDir)
-    MergeOnReadDml.create(spark, root, events.limit(0))
-    val sdf = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = sdf.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // txn keyed by micro-batch id (base_1 holds txn 1): a retried batch
-        // REPLACES its own delta — exactly-once table state under the
-        // sink's at-least-once batch delivery
-        MergeOnReadDml.insertAt(spark, root, batch, txn = batchId + 2)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    root
+  /** The `events` columns the transactional stream replays ingest. */
+  private def eventRows(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read.parquet(s"$dir/events.parquet")
+      .select(col("event_id"), col("event_type"), col("value"))
   }
 
-  /** Continuously-fresh MATERIALIZED VIEW over a stream — the round-10
-    * capstone composing three proven pieces end to end: each micro-batch
-    * (1) commits into the txn log via [[graft.operators.TxnMergeOnRead
-    * .insertBatch]] keyed by the batch id — the log's burned-key dedup
-    * makes the at-least-once foreachBatch contract exactly-once (the
-    * DELIBERATE double-delivery below is absorbed), then (2) advances the
-    * [[graft.operators.IncrementalAgg]] state by folding ONLY that
-    * batch's CDC range (idempotent per version: a crashed refresh
-    * re-materializes the same state file). The view is exact after every
-    * batch — no recompute, no eventual consistency window — which is the
-    * streaming-ingest + materialized-view pairing a warehouse runs in
-    * production (the reference's TransactionBatch feeds a table someone
-    * ELSE periodically rebuilds; here the view rides the feed). */
-  def streamingMatView(spark: SparkSession, dir: String, root: String,
-      stateDir: String, nFiles: Int = 4): DataFrame = {
-    import graft.operators.{IncrementalAgg, TxnMergeOnRead}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val events = spark.read.parquet(s"$dir/events.parquet")
-      .select(col("event_id"), col("event_type"), col("value"))
+  /** The `documents` columns the streaming index replays ingest. */
+  private def docRows(spark: SparkSession, dir: String): DataFrame =
+    graft.Engine.table(spark, dir, "documents").select(col("doc_id"), col("text"))
+
+  /** Streaming ingest into a transactional table — the one replay every
+    * txn-log stream query runs, and the DIRECT analog of the reference's
+    * streaming-ingest API (`hcatalog/streaming/HiveEndPoint.java`,
+    * `TransactionBatch.java`): each micro-batch commits as ONE transaction
+    * into [[TxnMergeOnRead]]'s log, the ACID layout every
+    * other DML uses, and queries see only committed batches.
+    *
+    * `src` is range-split on `splitCol` into `nFiles` parquet files under
+    * `<root>__in` and streamed with `maxFilesPerTrigger=1` and
+    * `AvailableNow`, so the run commits `nFiles` separate transactions — a
+    * deterministic stand-in for a live feed, same shape as production
+    * where an agent hands batches to the endpoint. `root` is (re)created
+    * empty with `src`'s schema, then `afterCreate` runs (consumer state
+    * built over the empty table).
+    *
+    * Every batch commits with `insertBatch(<keyPrefix><batchId>)` and is
+    * then DELIBERATELY delivered again, as foreachBatch's at-least-once
+    * contract allows: the burned batch key makes the second commit a
+    * no-op (a log read, no job), so the table state is exactly-once —
+    * the TransactionBatch commit/abort contract, with the log as the
+    * sink's transaction record. `fold(from, to)` then consumes the
+    * versions `(from, to]` the batch added, read from the LOG, not the
+    * stream, so a crashed consumer re-reads its range; the one
+    * foreachBatch callback is its single consumer. */
+  private[graft] def replayIntoTxn(spark: SparkSession, src: DataFrame,
+      splitCol: String, root: String, nFiles: Int, keyPrefix: String,
+      afterCreate: () => Unit = () => ())(
+      fold: (Long, Long) => Unit = (_, _) => ()): Unit = {
     val inDir = s"${root}__in"
     val ckpt = s"${root}__ckpt"
-    Seq(inDir, ckpt, stateDir).foreach(d =>
+    Seq(inDir, ckpt).foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
-    events.repartitionByRange(nFiles, col("event_id"))
+    src.repartitionByRange(nFiles, col(splitCol))
       .write.mode("overwrite").parquet(inDir)
-    TxnMergeOnRead.create(spark, root, events.limit(0))
-    IncrementalAgg.init(spark, root, stateDir,
-      groupCols = Seq("event_type"), sumCols = Seq("value"))
-    val sdf = spark.readStream.schema(events.schema)
+    TxnMergeOnRead.create(spark, root, src.limit(0))
+    afterCreate()
+    var vDone = TxnMergeOnRead.currentVersion(spark, root)
+    val q = spark.readStream.schema(src.schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = sdf.writeStream
+      .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val key = s"mvb_$batchId"
+        val key = s"$keyPrefix$batchId"
         TxnMergeOnRead.insertBatch(spark, root, key, batch)
-        // simulate the sink's at-least-once redelivery: the burned batch
-        // key makes the second commit a no-op
-        TxnMergeOnRead.insertBatch(spark, root, key, batch)
-        IncrementalAgg.refresh(spark, root, stateDir)
+        TxnMergeOnRead.insertBatch(spark, root, key, batch) // redelivery
+        val v = TxnMergeOnRead.currentVersion(spark, root)
+        if (v > vDone) {
+          fold(vDone, v)
+          vDone = v
+        }
         ()
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
+  }
+
+  /** The rows inserted in versions `(fromV, toV]` of the txn table at
+    * `root` — the insert-only change feed the streaming index consumers
+    * fold. */
+  private def insertsBetween(spark: SparkSession, root: String, fromV: Long,
+      toV: Long): DataFrame =
+    TxnMergeOnRead.changesBetween(spark, root, fromV, toV)
+      .filter(col("change") === "insert").drop("change")
+
+  /** Transactional streaming ingest of `events` ([[replayIntoTxn]] with no
+    * consumer): `nFiles` batches, one insert-delta each, which the
+    * compactor later folds (`streaming/mutate/` +
+    * `txn/compactor/Worker.java`). Returns the table root; callers read
+    * the final state via [[TxnMergeOnRead.read]]. */
+  def morIngest(spark: SparkSession, dir: String, root: String,
+      nFiles: Int = 4): String = {
+    replayIntoTxn(spark, eventRows(spark, dir), "event_id", root, nFiles, "mb")()
+    root
+  }
+
+  /** Continuously-fresh MATERIALIZED VIEW over a stream — the round-10
+    * capstone composing three proven pieces end to end: each micro-batch
+    * (1) commits into the txn log exactly-once ([[replayIntoTxn]]: the
+    * burned batch key absorbs the deliberate double-delivery), then (2)
+    * advances the [[graft.operators.IncrementalAgg]] state by folding
+    * ONLY that batch's CDC range (idempotent per version: a crashed
+    * refresh re-materializes the same state file). The view is exact
+    * after every batch — no recompute, no eventual consistency window —
+    * which is the streaming-ingest + materialized-view pairing a
+    * warehouse runs in production (the reference's TransactionBatch feeds
+    * a table someone ELSE periodically rebuilds; here the view rides the
+    * feed). */
+  def streamingMatView(spark: SparkSession, dir: String, root: String,
+      stateDir: String, nFiles: Int = 4): DataFrame = {
+    import graft.operators.IncrementalAgg
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stateDir))
+    replayIntoTxn(spark, eventRows(spark, dir), "event_id", root, nFiles,
+      "mvb_", afterCreate = () => IncrementalAgg.init(spark, root, stateDir,
+        groupCols = Seq("event_type"), sumCols = Seq("value"))) {
+      (_, _) => IncrementalAgg.refresh(spark, root, stateDir)
+    }
     IncrementalAgg.read(spark, stateDir)
   }
 
   /** Continuously-maintained near-duplicate index over a stream — the
     * dedup capstone composing three proven pieces: every micro-batch of
-    * documents commits into the txn log via `insertBatch` (the burned
-    * batch key turns foreachBatch's at-least-once redelivery into
-    * exactly-once — this query DELIBERATELY delivers every batch twice
-    * and the duplicate no-ops), the [[graft.operators.IncrementalLsh]]
-    * index then advances by folding only that batch's CDC range
-    * (`changesBetween` — the index consumer reads the LOG, not the
-    * stream, so it is decoupled from ingest exactly like the q238
+    * documents commits into the txn log exactly-once ([[replayIntoTxn]],
+    * every batch DELIBERATELY delivered twice), the
+    * [[graft.operators.IncrementalLsh]] index then advances by folding
+    * only that batch's CDC range (the index consumer reads the LOG, not
+    * the stream, so it is decoupled from ingest exactly like the q238
     * materialized view), and the discovered pairs accumulate. After the
     * replay the cumulative pair set must equal the one-shot full-corpus
     * LSH run — which is the same all-pairs oracle as q41/q249. On an
@@ -407,56 +424,25 @@ object StreamOps {
     * re-reads its CDC range from the log. */
   def streamingNearDupIndex(spark: SparkSession, dir: String, root: String,
       idxDir: String, nFiles: Int = 4): DataFrame = {
-    import graft.operators.{IncrementalLsh, TxnMergeOnRead}
-    val docs = graft.Engine.table(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    val inDir = s"${root}__in"
-    val ckpt = s"${root}__ckpt"
+    import graft.operators.IncrementalLsh
     val pairsDir = s"$idxDir/pairs"
-    Seq(inDir, ckpt).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
     IncrementalLsh.init(spark, idxDir)
-    docs.repartitionByRange(nFiles, col("doc_id"))
-      .write.mode("overwrite").parquet(inDir)
-    TxnMergeOnRead.create(spark, root, docs.limit(0))
-    // CDC watermark: versions ≤ vDone are already folded into the index.
-    // Single consumer by construction (the one foreachBatch callback).
-    var vDone = TxnMergeOnRead.currentVersion(spark, root)
-    val sdf = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = sdf.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val key = s"ndx_$batchId"
-        TxnMergeOnRead.insertBatch(spark, root, key, batch)
-        // at-least-once redelivery, absorbed by the burned batch key
-        TxnMergeOnRead.insertBatch(spark, root, key, batch)
-        val v = TxnMergeOnRead.currentVersion(spark, root)
-        if (v > vDone) {
-          val fresh = TxnMergeOnRead.changesBetween(spark, root, vDone, v)
-            .filter(col("change") === "insert")
-            .select(col("doc_id"), col("text"))
-          IncrementalLsh.ingest(spark, idxDir, fresh)
-            .write.mode("append").parquet(pairsDir)
-          vDone = v
-        }
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    replayIntoTxn(spark, docRows(spark, dir), "doc_id", root, nFiles, "ndx_") {
+      (from, to) =>
+        IncrementalLsh.ingest(spark, idxDir, insertsBetween(spark, root, from, to))
+          .write.mode("append").parquet(pairsDir)
+    }
     spark.read.parquet(pairsDir)
   }
 
   /** Continuously-maintained FULLTEXT index over a stream — the BM25
     * counterpart of [[streamingNearDupIndex]], closing the loop on the
     * r17 incremental-ingest work: each micro-batch of documents commits
-    * into the txn log via `insertBatch` (the burned batch key turns
-    * foreachBatch's at-least-once redelivery into exactly-once — every
-    * batch is DELIBERATELY delivered twice below and the duplicate
-    * no-ops), and the index consumer folds ONLY that batch's CDC range
-    * (`changesBetween` — it reads the LOG, not the stream, so a crashed
-    * consumer re-reads its range) into the persisted BM25 index: the
-    * first range bootstraps it ([[graft.operators.Retrieval
+    * into the txn log exactly-once ([[replayIntoTxn]], every batch
+    * DELIBERATELY delivered twice), and the index consumer folds ONLY
+    * that batch's CDC range (it reads the LOG, not the stream, so a
+    * crashed consumer re-reads its range) into the persisted BM25 index:
+    * the first range bootstraps it ([[graft.operators.Retrieval
     * .bm25WriteIndex]]), every later range appends ([[graft.operators
     * .Retrieval.bm25AddBatch]] — postings/df rows per term bucket, the
     * (n_docs, dl_sum) scalar delta). BM25 ingest batches commute and
@@ -468,46 +454,19 @@ object StreamOps {
   def streamingBm25Index(spark: SparkSession, dir: String, root: String,
       idxDir: String, queries: Seq[(Int, Seq[String])], k: Int,
       nFiles: Int = 3): DataFrame = {
-    import graft.operators.{Retrieval, TxnMergeOnRead}
-    val docs = graft.Engine.table(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    val inDir = s"${root}__in"
-    val ckpt = s"${root}__ckpt"
-    Seq(inDir, ckpt, idxDir).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
-    docs.repartitionByRange(nFiles, col("doc_id"))
-      .write.mode("overwrite").parquet(inDir)
-    TxnMergeOnRead.create(spark, root, docs.limit(0))
-    // CDC watermark: versions ≤ vDone are already folded into the index.
-    // Single consumer by construction (the one foreachBatch callback).
-    var vDone = TxnMergeOnRead.currentVersion(spark, root)
-    val sdf = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = sdf.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val key = s"bmx_$batchId"
-        TxnMergeOnRead.insertBatch(spark, root, key, batch)
-        // at-least-once redelivery, absorbed by the burned batch key
-        TxnMergeOnRead.insertBatch(spark, root, key, batch)
-        val v = TxnMergeOnRead.currentVersion(spark, root)
-        if (v > vDone) {
-          // bounded (one micro-batch); checkpointed because the index
-          // write fans the frame into THREE stores (postings/terms/stats)
-          // and each would otherwise re-run the CDC log read
-          val fresh = TxnMergeOnRead.changesBetween(spark, root, vDone, v)
-            .filter(col("change") === "insert")
-            .select(col("doc_id"), col("text"))
-            .localCheckpoint(true)
-          if (graft.operators.IndexStore.latest(spark, idxDir).isEmpty)
-            Retrieval.bm25WriteIndex(fresh, idxDir, nBuckets = 16)
-          else Retrieval.bm25AddBatch(fresh, idxDir)
-          vDone = v
-        }
+    import graft.operators.{IndexStore, Retrieval}
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxDir))
+    replayIntoTxn(spark, docRows(spark, dir), "doc_id", root, nFiles, "bmx_") {
+      (from, to) =>
+        // bounded (one micro-batch); checkpointed because the index
+        // write fans the frame into THREE stores (postings/terms/stats)
+        // and each would otherwise re-run the CDC log read
+        val fresh = insertsBetween(spark, root, from, to).localCheckpoint(true)
+        if (IndexStore.latest(spark, idxDir).isEmpty)
+          Retrieval.bm25WriteIndex(fresh, idxDir, nBuckets = 16)
+        else Retrieval.bm25AddBatch(fresh, idxDir)
         ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
     Retrieval.bm25TopKIndexed(spark, idxDir, queries, k)
   }
 

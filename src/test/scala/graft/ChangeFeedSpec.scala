@@ -2,6 +2,8 @@ package graft
 
 import java.io.File
 
+import scala.util.Try
+
 import graft.operators.{ChangeFeed, TxnMergeOnRead}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -10,7 +12,8 @@ import org.scalatest.BeforeAndAfterAll
 
 /** CDC replication ([[graft.operators.ChangeFeed]]): replica-equals-source
   * across every DML shape, one-action-per-key netting, value-idempotent
-  * crash replay, cursor no-ops, schema evolution, and the loud
+  * crash replay, cursor no-ops, a cursor commit that survives a crash at
+  * any filesystem mutation, schema evolution, and the loud
   * restore-breaks-replication contract. */
 class ChangeFeedSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -111,5 +114,41 @@ class ChangeFeedSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the documented recovery works
     ChangeFeed.init(spark, src, dst, ckpt)
     assert(content(dst) === content(src))
+  }
+
+  test("a crash at any mutation of the cursor commit leaves the old or the new cursor; the next sync resumes") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashfs.impl", classOf[CrashFs].getName)
+    val (src, dst, _) = mk("crash")
+    // only the cursor lives on the crashing filesystem, whose renames never
+    // replace a file (HDFS's rename)
+    val ckpt = s"crashfs://$base/crash/ckpt"
+    CrashFs.noClobber = true
+    try crashCursor(src, dst, ckpt) finally CrashFs.noClobber = false
+  }
+
+  private def crashCursor(src: String, dst: String, ckpt: String): Unit = {
+    ChangeFeed.init(spark, src, dst, ckpt)
+    TxnMergeOnRead.update(spark, src, Seq("v" -> "v + 1"), "k = 0")
+    CrashFs.arm(Long.MaxValue) // count, never fail
+    val first = ChangeFeed.sync(spark, src, dst, ckpt, Seq("k"))
+    val n = CrashFs.disarm()
+    assert(first === Some((1L, 2L)))
+    assert(n >= 3, s"a cursor commit writes, publishes and retires: $n mutations")
+    for (i <- 0L until n) {
+      val old = ChangeFeed.cursor(spark, ckpt).get
+      TxnMergeOnRead.update(spark, src, Seq("v" -> "v + 1"), s"k = ${i + 1}")
+      val head = TxnMergeOnRead.currentVersion(spark, src)
+      CrashFs.arm(i)
+      val crashed = try Try(ChangeFeed.sync(spark, src, dst, ckpt, Seq("k")))
+        finally CrashFs.disarm()
+      assert(crashed.isFailure, s"mutation $i of $n did not fail the sync")
+      val got = ChangeFeed.cursor(spark, ckpt)
+      assert(got === Some(old) || got === Some(head),
+        s"crash at mutation $i of $n: cursor $got, neither $old nor $head")
+      ChangeFeed.sync(spark, src, dst, ckpt, Seq("k"))
+      assert(ChangeFeed.cursor(spark, ckpt) === Some(head))
+      assert(content(dst) === content(src), s"crash at mutation $i of $n")
+    }
   }
 }

@@ -19,7 +19,9 @@ import scala.jdk.CollectionConverters._
 /** The local filesystem under the `crashfs` scheme. Once armed at N, its
   * N-th mutation (create, rename, delete, mkdirs of a missing dir) and
   * every later one throw — the process "died" there, and nothing after it
-  * happens. `failRename` instead fails only the renames it selects. */
+  * happens. `failRename` instead fails only the renames it selects, and
+  * `noClobber` gives rename HDFS's answer to an existing destination file:
+  * false, where the local rename(2) replaces it. */
 class CrashFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("crashfs:///")
   override def getScheme: String = "crashfs"
@@ -52,7 +54,8 @@ class CrashFs extends RawLocalFileSystem {
     CrashFs.step("rename", src)
     if (CrashFs.failRename(dst))
       throw new java.io.IOException(s"rename $src -> $dst failed")
-    super.rename(src, dst)
+    if (CrashFs.noClobber && pathToFile(dst).isFile) false
+    else super.rename(src, dst)
   }
 
   override def delete(p: Path, recursive: Boolean): Boolean = {
@@ -75,6 +78,7 @@ object CrashFs {
   private val done = new AtomicLong()
   @volatile private var failFrom = Long.MaxValue
   @volatile var failRename: Path => Boolean = _ => false
+  @volatile var noClobber = false
 
   /** Count mutations from zero; fail the `at`-th (0-based) and later. */
   def arm(at: Long): Unit = { done.set(0); failFrom = at }

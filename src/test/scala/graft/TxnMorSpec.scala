@@ -30,7 +30,12 @@ import org.scalatest.BeforeAndAfterAll
   *    delta stays live on top of the new base (`folds` claims only the
   *    prefix the fold actually read);
   *  - abandoned stages (conflict losers) are unreferenced by the log and
-  *    invisible to readers.
+  *    invisible to readers;
+  *  - layout: a mutation appends a delta of O(changed rows) and never
+  *    rewrites the base, a minor fold is one net delta over the same base,
+  *    a major fold drops the snapshot's anti-join, and only vacuum deletes
+  *    folded dirs (`ql/.../io/AcidUtils.java:226-228`,
+  *    `ql/.../txn/compactor/Worker.java:53`).
   */
 class TxnMorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -327,6 +332,35 @@ class TxnMorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val after = TxnMergeOnRead.read(spark, root)
     assert(after.filter(col("k") === 500).select("v").head().getLong(0) === 2)
     assert(after.count() === 105)
+
+    // the fold is ONE delta over an untouched base: a delete of a
+    // delta-born row annihilates with its insert event, a delete of a
+    // base row survives as a delete event
+    val root2 = s"$base/minor_net"
+    mkKvp(root2)
+    TxnMergeOnRead.update(spark, root2, Seq("v" -> "concat(v, '!')"), "k % 10 = 0")
+    TxnMergeOnRead.insert(spark, root2,
+      spark.range(1000, 1010).select(col("id").as("k"),
+        lit("late").as("v"), lit("z").as("p")))
+    TxnMergeOnRead.delete(spark, root2, "k = 1005 OR k = 7")
+    val preRows = TxnMergeOnRead.read(spark, root2).orderBy("k").collect()
+    val (b2, _) = TxnMergeOnRead.liveBase(spark, root2)
+    val baseBefore = parquetFiles(s"$root2/$b2")
+    assert(TxnMergeOnRead.compactMinor(spark, root2))
+    assert(TxnMergeOnRead.liveBase(spark, root2)._1 === b2)
+    assert(parquetFiles(s"$root2/$b2") == baseBefore,
+      "minor compaction must not touch the base")
+    val live = TxnMergeOnRead.liveBase(spark, root2)._2
+    assert(live.size === 1, s"expected one folded delta, got $live")
+    val (action, folded, _) = logEntries(root2).last
+    assert(action === "minor" && live.head === s"$folded/insert")
+    assert(TxnMergeOnRead.read(spark, root2).orderBy("k").collect()
+      .sameElements(preRows), "minor compaction must not change the snapshot")
+    val ins = spark.read.parquet(s"$root2/$folded/insert")
+    val del = spark.read.parquet(s"$root2/$folded/delete")
+    assert(ins.filter(col("k") === 1005).count() == 0)
+    assert(ins.count() == 30 + 9) // 30 updated versions + 9 surviving late rows
+    assert(del.count() == 30 + 1) // 30 update-deletes (base rids) + k=7
   }
 
   test("racing compactions never double-apply (loser aborts)") {
@@ -771,5 +805,204 @@ class TxnMorSpec extends AnyFunSuite with BeforeAndAfterAll {
       "vacuuming A must NOT clear a root that merely shares its prefix")
     // and the vacuumed table still reads correctly (entries repopulate)
     assert(TxnMergeOnRead.read(spark, rootA).count() === 60)
+  }
+
+  // ---- layout: base, deltas and folds, read through the log ----
+
+  /** 300 rows (k, v = "v<k>", p = a|b|c by k % 3): the layout tests' table. */
+  private def mkKvp(root: String): Unit = {
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
+    TxnMergeOnRead.create(spark, root, spark.range(0, 300).select(
+      col("id").as("k"), concat(lit("v"), col("id")).as("v"),
+      when(col("id") % 3 === 0, "a").when(col("id") % 3 === 1, "b")
+        .otherwise("c").as("p")))
+  }
+
+  /** Every parquet file under `dir` with its modification time. */
+  private def parquetFiles(dir: String): Map[String, Long] = {
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
+      else Seq(f)
+    walk(new File(dir)).filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getPath -> f.lastModified()).toMap
+  }
+
+  /** The log's entries as (action, dir, detail), in version order. */
+  private def logEntries(root: String): Seq[(String, String, String)] =
+    TxnMergeOnRead.history(spark, root).filter(col("action") =!= "checkpoint")
+      .orderBy("version").select("action", "dir", "detail").collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+
+  /** The `delta_*` dirs on disk that no log entry references. */
+  private def unreferencedDeltas(root: String): Set[String] =
+    Option(new File(root).listFiles()).getOrElse(Array.empty).map(_.getName)
+      .filter(_.startsWith("delta_")).toSet -- logEntries(root).map(_._2)
+
+  test("update/delete leave base files physically untouched") {
+    val root = s"$base/mor_base"
+    mkKvp(root)
+    val (b, _) = TxnMergeOnRead.liveBase(spark, root)
+    val before = parquetFiles(s"$root/$b")
+    TxnMergeOnRead.update(spark, root, Seq("v" -> "concat(v, '!')"), "k % 10 = 0")
+    TxnMergeOnRead.delete(spark, root, "k >= 290")
+    assert(TxnMergeOnRead.liveBase(spark, root)._1 === b, "the base stays live")
+    assert(parquetFiles(s"$root/$b") == before,
+      "merge-on-read mutations must append deltas, not rewrite the base")
+    val got = TxnMergeOnRead.read(spark, root)
+    assert(got.count() == 290)
+    assert(got.filter(col("v") === "v0!").count() == 1)
+    assert(got.filter(col("k") === 295).count() == 0)
+  }
+
+  test("delta volume is O(changed rows)") {
+    val root = s"$base/mor_volume"
+    mkKvp(root)
+    TxnMergeOnRead.update(spark, root, Seq("v" -> "upper(v)"), "k < 7")
+    val (action, dir, _) = logEntries(root).last
+    assert(action === "mutate")
+    val del = spark.read.parquet(s"$root/$dir/delete")
+    val ins = spark.read.parquet(s"$root/$dir/insert")
+    assert(del.count() == 7 && ins.count() == 7)
+  }
+
+  test("delete events reach rows born in insert-deltas") {
+    val root = s"$base/mor_born"
+    mkKvp(root)
+    TxnMergeOnRead.insert(spark, root,
+      spark.range(1000, 1010).select(col("id").as("k"),
+        lit("late").as("v"), lit("z").as("p")))
+    TxnMergeOnRead.delete(spark, root, "k = 1005")
+    val got = TxnMergeOnRead.read(spark, root).filter(col("p") === "z")
+    assert(got.count() == 9)
+    assert(got.filter(col("k") === 1005).count() == 0)
+  }
+
+  test("NULL predicate keeps the row (3VL)") {
+    val root = s"$base/mor_3vl"
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
+    TxnMergeOnRead.create(spark, root, spark.sql(
+      "SELECT * FROM VALUES (1, CAST(NULL AS INT)), (2, 5) AS t(k, x)"))
+    TxnMergeOnRead.delete(spark, root, "x > 3") // NULL > 3 -> NULL -> keep
+    assert(TxnMergeOnRead.read(spark, root).count() == 1)
+    assert(TxnMergeOnRead.read(spark, root).head.getInt(0) == 1)
+  }
+
+  test("unreferenced delta dirs are invisible to readers; a retried batch key adds nothing") {
+    val root = s"$base/mor_staging"
+    mkKvp(root)
+    // a torn/in-flight stage (its writer died before the log entry) must
+    // not be read: only the log names data
+    val f = new File(s"$root/delta_torn/delete"); f.mkdirs()
+    spark.range(0, 5).select(col("id").as("__row_id"))
+      .write.mode("overwrite").parquet(f.getPath)
+    assert(TxnMergeOnRead.read(spark, root).count() == 300,
+      "uncommitted staging must be invisible")
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(s"$root/delta_torn"))
+    // a retried batch: the same key committed twice = one delta, no dup rows
+    val rows = spark.range(1000, 1010).select(col("id").as("k"),
+      lit("late").as("v"), lit("z").as("p"))
+    assert(TxnMergeOnRead.insertBatch(spark, root, "b7", rows))
+    assert(!TxnMergeOnRead.insertBatch(spark, root, "b7", rows)) // the retry
+    assert(TxnMergeOnRead.read(spark, root).count() == 310,
+      "a retried batch must not duplicate its rows")
+    assert(logEntries(root).count(_._3 == "b:b7") === 1)
+  }
+
+  test("streaming ingest commits one insert-delta per micro-batch") {
+    val root = s"$base/mor_stream"
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
+    val feed = spark.range(0, 1000).select(col("id").as("k"),
+      (col("id") % 7).as("v"))
+    val folded = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    graft.streaming.StreamOps.replayIntoTxn(spark, feed, "k", root,
+      nFiles = 4, keyPrefix = "mb")((from, to) => folded += (from -> to))
+    // every batch was delivered twice; each committed once
+    val inserts = logEntries(root).filter(_._1 == "insert")
+    assert(inserts.size === 4, s"one txn per micro-batch: got $inserts")
+    assert(inserts.map(_._3).toSet === (0 until 4).map(i => s"b:mb$i").toSet)
+    assert(folded.toSeq === Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L),
+      "the consumer folds each batch's versions once, in order")
+    assert(TxnMergeOnRead.read(spark, root).count() == 1000,
+      "exactly-once: table state must equal the replayed feed")
+    assert(TxnMergeOnRead.compactMinor(spark, root))
+    assert(TxnMergeOnRead.read(spark, root).count() == 1000)
+  }
+
+  test("major compaction drops the anti-join; vacuum removes the folded deltas; new deltas stack") {
+    val root = s"$base/mor_major"
+    mkKvp(root)
+    TxnMergeOnRead.update(spark, root, Seq("v" -> "concat(v, '!')"), "k % 10 = 0")
+    TxnMergeOnRead.delete(spark, root, "k >= 290")
+    val preRows = TxnMergeOnRead.read(spark, root).orderBy("k").collect()
+    val prePlan = TxnMergeOnRead.read(spark, root).queryExecution.executedPlan.toString
+    assert(prePlan.contains("Anti"), "pre-compaction read must merge delete events")
+    val foldedDeltas = logEntries(root).filter(_._1 == "mutate").map(_._2)
+    assert(TxnMergeOnRead.compact(spark, root))
+    val postRows = TxnMergeOnRead.read(spark, root).orderBy("k").collect()
+    assert(postRows.sameElements(preRows), "compaction must not change the snapshot")
+    val postPlan = TxnMergeOnRead.read(spark, root).queryExecution.executedPlan.toString
+    assert(!postPlan.contains("Anti"), "post-compaction read must be a plain scan")
+    assert(TxnMergeOnRead.liveBase(spark, root)._2.isEmpty,
+      "no delta is live on the new base")
+    TxnMergeOnRead.vacuum(spark, root, retainVersions = 1)
+    assert(foldedDeltas.forall(d => !new File(s"$root/$d").exists),
+      "folded deltas must be deleted")
+    // and new deltas stack on the compacted base
+    TxnMergeOnRead.delete(spark, root, "k = 1")
+    assert(TxnMergeOnRead.read(spark, root).count() == preRows.length - 1)
+  }
+
+  test("a batch key burned before a major compaction still no-ops after it; a fresh key lands") {
+    val root = s"$base/mor_burned"
+    mkKvp(root)
+    TxnMergeOnRead.delete(spark, root, "k = 0")
+    val rows = spark.range(900, 903).select(
+      col("id").as("k"), concat(lit("v"), col("id")).as("v"), lit("a").as("p"))
+    assert(TxnMergeOnRead.insertBatch(spark, root, "early", rows))
+    assert(TxnMergeOnRead.compact(spark, root)) // the base folds the batch
+    assert(!TxnMergeOnRead.insertBatch(spark, root, "early", rows),
+      "a key the new base folded must stay burned (not silent duplication)")
+    assert(TxnMergeOnRead.read(spark, root).filter("k >= 900").count() == 3)
+    // a fresh key above the new base still lands
+    assert(TxnMergeOnRead.insertBatch(spark, root, "late",
+      rows.withColumn("k", col("k") + 3)))
+    assert(TxnMergeOnRead.read(spark, root).filter("k >= 900").count() == 6)
+  }
+
+  test("a minor fold whose log entry never lands leaves the snapshot unchanged and its dir unreferenced") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashfs.impl", classOf[CrashFs].getName)
+    val local = s"$base/mor_fold_crash"
+    val root = s"crashfs://$local"
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(local))
+    TxnMergeOnRead.create(spark, root, spark.range(0, 300).select(
+      col("id").as("k"), concat(lit("v"), col("id")).as("v")))
+    TxnMergeOnRead.update(spark, root, Seq("v" -> "concat(v, '!')"), "k < 5")
+    val sources = logEntries(root).filter(_._1 == "mutate").map(_._2)
+    val pre = TxnMergeOnRead.read(spark, root).orderBy("k").collect()
+    val preV = TxnMergeOnRead.currentVersion(spark, root)
+    // the fold stages its delta, then every log-entry publish fails
+    CrashFs.failRename = p => p.getParent.getName == "_txnlog" &&
+      p.getName.endsWith(".json")
+    try intercept[IllegalArgumentException](TxnMergeOnRead.compactMinor(spark, root))
+    finally CrashFs.failRename = _ => false
+    assert(TxnMergeOnRead.currentVersion(spark, root) === preV)
+    val healed = TxnMergeOnRead.read(spark, root)
+    assert(healed.orderBy("k").collect().sameElements(pre),
+      "an unpublished fold must not change the snapshot")
+    assert(healed.count() == 300)
+    assert(healed.filter("k < 5").count() == 5)
+    val orphan = unreferencedDeltas(local)
+    assert(orphan.size === 1, s"the staged fold is one unreferenced dir: $orphan")
+    // a fold that lands leaves its sources on disk; only vacuum deletes them
+    assert(TxnMergeOnRead.compactMinor(spark, root))
+    assert(sources.forall(d => new File(s"$local/$d").exists),
+      "compactMinor never deletes the deltas it folded")
+    TxnMergeOnRead.vacuum(spark, root, retainVersions = 1)
+    assert(sources.forall(d => !new File(s"$local/$d").exists),
+      "vacuum deletes the folded sources")
+    assert(orphan.forall(d => new File(s"$local/$d").exists),
+      "vacuum spares a dir no entry references")
+    assert(TxnMergeOnRead.read(spark, root).orderBy("k").collect().sameElements(pre))
   }
 }
