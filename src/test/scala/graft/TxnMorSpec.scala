@@ -332,7 +332,9 @@ class TxnMorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val after = TxnMergeOnRead.read(spark, root)
     assert(after.filter(col("k") === 500).select("v").head().getLong(0) === 2)
     assert(after.count() === 105)
+  }
 
+  test("minor compaction folds deltas into one, base untouched") {
     // the fold is ONE delta over an untouched base: a delete of a
     // delta-born row annihilates with its insert event, a delete of a
     // base row survives as a delete event
