@@ -68,10 +68,11 @@ object ChangeFeed {
     cursors(fs(spark, checkpointDir), checkpointDir).map(_._1).maxOption
 
   /** Commit cursor `v` as its own file ([[Stores.commitOnce]]), then delete
-    * the superseded ones. The live cursor is never removed before a newer
-    * one is visible, so a crash at any step leaves the old or the new
-    * cursor readable; a racing sync at the same version already committed
-    * the same value. */
+    * the superseded ones and the temp files of commits that died before
+    * their publish ([[Stores.sweepTemps]]). The live cursor is never
+    * removed before a newer one is visible, so a crash at any step leaves
+    * the old or the new cursor readable; a racing sync at the same version
+    * already committed the same value. */
   private def writeCursor(f: FileSystem, checkpointDir: String,
       v: Long): Unit = {
     val p = new Path(checkpointDir, f"cursor_$v%020d")
@@ -79,6 +80,7 @@ object ChangeFeed {
       throw new IllegalStateException(
         s"cannot commit replication cursor at $checkpointDir")
     cursors(f, checkpointDir).filter(_._1 < v).foreach(c => f.delete(c._2, false))
+    Stores.sweepTemps(f, new Path(checkpointDir))
   }
 
   /** Bootstrap: replica := source snapshot at a PINNED version (the source

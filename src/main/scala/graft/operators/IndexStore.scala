@@ -190,7 +190,9 @@ private[graft] object IndexStore {
           }
         val keep = manifestPath(path, version).getName
         f.listStatus(new Path(s"$path/$DIR")).map(_.getPath)
-          .filter(_.getName != keep).foreach(f.delete(_, false))
+          .filter(p => p.getName != keep && !p.getName.startsWith("."))
+          .foreach(f.delete(_, false))
+        Stores.sweepTemps(f, new Path(s"$path/$DIR"))
       }
       m
     }

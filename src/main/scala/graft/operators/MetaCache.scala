@@ -85,8 +85,10 @@ private[graft] object MetaCache {
   def schema(spark: SparkSession, path: String): StructType =
     memo(path, "")(spark.read.parquet(path).schema)
 
-  /** A per-path constant under `key`, computed on first use (outside any
-    * lock: a race computes twice, harmlessly) and kept until [[purge]]. */
+  /** A per-path constant under `key` — a sidecar's probe metadata, a
+    * transactional data dir's file list — computed on first use (outside
+    * any lock: a race computes twice, harmlessly) and kept until
+    * [[purge]]. */
   def memo[T <: AnyRef](path: String, key: String)(compute: => T): T = {
     val hit = consts.get((path, key))
     if (hit != null) hit.asInstanceOf[T]

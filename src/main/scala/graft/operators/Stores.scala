@@ -109,9 +109,13 @@ private[graft] object Stores {
     }
   }
 
-  /** Serializes commits into one directory within this JVM. */
+  /** Serializes commits into one directory, and its temp sweeps, within
+    * this JVM. */
   private val dirLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  private def lockOf(dir: Path): Object =
+    dirLocks.computeIfAbsent(dir.toString, _ => new Object)
 
   /** The one commit of the txn log, the index manifests and the index
     * registry: create `dst` holding `body` — temp file beside it, then a
@@ -122,36 +126,53 @@ private[graft] object Stores {
     * name, atomically, across processes) and the temp file's `.crc`
     * sidecar is then renamed to `dst`'s; elsewhere it is a rename (HDFS
     * never renames over a file). Commits into one dir also serialize
-    * through a JVM lock. */
+    * through a JVM lock. A temp file that vanished before its publish — a
+    * [[sweepTemps]] in another process took it for a dead writer's —
+    * loses like a taken name: false, and the caller retries. */
   def commitOnce(fs: FileSystem, dst: Path, body: String): Boolean =
-    dirLocks.computeIfAbsent(dst.getParent.toString, _ => new Object)
-      .synchronized {
-        if (fs.exists(dst)) false
-        else {
-          val tmp = new Path(dst.getParent,
-            s".tmp_${java.util.UUID.randomUUID().toString.take(12)}")
-          val out = fs.create(tmp, true)
-          try out.write(body.getBytes("UTF-8")) finally out.close()
-          val ok = fs match {
-            case local: LocalFileSystem =>
-              val raw = local.getRawFileSystem
-              val won = try {
-                java.nio.file.Files.createLink(local.pathToFile(dst).toPath,
-                  local.pathToFile(tmp).toPath)
-                true
-              } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-              if (won) {
-                val crc = local.getChecksumFile(tmp)
-                if (raw.exists(crc)) raw.rename(crc, local.getChecksumFile(dst))
-                raw.delete(tmp, false)
-              }
-              won
-            case _ =>
-              try fs.rename(tmp, dst)
-              catch { case _: java.io.IOException => false } // lost the race
-          }
-          if (!ok) fs.delete(tmp, false)
-          ok
+    lockOf(dst.getParent).synchronized {
+      if (fs.exists(dst)) false
+      else {
+        val tmp = new Path(dst.getParent,
+          s".tmp_${java.util.UUID.randomUUID().toString.take(12)}")
+        val out = fs.create(tmp, true)
+        try out.write(body.getBytes("UTF-8")) finally out.close()
+        val ok = fs match {
+          case local: LocalFileSystem =>
+            val raw = local.getRawFileSystem
+            val won = try {
+              java.nio.file.Files.createLink(local.pathToFile(dst).toPath,
+                local.pathToFile(tmp).toPath)
+              true
+            } catch {
+              case _: java.nio.file.FileAlreadyExistsException |
+                  _: java.nio.file.NoSuchFileException => false
+            }
+            if (won) {
+              val crc = local.getChecksumFile(tmp)
+              if (raw.exists(crc)) raw.rename(crc, local.getChecksumFile(dst))
+              raw.delete(tmp, false)
+            }
+            won
+          case _ =>
+            try fs.rename(tmp, dst)
+            catch { case _: java.io.IOException => false } // lost the race
         }
+        if (!ok) fs.delete(tmp, false)
+        ok
       }
+    }
+
+  /** Delete the `.tmp_` files [[commitOnce]] leaves in `dir` when its
+    * process dies between writing and publishing one. Holds the dir's JVM
+    * lock, so no commit of this JVM loses its temp file to the sweep; a
+    * commit in another process that does loses that publish and retries. */
+  def sweepTemps(fs: FileSystem, dir: Path): Unit =
+    lockOf(dir).synchronized {
+      val temps =
+        try fs.listStatus(dir).toSeq.map(_.getPath)
+          .filter(_.getName.startsWith(".tmp_"))
+        catch { case _: java.io.FileNotFoundException => Nil }
+      temps.foreach(fs.delete(_, false))
+    }
 }

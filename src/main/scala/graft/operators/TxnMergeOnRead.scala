@@ -5,14 +5,16 @@ import java.util.UUID
 import scala.collection.immutable.SortedMap
 import scala.util.{Success, Try}
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, JoinedRow}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, JoinedRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Merge-on-read DML under **concurrent writers** — the engine's one ACID
   * table format, which SQL DML, the DML queries and streaming ingest
@@ -49,6 +51,14 @@ import org.apache.spark.sql.types.StructType
   * `delete/part-00000.parquet`), the form a Spark write of the same frame
   * has; in a larger stage the rows the action handed over are that file
   * and Spark writes the rest as its part files beside it.
+  *
+  * A snapshot is read the way the reference's ACID reader merges a base
+  * and its deltas into one record stream: ONE parquet scan over the base
+  * files and the files of every live `insert/` half, left-anti joined on
+  * `__row_id` against ONE scan of every live `delete/` half pruned to the
+  * id, both at the declared schema. A dir's files are listed once and
+  * memoized (uuid dirs never change), so a read lists nothing and costs
+  * two scans however many delta dirs are live.
   *
   * Surface (one lakehouse table in ~15 calls):
   * {{{
@@ -634,13 +644,8 @@ object TxnMergeOnRead {
     val f = fs(spark, root)
     val view = readView(f, root)
     val (base, deltas) = liveStateV(f, root, view)
-    val dirs = (s"$root/$base" +:
-      deltas.values.toSeq.map(e => s"$root/${e.dir}/insert"))
-      .filter(p => f.exists(new Path(p)))
-    val files = dirs.flatMap(p => f.listStatus(new Path(p)).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    })
+    val dirs = insertDirs(f, root, base, deltas)
+    val files = dirs.flatMap(_._2)
     val cons = constraintsV(f, root, view)
     val gens = gensFrom(cons)
     Seq((root, view.lastVersion, view.ckpt.map(_.version).getOrElse(-1L),
@@ -741,60 +746,105 @@ object TxnMergeOnRead {
       addConstraintImpl(spark, root, s"$GEN$n", s"$n <=> ($e)") }
   }
 
-  private def readDir(spark: SparkSession, root: String, dir: String,
-      kind: String): Option[DataFrame] = {
-    val p = s"$root/$dir/$kind"
-    if (fs(spark, root).exists(new Path(p))) Some(MetaCache.get(spark, p))
-    else None
+  /** The data files of one data dir by half — `insert` and `delete` for a
+    * delta, `""` for a base — from one listing per dir, memoized in
+    * [[MetaCache]]: data dirs are uuid-named and never change once
+    * written ([[stage]] records its own), so a read lists no dir an
+    * earlier read or stage listed, and a half missing from the map was
+    * never staged — no `exists` probe either. [[vacuum]]'s purge drops
+    * the entries with the dirs. */
+  private def filesOf(f: FileSystem, root: String,
+      dir: String): Map[String, Seq[FileStatus]] =
+    MetaCache.memo(s"$root/$dir", "files") {
+      def data(p: Path): Seq[FileStatus] = f.listStatus(p).toSeq.filterNot { st =>
+        val n = st.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }
+      val (halves, files) = data(new Path(s"$root/$dir")).partition(_.isDirectory)
+      halves.map(h => h.getPath.getName -> data(h.getPath).filter(_.isFile))
+        .toMap + ("" -> files)
+    }
+
+  /** One parquet scan over `files` at `schema`; a column a file lacks
+    * reads NULL. The file index is the list itself, so building the
+    * relation lists nothing, probes no path and runs no job however many
+    * dirs the files come from (a path-based read lists each root and, past
+    * Spark's parallel-discovery threshold, does so in a job). */
+  private def scan(spark: SparkSession, files: Seq[FileStatus],
+      schema: StructType): DataFrame = {
+    val index = new FileIndex {
+      def rootPaths: Seq[Path] = files.map(_.getPath.getParent).distinct
+      def listFiles(partitionFilters: Seq[Expression],
+          dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+        Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+      def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+      def refresh(): Unit = ()
+      def sizeInBytes: Long = files.map(_.getLen).sum
+      def partitionSchema: StructType = new StructType()
+    }
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      ColumnBridge.asNullable(schema), None, new ParquetFileFormat,
+      Map.empty)(spark))
   }
 
-  /** Declared column set at a view — base-dir footer schema (one CACHED
-    * footer read) plus `ALTER TABLE ADD COLUMNS` metadata, in snapshot
-    * column order. Replaces the previous schema-resolution idiom
-    * (`snapshotAtV(...).schema`), which analyzed the full union-anti-join
-    * snapshot plan and re-read every live delta dir's footer just to name
-    * the columns — O(live dirs) driver round-trips per INSERT on a growing
-    * chain. */
-  private def declaredFields(spark: SparkSession, f: FileSystem, root: String,
-      view: View): Seq[org.apache.spark.sql.types.StructField] = {
+  /** Every file of half `half` across `dirs`, in ONE scan at `schema`;
+    * None when no dir holds that half. */
+  private def scanHalf(spark: SparkSession, f: FileSystem, root: String,
+      dirs: Seq[String], half: String, schema: StructType): Option[DataFrame] =
+    Some(dirs.flatMap(d => filesOf(f, root, d).getOrElse(half, Nil)))
+      .filter(_.nonEmpty).map(scan(spark, _, schema))
+
+  /** The insert-bearing dirs of a live state — the base and every live
+    * insert half — with their data files. */
+  private def insertDirs(f: FileSystem, root: String, base: String,
+      deltas: SortedMap[Long, Entry]): Seq[(String, Seq[FileStatus])] =
+    (s"$root/$base" -> filesOf(f, root, base)("")) +:
+      deltas.values.toSeq.flatMap(e => filesOf(f, root, e.dir).get("insert")
+        .map(s"$root/${e.dir}/insert" -> _))
+
+  /** The schema every scan of a view reads at: the base-dir footer schema
+    * (one CACHED footer read) plus `ALTER TABLE ADD COLUMNS` metadata, in
+    * snapshot column order, row id last. Stages cast their rows to it, so
+    * one read schema serves every file of the view. */
+  private def schemaAtV(spark: SparkSession, f: FileSystem, root: String,
+      view: View): StructType = {
     val (base, _) = liveStateV(f, root, view)
     val baseSchema = MetaCache.get(spark, s"$root/$base").schema
     val added = addedColsV(f, root, view)
       .filterNot { case (n, _) => baseSchema.fieldNames.contains(n) }
-    baseSchema.fields.filter(_.name != RID).toSeq ++
-      added.map { case (n, t) => org.apache.spark.sql.types.StructField(n,
-        org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseDataType(t)) }
+    StructType(baseSchema.fields.filter(_.name != RID).toSeq ++
+      added.map { case (n, t) => StructField(n,
+        org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseDataType(t)) } :+
+      baseSchema(RID))
   }
 
-  /** Snapshot as of the given view, with row ids. Schema evolution
-    * is schema-on-read, the reference's ADD COLUMNS semantics: files
-    * written before a schema entry simply lack the column, the union
-    * tolerates it (allowMissingColumns) and the final projection fills
-    * NULL at the declared type — no data file is ever rewritten for a
-    * schema change. */
-  private def snapshotAtV(spark: SparkSession, root: String,
-      view: View): DataFrame = {
+  /** `df` less the rows whose id `minus` holds (left-anti on the id). */
+  private def antiRid(df: DataFrame, minus: Option[DataFrame]): DataFrame =
+    minus.fold(df)(m => df.join(m.select(col(RID)), Seq(RID), "left_anti"))
+
+  /** Snapshot as of the given view, with row ids: ONE parquet scan over
+    * the base files and every live insert half, left-anti joined on the
+    * row id against ONE scan of every live delete half (delete events
+    * carry the full dead row, CDF-style; the scan is pruned to the id).
+    * Both scans read at the view's declared schema ([[schemaAtV]]), which
+    * is the reference's schema-on-read ADD COLUMNS semantics: a file
+    * written before a schema entry lacks the column and reads NULL, and
+    * no data file is ever rewritten for a schema change. `surv` names an
+    * insert-bearing dir's surviving files ([[readPrunedBy]]; None = all). */
+  private def snapshotAtV(spark: SparkSession, root: String, view: View,
+      surv: String => Option[Seq[String]] = _ => None): DataFrame = {
     val f = fs(spark, root)
     val (base, deltas) = liveStateV(f, root, view)
-    val baseDf = MetaCache.get(spark, s"$root/$base")
-    val withIns = deltas.values.toSeq.flatMap(e => readDir(spark, root, e.dir, "insert"))
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .fold(baseDf)(ins => baseDf.unionByName(ins, allowMissingColumns = true))
-    // delete events carry the full dead row (CDF-style) but the snapshot
-    // only needs the id — parquet column pruning keeps this read narrow
-    val merged = deltas.values.toSeq.flatMap(e => readDir(spark, root, e.dir, "delete"))
-      .map(_.select(col(RID)))
-      .reduceOption(_ union _)
-      .fold(withIns)(del => withIns.join(del, Seq(RID), "left_anti"))
-    val added = addedColsV(f, root, view).filterNot { case (n, _) =>
-      baseDf.columns.contains(n) }
-    val filled = added.foldLeft(merged) { case (df, (n, t)) =>
-      if (df.columns.contains(n)) df else df.withColumn(n, lit(null).cast(t))
+    val schema = schemaAtV(spark, f, root, view)
+    val born = insertDirs(f, root, base, deltas).flatMap { case (p, files) =>
+      surv(p).fold(files) { keep =>
+        val names = keep.map(new Path(_).getName).toSet
+        files.filter(st => names(st.getPath.getName))
+      }
     }
-    // canonical column order: base data cols, then added cols, rid last
-    val order = (baseDf.columns.filter(_ != RID).toSeq ++
-      added.map(_._1).filterNot(baseDf.columns.contains)).distinct :+ RID
-    filled.select(order.map(col): _*)
+    antiRid(scan(spark, born, schema), scanHalf(spark, f, root,
+      deltas.values.toSeq.map(_.dir), "delete", StructType(Seq(schema(RID)))))
+      .select(schema.fieldNames.toSeq.map(col): _*)
   }
 
   /** Snapshot read at the latest committed version (user-facing). */
@@ -830,10 +880,7 @@ object TxnMergeOnRead {
   def analyze(spark: SparkSession, root: String): Unit = {
     val f = fs(spark, root)
     val (base, deltas) = liveStateV(f, root, readView(f, root))
-    DataSkipping.collect(spark, s"$root/$base")
-    deltas.values.toSeq.map(e => s"$root/${e.dir}/insert")
-      .filter(p => f.exists(new Path(p)))
-      .foreach(p => DataSkipping.collect(spark, p))
+    insertDirs(f, root, base, deltas).foreach(d => DataSkipping.collect(spark, d._1))
   }
 
   /** Build per-file Bloom sidecars for `cols` over every live
@@ -844,9 +891,8 @@ object TxnMergeOnRead {
       bitsPerKey: Int = 12): Unit = {
     val f = fs(spark, root)
     val (base, deltas) = liveStateV(f, root, readView(f, root))
-    (s"$root/$base" +: deltas.values.toSeq.map(e => s"$root/${e.dir}/insert"))
-      .filter(p => f.exists(new Path(p)))
-      .foreach(p => BloomIndex.collectAuto(spark, p, cols, bitsPerKey))
+    insertDirs(f, root, base, deltas)
+      .foreach(d => BloomIndex.collectAuto(spark, d._1, cols, bitsPerKey))
   }
 
   /** (base dir name, insert-delta dir names) of the head snapshot —
@@ -864,9 +910,8 @@ object TxnMergeOnRead {
       cols: Seq[String]): Unit = {
     val f = fs(spark, root)
     val (base, deltas) = liveStateV(f, root, readView(f, root))
-    (s"$root/$base" +: deltas.values.toSeq.map(e => s"$root/${e.dir}/insert"))
-      .filter(p => f.exists(new Path(p)))
-      .foreach(p => BitmapIndex.collect(spark, p, cols))
+    insertDirs(f, root, base, deltas)
+      .foreach(d => BitmapIndex.collect(spark, d._1, cols))
   }
 
   /** Delete one kind of index sidecar dir (`_file_stats` /
@@ -877,44 +922,15 @@ object TxnMergeOnRead {
       sidecarDir: String): Unit = {
     val f = fs(spark, root)
     val (base, deltas) = liveStateV(f, root, readView(f, root))
-    (s"$root/$base" +: deltas.values.toSeq.map(e => s"$root/${e.dir}/insert"))
-      .foreach { p =>
-        val sp = new Path(s"$p/$sidecarDir")
-        if (f.exists(sp)) f.delete(sp, true)
-      }
+    insertDirs(f, root, base, deltas)
+      .foreach(d => f.delete(new Path(s"${d._1}/$sidecarDir"), true))
   }
 
   /** (files kept, files total) for a point probe — [[scanProfile]]'s
     * Bloom twin. */
   def scanProfilePoint(spark: SparkSession, root: String, column: String,
-      values: Seq[Any]): (Long, Long) = {
-    val f = fs(spark, root)
-    val (base, deltas) = liveStateV(f, root, readView(f, root))
-    val paths = s"$root/$base" +:
-      deltas.values.toSeq.map(e => s"$root/${e.dir}/insert")
-    paths.filter(p => f.exists(new Path(p))).map { p =>
-      val total = f.listStatus(new Path(p)).count { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      val kept = BitmapIndex.survivors(spark, p, column, values)
-        .orElse(BloomIndex.survivors(spark, p, column, values))
-        .map(_.size).getOrElse(total)
-      (kept.toLong, total.toLong)
-    }.foldLeft((0L, 0L)) { case ((k, t), (a, b)) => (k + a, t + b) }
-  }
-
-  /** One insert-bearing dir, pruned by its stats sidecar when one exists:
-    * `None` = dir absent or wholly pruned; no sidecar = full dir. */
-  private def loadDirPrunedBy(spark: SparkSession, root: String,
-      path: String, surv: String => Option[Seq[String]]): Option[DataFrame] = {
-    if (!fs(spark, root).exists(new Path(path))) None
-    else surv(path) match {
-      case None => Some(spark.read.parquet(path))
-      case Some(Nil) => None
-      case Some(files) => Some(spark.read.parquet(files: _*))
-    }
-  }
+      values: Seq[Any]): (Long, Long) =
+    profileBy(spark, root, pointSurvivors(spark, column, values))
 
   /** Snapshot read with FILE-LEVEL DATA SKIPPING: equals
     * `read(root).filter(band₁ AND band₂ …)` by construction, but files
@@ -931,8 +947,7 @@ object TxnMergeOnRead {
   def readPruned(spark: SparkSession, root: String,
       bands: Seq[DataSkipping.Band]): DataFrame = {
     require(bands.nonEmpty, "readPruned needs at least one band")
-    readPrunedBy(spark, root,
-      p => DataSkipping.survivors(spark, p, bands),
+    readPrunedBy(spark, root, p => DataSkipping.survivors(spark, p, bands),
       DataSkipping.predicateOf(bands))
   }
 
@@ -946,66 +961,44 @@ object TxnMergeOnRead {
   def readPrunedPoint(spark: SparkSession, root: String, column: String,
       values: Seq[Any]): DataFrame = {
     require(values.nonEmpty, "readPrunedPoint needs at least one value")
-    // exact BITMAP postings outrank the probabilistic BLOOM filters when
-    // a dir carries both sidecars; either alone is authoritative for its
-    // own dir, a dir with neither scans in full
-    readPrunedBy(spark, root,
-      p => BitmapIndex.survivors(spark, p, column, values)
-        .orElse(BloomIndex.survivors(spark, p, column, values)),
+    readPrunedBy(spark, root, pointSurvivors(spark, column, values),
       col(column).isin(values: _*))
   }
 
-  /** Shared pruned-snapshot assembly: `surv` names each insert-bearing
-    * dir's surviving files (None = no usable sidecar → whole dir), the
-    * residual predicate re-applies the full condition. Deletes are always
-    * applied in full — pruning is performance-only. */
+  /** An insert-bearing dir's files a point probe keeps. Exact BITMAP
+    * postings outrank the probabilistic BLOOM filters when a dir carries
+    * both sidecars; either alone is authoritative for its own dir, a dir
+    * with neither scans in full (None). */
+  private def pointSurvivors(spark: SparkSession, column: String,
+      values: Seq[Any]): String => Option[Seq[String]] =
+    p => BitmapIndex.survivors(spark, p, column, values)
+      .orElse(BloomIndex.survivors(spark, p, column, values))
+
+  /** Shared pruned-snapshot read: the head snapshot over the files `surv`
+    * keeps of each insert-bearing dir (None = no usable sidecar → whole
+    * dir), with the residual predicate re-applying the full condition.
+    * Deletes are always applied in full — pruning is performance-only. */
   private def readPrunedBy(spark: SparkSession, root: String,
       surv: String => Option[Seq[String]],
-      residual: org.apache.spark.sql.Column): DataFrame = {
-    val f = fs(spark, root)
-    val view = readView(f, root)
-    val (base, deltas) = liveStateV(f, root, view)
-    val basePath = s"$root/$base"
-    val schemaDf = MetaCache.get(spark, basePath)
-    val parts = loadDirPrunedBy(spark, root, basePath, surv).toSeq ++
-      deltas.values.toSeq.flatMap(e =>
-        loadDirPrunedBy(spark, root, s"$root/${e.dir}/insert", surv))
-    val withIns = parts
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .getOrElse(schemaDf.limit(0))
-    val merged = deltas.values.toSeq
-      .flatMap(e => readDir(spark, root, e.dir, "delete"))
-      .map(_.select(col(RID)))
-      .reduceOption(_ union _)
-      .fold(withIns)(del => withIns.join(del, Seq(RID), "left_anti"))
-    val added = addedColsV(f, root, view).filterNot { case (n, _) =>
-      schemaDf.columns.contains(n) }
-    val filled = added.foldLeft(merged) { case (df, (n, t)) =>
-      if (df.columns.contains(n)) df else df.withColumn(n, lit(null).cast(t))
-    }
-    val order = (schemaDf.columns.filter(_ != RID).toSeq ++
-      added.map(_._1).filterNot(schemaDf.columns.contains)).distinct
-    filled.select(order.map(col): _*)
-      .filter(residual)
-  }
+      residual: org.apache.spark.sql.Column): DataFrame =
+    snapshotAtV(spark, root, readView(fs(spark, root), root), surv)
+      .drop(RID).filter(residual)
 
   /** (files kept, files total) across the head snapshot's insert-bearing
     * dirs for a band set — the observability hook specs and benches use to
     * PROVE skipping happened. Dirs without usable stats count as all-kept. */
   def scanProfile(spark: SparkSession, root: String,
-      bands: Seq[DataSkipping.Band]): (Long, Long) = {
+      bands: Seq[DataSkipping.Band]): (Long, Long) =
+    profileBy(spark, root, p => DataSkipping.survivors(spark, p, bands))
+
+  /** (files kept, files total) over the head snapshot's insert-bearing
+    * dirs, counted from the memoized file lists ([[filesOf]]). */
+  private def profileBy(spark: SparkSession, root: String,
+      surv: String => Option[Seq[String]]): (Long, Long) = {
     val f = fs(spark, root)
     val (base, deltas) = liveStateV(f, root, readView(f, root))
-    val paths = s"$root/$base" +:
-      deltas.values.toSeq.map(e => s"$root/${e.dir}/insert")
-    paths.filter(p => f.exists(new Path(p))).map { p =>
-      val total = f.listStatus(new Path(p)).count { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      val kept = DataSkipping.survivors(spark, p, bands)
-        .map(_.size).getOrElse(total)
-      (kept.toLong, total.toLong)
+    insertDirs(f, root, base, deltas).map { case (p, files) =>
+      (surv(p).fold(files.size)(_.size).toLong, files.size.toLong)
     }.foldLeft((0L, 0L)) { case ((k, t), (a, b)) => (k + a, t + b) }
   }
 
@@ -1052,34 +1045,27 @@ object TxnMergeOnRead {
     val range = inRange.filter(e =>
       (e.action == "insert" || e.action == "mutate") &&
       (!e.fp.startsWith("b:") || canon(e.fp) == e.version))
-    val born = range.flatMap(e => readDir(spark, root, e.dir, "insert"))
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-    val dead = range.flatMap(e => readDir(spark, root, e.dir, "delete"))
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-    // rows born then killed inside the range net out of BOTH sides
-    val inserted = born.map(i =>
-      dead.fold(i)(d => i.join(d.select(col(RID)), Seq(RID), "left_anti")))
-    val deleted = dead.map(d =>
-      born.fold(d)(i => d.join(i.select(col(RID)), Seq(RID), "left_anti")))
-    val tagged =
-      inserted.map(_.drop(RID).withColumn("change", lit("insert"))).toSeq ++
-      deleted.map(_.drop(RID).withColumn("change", lit("delete"))).toSeq
-    tagged.reduceOption(_.unionByName(_, allowMissingColumns = true)).map { df =>
-      // normalize to the canonical column set AT toV (schema entries in
-      // the prefix): events from before an ADD COLUMNS read NULL there
-      val prefix = truncateView(f, root, view, toV)
-      val (b, _) = liveStateV(f, root, prefix)
-      val baseCols = MetaCache.get(spark, s"$root/$b").columns
-        .filter(_ != RID).toSeq
-      val added = addedColsV(f, root, prefix).filterNot(c => baseCols.contains(c._1))
-      val filled = added.foldLeft(df) { case (d, (n, t)) =>
-        if (d.columns.contains(n)) d else d.withColumn(n, lit(null).cast(t))
-      }
-      val order = (baseCols ++ added.map(_._1)).distinct :+ "change"
-      filled.select(order.map(col): _*)
-    }.getOrElse(
-      snapshotAtV(spark, root, truncateView(f, root, view, fromV))
-        .drop(RID).withColumn("change", lit("")).limit(0))
+    // both sides read at the canonical column set AT toV (schema entries
+    // in the prefix): events from before an ADD COLUMNS read NULL there
+    val schema = schemaAtV(spark, f, root, truncateView(f, root, view, toV))
+    val (inserted, deleted) = netOf(spark, f, root, range.map(_.dir), schema)
+    val cols = schema.fieldNames.toSeq.filter(_ != RID).map(col) :+ col("change")
+    (inserted.map(_.withColumn("change", lit("insert"))).toSeq ++
+      deleted.map(_.withColumn("change", lit("delete"))))
+      .map(_.select(cols: _*)).reduceOption(_ union _)
+      .getOrElse(scan(spark, Nil, schema).withColumn("change", lit(""))
+        .select(cols: _*))
+  }
+
+  /** The net change of `dirs`' halves, each half read in ONE scan at
+    * `schema`: (rows born and not killed among them, rows killed that were
+    * not born among them), each None when no dir holds that half. */
+  private def netOf(spark: SparkSession, f: FileSystem, root: String,
+      dirs: Seq[String], schema: StructType)
+      : (Option[DataFrame], Option[DataFrame]) = {
+    val born = scanHalf(spark, f, root, dirs, "insert", schema)
+    val dead = scanHalf(spark, f, root, dirs, "delete", schema)
+    (born.map(antiRid(_, dead)), dead.map(antiRid(_, born)))
   }
 
   /** The columns of a write's staged-rows frame, one row per source row:
@@ -1180,6 +1166,7 @@ object TxnMergeOnRead {
     spilled.foreach { case (k, df) => df.write.mode("append").parquet(at(k)) }
     (inHand.map(_._1) ++ spilled.map(_._1)).distinct.foreach(k =>
       MetaCache.memo(at(k), "")(ColumnBridge.asNullable(schemas(k))))
+    filesOf(fs(spark, root), root, dir)
     Some(Staged(dir,
       if (spilled.nonEmpty) footprint(spark, root, dir)
       else inHand.collectFirst { case ("delete", rs) =>
@@ -1252,9 +1239,11 @@ object TxnMergeOnRead {
     val f = fs(spark, root)
     if (!f.exists(new Path(s"$root/$dirB")))
       return true // competing dir vacuumed under our pinned snapshot
-    (readDir(spark, root, dirA, "delete"), readDir(spark, root, dirB, "delete")) match {
-      case (Some(a), Some(b)) =>
-        !a.select(col(RID)).join(b.select(col(RID)), Seq(RID), "left_semi").isEmpty
+    def rids(dir: String): Option[DataFrame] =
+      filesOf(f, root, dir).get("delete").map(scan(spark, _, StructType(Seq(
+        MetaCache.schema(spark, s"$root/$dir/delete")(RID)))))
+    (rids(dirA), rids(dirB)) match {
+      case (Some(a), Some(b)) => !a.join(b, Seq(RID), "left_semi").isEmpty
       case _ => false // a side that staged no delete events cannot overlap
     }
   }
@@ -1285,7 +1274,7 @@ object TxnMergeOnRead {
     // staged rows are caller data)
     val fields = (0 to 3).view.map { attempt =>
       val view = if (attempt == 0) view0 else readView(f, root)
-      Try(declaredFields(spark, f, root, view))
+      Try(schemaAtV(spark, f, root, view).filter(_.name != RID))
     }.collectFirst { case Success(c) => c }
       .getOrElse(throw new IllegalStateException(
         s"cannot resolve schema of $root"))
@@ -1306,8 +1295,8 @@ object TxnMergeOnRead {
     // type must match the table declaration even when the inserting
     // DataFrame carries a divergent type (e.g. an evolved column supplied
     // as INT where an earlier mergeSchema writer declared BIGINT), or a
-    // later snapshot's unionByName against other writers' files fails
-    // analysis / silently coerces
+    // later snapshot, which reads every file at the declared schema,
+    // cannot read this one
     val genApplied = applyGens(rows, gensFrom(cons))
     // rid txn = a fresh uuid-derived tag, not the commit version (unknown
     // until the race resolves); uniqueness is all the id contract needs
@@ -1431,7 +1420,7 @@ object TxnMergeOnRead {
     * time travel below the entry still shows the OLD schema — at 100 TB
     * this is the difference between an O(1) metadata commit and an
     * O(table) rewrite. Commutes with concurrent DML (mutations carry
-    * whatever schema their snapshot had; the union is tolerant), but a
+    * whatever schema their snapshot had; reads fill NULL), but a
     * duplicate column name is rejected against the committed head on
     * every retry. */
   def addColumns(spark: SparkSession, root: String,
@@ -1450,7 +1439,8 @@ object TxnMergeOnRead {
       attempts += 1
       require(attempts < MAX_COMMIT_ATTEMPTS, s"addColumns on $root livelocked")
       val view = readView(f, root)
-      val existing = snapshotAtV(spark, root, view).columns.map(_.toLowerCase).toSet
+      val existing = schemaAtV(spark, f, root, view).fieldNames
+        .map(_.toLowerCase).toSet
       cols.foreach { case (n, _) =>
         require(!existing.contains(n.toLowerCase),
           s"column '$n' already exists on $root")
@@ -1557,11 +1547,12 @@ object TxnMergeOnRead {
     }
     if (committed()) return false
     val bview = readView(f, root)
-    val cols = declaredFields(spark, f, root, bview).map(_.name)
+    val fields = schemaAtV(spark, f, root, bview).filter(_.name != RID)
     val cons = constraintsV(f, root, bview)
     val tag = UUID.randomUUID().getLeastSignificantBits & Long.MaxValue
     val dir = stage(spark, root,
-      asBorn(applyGens(rows, gensFrom(cons)).select(cols.map(col): _*)),
+      asBorn(applyGens(rows, gensFrom(cons)).select(fields.map(fd =>
+        col(fd.name).cast(fd.dataType).as(fd.name)): _*)),
       Some(tag), cons, "INSERT BATCH", emptyOk = true).get.dir
     var attempts = 0
     var done = false
@@ -1680,7 +1671,8 @@ object TxnMergeOnRead {
       // POST-set values (Delta's behavior when a base column changes) —
       // withColumn keeps their position
       gens.foldLeft(matched.select(cols.map { c =>
-        setMap.get(c).map(e => expr(e).as(c)).getOrElse(col(c))
+        setMap.get(c).map(e => expr(e).cast(snap.schema(c).dataType).as(c))
+          .getOrElse(col(c))
       } :+ struct(snap.columns.map(col): _*).as(DEAD): _*)) {
         case (d, (n, e)) => d.withColumn(n, expr(e))
       }.select(col(DEAD), struct(cols.map(col): _*).as(BORN))
@@ -1786,7 +1778,8 @@ object TxnMergeOnRead {
         val upd = setMap.get(c).map(expr)
           .getOrElse(col(s"$targetAlias.$c"))
         insCols.get(c).fold(when(isUpd, upd))(i =>
-          when(isUpd, upd).when(isIns, col(i))).as(c)
+          when(isUpd, upd).when(isIns, col(i)))
+          .cast(snap.schema(c).dataType).as(c)
       }
       val staged = j.filter(isDel || isUpd || isIns ||
           (if (checkCardinality) matched else lit(false)))
@@ -1874,16 +1867,9 @@ object TxnMergeOnRead {
     val snapV = view0.lastVersion
     val (_, deltas) = liveStateV(f, root, view0)
     if (deltas.isEmpty) return true // nothing to fold
-    val dirs = deltas.values.toSeq.map(_.dir)
-    // deltas from different schema epochs union tolerant (ADD COLUMNS)
-    val ins = dirs.flatMap(d => readDir(spark, root, d, "insert"))
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-    val del = dirs.flatMap(d => readDir(spark, root, d, "delete"))
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-    val netIns = ins.map(i =>
-      del.fold(i)(d => i.join(d.select(col(RID)), Seq(RID), "left_anti")))
-    val netDel = del.map(d =>
-      ins.fold(d)(i => d.join(i.select(col(RID)), Seq(RID), "left_anti")))
+    // deltas from every schema epoch read at the declared schema
+    val (netIns, netDel) = netOf(spark, f, root, deltas.values.toSeq.map(_.dir),
+      schemaAtV(spark, f, root, view0))
     // both halves keep their rids; a fold commits even when all nets out
     val dir = (netDel.map(asDead) ++ netIns.map(asBorn))
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
@@ -1900,9 +1886,11 @@ object TxnMergeOnRead {
     * deletes log-REFERENCED dirs that fell out of the window (superseded by
     * compactions). Unreferenced data dirs are never touched: they are
     * in-flight writers' stages, not garbage (abandoned stages are deleted
-    * by their own writer). Stray `.tmp_*` files inside `_txnlog` ARE swept:
-    * they are dead writers' unfinished commit bodies (a live writer whose
-    * temp is swept just loses that rename and retries). After a vacuum,
+    * by their own writer). Stray `.tmp_*` files inside `_txnlog` ARE swept
+    * ([[Stores.sweepTemps]], under the log dir's commit lock): they are
+    * dead writers' unfinished commit bodies (a live writer in another
+    * process whose temp is swept just loses that publish and retries;
+    * one in this JVM never loses it). After a vacuum,
     * [[readAt]]/[[changesBetween]] below the window fail on the missing
     * dirs — the documented retention tradeoff every log-structured table
     * format has.
@@ -1960,9 +1948,7 @@ object TxnMergeOnRead {
         doomed.foreach(d => f.delete(new Path(s"$root/$d"), true))
         if (doomed.nonEmpty) MetaCache.purge(root)
         // dead writers' unfinished commit temp files
-        f.listStatus(new Path(s"$root/$LOG_DIR")).toSeq.map(_.getPath)
-          .filter(_.getName.startsWith(".tmp_"))
-          .foreach(p => f.delete(p, false))
+        Stores.sweepTemps(f, new Path(s"$root/$LOG_DIR"))
         if (pruneLog) {
           Try(writeCheckpointAt(f, root, keepFrom))
           if (f.exists(ckptPath(root, keepFrom))) {

@@ -149,6 +149,9 @@ class ChangeFeedSpec extends AnyFunSuite with BeforeAndAfterAll {
       ChangeFeed.sync(spark, src, dst, ckpt, Seq("k"))
       assert(ChangeFeed.cursor(spark, ckpt) === Some(head))
       assert(content(dst) === content(src), s"crash at mutation $i of $n")
+      val temps = new java.io.File(new org.apache.hadoop.fs.Path(ckpt).toUri.getPath)
+        .list().filter(_.startsWith(".tmp_"))
+      assert(temps.isEmpty, s"crash at mutation $i of $n left ${temps.mkString(", ")}")
     }
   }
 }

@@ -5,7 +5,7 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import scala.util.{Failure, Success, Try}
 
-import graft.operators.{MetaCache, TxnMergeOnRead}
+import graft.operators.{DataSkipping, MetaCache, Stores, TxnMergeOnRead}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -662,6 +662,25 @@ class TxnMorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TxnMergeOnRead.read(spark, root).count() === 25)
   }
 
+  test("a commit whose temp file a sweep took loses that publish; the retry commits") {
+    // on `file:` the publish is a hard link from the temp file: another
+    // process's sweep (vacuum, a cursor commit) can delete the temp first
+    val fs = new SweptTempFs
+    fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    val dir = new org.apache.hadoop.fs.Path(s"$base/swept/_txnlog")
+    fs.delete(dir, true)
+    val dst = new org.apache.hadoop.fs.Path(dir, "00000000000000000001.json")
+    fs.sweepNext = true
+    assert(!Stores.commitOnce(fs, dst, "lost"), "a swept temp loses the publish")
+    assert(!fs.exists(dst))
+    assert(Stores.commitOnce(fs, dst, "won"), "the retry commits")
+    val in = fs.open(dst)
+    try assert(scala.io.Source.fromInputStream(in, "UTF-8").mkString === "won")
+    finally in.close()
+    Stores.sweepTemps(fs, dir)
+    assert(fs.listStatus(dir).map(_.getPath.getName).toSeq === Seq(dst.getName))
+  }
+
   test("pre-round-10 4-field log entries still parse (fp defaults empty)") {
     val root = s"$base/legacy"
     mk(root, 10)
@@ -1006,5 +1025,124 @@ class TxnMorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(orphan.forall(d => new File(s"$local/$d").exists),
       "vacuum spares a dir no entry references")
     assert(TxnMergeOnRead.read(spark, root).orderBy("k").collect().sameElements(pre))
+  }
+
+  // ---- reads: one parquet scan per half, whatever the live-dir count ----
+
+  /** The rows of `df`, each rendered as its comma-joined values, sorted. */
+  private def rendered(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString(",")).sorted
+
+  test("40 live delta dirs read as one parquet scan per half; building the read runs no job") {
+    val root = s"$base/scan40"
+    mk(root, 100)
+    val model = scala.collection.mutable.Map((0L until 100L).map(k => k -> k * 10): _*)
+    // 40 statements, one live delta dir each — above Spark's 32-path
+    // parallel-listing threshold
+    for (i <- 0 until 40) {
+      val born = 1000L + i * 10
+      i % 4 match {
+        case 0 =>
+          TxnMergeOnRead.insert(spark, root, spark.range(born, born + 3)
+            .select(col("id").as("k"), lit(i.toLong).as("v")))
+          (born until born + 3).foreach(model(_) = i.toLong)
+        case 1 =>
+          TxnMergeOnRead.update(spark, root, Seq("v" -> "v + 1"), s"k % 9 = ${i % 9}")
+          model.keys.toSeq.filter(_ % 9 == i % 9).foreach(k => model(k) += 1)
+        case 2 =>
+          TxnMergeOnRead.delete(spark, root, s"k = $i OR k = ${born - 20}")
+          model -= i.toLong
+          model -= born - 20
+        case 3 =>
+          assert(TxnMergeOnRead.insertBatch(spark, root, s"b$i",
+            spark.range(born, born + 2).select(col("id").as("k"), lit(-1L).as("v"))))
+          (born until born + 2).foreach(model(_) = -1L)
+      }
+    }
+    val deltas = TxnMergeOnRead.liveBase(spark, root)._2.map(_.stripSuffix("/insert"))
+    assert(deltas.size === 40)
+    val (df, buildJobs) = JobCounter.during(spark)(TxnMergeOnRead.read(spark, root))
+    assert(buildJobs === 0, "building the snapshot lists in no job")
+    val (rows, readJobs) = JobCounter.during(spark)(df.collect())
+    assert(readJobs === 2, "the delete broadcast and the result, nothing before")
+    val plan = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert("FileScan parquet".r.findAllIn(plan).size === 2, plan)
+    assert(plan.contains("BroadcastExchange") && plan.contains("LeftAnti"), plan)
+    assert(rows.length === model.size)
+    assert(rows.map(r => r.getLong(0) -> r.getLong(1)).toMap === model.toMap)
+    // cold file lists (a fresh JVM) are listed on the driver: still no job
+    deltas.foreach(d => MetaCache.purge(s"$root/$d"))
+    val (cold, coldJobs) = JobCounter.during(spark)(TxnMergeOnRead.read(spark, root))
+    assert(coldJobs === 0)
+    assert(rendered(cold) === rendered(df))
+  }
+
+  test("schema epochs, RESTORE, time travel around a checkpoint, pruned reads, CDC and a minor fold read the expected rows") {
+    val root = s"$base/scan_epochs"
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
+    TxnMergeOnRead.create(spark, root,
+      spark.range(0, 30).select(col("id").as("k"), (col("id") * 10).as("v"))) // v1
+    TxnMergeOnRead.insert(spark, root,
+      spark.range(100, 105).select(col("id").as("k"), lit(1L).as("v")))        // v2
+    TxnMergeOnRead.addColumns(spark, root, Seq("tag" -> "STRING"))             // v3
+    TxnMergeOnRead.update(spark, root,
+      Seq("v" -> "v + 1", "tag" -> "'u'"), "k < 5")                            // v4
+    TxnMergeOnRead.insert(spark, root, spark.range(200, 202).select(
+      col("id").as("k"), lit(2L).as("v"), lit("m").as("tag"),
+      lit(7).as("w")), mergeSchema = true)                                     // v5
+    TxnMergeOnRead.delete(spark, root, "k = 1 OR k = 100")                     // v6
+    TxnMergeOnRead.checkpoint(spark, root)
+    TxnMergeOnRead.update(spark, root, Seq("w" -> "9"), "k = 200")             // v7
+    def row(k: Long, v: Long, tag: String, w: Any): String = s"$k,$v,$tag,$w"
+    val at2 = ((0L until 30L).map(k => s"$k,${k * 10}") ++
+      (100L until 105L).map(k => s"$k,1")).sorted
+    val at5 = ((0L until 30L).map(k =>
+        if (k < 5) row(k, k * 10 + 1, "u", null) else row(k, k * 10, null, null)) ++
+      (100L until 105L).map(row(_, 1, null, null)) ++
+      Seq(row(200, 2, "m", 7), row(201, 2, "m", 7))).sorted
+    val head = at5.filterNot(r => r.startsWith("1,") || r.startsWith("100,"))
+      .map(r => if (r.startsWith("200,")) row(200, 2, "m", 9) else r).sorted
+    assert(rendered(TxnMergeOnRead.readAt(spark, root, 2L)) === at2)
+    assert(rendered(TxnMergeOnRead.readAt(spark, root, 5L)) === at5,
+      "below the checkpoint")
+    assert(rendered(TxnMergeOnRead.readAt(spark, root, 7L)) === head,
+      "above the checkpoint")
+    assert(rendered(TxnMergeOnRead.read(spark, root)) === head)
+    // CDC over (3, 7]: k = 1's and k = 200's first new versions were born
+    // and killed inside the range and net out of both sides
+    assert(rendered(TxnMergeOnRead.changesBetween(spark, root, 3L, 7L)) === (
+      Seq(0L, 2L, 3L, 4L).map(k => row(k, k * 10 + 1, "u", null) + ",insert") ++
+      Seq(row(200, 2, "m", 9), row(201, 2, "m", 7)).map(_ + ",insert") ++
+      (0L until 5L).map(k => row(k, k * 10, null, null) + ",delete") :+
+      (row(100, 1, null, null) + ",delete")).sorted)
+    TxnMergeOnRead.analyze(spark, root)
+    assert(rendered(TxnMergeOnRead.readPruned(spark, root,
+      Seq(DataSkipping.Band("k", 0L, 3L)))) ===
+      Seq(row(0, 1, "u", null), row(2, 21, "u", null), row(3, 31, "u", null)))
+    assert(TxnMergeOnRead.compactMinor(spark, root))                          // v8
+    assert(rendered(TxnMergeOnRead.read(spark, root)) === head)
+    TxnMergeOnRead.restore(spark, root, 5L)                                   // v9
+    assert(rendered(TxnMergeOnRead.read(spark, root)) === at5)
+  }
+}
+
+/** A local filesystem whose next `.tmp_` file, once `sweepNext` is set, is
+  * deleted as soon as it is closed: a sweep in another process running
+  * between a commit's temp write and its publish. */
+class SweptTempFs extends org.apache.hadoop.fs.LocalFileSystem {
+  @volatile var sweepNext = false
+
+  override def create(f: org.apache.hadoop.fs.Path,
+      overwrite: Boolean): org.apache.hadoop.fs.FSDataOutputStream = {
+    val out = super.create(f, overwrite)
+    if (!sweepNext || !f.getName.startsWith(".tmp_")) out
+    else {
+      sweepNext = false
+      val self = this
+      new org.apache.hadoop.fs.FSDataOutputStream(out, null) {
+        override def close(): Unit = { super.close(); self.delete(f, false) }
+      }
+    }
   }
 }

@@ -1,15 +1,12 @@
 package graft
 
 import java.io.File
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.operators.{MetaCache, Stores, TxnMergeOnRead, TxnSql}
 import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -235,35 +232,7 @@ class TxnStageSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(json(TxnMergeOnRead.read(spark, root)) == before)
   }
 
-  /** Spark jobs started by `body` (a marked sentinel job brackets it, so
-    * the asynchronous listener bus has delivered every earlier start). */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger()
-    @volatile var seen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties)
-            .exists(_.getProperty("txnstagespec.sentinel") != null))
-          seen.countDown()
-        else jobs.incrementAndGet()
-    }
-    def flush(): Unit = {
-      seen = new CountDownLatch(1)
-      val sc = spark.sparkContext
-      sc.setLocalProperty("txnstagespec.sentinel", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("txnstagespec.sentinel", null)
-      assert(seen.await(60, TimeUnit.SECONDS), "sentinel job never reported")
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      flush()
-      val before = jobs.get()
-      body
-      flush()
-      jobs.get() - before
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsDuring(body: => Unit): Int = JobCounter.during(spark)(body)._2
 
   test("job counts per DML kind on a small table are pinned") {
     val root = s"$base/jobs"
@@ -291,13 +260,19 @@ class TxnStageSpec extends AnyFunSuite with BeforeAndAfterAll {
           |  src.str, src.dt, src.ts, src.b, src.bin, src.arr, src.m,
           |  src.st)""".stripMargin)),
       "INSERT BATCH" -> (() => TxnMergeOnRead.insertBatch(spark, root, "b1",
-        rowsOf(700, 2)))
+        rowsOf(700, 2))),
+      "SELECT" -> (() => spark.sql(TxnSql.rewriteReads(spark,
+        "SELECT * FROM stage_jobs WHERE id = 3")).collect()),
+      "SELECT AGGREGATE" -> (() => spark.sql(TxnSql.rewriteReads(spark,
+        "SELECT count(*), sum(i) FROM stage_jobs")).collect())
     ).map { case (k, run) => k -> jobsDuring(run()) }
     // the stage is one job; the rest is the snapshot's own plan: once a
     // delete dir exists its rid anti-join broadcasts (one job), and
-    // MERGE broadcasts the snapshot side of its join (one more)
+    // MERGE broadcasts the snapshot side of its join (one more). A
+    // snapshot SELECT is that broadcast plus its own jobs
     assert(counts == Seq("INSERT VALUES" -> 0, "INSERT SELECT" -> 1,
-      "UPDATE" -> 1, "DELETE" -> 2, "MERGE" -> 3, "INSERT BATCH" -> 1))
+      "UPDATE" -> 1, "DELETE" -> 2, "MERGE" -> 3, "INSERT BATCH" -> 1,
+      "SELECT" -> 2, "SELECT AGGREGATE" -> 3))
     assert(json(TxnMergeOnRead.read(spark, root)).size == 20 + 2 + 3 - 1 + 2 + 2)
   }
 
