@@ -89,8 +89,9 @@ object Bench {
     // Documented reference FLOORS for measured-bimodal lifecycles
     // (BENCH_NOTES r17): q199's wall is ~2.8-3.0s when its reference run
     // happened to land in-suite warm but 3.6-4.4s standalone/cold —
-    // TxnReadProbe pinned the cause to ~12 fixed-overhead job round-trips
-    // on 15k rows, not a plan change — so whichever mode the last full run
+    // a per-phase probe (now `Scale profile` of q198/q199) pinned the cause
+    // to ~12 fixed-overhead job round-trips on 15k rows, not a plan
+    // change — so whichever mode the last full run
     // caught becomes the reference and the OTHER mode flags >1.3x every
     // round (r15: 1.78x, r16: 1.37x, all re-measured at/below band). The
     // gate reference is max(last-run wall, floor): the rotating mode can

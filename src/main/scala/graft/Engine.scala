@@ -23,6 +23,11 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Root of every scratch and managed dir the engine, its queries and its
+    * tools write: `target` under the working directory, so two checkouts
+    * never share one. */
+  val scratchRoot: String = s"${sys.props("user.dir")}/target"
+
   /** Build a local session configured the way the driver expects.
     * [[graft.plans.GraftExtensions]] injects the PointLookup optimizer rule
     * and the matchpath planner strategy; the experimental-methods fallback
@@ -64,8 +69,7 @@ object Engine {
       // reject TRUNCATE) need a deterministic warehouse rooted at this
       // checkout — not an absolute literal that a second checkout or
       // concurrent session would collide on
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("user.dir")}/target/warehouse")
+      .config("spark.sql.warehouse.dir", s"$scratchRoot/warehouse")
       // v2 output commit: task commit renames files straight into the
       // destination instead of v1's two-stage per-file rename cascade at
       // job commit (guide §6 — commit cost is pure driver-side wall on a

@@ -65,7 +65,7 @@ object IndexZooSql {
 
   /** Managed root for indexes whose CREATE carries no `path` option; the
     * persisted registry lives at `$managedRoot/_registry`. */
-  @volatile var managedRoot: String = "/root/repo/target/ddl/indexzoo"
+  @volatile var managedRoot: String = s"${graft.Engine.scratchRoot}/ddl/indexzoo"
 
   private def registryDir = s"$managedRoot/_registry"
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Engine
 import graft.operators.{CorpusOps, Dedup, Retrieval}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -879,10 +880,10 @@ object Corpus {
       // default's file count — the bench body pays two index BUILDS
       IndexZooSql.sql(s, "CREATE FULLTEXT INDEX g383_bm ON g383_docs " +
         "(text) AS 'BM25' OPTIONS (buckets=16, " +
-        s"path='/root/repo/target/ddl/$sf/g383_bm')")
+        s"path='${Engine.scratchRoot}/ddl/$sf/g383_bm')")
       IndexZooSql.sql(s, "CREATE FULLTEXT INDEX g383_ps ON g383_docs " +
         "(text) AS 'POSITIONAL' OPTIONS (buckets=16, " +
-        s"path='/root/repo/target/ddl/$sf/g383_ps')")
+        s"path='${Engine.scratchRoot}/ddl/$sf/g383_ps')")
       val ftProbe = "FULLTEXT TOPK ON g383_docs (text) QUERIES " +
         "((1,'dup'), (2,'spark join'), (3,'customer order fast')) LIMIT 5"
       val phProbe = "PHRASE TOPK ON g383_docs (text) PHRASES " +
@@ -925,13 +926,13 @@ object Corpus {
       import graft.operators.{GraphAnn, Mmr, Retrieval}
       import s.implicits._
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val bmIdx = s"/root/repo/target/ddl/$sf/g384_bm"
+      val bmIdx = s"${Engine.scratchRoot}/ddl/$sf/g384_bm"
       Retrieval.bm25WriteIndex(docs(s, dir), bmIdx, nBuckets = 16)
       val lex = Retrieval.bm25TopKIndexed(s, bmIdx, bm25Queries, k = 20)
         .select(col("query_id"), col("doc_id"), col("rk"))
       val e = graft.Engine.table(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding"))
-      val gIdx = s"/root/repo/target/ddl/$sf/g384_graph"
+      val gIdx = s"${Engine.scratchRoot}/ddl/$sf/g384_graph"
       GraphAnn.writeIndex(e, gIdx, m = 8, m1 = 4, nBuckets = 16,
         g0Opt = Some(Pipeline.cachedGraph(s, dir, "full_m8")(
           GraphAnn.knnGraph(e, 8))),
@@ -1038,10 +1039,10 @@ object Corpus {
         .createOrReplaceTempView("g388_emb")
       graft.Engine.sql(s, dir, "CREATE FULLTEXT INDEX g388_bm ON " +
         "g388_docs (text) AS 'BM25' OPTIONS (buckets=16, " +
-        s"path='/root/repo/target/ddl/$sf/g388_bm')")
+        s"path='${Engine.scratchRoot}/ddl/$sf/g388_bm')")
       graft.Engine.sql(s, dir, "CREATE VECTOR INDEX g388_vi ON g388_emb " +
         "(embedding) AS 'GRAPH' OPTIONS (m=8, m1=4, buckets=16, " +
-        s"maxlayers=1, path='/root/repo/target/ddl/$sf/g388_vi')")
+        s"maxlayers=1, path='${Engine.scratchRoot}/ddl/$sf/g388_vi')")
       graft.Engine.sql(s, dir, "HYBRID TOPK ON g388_docs (text) " +
           "VECTORS g388_emb (embedding) QUERIES ((1,'dup',7), " +
           "(2,'spark join',14), (3,'customer order fast',21)) LIMIT 5 " +
@@ -1068,8 +1069,8 @@ object Corpus {
         |FROM rk WHERE rk <= 10 ORDER BY query_id, rk""") { (s, dir) =>
       val sf = new java.io.File(dir).getName.replace(".", "_")
       graft.streaming.StreamOps.streamingBm25Index(s, dir,
-          s"/root/repo/target/ddl/$sf/g390_txn",
-          s"/root/repo/target/ddl/$sf/g390_idx", bm25Queries, k = 10)
+          s"${Engine.scratchRoot}/ddl/$sf/g390_txn",
+          s"${Engine.scratchRoot}/ddl/$sf/g390_idx", bm25Queries, k = 10)
         .orderBy("query_id", "rk")
     }
   )
@@ -1078,10 +1079,10 @@ object Corpus {
     * builder stays self-contained (build-then-probe), and two SFs never
     * share an index. */
   private def bm25IndexPath(dir: String): String =
-    s"${sys.props("user.dir")}/target/bm25index/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    s"${Engine.scratchRoot}/bm25index/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
 
   private def phraseIndexPath(dir: String): String =
-    s"${sys.props("user.dir")}/target/phraseindex/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    s"${Engine.scratchRoot}/phraseindex/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
 
   /** The q384 four-stage oracle (BM25 scoring -> two-layer descent ->
     * RRF -> five greedy MMR rounds), shared with q388: the HYBRID TOPK

@@ -19,7 +19,7 @@ object Ddl {
   private def ctx(s: SparkSession, dir: String): (String, String) = {
     Engine.registerAll(s, dir)
     val sf = new java.io.File(dir).getName.replace(".", "_")
-    (sf, s"/root/repo/target/ddl/$sf")
+    (sf, s"${Engine.scratchRoot}/ddl/$sf")
   }
 
   val all: Seq[Qd] = Seq(
@@ -397,7 +397,7 @@ object Ddl {
       Seq(tbl, tb2, tb3).foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS $t")
         org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"/root/repo/target/warehouse/${t.toLowerCase}"))
+          new java.io.File(s"${Engine.scratchRoot}/warehouse/${t.toLowerCase}"))
       }
       s.sql(s"CREATE TABLE $tbl (n_name STRING, nk BIGINT, rk INT) " +
         "USING parquet PARTITIONED BY (rk)")
@@ -465,7 +465,7 @@ object Ddl {
       Seq(tbl, tb2).foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS $t")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(
-          s"${sys.props("user.dir")}/target/warehouse/${t.toLowerCase}"))
+          s"${Engine.scratchRoot}/warehouse/${t.toLowerCase}"))
       }
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(exp))
       s.sql(s"CREATE TABLE $tbl (n_name STRING, nk BIGINT, rk INT) " +

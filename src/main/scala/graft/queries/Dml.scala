@@ -23,7 +23,7 @@ object Dml {
   private def ctx(s: SparkSession, dir: String): (String, String) = {
     Engine.registerAll(s, dir)
     val sf = new java.io.File(dir).getName.replace(".", "_")
-    (sf, s"/root/repo/target/ddl/$sf")
+    (sf, s"${Engine.scratchRoot}/ddl/$sf")
   }
 
   val all: Seq[Qd] = Seq(

@@ -24,7 +24,7 @@ object KvHandlerQ {
   private def ctx(s: SparkSession, dir: String): (String, String) = {
     Engine.registerAll(s, dir)
     val sf = new java.io.File(dir).getName.replace(".", "_")
-    (sf, s"/root/repo/target/ddl/$sf")
+    (sf, s"${Engine.scratchRoot}/ddl/$sf")
   }
 
   /** KV roots are LSM state: a re-run must start from generation 1, not

@@ -376,7 +376,7 @@ object Pipeline {
         |${ivfTailSql("cents2")}""") { (s, dir) =>
       val e = emb(s, dir)
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val idx = s"/root/repo/target/ddl/$sf/g275_ivf"
+      val idx = s"${Engine.scratchRoot}/ddl/$sf/g275_ivf"
       AnnSearch.ivfIndexInitTrained(e.filter(col("id") % 3 === 0), 40, 2, idx)
       AnnSearch.ivfIndexIngest(e.filter(col("id") % 3 === 1), idx)
       AnnSearch.ivfIndexIngest(e.filter(col("id") % 3 === 2), idx)
@@ -495,7 +495,7 @@ object Pipeline {
       import graft.operators.IvfPq
       val e = emb(s, dir)
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val idx = s"/root/repo/target/ddl/$sf/g354_ivfpq"
+      val idx = s"${Engine.scratchRoot}/ddl/$sf/g354_ivfpq"
       IvfPq.trainIndex(e, idx, centroidStride = 40, m = 16, ncent = 16,
         pqStride = 7)
       (0 to 2).foreach(i => IvfPq.addBatch(e.filter(col("id") % 3 === i), idx))
@@ -597,7 +597,7 @@ object Pipeline {
       import graft.operators.IvfPq
       val e = emb(s, dir)
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val idx = s"/root/repo/target/ddl/$sf/g359_ivfpq"
+      val idx = s"${Engine.scratchRoot}/ddl/$sf/g359_ivfpq"
       IvfPq.trainIndex(e, idx, centroidStride = 40, m = 16, ncent = 16,
         pqStride = 7)
       (0 to 2).foreach(i => IvfPq.addBatch(e.filter(col("id") % 3 === i), idx))
@@ -790,7 +790,7 @@ object Pipeline {
     Qd("q371_ann_binary_ingest", binaryHammingOracleSql) { (s, dir) =>
       val e = emb(s, dir)
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val idx = s"/root/repo/target/ddl/$sf/g371_binary_inc"
+      val idx = s"${Engine.scratchRoot}/ddl/$sf/g371_binary_inc"
       graft.operators.BinaryAnn.buildIndex(e.filter(col("id") % 3 === 0), idx)
       (1 to 2).foreach(b =>
         graft.operators.BinaryAnn.addBatch(e.filter(col("id") % 3 === b), idx))
@@ -804,7 +804,7 @@ object Pipeline {
     Qd("q370_ann_binary_index", binaryHammingOracleSql) { (s, dir) =>
       val e = emb(s, dir)
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val idx = s"/root/repo/target/ddl/$sf/g370_binary"
+      val idx = s"${Engine.scratchRoot}/ddl/$sf/g370_binary"
       graft.operators.BinaryAnn.buildIndex(e, idx)
       graft.operators.BinaryAnn.probeIndex(e.filter(col("id") < 50), idx,
           10, shortlist = 32)
@@ -1840,7 +1840,7 @@ object Pipeline {
       import graft.operators.AnnSearch
       val e = emb(s, dir)
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val idx = s"/root/repo/target/ddl/$sf/g260_ivf"
+      val idx = s"${Engine.scratchRoot}/ddl/$sf/g260_ivf"
       // first batch carries ids ≡ 0 (mod 3); stride 40 on it → frozen
       // centroids are exactly the oracle's vec_id % 120 = 0 set
       AnnSearch.ivfIndexInit(e.filter(col("id") % 3 === 0), 40, idx)
@@ -1872,7 +1872,7 @@ object Pipeline {
         |ORDER BY d1, d2""") { (s, dir) =>
       import graft.operators.IncrementalLsh
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val idx = s"/root/repo/target/ddl/$sf/g249_lsh_index"
+      val idx = s"${Engine.scratchRoot}/ddl/$sf/g249_lsh_index"
       IncrementalLsh.init(s, idx)
       val d = docs(s, dir)
       (0 until 4).map { b =>
@@ -1920,7 +1920,7 @@ object Pipeline {
       import graft.operators.GraphAnn
       val e = emb(s, dir)
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val idx = s"/root/repo/target/ddl/$sf/g379_graph_idx"
+      val idx = s"${Engine.scratchRoot}/ddl/$sf/g379_graph_idx"
       GraphAnn.writeIndex(e, idx, m = 8, m1 = 4, nBuckets = 16,
         g0Opt = Some(cachedGraph(s, dir, "full_m8")(GraphAnn.knnGraph(e, 8))),
         g1Opt = Some(cachedGraph(s, dir, "lvl1_m4")(
@@ -2016,7 +2016,7 @@ object Pipeline {
       import graft.operators.GraphAnn
       val e = emb(s, dir)
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val idx = s"/root/repo/target/ddl/$sf/g380_graph_idx"
+      val idx = s"${Engine.scratchRoot}/ddl/$sf/g380_graph_idx"
       val half = e.filter(col("id") % 4 <= 1)
       GraphAnn.writeIndex(half, idx, m = 8, m1 = 4, nBuckets = 16,
         g0Opt = Some(cachedGraph(s, dir, "half_m8")(
@@ -2096,7 +2096,7 @@ object Pipeline {
       import graft.operators.GraphAnn
       val e = emb(s, dir)
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val idx = s"/root/repo/target/ddl/$sf/g381_graph_idx"
+      val idx = s"${Engine.scratchRoot}/ddl/$sf/g381_graph_idx"
       GraphAnn.writeIndex(e, idx, m = 8, m1 = 4, nBuckets = 16,
         g0Opt = Some(cachedGraph(s, dir, "full_m8")(GraphAnn.knnGraph(e, 8))),
         g1Opt = Some(cachedGraph(s, dir, "lvl1_m4")(
@@ -2168,7 +2168,7 @@ object Pipeline {
       e.filter(col("id") < 50).createOrReplaceTempView("g382_queries")
       IndexZooSql.sql(s, "CREATE VECTOR INDEX g382_vi ON g382_corpus " +
         "(embedding) AS 'GRAPH' OPTIONS (m=8, m1=4, buckets=16, " +
-        s"path='/root/repo/target/ddl/$sf/g382_vi')")
+        s"path='${Engine.scratchRoot}/ddl/$sf/g382_vi')")
       val probe = "VECTOR TOPK ON g382_corpus (embedding) QUERIES " +
         "g382_queries LIMIT 10 OPTIONS (ef1=8, hops1=2, ef=16, hops=2)"
       val indexed = IndexZooSql.sql(s, probe)
@@ -2196,7 +2196,7 @@ object Pipeline {
       emb(s, dir).createOrReplaceTempView("g387_corpus")
       graft.Engine.sql(s, dir, "CREATE VECTOR INDEX g387_vi ON g387_corpus " +
         "(embedding) AS 'IVF_PQ' OPTIONS (stride=40, m=16, ncent=16, " +
-        s"pqstride=7, path='/root/repo/target/ddl/$sf/g387_vi')")
+        s"pqstride=7, path='${Engine.scratchRoot}/ddl/$sf/g387_vi')")
       s.catalog.dropTempView("g387_corpus") // probe must not need it
       val s2 = s.newSession()
       emb(s2, dir).filter(col("id") < 50)
@@ -2226,8 +2226,8 @@ object Pipeline {
     Qd("q389_cdc_index_maintenance", cdcBinaryOracleSql) { (s, dir) =>
       import graft.operators.{BinaryAnn, TxnMergeOnRead}
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val root = s"/root/repo/target/ddl/$sf/g389_txn"
-      val idx = s"/root/repo/target/ddl/$sf/g389_bidx"
+      val root = s"${Engine.scratchRoot}/ddl/$sf/g389_txn"
+      val idx = s"${Engine.scratchRoot}/ddl/$sf/g389_bidx"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       val e = emb(s, dir).select(col("id"), col("embedding"))
       TxnMergeOnRead.create(s, root, e.filter(col("id") % 2 === 0))
@@ -2278,7 +2278,7 @@ object Pipeline {
       e.filter(col("id") < 50).createOrReplaceTempView("g391_q")
       graft.Engine.sql(s, dir, "CREATE VECTOR INDEX g391_vi ON g391_base " +
         "(embedding) AS 'BINARY' OPTIONS " +
-        s"(path='/root/repo/target/ddl/$sf/g391_vi')")
+        s"(path='${Engine.scratchRoot}/ddl/$sf/g391_vi')")
       graft.Engine.sql(s, dir, "ALTER VECTOR INDEX g391_vi ADD FROM g391_add")
       graft.Engine.sql(s, dir,
         "ALTER VECTOR INDEX g391_vi REMOVE FROM g391_rm")
@@ -2336,7 +2336,7 @@ object Pipeline {
       .digest(sig.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(12)
     val sf = new java.io.File(dir).getName.replace(".", "_")
-    val path = s"/root/repo/target/graphfix/${sf}_${tag}_$fp"
+    val path = s"${Engine.scratchRoot}/graphfix/${sf}_${tag}_$fp"
     this.synchronized {
       if (!new java.io.File(path, "_SUCCESS").exists()) {
         val tmp = s"$path.tmp_${java.util.UUID.randomUUID.toString.take(8)}"

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Engine
 import graft.procedural.HplSql
 
 /** HPL/SQL procedural scripts (SURVEY.md §2.12; reference
@@ -369,7 +370,7 @@ object Procedural {
         |FROM nation WHERE n_nationkey % 2 = 0 ORDER BY nk""") { (s, dir) =>
       import org.apache.spark.sql.functions._
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val root = s"/root/repo/target/ddl/$sf/g337_copy"
+      val root = s"${Engine.scratchRoot}/ddl/$sf/g337_copy"
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(new org.apache.hadoop.fs.Path(root)))
@@ -421,7 +422,7 @@ object Procedural {
         |ORDER BY src, nk""") { (s, dir) =>
       import org.apache.spark.sql.functions._
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val root = s"/root/repo/target/ddl/$sf/g352_cfl"
+      val root = s"${Engine.scratchRoot}/ddl/$sf/g352_cfl"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       HplSql.run(s, dir,
         s"""COPY (SELECT n_nationkey, n_name FROM nation WHERE n_regionkey < 2)

@@ -22,7 +22,7 @@ object Sources {
 
   private def base(dir: String): String = {
     val sf = new java.io.File(dir).getName
-    s"/root/repo/target/srcdata/$sf"
+    s"${Engine.scratchRoot}/srcdata/$sf"
   }
 
   val all: Seq[Qd] = Seq(

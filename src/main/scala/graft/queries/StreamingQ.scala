@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Engine
 import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 
@@ -71,7 +72,7 @@ object StreamingQ {
         |FROM events GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
       import graft.operators.TxnMergeOnRead
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val root = s"/root/repo/target/ddl/$sf/g153_mor_ingest"
+      val root = s"${Engine.scratchRoot}/ddl/$sf/g153_mor_ingest"
       StreamOps.morIngest(s, dir, root, nFiles = 4)
       TxnMergeOnRead.compactMinor(s, root)
       TxnMergeOnRead.read(s, root)
@@ -97,7 +98,7 @@ object StreamingQ {
         |WHERE hour_start + 3600 <= wm
         |ORDER BY hour_start, event_type""") { (s, dir) =>
       val sf = new java.io.File(dir).getName
-      StreamOps.appendHourlyCounts(s, dir, s"/root/repo/target/streamdata/$sf")
+      StreamOps.appendHourlyCounts(s, dir, s"${Engine.scratchRoot}/streamdata/$sf")
         .orderBy("hour_start", "event_type")
     },
 
@@ -128,7 +129,7 @@ object StreamingQ {
         |FROM events GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
       val sf = new java.io.File(dir).getName.replace(".", "_")
       StreamOps.streamingMatView(s, dir,
-        s"/root/repo/target/ddl/$sf/g238_txn", s"/root/repo/target/ddl/$sf/g238_mv")
+        s"${Engine.scratchRoot}/ddl/$sf/g238_txn", s"${Engine.scratchRoot}/ddl/$sf/g238_mv")
         .select(col("event_type"), col("cnt"),
           round(col("sum_value"), 4).as("sv"))
         .orderBy("event_type")
@@ -147,7 +148,7 @@ object StreamingQ {
         |ORDER BY c_eid, p_eid""") { (s, dir) =>
       val sf = new java.io.File(dir).getName
       StreamOps.streamStreamLeftJoin(s, dir,
-        s"/root/repo/target/streamdata/$sf").orderBy("c_eid", "p_eid")
+        s"${Engine.scratchRoot}/streamdata/$sf").orderBy("c_eid", "p_eid")
     },
 
     // Stream–stream FULL OUTER join ([[StreamOps.streamStreamFullOuterJoin]]
@@ -164,7 +165,7 @@ object StreamingQ {
         |ORDER BY c_eid NULLS FIRST, p_eid NULLS FIRST""") { (s, dir) =>
       val sf = new java.io.File(dir).getName
       StreamOps.streamStreamFullOuterJoin(s, dir,
-        s"/root/repo/target/streamdata/$sf")
+        s"${Engine.scratchRoot}/streamdata/$sf")
         .orderBy(col("c_eid").asc_nulls_first, col("p_eid").asc_nulls_first)
     },
 
@@ -181,7 +182,7 @@ object StreamingQ {
         |FROM events GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
       val sf = new java.io.File(dir).getName
       StreamOps.dedupWithinWatermarkCounts(s, dir,
-        s"/root/repo/target/streamdata/$sf")
+        s"${Engine.scratchRoot}/streamdata/$sf")
         .select(col("event_type"), col("n"), col("sv"))
         .orderBy("event_type")
     },
@@ -203,8 +204,8 @@ object StreamingQ {
         |ORDER BY d1, d2""") { (s, dir) =>
       val sf = new java.io.File(dir).getName.replace(".", "_")
       StreamOps.streamingNearDupIndex(s, dir,
-        s"/root/repo/target/ddl/$sf/g253_txn",
-        s"/root/repo/target/ddl/$sf/g253_idx")
+        s"${Engine.scratchRoot}/ddl/$sf/g253_txn",
+        s"${Engine.scratchRoot}/ddl/$sf/g253_idx")
         .orderBy("d1", "d2")
     }
   )

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.Engine
+
 import org.apache.spark.sql.SparkSession
 
 /** TPC-DS-lite: a deterministic, closed-form micro-instance of the TPC-DS
@@ -357,7 +359,7 @@ object TpcdsLite {
 
   // versioned by the generator text: template edits invalidate the cache
   private def scratch: String =
-    s"${sys.props("user.dir")}/target/tpcds_lite_${gens.hashCode.toHexString}"
+    s"${Engine.scratchRoot}/tpcds_lite_${gens.hashCode.toHexString}"
 
   private val registered =
     java.util.Collections.synchronizedSet(new java.util.HashSet[String]())

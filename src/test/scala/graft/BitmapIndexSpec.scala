@@ -20,7 +20,7 @@ class BitmapIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val base = s"${sys.props("user.dir")}/target/bitmapspec"
+  private val base = s"${Engine.scratchRoot}/bitmapspec"
 
   /** 4000 rows, `cat` has 5 values range-clustered across 10 files so a
     * single-value probe must prune; `flag` 2 values scattered. */

@@ -18,7 +18,7 @@ class BloomIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val base = s"${sys.props("user.dir")}/target/bloomspec"
+  private val base = s"${Engine.scratchRoot}/bloomspec"
 
   private def mkDir(name: String, nFiles: Int = 16): String = {
     val out = s"$base/$name"

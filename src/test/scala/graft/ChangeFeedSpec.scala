@@ -23,7 +23,7 @@ class ChangeFeedSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val base = "/root/repo/target/cfspec"
+  private val base = s"${Engine.scratchRoot}/cfspec"
 
   private def mk(tag: String): (String, String, String) = {
     val (src, dst, ckpt) = (s"$base/$tag/src", s"$base/$tag/dst",

@@ -22,7 +22,7 @@ class ConstraintSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val base = "/root/repo/target/constraintspec"
+  private val base = s"${Engine.scratchRoot}/constraintspec"
 
   private def mk(tag: String): String = {
     val root = s"$base/$tag"

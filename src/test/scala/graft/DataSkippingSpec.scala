@@ -24,7 +24,7 @@ class DataSkippingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val base = "/root/repo/target/skipspec"
+  private val base = s"${Engine.scratchRoot}/skipspec"
 
   private def fresh(name: String): String = {
     val p = s"$base/$name"

@@ -18,7 +18,7 @@ class DmlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val base = "/root/repo/target/dmlspec"
+  private val base = s"${Engine.scratchRoot}/dmlspec"
 
   /** parquet data files under a partition dir with their mtimes. */
   private def files(loc: String, part: String): Map[String, Long] = {

@@ -21,12 +21,12 @@ class ExportImportSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val scratch = s"${sys.props("user.dir")}/target/eximpspec"
+  private val scratch = s"${Engine.scratchRoot}/eximpspec"
 
   private def dropAll(names: String*): Unit = names.foreach { t =>
     spark.sql(s"DROP TABLE IF EXISTS `$t`")
     FileUtils.deleteQuietly(new File(
-      s"${sys.props("user.dir")}/target/warehouse/${t.toLowerCase}"))
+      s"${Engine.scratchRoot}/warehouse/${t.toLowerCase}"))
   }
 
   test("bucket spec survives the round-trip and the SMB join stays shuffle-free") {

@@ -22,7 +22,7 @@ class GeneratedColsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var n = 0
   private def freshRoot(): String = {
     n += 1
-    s"${sys.props("user.dir")}/target/genspec/t$n"
+    s"${Engine.scratchRoot}/genspec/t$n"
   }
 
   private def mk(rows: Seq[(Long, Double)]): DataFrame = {

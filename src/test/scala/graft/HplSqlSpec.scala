@@ -429,9 +429,9 @@ class HplSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("result SELECT materializes at its point in script order (later DML invisible)") {
     val r = run1(
-      """DROP TABLE IF EXISTS g_hpl_order_spec;
+      s"""DROP TABLE IF EXISTS g_hpl_order_spec;
         |CREATE TABLE g_hpl_order_spec (v INT) USING parquet
-        |  LOCATION '/root/repo/target/ddl/hpl_order_spec';
+        |  LOCATION '${Engine.scratchRoot}/ddl/hpl_order_spec';
         |INSERT OVERWRITE g_hpl_order_spec VALUES (1), (2);
         |SELECT count(*) AS n FROM g_hpl_order_spec;
         |INSERT INTO g_hpl_order_spec VALUES (3);""".stripMargin)
@@ -440,9 +440,9 @@ class HplSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CTE-prefixed DML is a command, not the script result") {
     val r = run1(
-      """DROP TABLE IF EXISTS g_hpl_cte_spec;
+      s"""DROP TABLE IF EXISTS g_hpl_cte_spec;
         |CREATE TABLE g_hpl_cte_spec (v INT) USING parquet
-        |  LOCATION '/root/repo/target/ddl/hpl_cte_spec';
+        |  LOCATION '${Engine.scratchRoot}/ddl/hpl_cte_spec';
         |SELECT 42 AS answer;
         |WITH src AS (SELECT 7 AS v) INSERT OVERWRITE g_hpl_cte_spec SELECT v FROM src;""".stripMargin)
     assert(r.schema.fieldNames.sameElements(Array("answer")) && r.getInt(0) == 42,
@@ -805,7 +805,7 @@ class HplSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---------------------------------------------------------------- COPY TO
 
   private def copyRoot(tag: String): String = {
-    val d = s"/root/repo/target/hplsql-copy-spec/$tag"
+    val d = s"${Engine.scratchRoot}/hplsql-copy-spec/$tag"
     val p = new org.apache.hadoop.fs.Path(d)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
@@ -884,7 +884,7 @@ class HplSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("COPY FROM LOCAL: single-file exact-target vs multi-file naming, " +
       "IGNORE downgrades an exists-collision, subdir relative paths kept") {
-    val base = new java.io.File("/root/repo/target/hplsqlspec/cfl")
+    val base = new java.io.File(s"${Engine.scratchRoot}/hplsqlspec/cfl")
     org.apache.commons.io.FileUtils.deleteQuietly(base)
     val srcDir = new java.io.File(base, "src"); srcDir.mkdirs()
     val sub = new java.io.File(srcDir, "sub"); sub.mkdirs()

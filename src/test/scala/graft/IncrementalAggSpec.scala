@@ -21,7 +21,7 @@ class IncrementalAggSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val base = "/root/repo/target/incraggspec"
+  private val base = s"${Engine.scratchRoot}/incraggspec"
 
   private def mk(tag: String): (String, String) = {
     val root = s"$base/$tag/tbl"

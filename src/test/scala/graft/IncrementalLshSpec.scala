@@ -20,7 +20,7 @@ class IncrementalLshSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var n = 0
   private def freshIdx(): String = {
     n += 1
-    s"${sys.props("user.dir")}/target/ilshspec/i$n"
+    s"${Engine.scratchRoot}/ilshspec/i$n"
   }
 
   /** corpus with exact dups, near-dups (one word swapped), and uniques */

@@ -109,7 +109,7 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var savedRoot: String = _
-  private val base = s"${sys.props("user.dir")}/target/indexstorespec"
+  private val base = s"${Engine.scratchRoot}/indexstorespec"
 
   /** Seeded synthetic corpora: 200 64-dim vectors and 200 twenty-word
     * documents over a twelve-word vocabulary. */

@@ -26,7 +26,7 @@ class KvHandlerSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def tmp(name: String): String = {
-    val d = s"/root/repo/target/kvspec/$name"
+    val d = s"${Engine.scratchRoot}/kvspec/$name"
     val p = new org.apache.hadoop.fs.Path(d)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (f.exists(p)) f.delete(p, true)

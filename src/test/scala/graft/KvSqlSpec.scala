@@ -20,7 +20,7 @@ class KvSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def root(name: String): String = {
-    val d = s"/root/repo/target/kvsqlspec/$name"
+    val d = s"${Engine.scratchRoot}/kvsqlspec/$name"
     val p = new org.apache.hadoop.fs.Path(d)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (f.exists(p)) f.delete(p, true)

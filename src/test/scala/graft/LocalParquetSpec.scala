@@ -24,7 +24,7 @@ class LocalParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val base = "/root/repo/target/localparquetspec"
+  private val base = s"${Engine.scratchRoot}/localparquetspec"
 
   private def fresh(name: String): String = {
     val p = s"$base/$name"

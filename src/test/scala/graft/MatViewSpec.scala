@@ -22,7 +22,7 @@ class MatViewSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val base = "/root/repo/target/mvspec"
+  private val base = s"${Engine.scratchRoot}/mvspec"
 
   /** A txn table with known content: k unique, g in 0..4, h in 0..1,
     * x double. */

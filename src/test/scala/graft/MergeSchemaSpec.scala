@@ -21,7 +21,7 @@ class MergeSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var n = 0
   private def mkTable(): String = {
     n += 1
-    val root = s"${sys.props("user.dir")}/target/msspec/t$n"
+    val root = s"${Engine.scratchRoot}/msspec/t$n"
     import spark.implicits._
     TxnMergeOnRead.create(spark, root,
       Seq((1L, "a"), (2L, "b")).toDF("id", "s"))

@@ -29,7 +29,7 @@ class MetaCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val base = s"${sys.props("user.dir")}/target/metacachespec"
+  private val base = s"${Engine.scratchRoot}/metacachespec"
 
   private def fresh(name: String): String = {
     val p = s"$base/$name"

@@ -120,7 +120,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("IVF-PQ index lifecycle: buildIndex + probeIndex == ivfPqTopK, " +
       "one file per inverted list") {
     val queries = emb.filter(col("id") < 30)
-    val path = "/root/repo/target/pipelinespec/ivfpq_idx"
+    val path = s"${Engine.scratchRoot}/pipelinespec/ivfpq_idx"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
     val idx = IvfPq.buildIndex(emb, path, centroidStride = 40,
       m = 16, ncent = 16, pqStride = 7)
@@ -147,7 +147,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("IVF-PQ incremental ingest: train + addBatch* == one-shot buildIndex, " +
       "order-independent, openIndex round-trips the frozen book") {
     val queries = emb.filter(col("id") < 30)
-    val root = "/root/repo/target/pipelinespec/ivfpq_inc"
+    val root = s"${Engine.scratchRoot}/pipelinespec/ivfpq_inc"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     def results(idx: IvfPq.IvfPqIndex) =
       IvfPq.probeIndex(queries, emb, idx, 10, nprobe = 4, shortlist = 64)
@@ -208,7 +208,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("IVF-PQ remove_ids: tombstones mask before the ADC scan; compaction " +
       "drops codes physically with identical probe results") {
     val queries = emb.filter(col("id") < 30)
-    val root = "/root/repo/target/pipelinespec/ivfpq_del"
+    val root = s"${Engine.scratchRoot}/pipelinespec/ivfpq_del"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     IvfPq.buildIndex(emb, root, centroidStride = 40,
       m = 16, ncent = 16, pqStride = 7)
@@ -297,7 +297,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one-shot reference: stride 120 over the union derives EXACTLY the
     // centroid set the incremental init freezes (ids ≡ 0 mod 3 ∩ mod 40)
     val oneShot = result(AnnSearch.ivfTopK(queries, emb, 10, 120, 2))
-    val base = s"${sys.props("user.dir")}/target/ivfspec"
+    val base = s"${Engine.scratchRoot}/ivfspec"
     for ((order, i) <- Seq(Seq(1, 2), Seq(2, 1)).zipWithIndex) {
       val idx = s"$base/i$i"
       AnnSearch.ivfIndexInit(emb.filter(col("id") % 3 === 0), 40, idx)

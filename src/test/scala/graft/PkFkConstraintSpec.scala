@@ -32,7 +32,7 @@ class PkFkConstraintSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a crashed earlier run can leave an orphan managed-table location that
     // DROP (of the no-longer-registered table) does not clean
     Seq("cs_parent", "cs_child").foreach(t => org.apache.commons.io.FileUtils
-      .deleteQuietly(new java.io.File(s"${sys.props("user.dir")}/target/warehouse/$t")))
+      .deleteQuietly(new java.io.File(s"${Engine.scratchRoot}/warehouse/$t")))
     spark.sql("CREATE TABLE cs_parent USING parquet AS " +
       "SELECT c_custkey, c_name, c_nationkey FROM customer")
     spark.sql("CREATE TABLE cs_child USING parquet AS SELECT o_orderkey, " +

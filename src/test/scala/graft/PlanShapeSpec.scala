@@ -290,7 +290,7 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the O(changes in range) claim, asserted at the plan level: every
     // parquet location in changesBetween's executed plan is a delta dir of
     // the consumed range; a base_ path anywhere means a table rescan
-    val root = "/root/repo/target/planshape/cdc_scan"
+    val root = s"${Engine.scratchRoot}/planshape/cdc_scan"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     import org.apache.spark.sql.functions.{col => c, lit => l}
     graft.operators.TxnMergeOnRead.create(spark, root,

@@ -70,7 +70,7 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = "/root/testdata/sf0.001"
     val d = Engine.table(spark, dir, "documents")
     val qs = Seq(1 -> Seq("dup"), 2 -> Seq("spark", "join"))
-    val idx = "/root/repo/target/bm25index/spec"
+    val idx = s"${Engine.scratchRoot}/bm25index/spec"
     Retrieval.bm25WriteIndex(d, idx)
     val oneShot = Retrieval.bm25TopK(d, qs, k = 10).collect().map(_.toSeq).toSet
     assert(oneShot.nonEmpty)
@@ -92,13 +92,13 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = Engine.table(spark, dir, "documents")
     def part(i: Int) = d.filter(col("doc_id") % 3 === i)
     val qs = Seq(1 -> Seq("dup"), 2 -> Seq("spark", "join"))
-    val one = "/root/repo/target/bm25index/ingest_one"
+    val one = s"${Engine.scratchRoot}/bm25index/ingest_one"
     Retrieval.bm25WriteIndex(d, one)
     val ref = Retrieval.bm25TopKIndexed(spark, one, qs, k = 10)
       .collect().map(_.toSeq).toSet
     assert(ref.nonEmpty)
     for (order <- Seq(Seq(0, 1, 2), Seq(2, 0, 1))) {
-      val p = s"/root/repo/target/bm25index/ingest_${order.mkString}"
+      val p = s"${Engine.scratchRoot}/bm25index/ingest_${order.mkString}"
       Retrieval.bm25WriteIndex(part(order.head), p)
       order.tail.foreach(i => Retrieval.bm25AddBatch(part(i), p))
       val got = Retrieval.bm25TopKIndexed(spark, p, qs, k = 10)
@@ -106,13 +106,13 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got == ref, s"bm25 batch order $order diverged from one-shot")
     }
     val phr = Seq(1 -> Seq("spark", "join"), 2 -> Seq("big", "big"))
-    val pOne = "/root/repo/target/phraseindex/ingest_one"
+    val pOne = s"${Engine.scratchRoot}/phraseindex/ingest_one"
     Retrieval.phraseWriteIndex(d, pOne, nBuckets = 8)
     val pRef = Retrieval.phraseTopKIndexed(spark, pOne, phr, k = 10)
       .collect().map(_.toSeq).toSet
     assert(pRef.nonEmpty)
     for (order <- Seq(Seq(0, 1, 2), Seq(1, 2, 0))) {
-      val p = s"/root/repo/target/phraseindex/ingest_${order.mkString}"
+      val p = s"${Engine.scratchRoot}/phraseindex/ingest_${order.mkString}"
       Retrieval.phraseWriteIndex(part(order.head), p, nBuckets = 8)
       order.tail.foreach(i => Retrieval.phraseAddBatch(part(i), p))
       val got = Retrieval.phraseTopKIndexed(spark, p, phr, k = 10)
@@ -120,7 +120,7 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got == pRef, s"phrase batch order $order diverged from one-shot")
     }
     // compaction is purely physical: probe-identical, per-batch rows fold
-    val cp = "/root/repo/target/bm25index/ingest_012"
+    val cp = s"${Engine.scratchRoot}/bm25index/ingest_012"
     Retrieval.bm25CompactIndex(spark, cp)
     assert(Retrieval.bm25TopKIndexed(spark, cp, qs, k = 10)
       .collect().map(_.toSeq).toSet == ref,
@@ -131,7 +131,7 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
       "compaction left multiple df rows for one term")
     assert(spark.read.parquet(compacted.dir("stats")).count() == 1,
       "compaction left multiple stats deltas")
-    val pp = "/root/repo/target/phraseindex/ingest_012"
+    val pp = s"${Engine.scratchRoot}/phraseindex/ingest_012"
     Retrieval.phraseCompactIndex(spark, pp)
     assert(Retrieval.phraseTopKIndexed(spark, pp, phr, k = 10)
       .collect().map(_.toSeq).toSet == pRef,

@@ -102,7 +102,7 @@ class SourcesRcSpec extends AnyFunSuite {
   // ---- job-commit protocol (Spark level) -------------------------------
 
   private lazy val spark = Engine.session(cores = 4, appName = "graft-rc")
-  private val scratch = "/root/repo/target/grcf-spec"
+  private val scratch = s"${Engine.scratchRoot}/grcf-spec"
 
   test("write is job-committed: _SUCCESS present, old data survives a failed job") {
     import spark.implicits._

@@ -108,7 +108,7 @@ class SqlStdAuthSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("INSERT needs INSERT; INSERT OVERWRITE additionally needs DELETE (QUERY op map)") {
     SqlStdAuth.enable(adminUser = "alice")
-    val root = "/root/repo/target/authspec/t1"
+    val root = s"${Engine.scratchRoot}/authspec/t1"
     val p = new org.apache.hadoop.fs.Path(root)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (f.exists(p)) f.delete(p, true)

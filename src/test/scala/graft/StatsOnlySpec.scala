@@ -21,7 +21,7 @@ class StatsOnlySpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private val tbl = "statsonly_t"
-  private val loc = "/root/repo/target/statsonlyspec/t"
+  private val loc = s"${Engine.scratchRoot}/statsonlyspec/t"
 
   override def beforeAll(): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $tbl")

@@ -26,7 +26,7 @@ class StorageOptSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("PushedFilters: [In(k"),
       s"IN predicate did not reach the ORC scan:\n$plan")
     // footer: bloom stream present for column k (id 1), absent elsewhere
-    val d = new java.io.File(s"/root/repo/target/srcdata/sf0.001/orc_bloom_orders")
+    val d = new java.io.File(s"${Engine.scratchRoot}/srcdata/sf0.001/orc_bloom_orders")
     val orc = d.listFiles().filter(_.getName.endsWith(".orc")).head
     val conf = new org.apache.hadoop.conf.Configuration()
     val reader = org.apache.orc.OrcFile.createReader(

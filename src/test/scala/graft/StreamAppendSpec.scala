@@ -15,7 +15,7 @@ class StreamAppendSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = Engine.session(cores = 4, appName = "graft-sapp")
   private val dir = "/root/testdata/sf0.001"
-  private val scratch = "/root/repo/target/streamdata/spec"
+  private val scratch = s"${Engine.scratchRoot}/streamdata/spec"
 
   override def afterAll(): Unit = spark.stop()
 
@@ -88,7 +88,7 @@ class StreamAppendSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("stream-stream LEFT OUTER join runs the symmetric hash join in" +
       " LeftOuter mode and emits every unmatched click (q244 contract)") {
     import org.apache.spark.sql.functions.col
-    val scratch = s"${sys.props("user.dir")}/target/streamspec/ssloj"
+    val scratch = s"${Engine.scratchRoot}/streamspec/ssloj"
     val df = StreamOps.streamStreamLeftJoin(spark, dir, scratch)
     // the memory table the helper returns is the EXECUTED run's sink;
     // the last active-run plan is inspectable via the sink table's query
@@ -118,7 +118,7 @@ class StreamAppendSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("stream-stream FULL OUTER emits BOTH sides' unmatched rows and" +
       " converges to the exact batch full-outer join; sentinels withheld") {
     import org.apache.spark.sql.functions.{col, expr}
-    val scratch = s"${sys.props("user.dir")}/target/streamspec/ssfoj"
+    val scratch = s"${Engine.scratchRoot}/streamspec/ssfoj"
     def key(r: org.apache.spark.sql.Row) =
       (if (r.isNullAt(0)) -1L else r.getLong(0),
         if (r.isNullAt(1)) -1L else r.getLong(1))
@@ -143,7 +143,7 @@ class StreamAppendSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("dropDuplicatesWithinWatermark catches JITTERED retries that exact" +
       " (id, ts) dedup would double-count") {
     import org.apache.spark.sql.functions.col
-    val scratch = s"${sys.props("user.dir")}/target/streamspec/ddww"
+    val scratch = s"${Engine.scratchRoot}/streamspec/ddww"
     val got = StreamOps.dedupWithinWatermarkCounts(spark, dir, scratch)
       .select("event_type", "n").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -158,7 +158,7 @@ class StreamAppendSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("left-outer replay survives a TINY corpus whose data part is no" +
       " larger than a sentinel part — file identity, not size, pins order") {
-    val tiny = s"${sys.props("user.dir")}/target/streamspec/tinyev"
+    val tiny = s"${Engine.scratchRoot}/streamspec/tinyev"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tiny))
     import spark.implicits._
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")

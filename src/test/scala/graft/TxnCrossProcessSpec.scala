@@ -24,7 +24,7 @@ class TxnCrossProcessSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("two separate JVMs racing inserts: all commits land exactly once" +
       " with contiguous versions") {
-    val root = s"${sys.props("user.dir")}/target/xprocspec/t1"
+    val root = s"${Engine.scratchRoot}/xprocspec/t1"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     import spark.implicits._
     TxnMergeOnRead.create(spark, root,

@@ -21,7 +21,7 @@ class TxnSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val base = "/root/repo/target/txnsqlspec"
+  private val base = s"${Engine.scratchRoot}/txnsqlspec"
 
   private def mk(tag: String): String = {
     val root = s"$base/$tag"

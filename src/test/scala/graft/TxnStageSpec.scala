@@ -28,7 +28,7 @@ import org.scalatest.BeforeAndAfterAll
 class TxnStageSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
-  private val base = s"${sys.props("user.dir")}/target/txnstagespec"
+  private val base = s"${Engine.scratchRoot}/txnstagespec"
 
   override def beforeAll(): Unit = {
     spark = Engine.session(cores = 2, appName = "graft-txnstage")
@@ -232,7 +232,7 @@ class TxnStageSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(json(TxnMergeOnRead.read(spark, root)) == before)
   }
 
-  private def jobsDuring(body: => Unit): Int = JobCounter.during(spark)(body)._2
+  private def jobsDuring(body: => Unit): Int = JobCounter.during(spark)(body)._2.count
 
   test("job counts per DML kind on a small table are pinned") {
     val root = s"$base/jobs"

@@ -21,7 +21,7 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val base = "/root/repo/target/zorderspec"
+  private val base = s"${Engine.scratchRoot}/zorderspec"
 
   // two independent pseudo-random dimensions over [0, 100000).
   // numSlices is PINNED: range() otherwise inherits defaultParallelism
