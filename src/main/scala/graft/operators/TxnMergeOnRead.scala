@@ -314,36 +314,48 @@ object TxnMergeOnRead {
     View(None, es)
   }
 
-  /** Latest usable checkpoint + tail — the O(entries since last checkpoint)
-    * fast path every operation takes. Falls back to full replay when a tail
-    * RESTORE targets a version below the checkpoint (its state needs the
-    * older entries). */
-  private def readView(f: FileSystem, root: String): View = {
-    val (entryFiles, ckptFiles) = listLog(f, root)
-    val ck = ckptFiles.sortBy(-_._1).iterator
+  /** The newest checkpoint at or below `upTo` that parses. */
+  private def latestCkpt(f: FileSystem, ckptFiles: Seq[(Long, Path)],
+      upTo: Long): Option[Ckpt] =
+    ckptFiles.filter(_._1 <= upTo).sortBy(-_._1).iterator
       .map { case (v, p) => Try(parseCkpt(readBody(f, p))).toOption
         .filter(_.version == v) }
       .collectFirst { case Some(c) => c }
-    ck match {
+
+  /** Latest usable checkpoint + tail — the O(entries since last checkpoint)
+    * fast path every operation takes. A tail RESTORE to a version below the
+    * checkpoint reads that version's state through [[truncateView]]. */
+  private def readView(f: FileSystem, root: String): View = {
+    val (entryFiles, ckptFiles) = listLog(f, root)
+    latestCkpt(f, ckptFiles, Long.MaxValue) match {
       case None =>
         val es = readEntryFiles(f, entryFiles)
         if (es.nonEmpty && es.head.version != 1L)
           prunedError(root, es.head.version)
         View(None, es)
       case Some(c) =>
-        val tail = readEntryFiles(f, entryFiles.filter(_._1 > c.version))
-        if (tail.exists(e => e.action == "restore" && e.folds < c.version))
-          fullView(f, root)
-        else View(Some(c), tail)
+        View(Some(c), readEntryFiles(f, entryFiles.filter(_._1 > c.version)))
     }
   }
 
   /** The view truncated to versions ≤ v. Below the checkpoint floor this
-    * degrades to full replay (clear error if pruned). */
+    * is a full replay while the log still starts at version 1; once vacuum
+    * has pruned it, a replay from the newest checkpoint at or below v
+    * (clear error if there is none). */
   private def truncateView(f: FileSystem, root: String, view: View,
       v: Long): View =
     if (v >= view.floor) View(view.ckpt, view.tail.takeWhile(_.version <= v))
-    else View(None, fullView(f, root).tail.takeWhile(_.version <= v))
+    else {
+      val (entryFiles, ckptFiles) = listLog(f, root)
+      if (entryFiles.exists(_._1 == 1L))
+        View(None, readEntryFiles(f, entryFiles.filter(_._1 <= v)))
+      else latestCkpt(f, ckptFiles, v) match {
+        case Some(c) => View(Some(c), readEntryFiles(f,
+          entryFiles.filter { case (n, _) => n > c.version && n <= v }))
+        case None => prunedError(root, ckptFiles.map(_._1).sorted.headOption
+          .orElse(entryFiles.map(_._1).sorted.headOption).getOrElse(1L))
+      }
+    }
 
   /** Head version from file NAMES alone — no file opens. */
   private def lastVersionOnDisk(f: FileSystem, root: String): Long = {
@@ -1896,8 +1908,9 @@ object TxnMergeOnRead {
     * format has.
     *
     * With `pruneLog = true` the log METADATA is bounded too: a checkpoint
-    * is written at the window edge and every entry file at or below it is
-    * retired (checkpoints below it as well) — the per-table file count
+    * is written at the window edge and at every retained RESTORE that
+    * targets a version below it, and every entry file at or below the edge
+    * is retired (checkpoints below it as well) — the per-table file count
     * stops growing with commit history. History below the window then
     * fails with an explicit "pruned by vacuum" error instead of a missing-
     * parquet scan error; above it, nothing changes (state at or above the
@@ -1950,8 +1963,12 @@ object TxnMergeOnRead {
         // dead writers' unfinished commit temp files
         Stores.sweepTemps(f, new Path(s"$root/$LOG_DIR"))
         if (pruneLog) {
-          Try(writeCheckpointAt(f, root, keepFrom))
-          if (f.exists(ckptPath(root, keepFrom))) {
+          // the edge, and every retained RESTORE whose target lies below
+          // it: replay from these never needs a retired entry
+          val ckptAt = keepFrom +: entries.filter(e => e.version > keepFrom &&
+            e.action == "restore" && e.folds < keepFrom).map(_.version)
+          ckptAt.foreach(v => Try(writeCheckpointAt(f, root, v)))
+          if (ckptAt.forall(v => f.exists(ckptPath(root, v)))) {
             entryFiles.filter(_._1 <= keepFrom).foreach(p => f.delete(p._2, false))
             ckptFiles.filter(_._1 < keepFrom).foreach(p => f.delete(p._2, false))
           }

@@ -3,6 +3,7 @@ package graft.tools
 import java.io.File
 
 import scala.io.Source
+import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -30,24 +31,22 @@ import graft.queries.TpcdsLite
 object Scale {
 
   /** One experiment. `factor` is its ×N unless `SPARK_GRAFT_FACTOR` says
-    * otherwise; `smallest` is the least ×N its checks hold at. */
-  final case class Case(name: String, factor: Int, smallest: Int = 1)(val body: Run => Unit)
+    * otherwise. */
+  final case class Case(name: String, factor: Int)(val body: Run => Unit)
 
-  /** What a case runs with. A `smoke` run checks that the case works:
-    * every sweep keeps its first point and every timed row runs once. */
+  /** What a case runs with. */
   final class Run(val spark: SparkSession, val name: String, val dir: String,
-      val factor: Int, val queries: Seq[String], val args: Seq[String], val smoke: Boolean) {
+      val factor: Int, val queries: Seq[String], val args: Seq[String]) {
     val scratch = s"$root/$name"
-
-    def sweep[T](points: T*): Seq[T] = if (smoke) points.take(1) else points
 
     /** Prints one result row of this case. */
     def report(msg: String): Unit = println(s"[scale] $name $msg")
 
     /** Best of `reps` runs of `body` and that run's result; prints the row. */
     def time[T](label: String, reps: Int = 2)(body: => T): (Double, T) = {
-      val runs = (1 to (if (smoke) 1 else reps)).map { _ =>
-        if (!smoke) { System.gc(); Thread.sleep(150) }
+      val runs = (1 to reps).map { _ =>
+        System.gc()
+        Thread.sleep(150)
         JobCounter.during(spark)(body)
       }
       val (out, best) = runs.minBy(_._2.wallS)
@@ -59,19 +58,19 @@ object Scale {
       (best.wallS, out)
     }
 
-    /** The warehouse ×`f` (ScaleUp): every table but nation and region
-      * replicated with per-replica key offsets, so every foreign key
+    /** The warehouse ×`factor` (ScaleUp): every table but nation and
+      * region replicated with per-replica key offsets, so every foreign key
       * resolves and per-key group sizes stay those of the base. Built once
-      * per base dir and factor; `f` = 1 is the base itself. */
-    def tpch(f: Int = factor): String = if (f == 1) dir else {
-      val out = s"$root/data/${new File(dir).getName}_x$f"
+      * per base dir, its contents and factor; ×1 is the base itself. */
+    def tpch(): String = if (factor == 1) dir else {
+      val out = s"$root/data/${sourceKey(dir)}_x$factor"
       if (!new File(s"$out/_SUCCESS").exists()) {
         def read(t: String) = spark.read.parquet(s"$dir/$t.parquet")
         def keyStride(t: String, key: String) = stride(read(t), key)
         val (order, cust, part, supp) = (keyStride("orders", "o_orderkey"),
           keyStride("customer", "c_custkey"), keyStride("part", "p_partkey"),
           keyStride("supplier", "s_suppkey"))
-        val big = math.max(32, f / 2)
+        val big = math.max(32, factor / 2)
         Seq(
           ("lineitem", Map("l_orderkey" -> order, "l_partkey" -> part, "l_suppkey" -> supp), big),
           ("orders", Map("o_orderkey" -> order, "o_custkey" -> cust), big),
@@ -84,9 +83,9 @@ object Scale {
             "user_id" -> keyStride("events", "user_id")), 32),
           ("nation", Map.empty[String, Long], 0), ("region", Map.empty[String, Long], 0)
         ).foreach { case (t, keys, parts) =>
-          val df = if (keys.isEmpty) read(t) else replicate(read(t), f, keys)().repartition(parts)
+          val df = if (keys.isEmpty) read(t) else replicate(read(t), factor, keys)().repartition(parts)
           df.write.mode("overwrite").parquet(s"$out/$t.parquet")
-          System.err.println(s"[scale] $t x$f -> $out/$t.parquet")
+          System.err.println(s"[scale] $t x$factor -> $out/$t.parquet")
         }
         new File(s"$out/_SUCCESS").createNewFile()
       }
@@ -95,6 +94,19 @@ object Scale {
   }
 
   private def root = s"${Engine.scratchRoot}/scale"
+
+  /** `dir`'s absolute path as a file name, plus a digest of every file's
+    * (path, length, mtime) under it: a cache built from one base is never
+    * read for another, or for the same dir regenerated. */
+  private def sourceKey(dir: String): String = {
+    val d = new File(dir).getAbsoluteFile
+    val sig = FileUtils.listFiles(d, null, true).asScala.toSeq
+      .map(f => s"${d.toPath.relativize(f.toPath)}:${f.length}:${f.lastModified}")
+      .sorted.mkString("|")
+    val fp = java.security.MessageDigest.getInstance("MD5").digest(sig.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(12)
+    s"${d.getPath.replaceAll("[^A-Za-z0-9.]", "_")}_$fp"
+  }
 
   /** `df` ×`factor`: replica i shifts each key column by i × its stride, so
     * replicas never share a key. `perReplica` sees the replica index as
@@ -141,7 +153,7 @@ object Scale {
     },
 
     // builds the ×N warehouse the other cases share
-    Case("scaleup", 64, smallest = 2) { r => r.report(s"x${r.factor} warehouse at ${r.tpch()}") },
+    Case("scaleup", 64) { r => r.report(s"x${r.factor} warehouse at ${r.tpch()}") },
 
     // §2.8 conformance: names (one a line, in the file given as the case's
     // argument) that resolve neither to a Spark built-in nor to the pack
@@ -314,10 +326,10 @@ object Scale {
   /** Runs case `name` in a session of its own over `spark`'s context and
     * deletes its scratch dir when it ends. */
   def run(spark: SparkSession, name: String, dir: String, factor: Option[Int] = None,
-      queries: Seq[String] = Nil, args: Seq[String] = Nil, smoke: Boolean = false): Unit = {
+      queries: Seq[String] = Nil, args: Seq[String] = Nil): Unit = {
     val c = cases.find(_.name == name).getOrElse(
       sys.error(s"unknown case $name; cases: ${cases.map(_.name).mkString(", ")}"))
-    val r = new Run(spark.newSession(), name, dir, factor.getOrElse(c.factor), queries, args, smoke)
+    val r = new Run(spark.newSession(), name, dir, factor.getOrElse(c.factor), queries, args)
     FileUtils.deleteQuietly(new File(r.scratch))
     try c.body(r) finally FileUtils.deleteQuietly(new File(r.scratch))
   }

@@ -58,7 +58,7 @@ object ScaleAnn {
       import r._
       val c = new Corpus(r)
       import c.{base, queries, queriesW, wide, pairs, recall, topK}
-      for (f <- sweep(Seq(1, factor, 8 * factor).distinct: _*)) {
+      for (f <- Seq(1, factor, 8 * factor).distinct) {
         val corpus = c.at(f)
         val n = corpus.count()
         val (bw, brute) = topK(s"x$f brute")(AnnSearch.bruteTopK(queries, corpus, 10))
@@ -116,11 +116,11 @@ object ScaleAnn {
       // recall vs nprobe at the production shortlist on the un-duplicated
       // corpus (a ×N shortlist would overflow the id pushdown): the honest
       // single-copy figures
-      for ((dim, c1, q1) <- sweep((64, base, queries), (1024, wide(base), queriesW))) {
+      for ((dim, c1, q1) <- Seq((64, base, queries), (1024, wide(base), queriesW))) {
         val brute1 = pairs(AnnSearch.bruteTopK(q1, c1, 10))
         val idx1 = IvfPq.buildIndex(c1, s"$scratch/idx1w$dim",
           centroidStride = 40, m = 16, ncent = 16, pqStride = 7)
-        for (np <- sweep(1, 2, 4, 8, 16, 32)) {
+        for (np <- Seq(1, 2, 4, 8, 16, 32)) {
           val (w, got) = topK(s"x1@${dim}dim nprobe=$np probe")(
             IvfPq.probeIndex(q1, c1, idx1, 10, nprobe = np, shortlist = 64))
           report(f"x1@${dim}dim nprobe=$np%-2d probe=$w%.2fs recall=${recall(brute1, got)}%.3f")
@@ -131,11 +131,11 @@ object ScaleAnn {
       // Lloyd-trained codebooks (q355/q356) with m, ncent and the shortlist
       // fixed, flat and behind IVF
       val brute1 = pairs(AnnSearch.bruteTopK(queries, base, 10))
-      for (sl <- sweep(32, 64, 96, 128); m <- sweep(8, 16)) {
+      for (sl <- Seq(32, 64, 96, 128); m <- Seq(8, 16)) {
         val pq = pairs(PqAnn.pqTopK(queries, base, 10, m = m, ncent = 16, stride = 7, shortlist = sl))
         report(s"pq m=$m shortlist=$sl recall=${recall(brute1, pq)}")
       }
-      for (it <- sweep(0, 2)) {
+      for (it <- Seq(0, 2)) {
         val pq = pairs(PqAnn.pqTopK(queries, base, 10, m = 16, ncent = 16, stride = 7,
           shortlist = 64, iters = it))
         val ivf = pairs(IvfPq.ivfPqTopK(queries, base, 10, centroidStride = 40, nprobe = 4,
@@ -153,7 +153,7 @@ object ScaleAnn {
       val c = new Corpus(r)
       import c.{base, queries, queriesW, wide, pairs, recall, topK}
       val cN = c.at(factor)
-      for ((dim, c1, q1) <- sweep((64, cN, queries), (1024, wide(cN), queriesW))) {
+      for ((dim, c1, q1) <- Seq((64, cN, queries), (1024, wide(cN), queriesW))) {
         val (bw, brute) = topK(s"x$factor@${dim}dim brute")(AnnSearch.bruteTopK(q1, c1, 10))
         val p = s"$scratch/bidx$dim"
         val (build, _) = time(s"x$factor@${dim}dim binary build", 1)(BinaryAnn.buildIndex(c1, p))
@@ -163,10 +163,10 @@ object ScaleAnn {
         report(f"x$factor@${dim}dim-binary brute=$bw%.2fs build=$build%.2fs probe=$hw%.2fs " +
           f"recall=${recall(brute, got)}%.3f")
       }
-      for ((dim, c1, q1) <- sweep((64, base, queries), (1024, wide(base), queriesW))) {
+      for ((dim, c1, q1) <- Seq((64, base, queries), (1024, wide(base), queriesW))) {
         val brute1 = pairs(AnnSearch.bruteTopK(q1, c1, 10))
         BinaryAnn.buildIndex(c1, s"$scratch/bidx1$dim")
-        for (sl <- sweep(32, 64, 128)) {
+        for (sl <- Seq(32, 64, 128)) {
           val (w, got) = topK(s"x1@${dim}dim binary shortlist=$sl probe")(
             BinaryAnn.probeIndex(q1, s"$scratch/bidx1$dim", 10, shortlist = sl))
           report(f"x1@${dim}dim-binary shortlist=$sl%-3d probe=$w%.2fs recall=${recall(brute1, got)}%.3f")
@@ -222,7 +222,7 @@ object ScaleAnn {
       import c.{base, queriesW, wide, pairs, recall, topK}
       val c1 = wide(base)
       val brute1 = pairs(AnnSearch.bruteTopK(queriesW, c1, 10))
-      for (m <- sweep(8, 16, 32, 64, 128)) {
+      for (m <- Seq(8, 16, 32, 64, 128)) {
         val (build, idxm) = time(s"x1@1024dim m=$m build", 1)(IvfPq.buildIndex(c1,
           s"$scratch/idxm$m", centroidStride = 40, m = m, ncent = 16, pqStride = 7))
         val (w, got) = topK(s"x1@1024dim m=$m probe")(
@@ -238,7 +238,7 @@ object ScaleAnn {
     // as N grows and the hierarchy restores it; insert and delete cost the
     // batch, never a rebuild; the at-rest index ingests and churns at batch
     // cost, and compaction folds generations without changing results.
-    Case("graph", 64, smallest = 4) { r =>
+    Case("graph", 64) { r =>
       import r._
       val c = new Corpus(r)
       import c.{queries, recall, topK}
@@ -254,7 +254,7 @@ object ScaleAnn {
         .select(col("id"), col("embedding"), col("__rep")))
       def hopsAt(f: Int) = 4 + math.round(2.0 * math.log(f) / math.log(16)).toInt
 
-      for (f <- sweep(Seq(1, factor / 4, factor).map(math.max(1, _)).distinct: _*)) {
+      for (f <- Seq(1, factor / 4, factor).map(math.max(1, _)).distinct) {
         val corpus = corpusAt(f)
         val n = corpus.count()
         val hops = hopsAt(f)
@@ -295,7 +295,7 @@ object ScaleAnn {
 
       // the batch is 1/f of the corpus, a fixed size across scales, so a
       // batch's cost should stay flat while a rebuild grows with N
-      val lifecycle = sweep(Seq(factor / 4, factor).filter(_ >= 4).distinct: _*)
+      val lifecycle = Seq(factor / 4, factor).filter(_ >= 4).distinct
       for (f <- lifecycle) {
         val corpus = corpusAt(f)
         val old = corpus.filter(col("id") % f =!= 9 % f)
@@ -354,7 +354,7 @@ object ScaleAnn {
         val maxId = Scale.stride(corpus, "id")
         val partners2 = corpus.select(col("id").as("pid"), col("embedding").as("pemb"))
         var live = corpus
-        for (round <- sweep(0 until 4: _*)) {
+        for (round <- 0 until 4) {
           val adds = corpus
             .filter(pmod(hash(col("id"), lit(7 + round)), lit(53)) === 0)
             .withColumn("pid", pmod(col("id") + 997L, lit(maxId)))

@@ -163,22 +163,21 @@ object ScaleStores {
           (0 until 20).foreach(_ => TxnMergeOnRead.read(spark, root4).schema))._1 / 20)
       growTo(12)
       val (cvSmall, rdSmall) = metaWall("@12v")
-      // a checkpoint version: its restore chain is folded, so the head
-      // stays readable once vacuum prunes the log
-      val big = if (smoke) 64 else 512
-      growTo(big)
-      val (cvBig, rdBig) = metaWall(s"@${big}v")
-      val (rdFull, _) = time(s"full-replay readAt x20 @${big}v", 1)(
+      growTo(512)
+      val (cvBig, rdBig) = metaWall("@512v")
+      // the cost checkpoints removed: replay below the oldest checkpoint
+      // opens every pre-checkpoint entry file ever committed
+      val (rdFull, _) = time("full-replay readAt x20 @512v", 1)(
         (0 until 20).foreach(_ => TxnMergeOnRead.readAt(spark, root4, 2L).schema))
       // what is left is the log-dir listing, which pruning bounds too
       TxnMergeOnRead.vacuum(spark, root4, retainVersions = 16, pruneLog = true)
-      val (cvPruned, rdPruned) = metaWall(s"@${big}v-pruned")
+      val (cvPruned, rdPruned) = metaWall("@512v-pruned")
       report(f"metadata: currentVersion ${cvSmall * 1e3}%.1fms@12v " +
-        f"${cvBig * 1e3}%.1fms@${big}v ${cvPruned * 1e3}%.1fms@${big}v-pruned " +
+        f"${cvBig * 1e3}%.1fms@512v ${cvPruned * 1e3}%.1fms@512v-pruned " +
         f"(pruned/small ${cvPruned / cvSmall}%.2f) | " +
-        f"read-plan ${rdSmall * 1e3}%.1fms@12v ${rdBig * 1e3}%.1fms@${big}v " +
-        f"${rdPruned * 1e3}%.1fms@${big}v-pruned (ckpt ratio ${rdBig / rdSmall}%.2f) | " +
-        f"full-replay readAt ${rdFull / 20 * 1e3}%.1fms@${big}v " +
+        f"read-plan ${rdSmall * 1e3}%.1fms@12v ${rdBig * 1e3}%.1fms@512v " +
+        f"${rdPruned * 1e3}%.1fms@512v-pruned (ckpt ratio ${rdBig / rdSmall}%.2f) | " +
+        f"full-replay readAt ${rdFull / 20 * 1e3}%.1fms@512v " +
         f"(${rdFull / 20 / rdBig}%.1fx the checkpointed path)")
       report(f"rows=$rows corpus=$corpusN disjWall=$disjWall%.2fs attempts=${atts.mkString("/")} " +
         f"ingest=$ingest%.2fs fullRead=$full%.2fs ingest/full=${ingest / full}%.2f " +
@@ -204,7 +203,7 @@ object ScaleStores {
         val (_, n) = time(label)(KvStorageHandler.scan(spark, root, m, pred).count())
         report(s"$label files=$scanned/$total rows=$n")
       }
-      for (x <- sweep(Seq(1, factor / 4, factor).map(math.max(1, _)).distinct: _*)) {
+      for (x <- Seq(1, factor / 4, factor).map(math.max(1, _)).distinct) {
         val (rows, regions) = (1000000L * x, math.max(8, 2 * x))
         val root = s"$scratch/x$x"
         time(s"x$x build rows=$rows regions=$regions", 1)(KvStorageHandler.put(spark, root,
@@ -392,7 +391,7 @@ object ScaleStores {
         val row = agg.collect()(0)
         (row.getLong(0), row.getLong(1), agg.queryExecution.executedPlan.toString)
       }
-      for (f <- sweep(Seq(factor / 4, factor, 4 * factor).map(math.max(1, _)).distinct: _*)) {
+      for (f <- Seq(factor / 4, factor, 4 * factor).map(math.max(1, _)).distinct) {
         val corpus = corpusAt(f)
         val ndocs = corpus.count()
         val (nw, (nk, nd, nplan)) = run(s"x$f naive", naive(corpus, maxDf = 25))

@@ -771,6 +771,30 @@ class TxnMorSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("k") === 301).select("v").head().getLong(0) === 7L)
   }
 
+  test("vacuum(pruneLog): a restore chain reaching below the window leaves the window readable") {
+    val root = s"$base/prune_restores"
+    mk(root, 10)                                                         // v1
+    TxnMergeOnRead.insert(spark, root,
+      spark.range(100, 105).select(col("id").as("k"), lit(0L).as("v")))  // v2
+    // each restore targets head − 1, so every later version is v1's or
+    // v2's state through a restore chain down to v1; the auto-checkpoint
+    // at 16 folds none of the chain above it
+    while (TxnMergeOnRead.currentVersion(spark, root) < 24)
+      TxnMergeOnRead.restore(spark, root, TxnMergeOnRead.currentVersion(spark, root) - 1)
+    def counts = (9L to 24L).map(v => v -> TxnMergeOnRead.readAt(spark, root, v).count())
+    val before = counts
+    assert(before.forall { case (v, n) => n === (if (v % 2 == 0) 15 else 10) })
+    // the window is versions 9..24; entries at or below 9 are retired
+    TxnMergeOnRead.vacuum(spark, root, retainVersions = 16, pruneLog = true)
+    assert(TxnMergeOnRead.read(spark, root).count() === 15)
+    assert(counts === before)
+    val e = intercept[IllegalStateException](
+      TxnMergeOnRead.readAt(spark, root, 8L).count())
+    assert(e.getMessage.contains("pruned by vacuum"), s"got: ${e.getMessage}")
+    TxnMergeOnRead.restore(spark, root, 21L)                            // v25
+    assert(TxnMergeOnRead.read(spark, root).count() === 10)
+  }
+
   test("a competing mutate whose dir was vacuumed counts as conflict, not clearance") {
     val root = s"$base/vac_conflict"
     mk(root)
