@@ -147,89 +147,99 @@ object GraphAnn {
 
   /** Beam-search top-k over `graph`. `queries`: (id, embedding);
     * `corpus`: (id, embedding), or the pre-quantized (id, qe, n2[,
-    * bucket]) at-rest shape; `graph`: (src, dst) as built by [[knnGraph]]
-    * (extra columns — gen, bucket — are the at-rest layout, resolved by
-    * `fetchFn`). `ef >= k` required. `entryIds` overrides the default
-    * corpus-lowest-ef entry set (shared by every query) — [[insertBatch]]
-    * passes the pre-batch graph's sources so walks start on navigable
-    * ground. `entrySeeds` goes further: a PER-QUERY seed map (the
-    * [[hnswTopK]] layer-descent shape, driver-paced) — each query's walk
-    * starts from its own upper-layer winners. */
+    * bucket]) at-rest shape; `graph`: (src, dst) as built by [[knnGraph]].
+    * `ef >= k` required. Every query starts at the corpus's `ef` lowest
+    * ids unless `entrySeeds` gives a PER-QUERY seed set (the [[hnswTopK]]
+    * layer-descent shape): a query whose seed set is empty gets no rows.
+    * A one-layer [[descend]]. */
   def beamTopK(queries: DataFrame, corpus: DataFrame, graph: DataFrame,
       k: Int, ef: Int, hops: Int,
-      entryIds: Option[Array[Long]] = None,
-      entrySeeds: Option[Map[Long, Array[Long]]] = None,
-      fetchFn: IdFetch = defaultFetch): DataFrame = {
+      entrySeeds: Option[Long => Array[Long]] = None): DataFrame = {
     require(ef >= k, s"beam width ef=$ef must cover k=$k")
-    val beam = beamWalkArr(queries, corpus, graph, ef, hops, entryIds,
-      entrySeeds, fetchFn)
-    // final answer: the beam's top-k per query, already exactly scored —
-    // re-rank through the shared total order for the usual (rk, 6-dp) shape
-    val spark = corpus.sparkSession
+    ranked(corpus.sparkSession, descend(queries, corpus,
+      Seq((graph, ef, hops)), entrySeeds, defaultFetch).last, k)
+  }
+
+  /** A final beam as the public ranked (qid, cid, rk, cos) top-k — re-rank
+    * through the shared total order for the usual (rk, 6-dp) shape. */
+  private def ranked(spark: org.apache.spark.sql.SparkSession,
+      beam: Array[(Long, Long, Double)], k: Int): DataFrame = {
     import spark.implicits._
     AnnSearch.rankTopK(beam.toSeq.toDF("qid", "cid", "cos"), k)
   }
 
-  /** The driver-paced walk itself, returning the final beam as an ARRAY
-    * (top-ef per query under (cos desc, cid)) — the composable piece the
-    * at-rest lifecycle consumes directly: [[addBatch]]/[[probeIndex]]
-    * chain walks and derive edge sets driver-side from beams that are
-    * driver state anyway, instead of paying a DataFrame round-trip
-    * (toDF + rank window + collect) per walk. [[beamTopK]] is the public
-    * ranked-DataFrame wrapper. */
-  private def beamWalkArr(queries: DataFrame, corpus: DataFrame,
-      graph: DataFrame, ef: Int, hops: Int,
-      entryIds: Option[Array[Long]],
-      entrySeeds: Option[Map[Long, Array[Long]]],
-      fetchFn: IdFetch): Array[(Long, Long, Double)] = {
-    require(hops >= 1, s"at least one hop (got $hops)")
-    require(entryIds.isEmpty || entrySeeds.isEmpty,
-      "pass entryIds (global) or entrySeeds (per-query), not both")
-    // an empty override would seed every walk with zero candidates and
-    // return an empty result with no error (insertBatch on an empty graph
-    // would silently insert NOTHING); a larger-than-ef set would widen
-    // the first beam past the documented bound
-    entryIds.foreach(e => require(e.nonEmpty && e.length <= ef,
-      s"entryIds must be 1..$ef ids (got ${e.length} — empty means the " +
-        "graph has no sources; build before inserting)"))
+  /** THE descent — every walk in this file runs through it: walk each
+    * `(graph, ef, hops)` of `layers` top-down, the first from
+    * `entrySeeds` (None: the corpus's lowest `ef` ids for every query),
+    * each later one seeded per query by the previous layer's final beam
+    * (HNSW's layer descent, Malkov & Yashunin, TPAMI 2020). A flat walk
+    * is a one-layer descent. Returns every layer's final beam, top-down,
+    * as driver ARRAYS (top-ef per query under (cos desc, cid)) — the
+    * composable piece the at-rest lifecycle consumes directly:
+    * [[addBatch]] takes its per-layer edges from them, and
+    * [[insertBatch]]/[[probeIndex]] derive edge sets and answers
+    * driver-side instead of paying a DataFrame round-trip per walk.
+    *
+    * The probe batch is quantized and collected ONCE (the bruteTopK
+    * broadcast(q) contract: bounded), and the quantized corpus is
+    * PERSISTED once for the whole descent: every hop of every layer
+    * re-reads it. Unpersisted in the finally ONLY if we created the cache
+    * entry ([[persistUnlessCached]]); the beams are driver state, so they
+    * survive the unpersist. A pre-quantized at-rest store is NOT persisted
+    * — see [[preQuantized]]. An empty seed set leaves its query out of
+    * every later layer: rows or none, never an error. */
+  private def descend(queries: DataFrame, corpus: DataFrame,
+      layers: Seq[(DataFrame, Int, Int)],
+      entrySeeds: Option[Long => Array[Long]],
+      fetchFn: IdFetch): Seq[Array[(Long, Long, Double)]] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // PERSIST both loop-invariant frames: every hop re-reads them, and a
-    // lazily-passed graph (e.g. [[knnGraph]]'s O(N²) build) would otherwise
-    // be RECOMPUTED once per hop — measured 13 s → 3.5 s on the q361 bench
-    // body. Unpersisted in the finally below ONLY if we created the cache
-    // entry ([[persistUnlessCached]]); the returned frame is built from
-    // the collected beam, so it survives the unpersist. At-rest frames
-    // (pre-quantized store / gen-carrying adjacency) are NOT persisted —
-    // see [[preQuantized]].
     val (cc, ownCc) =
       if (preQuantized(corpus)) (quantizedView(corpus), false)
       else persistUnlessCached(AnnSearch.quantized(corpus))
+    try {
+      val qArr = AnnSearch.quantized(queries)
+        .select(col("id"), col("qe"), col("n2")).as[(Long, Seq[Long], Long)]
+        .collect().map { case (id, e, n2) => (id, e.toArray, n2) }
+      // entry set: the ef lowest node ids — deterministic, replayable
+      var seeds: Long => Array[Long] = entrySeeds.getOrElse {
+        val entry = cc.select(col("id")).orderBy("id").limit(layers.head._2)
+          .as[Long].collect()
+        (_: Long) => entry
+      }
+      layers.map { case (graph, ef, hops) =>
+        val beam = beamWalkArr(qArr, cc, graph, ef, hops, seeds, fetchFn)
+        val next = beam.groupBy(_._1).map { case (q, a) => q -> a.map(_._2) }
+        seeds = next.getOrElse(_, Array.emptyLongArray)
+        beam
+      }
+    } finally if (ownCc) cc.unpersist(blocking = false)
+  }
+
+  /** The one walk: driver-paced beam search over `graph` for the collected
+    * probe batch `qArr` (id, qe, n2) against the quantized corpus `cc`,
+    * each query starting from `seeds(qid)`. Each of `hops` rounds expands
+    * the current beam's out-edges, unions the beam (a visited node can
+    * stay), scores every candidate with the EXACT cosine and keeps the
+    * top-`ef` per query. Returns the final beam. `graph` may carry the
+    * at-rest (gen[, tomb]) columns, resolved here from `fetchFn`'s rows. */
+  private def beamWalkArr(qArr: Array[(Long, Array[Long], Long)],
+      cc: DataFrame, graph: DataFrame, ef: Int, hops: Int,
+      seeds: Long => Array[Long],
+      fetchFn: IdFetch): Array[(Long, Long, Double)] = {
+    require(hops >= 1, s"at least one hop (got $hops)")
+    val spark = cc.sparkSession
+    import spark.implicits._
+    // PERSIST the loop-invariant graph: every hop re-reads it, and a
+    // lazily-passed graph (e.g. [[knnGraph]]'s O(N²) build) would otherwise
+    // be RECOMPUTED once per hop — measured 13 s → 3.5 s on the q361 bench
+    // body. A gen-carrying adjacency is an at-rest store: not persisted
+    // (see [[preQuantized]]).
     val (g, ownG) =
       if (graph.columns.contains("gen")) (graph, false)
       else persistUnlessCached(graph.select(col("src"), col("dst")))
     try {
-      // probe batch: broadcast-bounded (the bruteTopK broadcast(q) contract)
-      val qArr = AnnSearch.quantized(queries)
-        .select(col("id"), col("qe"), col("n2")).as[(Long, Seq[Long], Long)]
-        .collect().map { case (id, e, n2) => (id, e.toArray, n2) }
       val qids = qArr.map(_._1)
-      entrySeeds.foreach { m =>
-        qids.foreach { q =>
-          val s = m.getOrElse(q, Array.emptyLongArray)
-          require(s.nonEmpty && s.length <= ef,
-            s"entrySeeds for query $q must be 1..$ef ids (got ${s.length})")
-        }
-      }
-
-      // entry set: the ef lowest node ids — deterministic, replayable —
-      // unless the caller supplied its own (bounded-by-ef) entry set
-      lazy val entry = entryIds.getOrElse(
-        cc.select(col("id")).orderBy("id").limit(ef).as[Long].collect())
-        .sorted
-
-      def fetch(df: DataFrame, idCol: String, ids: Array[Long]): DataFrame =
-        fetchFn(df, idCol, ids)
 
       /** Exact (cos desc, cid) top-`ef` per query over per-query candidate
         * id sets: ONE distributed pass — candidate vectors are fetched by
@@ -260,10 +270,12 @@ object GraphAnn {
           }
           b.iterator.map { case (cid, ab) => cid -> ab.result() }.toMap
         }
+        // no query has a candidate left: nothing to fetch
+        if (byCid.isEmpty) return Array.empty
         val candIds = byCid.keysIterator.toArray
         val bc = spark.sparkContext.broadcast(byCid)
         try {
-          val scored = fetch(cc, "id", candIds)
+          val scored = fetchFn(cc, "id", candIds)
             .select(col("id"), col("qe"), col("n2")).as[(Long, Seq[Long], Long)]
             .mapPartitions { it =>
               val qs = qArr // serialized with the closure: bounded probe batch
@@ -274,7 +286,7 @@ object GraphAnn {
                   val (qid, qv, qn2) = qs(qi)
                   // the DotI64 contract: silent min-length truncation would
                   // turn a malformed embedding into a plausible-but-wrong
-                  // score (and diverge from beamTopKBatch, which raises)
+                  // score
                   if (qv.length != cv.length)
                     throw new IllegalArgumentException(
                       s"beam walk: dimension mismatch (${qv.length} vs ${cv.length})")
@@ -295,10 +307,7 @@ object GraphAnn {
         } finally bc.destroy()
       }
 
-      var beam = selectBeam(entrySeeds match {
-        case Some(m) => qids.map(q => q -> m(q).distinct.sorted).toMap
-        case None => qids.map(_ -> entry).toMap
-      })
+      var beam = selectBeam(qids.map(q => q -> seeds(q).distinct.sorted).toMap)
       var hop = 0
       while (hop < hops) {
         // expand: out-edges of every beam node, one id-set-pruned scan of the
@@ -308,9 +317,10 @@ object GraphAnn {
         // the collected bounded rows — a distributed window here costs one
         // exchange per round for rows the walk collects anyway
         val beamIds = beam.map(_._2).distinct
-        val fr = fetch(g, "src", beamIds)
+        lazy val fr = fetchFn(g, "src", beamIds)
         val edges: Array[(Long, Long)] =
-          if (fr.columns.contains("gen")) {
+          if (beamIds.isEmpty) Array.empty
+          else if (fr.columns.contains("gen")) {
             // max-gen per src over the UNMASKED rows, THEN drop tombstone-
             // flagged destinations (the [[indexFetch]] ordering contract)
             val raw = (if (fr.columns.contains("tomb"))
@@ -328,7 +338,7 @@ object GraphAnn {
         // the whole beam array is O(|Q|²·ef) driver work per hop, the same
         // quadratic class the selectBeam inversion above removed
         val byQid = beam.groupBy(_._1)
-        val cands: Map[Long, Array[Long]] = qArr.map { case (qid, _, _) =>
+        val cands: Map[Long, Array[Long]] = qids.map { qid =>
           val cur = byQid.getOrElse(qid, Array.empty[(Long, Long, Double)])
             .map(_._2)
           qid -> (cur ++ cur.flatMap(c =>
@@ -340,100 +350,7 @@ object GraphAnn {
       }
 
       beam
-    } finally {
-      if (ownG) g.unpersist(blocking = false)
-      if (ownCc) cc.unpersist(blocking = false)
-    }
-  }
-
-  /** The DISTRIBUTED beam walk — [[beamTopK]] semantics with the beam kept
-    * as a DataFrame end-to-end, for query batches too large to pace from
-    * the driver. [[beamTopK]]'s state is |Q|×ef driver rows plus a
-    * broadcast candidate map per hop — the right shape for a probe batch
-    * (tens to thousands of queries), the wrong one for a 100 TB join-like
-    * workload probing millions of rows. Here each hop is declarative:
-    * expand = beam ⋈ graph on (cid = src), score = two id equi-joins (the
-    * [[trimEdges]] fetch shape) through the shared int64-exact cosine,
-    * re-select = one windowed top-ef per qid. Catalyst plans all hops as
-    * one job; nothing but the final top-k is ever collected.
-    *
-    * Bit-identical to [[beamTopK]] by construction (same entry set, same
-    * candidate algebra, same (cos desc, cid) total order) — spec-asserted
-    * row-for-row, and q365 checks it against the SAME oracle replay as
-    * q361. Cost per hop: ≤ |Q|·ef·(m+1) scored rows — schedule-bounded
-    * per query, linear in |Q|, independent of corpus size. */
-  def beamTopKBatch(queries: DataFrame, corpus: DataFrame, graph: DataFrame,
-      k: Int, ef: Int, hops: Int): DataFrame = {
-    require(ef >= k, s"beam width ef=$ef must cover k=$k")
-    val (cc, ownCc) = persistUnlessCached(AnnSearch.quantized(corpus)
-      .select(col("id").as("cid"), col("qe").as("ce"), col("n2").as("cn")))
-    val (qq, ownQq) = persistUnlessCached(AnnSearch.quantized(queries)
-      .select(col("id").as("qid"), col("qe").as("qv"), col("n2").as("qn")))
-    val (g, ownG) =
-      persistUnlessCached(graph.select(col("src"), col("dst")))
-    try {
-      // entry set: the ef lowest node ids, shared by every query (the
-      // beamTopK/oracle rule) — ef rows, broadcast into the |Q|·ef seed
-      val entry = broadcast(cc.select(col("cid")).orderBy("cid").limit(ef))
-      val beam = walkSeeded(qq, cc, g,
-        qq.select(col("qid")).crossJoin(entry), ef, hops)
-      // the final top-k is |Q|·k rows — checkpoint it (eager, bounded) so
-      // every intermediate cache can be released before returning
-      val out = AnnSearch.rankTopK(beam, k).localCheckpoint(true)
-      beam.unpersist(blocking = false)
-      out
-    } finally {
-      if (ownG) g.unpersist(blocking = false)
-      if (ownCc) cc.unpersist(blocking = false)
-      if (ownQq) qq.unpersist(blocking = false)
-    }
-  }
-
-  /** The distributed walk's core: beam-search `g` from a per-query seed
-    * frame `(qid, cid)`. Returns the final beam (qid, cid, cos), LEFT
-    * PERSISTED — the caller unpersists once consumed. `qq`/`cc` are the
-    * quantized query/corpus frames in (qid, qv, qn)/(cid, ce, cn) shape,
-    * already persisted by the caller.
-    *
-    * Each hop's plan references the previous beam TWICE (carry-over ∪
-    * expansion), so a lazy chain would duplicate the whole prefix 2^hops
-    * times and recompute the graph build per copy (measured 45 s on the
-    * sf0.01 fixture, 3 s with the cut). persist() substitutes an
-    * InMemoryRelation, cutting the logical lineage; the per-hop count()
-    * materializes it so the predecessor can be dropped eagerly. */
-  private def walkSeeded(qq: DataFrame, cc: DataFrame, g: DataFrame,
-      seed: DataFrame, ef: Int, hops: Int): DataFrame = {
-    require(hops >= 1, s"at least one hop (got $hops)")
-
-    /** Exact (cos desc, cid) top-ef per qid over a (qid, cid) candidate
-      * frame — the [[beamTopK]] selectBeam contract as one declarative
-      * stage; scoring excludes qid = cid exactly as its guard does. */
-    def selectBeam(cands: DataFrame): DataFrame =
-      cands.join(cc, "cid").join(qq, "qid")
-        .filter(col("qid") =!= col("cid"))
-        .withColumn("cos", coalesce(
-          AnnSearch.dotI64(col("qv"), col("ce")).cast("double") /
-            sqrt(col("qn").cast("double") * col("cn").cast("double")),
-          lit(-1.0)))
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("qid")
-            .orderBy(col("cos").desc, col("cid"))))
-        .filter(col("rn") <= ef)
-        .select("qid", "cid", "cos")
-
-    var beam = selectBeam(seed).persist()
-    beam.count()
-    for (_ <- 1 to hops) {
-      val expanded = beam.select(col("qid"), col("cid").as("src"))
-        .join(g, "src").select(col("qid"), col("dst").as("cid"))
-      // beam nodes stay candidates — the walk never loses ground
-      val cands = beam.select("qid", "cid").unionByName(expanded).distinct()
-      val next = selectBeam(cands).persist()
-      next.count()
-      beam.unpersist(blocking = false)
-      beam = next
-    }
-    beam
+    } finally if (ownG) g.unpersist(blocking = false)
   }
 
   /** Nodes on HNSW level ≥ `l`: keyed md5 draw ≡ 0 (mod 8^l) — the
@@ -449,76 +366,57 @@ object GraphAnn {
       GroupSample.drawHash("lvl1", col(corpus.columns.head)) % mod === 0)
   }
 
-  /** [[beamTopKBatch]] with a caller-supplied per-query seed frame
-    * `(qid, cid)` instead of the global lowest-ef entry set — the
-    * composable piece behind [[hnswTopK]]'s layer descent (each layer's
-    * ranked beam seeds the next layer's walk). Returns the ranked
-    * (qid, cid, rk, cos) top-k; pass k = ef to get the whole final beam
-    * for chaining. */
-  def beamTopKSeeded(queries: DataFrame, corpus: DataFrame,
-      graph: DataFrame, seed: DataFrame, k: Int, ef: Int,
-      hops: Int): DataFrame = {
-    require(ef >= k, s"beam width ef=$ef must cover k=$k")
-    val (cc, ownCc) = persistUnlessCached(AnnSearch.quantized(corpus)
-      .select(col("id").as("cid"), col("qe").as("ce"), col("n2").as("cn")))
-    val (qq, ownQq) = persistUnlessCached(AnnSearch.quantized(queries)
-      .select(col("id").as("qid"), col("qe").as("qv"), col("n2").as("qn")))
-    val (g, ownG) =
-      persistUnlessCached(graph.select(col("src"), col("dst")))
-    try {
-      val beam = walkSeeded(qq, cc, g, seed.select("qid", "cid"), ef, hops)
-      val out = AnnSearch.rankTopK(beam, k).localCheckpoint(true)
-      beam.unpersist(blocking = false)
-      out
-    } finally {
-      if (ownG) g.unpersist(blocking = false)
-      if (ownCc) cc.unpersist(blocking = false)
-      if (ownQq) qq.unpersist(blocking = false)
-    }
-  }
-
-  /** TWO-LAYER HNSW — the actual hierarchy, completing the q361–q365
-    * family (which is flat NSW: one graph, one fixed global entry set).
-    * HNSW's insight is that the entry point should already be NEAR the
-    * query before the expensive bottom-layer walk starts: a sparse upper
-    * layer ([[levelNodes]], every 8th node by keyed draw) is walked first
-    * with a narrow beam, and each query's upper-layer winners seed its
-    * bottom-layer walk. The bottom walk then needs HALF the hops of the
-    * flat q361 schedule for comparable recall (spec-measured), because it
-    * starts in the right neighborhood instead of at a fixed corner of the
-    * id space. A flat walk's length grows with the graph's RADIUS
-    * (~N^(1/d) — GraphScale measured recall collapsing 0.37 → 0.05 at
-    * ×16 corpus under the fixed schedule); the hierarchy is what caps it
-    * at ~log N total hops, every one schedule-bounded (≤ |Q|·ef·(m+1)
-    * scored rows — both walks run distributed through [[walkSeeded]]).
-    * For corpora past ~8·ef1·m1 upper nodes, stack more layers by
-    * chaining [[levelNodes]]/[[beamTopKSeeded]] descents (GraphScale's
-    * multi-layer composition).
+  /** HNSW — the actual hierarchy, completing the q361–q365 family (which
+    * is flat NSW: one graph, one fixed global entry set). HNSW's insight
+    * is that the entry point should already be NEAR the query before the
+    * expensive bottom-layer walk starts: sparse upper layers
+    * ([[levelNodes]], every 8th node per level by keyed draw) are walked
+    * first with a narrow beam (`ef1`/`hops1`), and each query's winners
+    * on one layer seed its walk on the next layer down. The bottom walk
+    * then needs HALF the hops of the flat q361 schedule for comparable
+    * recall (spec-measured), because it starts in the right neighborhood
+    * instead of at a fixed corner of the id space. A flat walk's length
+    * grows with the graph's RADIUS (~N^(1/d) — GraphScale measured recall
+    * collapsing 0.37 → 0.05 at ×16 corpus under the fixed schedule); the
+    * hierarchy is what caps it at ~log N total hops, every one
+    * schedule-bounded (≤ |Q|·ef·(m+1) scored rows), all in one
+    * [[descend]].
     *
-    * Fully deterministic: level draw, both [[knnGraph]] builds, and the
+    * `upper`: the upper-layer graphs TOP-DOWN — the graph over
+    * `levelNodes(corpus, upper.size)` first, the level-1 graph last;
+    * default one level-1 [[knnGraph]] of degree `m1` (for corpora past
+    * ~8·ef1·m1 upper nodes, stack more — GraphScale's multi-layer
+    * composition). The top walk starts at that top level's `ef1` lowest
+    * ids. `g0Opt`: the bottom graph, default [[knnGraph]] of degree `m`.
+    * Callers holding prebuilt (or fixture-cached) layer graphs pass them
+    * in — the per-call rebuild is the one-shot convenience, not the
+    * contract (the at-rest form is [[writeIndex]]/[[probeIndex]]). A
+    * query whose upper beam comes back empty (its only candidates were
+    * itself) gets no rows.
+    *
+    * Fully deterministic: level draw, every [[knnGraph]] build, and the
     * shared (cos desc, cid) walk order — the q366 oracle replays level
     * split → both builds → chained seeded walks bit-exactly. */
   def hnswTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       m: Int = 8, m1: Int = 4, ef1: Int = 4, hops1: Int = 2,
       ef: Int = 16, hops: Int = 2,
-      g1Opt: Option[DataFrame] = None,
+      upper: Option[Seq[DataFrame]] = None,
       g0Opt: Option[DataFrame] = None): DataFrame = {
-    val lvl1 = levelNodes(corpus, 1)
-    // upper-layer entry: the ef1 lowest LAYER-1 ids (global, tiny) — a
-    // narrow id scan; quantizing the layer just to read ids would run the
-    // per-element BigDecimal pass over every upper-layer embedding
-    val ent1 = broadcast(
-      lvl1.select(col(lvl1.columns.head).as("cid"))
-        .orderBy("cid").limit(ef1))
-    val qid = queries.select(col(queries.columns.head).as("qid"))
-    // callers holding prebuilt (or fixture-cached) layer graphs pass them
-    // in — the per-call rebuild is the one-shot convenience, not the
-    // contract (the at-rest form is [[writeIndex]]/[[probeIndex]])
-    val b1 = beamTopKSeeded(queries, corpus,
-      g1Opt.getOrElse(knnGraph(lvl1, m1)),
-      qid.crossJoin(ent1), ef1, ef1, hops1)
-    beamTopKSeeded(queries, corpus, g0Opt.getOrElse(knnGraph(corpus, m)),
-      b1.select("qid", "cid"), k, ef, hops)
+    require(ef >= k, s"beam width ef=$ef must cover k=$k")
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val gs = upper.getOrElse(Seq(knnGraph(levelNodes(corpus, 1), m1)))
+    require(gs.nonEmpty, "hnswTopK: at least one upper layer")
+    // top-level entry: the ef1 lowest ids of the top level (global, tiny)
+    // — a narrow id scan; quantizing the level just to read ids would run
+    // the per-element BigDecimal pass over every upper-level embedding
+    val top = levelNodes(corpus, gs.size)
+    val entry = top.select(col(top.columns.head).cast("long").as("eid"))
+      .orderBy("eid").limit(ef1).as[Long].collect()
+    val layers = gs.map((_, ef1, hops1)) :+
+      ((g0Opt.getOrElse(knnGraph(corpus, m)), ef, hops))
+    ranked(spark, descend(queries, corpus, layers, Some(_ => entry),
+      defaultFetch).last, k)
   }
 
   /** Build + walk in one call (the one-shot index shape). */
@@ -526,45 +424,13 @@ object GraphAnn {
       m: Int = 8, ef: Int = 16, hops: Int = 4): DataFrame =
     beamTopK(queries, corpus, knnGraph(corpus, m), k, ef, hops)
 
-  /** Exact-cosine re-rank of an edge multiset: keep each src's top-`m` by
-    * (cos desc, dst) — the uniform trim rule shared by build and insert.
-    * Two id equi-joins fetch the endpoint vectors; edge count is linear
-    * (N·m + inserts), never pairwise. */
-  private def trimEdges(edges: DataFrame, corpus: DataFrame,
-      m: Int): DataFrame = {
-    val cc = quantizedView(corpus)
-    // the edge set is bounded by contract (touched sources × m) — the
-    // FIRST join broadcasts it (ids only) so the src-vector fetch streams
-    // the store. The SECOND join is deliberately UNHINTED: its bounded
-    // side carries a vector per edge (|edges|×dim), which a forced
-    // broadcast would push past Spark's 8 GB cap on a large batch — AQE
-    // still broadcasts it at fixture/batch sizes (runtime-sized decision,
-    // same plan in practice) and degrades to a shuffle instead of an
-    // OOM/cap failure where it is genuinely huge.
-    val withSrc = cc.select(col("id").as("src"), col("qe").as("se"),
-        col("n2").as("sn"))
-      .join(broadcast(edges.select("src", "dst").distinct()), "src")
-    cc.select(col("id").as("dst"), col("qe").as("de"),
-        col("n2").as("dn"))
-      .join(withSrc, "dst")
-      .withColumn("cos", coalesce(
-        AnnSearch.dotI64(col("se"), col("de")).cast("double") /
-          sqrt(col("sn").cast("double") * col("dn").cast("double")),
-        lit(-1.0)))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("src")
-          .orderBy(col("cos").desc, col("dst"))))
-      .filter(col("rn") <= m)
-      .select("src", "dst")
-  }
-
   /** HNSW-STYLE INCREMENTAL INSERTION — the graph index's `add` step,
     * completing its lifecycle the way [[IvfPq.addBatch]] does for IVF-PQ:
     * each new node finds its out-edges by BEAM-SEARCHING ITSELF over the
     * existing graph (exactly how HNSW inserts — the search structure is
     * its own build tool), then back-edges old→new keep the graph navigable
     * toward the new nodes, and every touched node re-trims to its top-`m`
-    * by exact cosine (the uniform [[trimEdges]] rule — old nodes keep the
+    * by exact cosine (the uniform [[trimLocal]] rule — old nodes keep the
     * best of their old edges ∪ new back-edges, HNSW's neighbor pruning).
     *
     * Batch nodes insert against the PRE-batch graph, so inserts within a
@@ -586,19 +452,18 @@ object GraphAnn {
     // its own batch, inserting a disconnected island and silently
     // collapsing recall for all later probes. Seeding from graph sources
     // makes the walk start on navigable ground regardless of id order.
-    // The walk itself stays DRIVER-PACED ([[beamWalkArr]] with the entry
-    // override): a batch is bounded by contract, and the distributed
-    // walk's per-hop persist+count jobs doubled the measured insert wall
-    // (q363 10→19 s) for no result change — the entry RULE was the fix,
-    // not the walk executor.
     val spark = graph.sparkSession
     import spark.implicits._
     val entryIds = graph.select(col("src")).distinct()
       .orderBy("src").limit(ef).as[Long].collect()
+    // an empty entry set would seed every walk with zero candidates and
+    // insert NOTHING, with no error
+    require(entryIds.nonEmpty,
+      "insertBatch: the graph has no sources — build before inserting")
     // Edge selection and re-trim run DRIVER-SIDE over the walk's collected
     // beam (the [[addBatch]]/[[trimLocal]] discipline, r18): the previous
     // form routed the beam through a ranked-DataFrame round trip
-    // (window job) and trimmed through [[trimEdges]]' two equi-joins +
+    // (window job) and trimmed through two equi-joins +
     // per-src window — five distributed ops over edge sets that are
     // BOUNDED driver state anyway (O(batch·m) rows; JobProfile measured
     // q367's three chained inserts spending ~2.8 s materializing exactly
@@ -607,8 +472,8 @@ object GraphAnn {
     // dst), exact int64 cosine — so rows are identical (the q363/q367
     // oracles replay the full-trim algebra; the driver compare is the
     // equivalence proof).
-    val beam = beamWalkArr(batch, corpus, graph, ef, hops,
-      Some(entryIds), None, defaultFetch)
+    val beam = descend(batch, corpus, Seq((graph, ef, hops)),
+      Some(_ => entryIds), defaultFetch).last
     val newE: Seq[(Long, Long)] = beam.groupBy(_._1).iterator
       .flatMap { case (q, rows) =>
         rows.sortBy { case (_, cid, cos) => (-cos, cid) }.take(m)
@@ -645,8 +510,8 @@ object GraphAnn {
     * every surviving src that edged into a removed node r inherits r's
     * surviving out-neighbors as candidate edges (src → r → x becomes
     * src → x), then every src re-trims to its top-`m` by exact cosine
-    * (the same uniform [[trimEdges]] rule build and insert use, so delete
-    * composes with both).
+    * (the build's (cos desc, dst) rank, applied by the same [[trimLocal]]
+    * insert uses, so delete composes with both).
     *
     * Deterministic end-to-end — the q364 oracle replays kept ∪ bridge →
     * re-trim → beam walk bit-exactly.
@@ -680,17 +545,23 @@ object GraphAnn {
       .select("src", "dst")
     // Re-trim ONLY bridged sources: a src with no bridge candidates can
     // only have LOST edges (kept ⊆ its previous top-m), so its trim is a
-    // no-op — identical output, and the embedding joins + window run on
-    // O(|bridge|) rows instead of the whole surviving edge set, keeping
-    // the delete bill ~flat as the corpus grows (GraphScale: 6.5 s at ×16
-    // vs 8.5 s at ×64 for the same 2000-node batch). The q364 oracle
-    // replays the FULL-trim algebra — the driver compare is the
-    // equivalence proof.
-    val touched = bridge.select("src").distinct()
-    val keptUntouched = kept.join(touched, Seq("src"), "left_anti")
-    val toTrim = kept.join(touched, Seq("src"), "left_semi")
-      .unionByName(bridge)
-    keptUntouched.unionByName(trimEdges(toTrim, survivors, m))
+    // no-op — identical output, and the trim runs on O(|bridge|) rows
+    // instead of the whole surviving edge set, keeping the delete bill
+    // ~flat as the corpus grows (GraphScale: 6.5 s at ×16 vs 8.5 s at ×64
+    // for the same 2000-node batch). The bridged sources' edges are
+    // bounded by the same contract, so they are collected in one job and
+    // re-trimmed DRIVER-SIDE ([[trimLocal]], the [[insertBatch]]
+    // discipline). The q364 oracle replays the FULL-trim algebra — the
+    // driver compare is the equivalence proof.
+    val spark = graph.sparkSession
+    import spark.implicits._
+    val toTrim = kept.join(bridge.select("src").distinct(), Seq("src"),
+        "left_semi")
+      .unionByName(bridge).as[(Long, Long)].collect()
+    val touched = broadcast(toTrim.map(_._1).distinct.toSeq.toDF("src"))
+    kept.join(touched, Seq("src"), "left_anti").unionByName(
+      trimLocal(spark, quantizedView(survivors), defaultFetch, toTrim.toSeq,
+        m).toDF("src", "dst"))
   }
 
   // =====================================================================
@@ -836,11 +707,11 @@ object GraphAnn {
     } else base
   }
 
-  /** Driver-side uniform trim for the insert and at-rest mutation paths:
-    * fetch the edge set's endpoint vectors ONCE (bucket-pruned, collected
-    * — they are bounded by the same contract as the walks' probe batch),
-    * score every edge with the exact int64 cosine, keep each source's
-    * top-`m` under (cos desc, dst) — [[trimEdges]]' algebra with zero
+  /** THE trim — the uniform re-trim rule of insert, delete and the
+    * at-rest mutation paths, driver-side: fetch the edge set's endpoint
+    * vectors ONCE (bucket-pruned, collected — they are bounded by the same
+    * contract as the walks' probe batch), score every edge with the exact
+    * int64 cosine, keep each source's top-`m` under (cos desc, dst) — no
     * joins, windows, or checkpoints (each cost a scheduling round-trip
     * per trim). The trimmed edges STAY driver state, so persisted-index
     * writers hand them straight to [[LocalParquet]]. The fetched-row
@@ -972,8 +843,8 @@ object GraphAnn {
     * from pruned reads: the top-level walk starts at the manifest's ef1
     * lowest live entry ids, each level's per-query winners seed the next
     * level down (narrow ef1/hops1 walks — one per stored level), and the
-    * final layer-0 walk runs at ef/hops. All walks are driver-paced
-    * ([[beamTopK]] — probe batches are bounded by contract) and every
+    * final layer-0 walk runs at ef/hops. The whole descent is one
+    * [[descend]] (probe batches are bounded by contract) and every
     * fetch goes through [[indexFetch]]: bucket partition pruning +
     * max-gen resolution + tombstone masking. Nothing is rebuilt, nothing
     * unpruned is read; total cost is (layers·ef1·(m1+1)·hops1 +
@@ -983,24 +854,17 @@ object GraphAnn {
       hops: Int = 2): DataFrame = {
     require(ef1 >= 1 && ef >= k, s"need ef1 >= 1 and ef=$ef >= k=$k")
     val spark = queries.sparkSession
-    import spark.implicits._
     val mt = IndexStore.open(spark, path, KIND)
     val tombs = IndexStore.tombIds(spark, mt)
-    val fetch = indexFetch(mt.int("n_buckets"), tombs)
-    val vec = IndexStore.rel(spark, mt, "vectors")
     val ents = mt.entries.filterNot(tombs.contains).take(ef1).toArray
     require(ents.nonEmpty,
       s"probeIndex: entry set exhausted at $path — rebuild the index")
-    var seeds: Option[Map[Long, Array[Long]]] = None
-    for (l <- mt.int("layers") to 1 by -1) {
-      val beam = beamWalkArr(queries, vec,
-        IndexStore.rel(spark, mt, s"adj$l"), ef1, hops1,
-        if (seeds.isEmpty) Some(ents) else None, seeds, fetch)
-      seeds = Some(beam.groupBy(_._1).map { case (q, a) => q -> a.map(_._2) })
-    }
-    val finalBeam = beamWalkArr(queries, vec,
-      IndexStore.rel(spark, mt, "adj0"), ef, hops, None, seeds, fetch)
-    AnnSearch.rankTopK(finalBeam.toSeq.toDF("qid", "cid", "cos"), k)
+    val layers = (mt.int("layers") to 1 by -1).map(l =>
+        (IndexStore.rel(spark, mt, s"adj$l"), ef1, hops1)) :+
+      ((IndexStore.rel(spark, mt, "adj0"), ef, hops))
+    ranked(spark, descend(queries, IndexStore.rel(spark, mt, "vectors"),
+      layers, Some(_ => ents), indexFetch(mt.int("n_buckets"), tombs)).last,
+      k)
   }
 
   /** HNSW-style LEVEL-AWARE incremental insertion against the persisted
@@ -1042,8 +906,7 @@ object GraphAnn {
         .map(r => Seq[Any](r.getLong(0), r.getSeq[Long](1), r.getLong(2))),
       r => Math.floorMod(r.head.asInstanceOf[Long], nb.toLong))
     val vec = ch.rel("vectors")
-    val adj0 = ch.rel("adj0")
-    val adjL = (1 to layers).map(l => l -> ch.rel(s"adj$l")).toMap
+    val adjL = (0 to layers).map(l => l -> ch.rel(s"adj$l")).toMap
     val ents = mt.entries.filterNot(tombs.contains).take(ef1).toArray
     require(ents.nonEmpty,
       s"addBatch: entry set exhausted at $path — rebuild the index")
@@ -1077,19 +940,17 @@ object GraphAnn {
     val bIdsAt = (1 to layers).map(l => l -> levelNodes(batch, l)
       .select(col(batch.columns.head).cast("long")).as[Long]
       .collect().toSet).toMap
-    // ONE walk per stored level, descending: each level's beam both seeds
+    // ONE descent over every stored level: each level's beam both seeds
     // the next level down (HNSW's insert descent) and supplies the
     // top-m1 edge selection for batch nodes drawn AT that level
-    var seeds: Option[Map[Long, Array[Long]]] = None
-    val newEAt = (layers to 1 by -1).map { l =>
-      val beam = beamWalkArr(batch, vec, adjL(l), ef1, hops1,
-        if (seeds.isEmpty) Some(ents) else None, seeds, fetch)
-      seeds = Some(beam.groupBy(_._1).map { case (q, a) => q -> a.map(_._2) })
-      l -> topEdges(beam, m1, bIdsAt(l).contains)
-    }.toMap
-    val w0Beam = beamWalkArr(batch, vec, adj0, ef, hops, None, seeds, fetch)
+    val down = layers to 0 by -1
+    val beams = down.zip(descend(batch, vec, down.map(l =>
+        if (l == 0) (adjL(0), ef, hops) else (adjL(l), ef1, hops1)),
+      Some(_ => ents), fetch)).toMap
+    val newEAt = (1 to layers).map(l =>
+      l -> topEdges(beams(l), m1, bIdsAt(l).contains)).toMap
 
-    val rows0 = layerRows(adj0, topEdges(w0Beam, mDeg, _ => true), mDeg)
+    val rows0 = layerRows(adjL(0), topEdges(beams(0), mDeg, _ => true), mDeg)
     val rowsAt = (1 to layers).flatMap { l =>
       if (bIdsAt(l).isEmpty) None
       else Some(l -> layerRows(adjL(l), newEAt(l), m1))

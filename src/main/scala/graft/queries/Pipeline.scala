@@ -1120,34 +1120,36 @@ object Pipeline {
         .orderBy("qid", "rk")
     },
 
-    // The DISTRIBUTED beam walk ([[GraphAnn.beamTopKBatch]] — the 100 TB
-    // probe path): q361's walk re-expressed with the beam as a DataFrame
-    // end-to-end (per hop: beam ⋈ graph expand, two id equi-joins to
-    // score, windowed top-ef), for query batches too large to pace from
-    // the driver. Same entry set, candidate algebra, and (cos desc, cid)
-    // total order — so the SAME oracle replay as q361 checks it, and the
-    // spec pins it row-for-row against the driver-paced walk.
+    // The PER-QUERY-SEEDED beam walk ([[GraphAnn.beamTopK]] with
+    // `entrySeeds` — the seeding each layer of the [[GraphAnn.hnswTopK]]
+    // descent uses below its top): q361's walk with every query seeded
+    // at the global entry set (the corpus's 16 lowest ids). Same entry
+    // set, candidate algebra, and (cos desc, cid) total order — so the
+    // SAME oracle replay as q361 checks the per-query-seed branch.
     Qd("q365_ann_graph_beam_batch",
       graphBeamOracleSql(m = 8, ef = 16, hops = 4)) { (s, dir) =>
       import graft.operators.GraphAnn
+      import s.implicits._
       val e = emb(s, dir)
-      GraphAnn.beamTopKBatch(e.filter(col("id") < 50), e,
+      val entry = e.select(col("id")).orderBy("id").limit(16).as[Long]
+        .collect()
+      GraphAnn.beamTopK(e.filter(col("id") < 50), e,
           cachedGraph(s, dir, "full_m8")(GraphAnn.knnGraph(e, 8)),
-          10, ef = 16, hops = 4)
+          10, ef = 16, hops = 4, entrySeeds = Some(_ => entry))
         .select(col("qid"), col("cid"), col("rk").cast("bigint").as("rk"),
           col("cos"))
         .orderBy("qid", "rk")
     },
 
-    // TWO-LAYER HNSW ([[GraphAnn.hnswTopK]] — the actual hierarchy): a
-    // sparse upper layer (keyed md5 draw ≡ 0 mod 8, HNSW's geometric
-    // level draw made engine-replayable) is walked first with a narrow
-    // beam (ef=8, 2 hops) from a global entry, then each query's upper-
-    // layer winners seed its bottom-layer walk (ef=16, 2 hops — HALF the
-    // flat q361 schedule; the hierarchy is what caps walk length at
-    // ~log N when a flat walk's length grows with graph radius). The
-    // oracle chains the level split → both graph builds → upper walk →
-    // per-query-seeded bottom walk.
+    // TWO-LAYER HNSW ([[GraphAnn.hnswTopK]] — the actual hierarchy, one
+    // driver-paced descent): a sparse upper layer (keyed md5 draw ≡ 0
+    // mod 8, HNSW's geometric level draw made engine-replayable) is
+    // walked first with a narrow beam (ef=8, 2 hops) from a global
+    // entry, then each query's upper-layer winners seed its bottom-layer
+    // walk (ef=16, 2 hops — HALF the flat q361 schedule; the hierarchy is
+    // what caps walk length at ~log N when a flat walk's length grows
+    // with graph radius). The oracle chains the level split → both graph
+    // builds → upper walk → per-query-seeded bottom walk.
     Qd("q366_ann_graph_hnsw", {
       val gHier =
         s"""lv AS (SELECT vec_id FROM cc
@@ -1191,8 +1193,8 @@ object Pipeline {
       val e = emb(s, dir)
       GraphAnn.hnswTopK(e.filter(col("id") < 50), e, 10,
           m = 8, m1 = 4, ef1 = 8, hops1 = 2, ef = 16, hops = 2,
-          g1Opt = Some(cachedGraph(s, dir, "lvl1_m4")(
-            GraphAnn.knnGraph(GraphAnn.levelNodes(e, 1), 4))),
+          upper = Some(Seq(cachedGraph(s, dir, "lvl1_m4")(
+            GraphAnn.knnGraph(GraphAnn.levelNodes(e, 1), 4)))),
           g0Opt = Some(cachedGraph(s, dir, "full_m8")(
             GraphAnn.knnGraph(e, 8))))
         .select(col("qid"), col("cid"), col("rk").cast("bigint").as("rk"),
@@ -2391,8 +2393,8 @@ object Pipeline {
 
   /** [[beamWalkCtes]] with a PER-QUERY seed table `(qid, cid)` instead of
     * a global entry set — the q366 hierarchy's layer descent (each
-    * layer's final beam seeds the next layer's walk, mirroring
-    * `GraphAnn.beamTopKSeeded`). */
+    * layer's final beam seeds the next layer's walk, mirroring the
+    * descent behind `GraphAnn.hnswTopK` and `GraphAnn.probeIndex`). */
   private[queries] def beamWalkCtesSeeded(p: String, g: String, ps: String,
       seed: String, ef: Int, hops: Int): String =
     beamWalkFrom(p, g, ps,

@@ -11,6 +11,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{KvDecodeFixed, KvEncodeFixed}
+import graft.operators.Stores
 
 /** Spark-native re-expression of the reference's HBase / Accumulo storage
   * handlers — the KV-table *semantics*, without the external service.
@@ -253,16 +254,17 @@ object KvStorageHandler {
   private final case class RegionFile(gen: Long, path: String, kmin: String, kmax: String)
   private final case class Generation(gen: Long, base: Boolean, files: Seq[RegionFile])
 
-  /** Atomic-create one manifest file per write generation (the txn-log
-    * discipline: create-if-absent is the commit point, so two racing writers
-    * cannot both claim a generation ordinal). */
+  /** Publish one manifest file per write generation through the one commit
+    * primitive ([[Stores.commitOnce]]: body to a temp file, then a
+    * no-overwrite publish), so a visible manifest is always complete and
+    * two racing writers cannot both claim a generation ordinal. */
   private def writeManifest(f: FileSystem, root: String, g: Generation): Unit = {
     val p = manifestPath(root, g.gen)
-    f.mkdirs(p.getParent)
     val body = (s"gen\t${g.gen}\tbase\t${g.base}" +:
       g.files.map(r => s"${r.path}\t${enc(r.kmin)}\t${enc(r.kmax)}")).mkString("\n")
-    val out = f.create(p, false) // overwrite=false: atomic claim
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    if (!Stores.commitOnce(f, p, body))
+      throw new java.io.IOException(
+        s"KV generation ${g.gen} at $root was claimed by another writer")
   }
 
   private def readManifests(f: FileSystem, root: String): Seq[Generation] = {

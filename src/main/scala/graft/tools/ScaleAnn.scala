@@ -276,20 +276,15 @@ object ScaleAnn {
             val gl = GraphAnn.blockedKnnGraph(nodes, m = 8,
               centroidStride = math.max(1, math.sqrt(nl.toDouble).toInt), keep = 2).persist()
             gl.count()
-            (nodes, gl, nl)
+            (gl, nl)
           }
         }
-        val entrySeed = queries.select(col("id").as("qid")).crossJoin(
-          broadcast(layers.last._1.select(col("id").as("cid")).orderBy("cid").limit(8)))
-        val (hw, hGot) = topK(s"x$f hierarchy probe") {
-          val seed = layers.reverse.foldLeft(entrySeed: DataFrame) { case (s, (_, gl, _)) =>
-            GraphAnn.beamTopKSeeded(queries, corpus, gl, s, 8, ef = 8, hops = 3).select("qid", "cid")
-          }
-          GraphAnn.beamTopKSeeded(queries, corpus, g, seed, 10, ef = 16, hops = 4)
-        }
-        report(f"x$f-hnsw layers=${layers.size} upperNodes=${layers.map(_._3).mkString("/")} " +
+        val (hw, hGot) = topK(s"x$f hierarchy probe")(
+          GraphAnn.hnswTopK(queries, corpus, 10, ef1 = 8, hops1 = 3, ef = 16, hops = 4,
+            upper = Some(layers.reverse.map(_._1)), g0Opt = Some(g)))
+        report(f"x$f-hnsw layers=${layers.size} upperNodes=${layers.map(_._2).mkString("/")} " +
           f"hierBuild=$hBuild%.2fs probe=$hw%.2fs recall=${recall(brute, hGot)}%.3f")
-        layers.foreach(_._2.unpersist(blocking = false))
+        layers.foreach(_._1.unpersist(blocking = false))
         g.unpersist(blocking = false)
       }
 

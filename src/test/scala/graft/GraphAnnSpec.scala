@@ -153,29 +153,6 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("distributed beam walk returns exactly the driver-paced walk's rows " +
-      "on the exact, blocked, and post-delete graphs") {
-    val queries = emb.filter(col("id") < 30)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("qid", "cid", "rk", "cos").as[(Long, Long, Int, Double)]
-        .collect().sortBy(r => (r._1, r._3)).toSeq
-    val gExact = GraphAnn.knnGraph(emb, 8)
-    assert(rows(GraphAnn.beamTopKBatch(queries, emb, gExact, 10, 16, 4)) ==
-      rows(GraphAnn.beamTopK(queries, emb, gExact, 10, 16, 4)),
-      "batch walk diverged from driver walk on the exact graph")
-    val gBlocked = GraphAnn.blockedKnnGraph(emb, m = 8, centroidStride = 40)
-    assert(rows(GraphAnn.beamTopKBatch(queries, emb, gBlocked, 10, 16, 4)) ==
-      rows(GraphAnn.beamTopK(queries, emb, gBlocked, 10, 16, 4)),
-      "batch walk diverged from driver walk on the blocked graph")
-    val removed = emb.filter(col("id") % 10 === 3).select("id")
-    val sv = emb.filter(col("id") % 10 =!= 3)
-    val gDel = GraphAnn.removeNodes(gExact, sv, removed, 8)
-    val qsv = sv.filter(col("id") < 30)
-    assert(rows(GraphAnn.beamTopKBatch(qsv, sv, gDel, 10, 16, 4)) ==
-      rows(GraphAnn.beamTopK(qsv, sv, gDel, 10, 16, 4)),
-      "batch walk diverged from driver walk on the post-delete graph")
-  }
-
   test("two-layer HNSW: deterministic level split, exact scores, and the " +
       "hierarchical walk holds the flat-schedule recall floor at half the " +
       "bottom-layer hops") {
@@ -208,6 +185,30 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     val recall = (bruteSet & hier.map(r => (r._1, r._2)).toSet).size.toDouble /
       bruteSet.size
     assert(recall >= 0.5, s"hnsw recall=$recall")
+  }
+
+  test("hnswTopK is one driver-paced descent: a bounded job count, and a " +
+      "query whose upper beam comes back empty gets no rows") {
+    val queries = emb.filter(col("id") < 30)
+    // a walk costs a fixed number of bounded actions per hop, whatever the
+    // corpus: the per-hop persist + count of a distributed walk ran ~4x
+    // this many jobs on the same call
+    val (rows, jobs) = JobCounter.during(spark)(GraphAnn.hnswTopK(queries,
+      emb, 10, m = 8, m1 = 4, ef1 = 8, hops1 = 2, ef = 16, hops = 2).collect())
+    assert(rows.length == 30 * 10)
+    assert(jobs.count <= 24, s"hnswTopK ran ${jobs.count} jobs: " +
+      jobs.jobs.map(_.site).mkString("; "))
+    // ef1 = 1 seeds the upper walk at the lowest level-1 id alone; probing
+    // with that node itself leaves it no candidate (a walk never scores a
+    // query against itself), so its upper beam is empty: no rows, no error
+    val top = GraphAnn.levelNodes(emb, 1).select("id").as[Long].collect().min
+    val other = emb.filter(col("id") =!= top).select("id").as[Long]
+      .collect().min
+    val got = GraphAnn.hnswTopK(emb.filter(col("id").isin(top, other)), emb,
+        10, m = 8, m1 = 4, ef1 = 1, hops1 = 2, ef = 16, hops = 2)
+      .select("qid").as[Long].collect()
+    assert(!got.contains(top), "a query with an empty upper beam got rows")
+    assert(got.count(_ == other) == 10, s"query $other: ${got.count(_ == other)} rows")
   }
 
   test("multi-batch ingest: three chained inserts keep the degree bound, " +

@@ -235,20 +235,17 @@ class GraphIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a tombstoned id survived compaction")
   }
 
-  test("per-query entry seeds: driver-paced walk equals the distributed " +
-      "seeded walk row for row") {
+  test("per-query entry seeds equal to the global entry set give the " +
+      "unseeded walk's rows, row for row") {
     val g = GraphAnn.knnGraph(emb, 8)
     val q = emb.filter(col("id") < 20)
-    val seedIds = Array(0L, 1L, 2L, 3L)
-    val qids = q.select(col("id")).as[Long].collect()
-    val seedDf = qids.toSeq.toDF("qid")
-      .crossJoin(seedIds.toSeq.toDF("cid"))
-    val dist = rows(GraphAnn.beamTopKSeeded(q, emb, g, seedDf, 10, 16, 2)
+    val entry = emb.select("id").orderBy("id").limit(16).as[Long].collect()
+    val seeded = rows(GraphAnn.beamTopK(q, emb, g, 10, 16, 2,
+      entrySeeds = Some(_ => entry))
       .withColumn("rk", col("rk").cast("long")))
-    val drv = rows(GraphAnn.beamTopK(q, emb, g, 10, 16, 2,
-      entrySeeds = Some(qids.map(_ -> seedIds).toMap))
+    val plain = rows(GraphAnn.beamTopK(q, emb, g, 10, 16, 2)
       .withColumn("rk", col("rk").cast("long")))
-    assert(dist.nonEmpty && dist.sameElements(drv),
-      "driver-paced seeded walk diverged from the distributed walk")
+    assert(seeded.nonEmpty && seeded.sameElements(plain),
+      "seeding every query at the entry set diverged from the unseeded walk")
   }
 }

@@ -19,9 +19,11 @@ import scala.jdk.CollectionConverters._
 /** The local filesystem under the `crashfs` scheme. Once armed at N, its
   * N-th mutation (create, rename, delete, mkdirs of a missing dir) and
   * every later one throw — the process "died" there, and nothing after it
-  * happens. `failRename` instead fails only the renames it selects, and
+  * happens. `failRename` instead fails only the renames it selects,
   * `noClobber` gives rename HDFS's answer to an existing destination file:
-  * false, where the local rename(2) replaces it. */
+  * false, where the local rename(2) replaces it, and `stepWrites` also
+  * counts the first write into each created file as a mutation — a crash
+  * there leaves the file created but empty. */
 class CrashFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("crashfs:///")
   override def getScheme: String = "crashfs"
@@ -30,15 +32,16 @@ class CrashFs extends RawLocalFileSystem {
       replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
     CrashFs.step("create", f)
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    CrashFs.stepping(f,
+      super.create(f, overwrite, bufferSize, replication, blockSize, progress))
   }
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
     CrashFs.step("create", f)
-    super.create(f, permission, overwrite, bufferSize, replication,
-      blockSize, progress)
+    CrashFs.stepping(f, super.create(f, permission, overwrite, bufferSize,
+      replication, blockSize, progress))
   }
 
   override def createNonRecursive(f: Path, permission: FsPermission,
@@ -46,8 +49,8 @@ class CrashFs extends RawLocalFileSystem {
       replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
     CrashFs.step("create", f)
-    super.createNonRecursive(f, permission, flags, bufferSize, replication,
-      blockSize, progress)
+    CrashFs.stepping(f, super.createNonRecursive(f, permission, flags,
+      bufferSize, replication, blockSize, progress))
   }
 
   override def rename(src: Path, dst: Path): Boolean = {
@@ -79,6 +82,7 @@ object CrashFs {
   @volatile private var failFrom = Long.MaxValue
   @volatile var failRename: Path => Boolean = _ => false
   @volatile var noClobber = false
+  @volatile var stepWrites = false
 
   /** Count mutations from zero; fail the `at`-th (0-based) and later. */
   def arm(at: Long): Unit = { done.set(0); failFrom = at }
@@ -89,6 +93,21 @@ object CrashFs {
   def step(what: String, p: Path): Unit =
     if (done.getAndIncrement() >= failFrom)
       throw new java.io.IOException(s"crash at $what $p")
+
+  /** `out`, whose first write is a [[step]] while `stepWrites` is on. */
+  def stepping(f: Path, out: FSDataOutputStream): FSDataOutputStream =
+    if (!stepWrites) out
+    else new FSDataOutputStream(new java.io.OutputStream {
+      private var first = true
+      private def once(): Unit =
+        if (first) { first = false; step("write", f) }
+      override def write(b: Int): Unit = { once(); out.write(b) }
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        once(); out.write(b, off, len)
+      }
+      override def flush(): Unit = out.flush()
+      override def close(): Unit = out.close()
+    }, null)
 }
 
 /** [[IndexStore]]: the manifest is the one commit point of every index

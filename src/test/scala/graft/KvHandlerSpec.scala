@@ -445,6 +445,47 @@ class KvHandlerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertThrows[java.io.IOException](f.create(p, false).close())
   }
 
+  test("a crash at any filesystem mutation of an INSERT leaves the table at the old or the new generation") {
+    val s = spark
+    import s.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashfs.impl", classOf[CrashFs].getName)
+    val m = parseMapping(
+      StructType(Seq(StructField("k", StringType), StructField("a", LongType))),
+      ":key,f:a#b")
+    val before = Seq(("k1", 1L))
+    val after = Seq(("k1", 1L), ("k2", 2L))
+    /** A one-generation table on the crashing filesystem. */
+    def fresh(): String = {
+      val root = s"crashfs://${tmp("crash")}"
+      put(spark, root, before.toDF("k", "a"), m, regions = 1)
+      root
+    }
+    def insert(root: String): Unit =
+      put(spark, root, Seq(("k2", 2L)).toDF("k", "a"), m, regions = 1)
+    // a fresh session opens the table from its manifests alone
+    def content(root: String): Seq[(String, Long)] =
+      read(spark.newSession(), root, m).select("k", "a").as[(String, Long)]
+        .collect().sorted.toSeq
+    CrashFs.stepWrites = true
+    try {
+      val root = fresh()
+      CrashFs.arm(Long.MaxValue) // count, never fail
+      insert(root)
+      val n = CrashFs.disarm()
+      assert(content(root) === after)
+      for (i <- 0L until n) {
+        val root = fresh()
+        CrashFs.arm(i)
+        val crashed = try scala.util.Try(insert(root)) finally CrashFs.disarm()
+        assert(crashed.isFailure, s"mutation $i of $n did not fail the INSERT")
+        val got = scala.util.Try(content(root))
+        assert(got.toOption.exists(r => r == before || r == after),
+          s"crash at mutation $i of $n: the table reads $got")
+      }
+    } finally CrashFs.stepWrites = false
+  }
+
   // ------------------------------------------------- visibility labels
 
   test("visibility expression grammar: labels, & over |, parens, rejects") {

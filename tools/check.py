@@ -77,7 +77,13 @@ def main():
         selftest()
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
-    con = duckdb.connect()
+    # an explicit memory cap with a spill directory under the checkout's
+    # target/: at DuckDB's default (80% of the host's RAM) the graph
+    # oracles' all-pairs CTEs grew the process past 12 GB
+    tmp = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "target", "duckdb_tmp")
+    os.makedirs(tmp, exist_ok=True)
+    con = duckdb.connect(config={"memory_limit": "5GB", "temp_directory": tmp})
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
