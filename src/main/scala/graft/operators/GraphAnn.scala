@@ -149,15 +149,12 @@ object GraphAnn {
     * `corpus`: (id, embedding), or the pre-quantized (id, qe, n2[,
     * bucket]) at-rest shape; `graph`: (src, dst) as built by [[knnGraph]].
     * `ef >= k` required. Every query starts at the corpus's `ef` lowest
-    * ids unless `entrySeeds` gives a PER-QUERY seed set (the [[hnswTopK]]
-    * layer-descent shape): a query whose seed set is empty gets no rows.
-    * A one-layer [[descend]]. */
+    * ids. A one-layer [[descend]]. */
   def beamTopK(queries: DataFrame, corpus: DataFrame, graph: DataFrame,
-      k: Int, ef: Int, hops: Int,
-      entrySeeds: Option[Long => Array[Long]] = None): DataFrame = {
+      k: Int, ef: Int, hops: Int): DataFrame = {
     require(ef >= k, s"beam width ef=$ef must cover k=$k")
     ranked(corpus.sparkSession, descend(queries, corpus,
-      Seq((graph, ef, hops)), entrySeeds, defaultFetch).last, k)
+      Seq((graph, ef, hops)), None, defaultFetch).last, k)
   }
 
   /** A final beam as the public ranked (qid, cid, rk, cos) top-k — re-rank

@@ -1005,7 +1005,10 @@ object Pipeline {
     // the uniform top-m re-trim is HNSW's neighbor pruning. Batch nodes
     // insert against the pre-batch graph, so inserts commute. The oracle
     // chains TWO beam walks (insert walk `i*`, probe walk `p*`) plus the
-    // edge-selection/back-edge/re-trim algebra between them.
+    // edge-selection/back-edge/re-trim algebra between them; both graphs
+    // and the insert scores are MATERIALIZED, as in q367: each walk round
+    // names the previous beam twice, so inlined CTEs rebuild the graphs
+    // per reference, exponentially in the hops.
     Qd("q363_ann_graph_insert", {
       val gIns =
         s"""old AS (SELECT * FROM cn WHERE vec_id % 10 <> 9),
@@ -1014,10 +1017,10 @@ object Pipeline {
           |    CAST(CAST(list_sum(list_transform(range(1, 65), i -> a.qe[i]*b.qe[i])) AS BIGINT) AS DOUBLE)
           |      / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) AS cos
           |  FROM old a, old b WHERE a.vec_id <> b.vec_id),
-          |g0 AS (SELECT src, dst FROM (SELECT src, dst,
+          |g0 AS MATERIALIZED (SELECT src, dst FROM (SELECT src, dst,
           |    row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn FROM gp0)
           |  WHERE rn <= 8),
-          |psi AS (SELECT b.vec_id AS qid, c.vec_id AS cid,
+          |psi AS MATERIALIZED (SELECT b.vec_id AS qid, c.vec_id AS cid,
           |    CAST(CAST(list_sum(list_transform(range(1, 65), i -> b.qe[i]*c.qe[i])) AS BIGINT) AS DOUBLE)
           |      / sqrt(CAST(b.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos
           |  FROM bn b, cn c WHERE b.vec_id <> c.vec_id),
@@ -1036,7 +1039,7 @@ object Pipeline {
           |    CAST(CAST(list_sum(list_transform(range(1, 65), i -> a.qe[i]*b.qe[i])) AS BIGINT) AS DOUBLE)
           |      / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) AS cos
           |  FROM alle e JOIN cn a ON a.vec_id = e.src JOIN cn b ON b.vec_id = e.dst),
-          |g AS (SELECT src, dst FROM (SELECT src, dst,
+          |g AS MATERIALIZED (SELECT src, dst FROM (SELECT src, dst,
           |    row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn FROM ge)
           |  WHERE rn <= 8)""".stripMargin
       graphBeamOracleSql(ef = 16, hops = 4, gIns)
@@ -1120,22 +1123,17 @@ object Pipeline {
         .orderBy("qid", "rk")
     },
 
-    // The PER-QUERY-SEEDED beam walk ([[GraphAnn.beamTopK]] with
-    // `entrySeeds` — the seeding each layer of the [[GraphAnn.hnswTopK]]
-    // descent uses below its top): q361's walk with every query seeded
-    // at the global entry set (the corpus's 16 lowest ids). Same entry
-    // set, candidate algebra, and (cos desc, cid) total order — so the
-    // SAME oracle replay as q361 checks the per-query-seed branch.
+    // A WIDE, SHORT walk schedule (ef=24, 2 hops) over q361's graph:
+    // half the hops at 1.5x the beam. Same entry rule, candidate algebra
+    // and (cos desc, cid) total order, so the same oracle generator as
+    // q361, replayed at this schedule, checks a second (ef, hops) point.
     Qd("q365_ann_graph_beam_batch",
-      graphBeamOracleSql(m = 8, ef = 16, hops = 4)) { (s, dir) =>
+      graphBeamOracleSql(m = 8, ef = 24, hops = 2)) { (s, dir) =>
       import graft.operators.GraphAnn
-      import s.implicits._
       val e = emb(s, dir)
-      val entry = e.select(col("id")).orderBy("id").limit(16).as[Long]
-        .collect()
       GraphAnn.beamTopK(e.filter(col("id") < 50), e,
           cachedGraph(s, dir, "full_m8")(GraphAnn.knnGraph(e, 8)),
-          10, ef = 16, hops = 4, entrySeeds = Some(_ => entry))
+          10, ef = 24, hops = 2)
         .select(col("qid"), col("cid"), col("rk").cast("bigint").as("rk"),
           col("cos"))
         .orderBy("qid", "rk")

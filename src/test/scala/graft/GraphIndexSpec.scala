@@ -234,18 +234,4 @@ class GraphIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .exists { case (s0, d0) => removed(s0) || removed(d0) },
       "a tombstoned id survived compaction")
   }
-
-  test("per-query entry seeds equal to the global entry set give the " +
-      "unseeded walk's rows, row for row") {
-    val g = GraphAnn.knnGraph(emb, 8)
-    val q = emb.filter(col("id") < 20)
-    val entry = emb.select("id").orderBy("id").limit(16).as[Long].collect()
-    val seeded = rows(GraphAnn.beamTopK(q, emb, g, 10, 16, 2,
-      entrySeeds = Some(_ => entry))
-      .withColumn("rk", col("rk").cast("long")))
-    val plain = rows(GraphAnn.beamTopK(q, emb, g, 10, 16, 2)
-      .withColumn("rk", col("rk").cast("long")))
-    assert(seeded.nonEmpty && seeded.sameElements(plain),
-      "seeding every query at the entry set diverged from the unseeded walk")
-  }
 }

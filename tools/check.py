@@ -14,6 +14,11 @@ import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
+# Oracles that run in their written join order. DuckDB 1.0's join-order
+# optimizer misestimates q72's joins over generated CTEs (its estimates
+# overflow) and spilled past 15 GB under the memory cap; in the written
+# order the query streams in under 100 MB. The compare is unchanged.
+WRITTEN_JOIN_ORDER = {"q293_tpcds_q72"}
 
 
 def _norm_val(v):
@@ -100,6 +105,8 @@ def main():
             n_fail += 1
             continue
         try:
+            con.execute("SET disabled_optimizers = 'join_order'"
+                        if name in WRITTEN_JOIN_ORDER else "RESET disabled_optimizers")
             mine = norm(pd.concat([pd.read_parquet(f) for f in sorted(files)]))
             oracle = norm(con.execute(sql).df())
         except Exception as e:
