@@ -31,10 +31,13 @@ import org.apache.spark.sql.types.StructType
   * followed by its invalidation before the next read, and the paths that
   * change schema or go away for good purge. Paths that are never
   * rewritten — warehouse inputs, uuid-named
-  * transactional dirs — need no call until they are deleted. Only
-  * metadata is held, never rows: plans stay lazy and every action
-  * re-reads parquet. Prefixes match on a path boundary, so `/w/t1` never
-  * touches `/w/t10`.
+  * transactional dirs — need no call until they are deleted. Metadata
+  * is held, and one kind of row data: the row ids of a transactional
+  * delete half (`TxnMergeOnRead.deadRidsOf`), immutable like its dir and
+  * held only while a snapshot's live delete halves sum to at most
+  * [[Stores.ID_CAP]] rows, so one entry holds at most that many ids.
+  * Plans stay lazy and every action re-reads parquet. Prefixes match on
+  * a path boundary, so `/w/t1` never touches `/w/t10`.
   *
   * Bounded by one eviction loop: past [[CAP]] entries, relations of
   * stopped sessions go first, then an arbitrary quarter of a map; an
@@ -86,7 +89,8 @@ private[graft] object MetaCache {
     memo(path, "")(spark.read.parquet(path).schema)
 
   /** A per-path constant under `key` — a sidecar's probe metadata, a
-    * transactional data dir's file list — computed on first use (outside
+    * transactional data dir's file list, a delete half's row count and
+    * row ids — computed on first use (outside
     * any lock: a race computes twice, harmlessly) and kept until
     * [[purge]]. */
   def memo[T <: AnyRef](path: String, key: String)(compute: => T): T = {

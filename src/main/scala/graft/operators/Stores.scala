@@ -11,18 +11,22 @@ import org.apache.spark.FutureAction
 import org.apache.spark.rdd.PartitionPruningRDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.types.LongType
 
 /** Helpers the at-rest stores (IVF-PQ, binary, graph, BM25/positional)
   * and the transactional log share: driver-bounded id sets and the one
   * commit primitive. */
 private[graft] object Stores {
 
-  /** The largest id set the driver handles itself: an `isin` InSet up to
-    * here, a broadcast join above; likewise the row bound of
+  /** The largest id set the driver handles itself: an InSet up to here,
+    * a broadcast join above ([[fetchIds]]); the largest live delete set a
+    * transactional snapshot filters from driver-held rids
+    * (`TxnMergeOnRead.snapshotAtV`); likewise the row bound of
     * [[boundedRows]], so of a driver-side [[LocalParquet.writeSmall]] and
     * of a transactional stage written from the driver
     * (`TxnMergeOnRead.stage`: a DML statement staging at most this many
@@ -92,7 +96,10 @@ private[graft] object Stores {
   }
 
   /** Rows of `df` whose `idCol` is in `ids`: an InSet pushdown within
-    * [[ID_CAP]], a broadcast join above. With `nBuckets > 0` the store is
+    * [[ID_CAP]], a broadcast join above. The InSet is built as one
+    * expression over the id set — the form the optimizer would turn an
+    * `isin` of one literal per id into, without analysing and optimizing
+    * those literals first. With `nBuckets > 0` the store is
     * `bucket = pmod(id, nBuckets)`-partitioned and the scan first prunes
     * to the buckets the ids fall in. */
   def fetchIds(df: DataFrame, idCol: String, ids: Array[Long],
@@ -101,8 +108,14 @@ private[graft] object Stores {
       if (nBuckets <= 0) df
       else df.filter(col("bucket").isin(
         ids.map(Math.floorMod(_, nBuckets.toLong)).distinct.toSeq: _*))
-    if (ids.length <= ID_CAP) pruned.filter(col(idCol).isin(ids.toSeq: _*))
-    else {
+    if (ids.length <= ID_CAP) {
+      val id = ColumnBridge.logicalPlan(pruned)
+        .resolve(Seq(idCol), pruned.sparkSession.sessionState.conf.resolver)
+        .getOrElse(throw new IllegalArgumentException(s"no column $idCol"))
+      pruned.filter(ColumnBridge.column(InSet(
+        if (id.dataType == LongType) id else Cast(id, LongType),
+        ids.toSet[Any])))
+    } else {
       val spark = df.sparkSession
       import spark.implicits._
       pruned.join(broadcast(ids.toSeq.toDF(idCol)), idCol)

@@ -6,7 +6,12 @@ import scala.collection.immutable.SortedMap
 import scala.util.{Success, Try}
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, JoinedRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -54,11 +59,21 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *
   * A snapshot is read the way the reference's ACID reader merges a base
   * and its deltas into one record stream: ONE parquet scan over the base
-  * files and the files of every live `insert/` half, left-anti joined on
-  * `__row_id` against ONE scan of every live `delete/` half pruned to the
-  * id, both at the declared schema. A dir's files are listed once and
-  * memoized (uuid dirs never change), so a read lists nothing and costs
-  * two scans however many delta dirs are live.
+  * files and the files of every live `insert/` half at the declared
+  * schema, less the rows the live `delete/` halves kill. While those
+  * halves hold at most [[Stores.ID_CAP]] rows — every OLTP-sized history
+  * — their rids are in hand on the driver, as Hive 2.2's
+  * `VectorizedOrcAcidRowBatchReader` loads a split's delete events into
+  * an in-memory registry instead of merge-reading them: [[stage]]
+  * records the rids of the delete half it writes, and a half not in hand
+  * (a fresh JVM, a Spark-written stage) is read on the driver, bounded by
+  * its footers' row counts. The scan is then filtered by one named
+  * predicate over a broadcast of those rids; the read is one scan and
+  * spends no job on the deletes. Above the cap the scan is left-anti
+  * joined on `__row_id` against ONE scan of every live `delete/` half
+  * pruned to the id. A dir's files are listed once and memoized (uuid
+  * dirs never change), so building a read lists nothing and runs no job
+  * however many delta dirs are live.
   *
   * Surface (one lakehouse table in ~15 calls):
   * {{{
@@ -834,29 +849,129 @@ object TxnMergeOnRead {
   private def antiRid(df: DataFrame, minus: Option[DataFrame]): DataFrame =
     minus.fold(df)(m => df.join(m.select(col(RID)), Seq(RID), "left_anti"))
 
+  /** Dead row ids by writer tag: `tags` sorted, `seqs(i)` the sorted seqs
+    * of `tags(i)`, so a lookup is two binary searches on primitives. */
+  private final class DeadRids(val tags: Array[Long],
+      val seqs: Array[Array[Long]]) extends Serializable {
+    def has(txn: Long, seq: Long): Boolean = {
+      val i = java.util.Arrays.binarySearch(tags, txn)
+      i >= 0 && java.util.Arrays.binarySearch(seqs(i), seq) >= 0
+    }
+  }
+
+  private object DeadRids {
+    def of(rids: Seq[(Long, Long)]): DeadRids = {
+      val byTag = rids.groupMap(_._1)(_._2).toArray.sortBy(_._1)
+      new DeadRids(byTag.map(_._1), byTag.map(_._2.toArray.sorted))
+    }
+    def union(sets: Seq[DeadRids]): DeadRids =
+      if (sets.size == 1) sets.head
+      else {
+        val byTag = sets.flatMap(s => s.tags.zip(s.seqs))
+          .groupMapReduce(_._1)(_._2)(_ ++ _).toArray.sortBy(_._1)
+        new DeadRids(byTag.map(_._1), byTag.map(_._2.sorted))
+      }
+  }
+
+  /** The name the snapshot's rid filter carries in a plan. */
+  private[graft] val LIVE_RID = "txn_live_rid"
+
+  /** The row count of a delete half, from its footers on the driver;
+    * memoized beside its rids ([[stage]] records both). */
+  private def deadRows(spark: SparkSession, half: String,
+      files: Seq[FileStatus]): Long =
+    MetaCache.memo[java.lang.Long](half, "rows") {
+      val conf = spark.sparkContext.hadoopConfiguration
+      Long.box(files.map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try r.getRecordCount finally r.close()
+      }.sum)
+    }.longValue
+
+  /** The rids of a delete half, read on the driver from its files'
+    * `__row_id` column (no Spark job); memoized — a delete half never
+    * changes once written. */
+  private def deadRids(spark: SparkSession, half: String,
+      files: Seq[FileStatus]): DeadRids =
+    MetaCache.memo(half, "rids") {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val rids = Seq.newBuilder[(Long, Long)]
+      files.foreach { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try {
+          val onDisk = r.getFooter.getFileMetaData.getSchema
+          val proj = new MessageType(onDisk.getName, onDisk.getType(onDisk.getFieldIndex(RID)))
+          r.setRequestedSchema(proj)
+          val io = new ColumnIOFactory().getColumnIO(proj, onDisk)
+          var pages = r.readNextRowGroup()
+          while (pages != null) {
+            val rr = io.getRecordReader(pages, new GroupRecordConverter(proj))
+            var i = 0L
+            while (i < pages.getRowCount) {
+              val rid = rr.read().getGroup(RID, 0)
+              rids += ((rid.getLong("txn", 0), rid.getLong("seq", 0)))
+              i += 1
+            }
+            pages = r.readNextRowGroup()
+          }
+        } finally r.close()
+      }
+      DeadRids.of(rids.result())
+    }
+
+  /** Every rid the delete halves of `dirs` hold, in hand on the driver,
+    * when their footers' row counts sum to at most [[Stores.ID_CAP]]; None
+    * above it, where no half's rids are read. */
+  private def deadRidsOf(spark: SparkSession, f: FileSystem, root: String,
+      dirs: Seq[String]): Option[DeadRids] = {
+    val halves = dirs.flatMap(d =>
+      filesOf(f, root, d).get("delete").map(s"$root/$d/delete" -> _))
+    if (halves.map { case (h, files) => deadRows(spark, h, files) }.sum >
+        Stores.ID_CAP) None
+    else Some(DeadRids.union(halves.map { case (h, files) =>
+      deadRids(spark, h, files) }))
+  }
+
+  /** True for a row whose id `dead` does not hold: one deterministic
+    * predicate over a broadcast the driver creates, which runs no job. */
+  private def notDead(spark: SparkSession, dead: DeadRids): Column = {
+    val b = spark.sparkContext.broadcast(dead)
+    udf((txn: Long, seq: Long) => !b.value.has(txn, seq)).withName(LIVE_RID)(
+      col(s"$RID.txn"), col(s"$RID.seq"))
+  }
+
   /** Snapshot as of the given view, with row ids: ONE parquet scan over
-    * the base files and every live insert half, left-anti joined on the
-    * row id against ONE scan of every live delete half (delete events
-    * carry the full dead row, CDF-style; the scan is pruned to the id).
-    * Both scans read at the view's declared schema ([[schemaAtV]]), which
-    * is the reference's schema-on-read ADD COLUMNS semantics: a file
-    * written before a schema entry lacks the column and reads NULL, and
-    * no data file is ever rewritten for a schema change. `surv` names an
-    * insert-bearing dir's surviving files ([[readPrunedBy]]; None = all). */
+    * the base files and every live insert half, less the rows the live
+    * delete halves kill. When those halves hold at most
+    * [[Stores.ID_CAP]] rows, their rids are in hand on the driver
+    * ([[deadRidsOf]]) and the scan is filtered by [[notDead]] — no delete
+    * scan, no join, no broadcast job; above the cap the scan is left-anti
+    * joined on the row id against ONE scan of every live delete half
+    * (delete events carry the full dead row, CDF-style; the scan is pruned
+    * to the id). Scans read at the view's declared schema
+    * ([[schemaAtV]]), which is the reference's schema-on-read ADD COLUMNS
+    * semantics: a file written before a schema entry lacks the column and
+    * reads NULL, and no data file is ever rewritten for a schema change.
+    * `surv` names an insert-bearing dir's surviving files
+    * ([[readPrunedBy]]; None = all). */
   private def snapshotAtV(spark: SparkSession, root: String, view: View,
       surv: String => Option[Seq[String]] = _ => None): DataFrame = {
     val f = fs(spark, root)
     val (base, deltas) = liveStateV(f, root, view)
     val schema = schemaAtV(spark, f, root, view)
-    val born = insertDirs(f, root, base, deltas).flatMap { case (p, files) =>
-      surv(p).fold(files) { keep =>
+    val born = scan(spark, insertDirs(f, root, base, deltas).flatMap {
+      case (p, files) => surv(p).fold(files) { keep =>
         val names = keep.map(new Path(_).getName).toSet
         files.filter(st => names(st.getPath.getName))
       }
-    }
-    antiRid(scan(spark, born, schema), scanHalf(spark, f, root,
-      deltas.values.toSeq.map(_.dir), "delete", StructType(Seq(schema(RID)))))
-      .select(schema.fieldNames.toSeq.map(col): _*)
+    }, schema)
+    val dirs = deltas.values.toSeq.map(_.dir)
+    (deadRidsOf(spark, f, root, dirs) match {
+      case Some(dead) if dead.tags.isEmpty => born
+      case Some(dead) => born.filter(notDead(spark, dead))
+      case None => antiRid(born, scanHalf(spark, f, root, dirs, "delete",
+        StructType(Seq(schema(RID)))))
+    }).select(schema.fieldNames.toSeq.map(col): _*)
   }
 
   /** Snapshot read at the latest committed version (user-facing). */
@@ -1111,7 +1226,9 @@ object TxnMergeOnRead {
     * emptiness probe of a half the rows in hand do not show and the
     * footprint are jobs. Either way the new dirs' schemas go into
     * [[MetaCache]], so no later open of the stage runs a footer-inference
-    * job; both paths write the same Spark schema. */
+    * job; both paths write the same Spark schema. A delete half written
+    * wholly from the driver also leaves its rids there, so a snapshot
+    * over it reads nothing of it ([[deadRidsOf]]). */
   private def stage(spark: SparkSession, root: String, rows: DataFrame,
       tag: Option[Long], cons: Seq[(String, String)], op: String,
       emptyOk: Boolean = false): Option[Staged] = {
@@ -1179,15 +1296,22 @@ object TxnMergeOnRead {
     (inHand.map(_._1) ++ spilled.map(_._1)).distinct.foreach(k =>
       MetaCache.memo(at(k), "")(ColumnBridge.asNullable(schemas(k))))
     filesOf(fs(spark, root), root, dir)
-    Some(Staged(dir,
-      if (spilled.nonEmpty) footprint(spark, root, dir)
-      else inHand.collectFirst { case ("delete", rs) =>
+    if (spilled.nonEmpty) Some(Staged(dir, footprint(spark, root, dir)))
+    else {
+      // a driver-written delete half: its rids are in hand for every
+      // later snapshot ([[deadRidsOf]]) and for the footprint
+      val dead = inHand.collectFirst { case ("delete", rs) =>
         val ri = schemas("delete").fieldIndex(RID)
-        footprintOf(rs.toSeq.map { r =>
+        val rids = rs.toSeq.map { r =>
           val rid = r.getStruct(ri, 2)
           (rid.getLong(0), rid.getLong(1))
-        })
-      }.getOrElse("-")))
+        }
+        MetaCache.memo(at("delete"), "rows")(Long.box(rids.size))
+        MetaCache.memo(at("delete"), "rids")(DeadRids.of(rids))
+        rids
+      }
+      Some(Staged(dir, dead.fold("-")(footprintOf)))
+    }
   }
 
   /** Footprint summaries with more tags than this collapse to `*` (always

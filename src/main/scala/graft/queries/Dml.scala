@@ -111,8 +111,8 @@ object Dml {
 
     // Merge-on-read on the txn log ([[TxnMergeOnRead]]): UPDATE (delete-event
     // + insert-delta pair), DELETE (delete-delta), INSERT (insert-delta) —
-    // base files never rewritten; the snapshot read merges them via a
-    // stats-driven anti-join. The oracle replays the same transaction
+    // base files never rewritten; the snapshot read filters the one scan
+    // by the delete rids held on the driver. The oracle replays the same transaction
     // sequence as chained CTEs.
     Qd("q151_dml_merge_on_read",
       """WITH t0 AS (SELECT CAST(c_custkey AS BIGINT) AS ck, c_name AS nm,

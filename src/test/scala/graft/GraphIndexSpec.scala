@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{AnnSearch, GraphAnn, IndexStore}
+import graft.operators.{AnnSearch, GraphAnn, IndexStore, Stores}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -71,6 +72,23 @@ class GraphIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vplan = GraphAnn.indexFetch(8, Array.emptyLongArray)(
       vec, "id", Array(5L)).queryExecution.executedPlan.toString
     assert(vplan.contains("PartitionFilters") && vplan.contains("bucket"))
+  }
+
+  test("an id fetch filters by one InSet and reads the rows an isin reads") {
+    val path = tmp("inset")
+    GraphAnn.writeIndex(emb, path, m = 8, m1 = 4, nBuckets = 8)
+    val vec = spark.read.parquet(store(path, "vectors"))
+    val ids = (0L until 400L by 3L).toArray
+    val fetched = Stores.fetchIds(vec, "id", ids, nBuckets = 8)
+    val inSets = fetched.queryExecution.optimizedPlan.flatMap(_.expressions
+      .flatMap(_.collect { case s: InSet => s }))
+    assert(inSets.size == 1 && inSets.head.hset.size == ids.length,
+      fetched.queryExecution.optimizedPlan.toString)
+    val viaIsin = vec.filter(col("bucket").isin(ids.map(_ % 8).distinct.toSeq: _*))
+      .filter(col("id").isin(ids.toSeq: _*))
+    def all(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(all(fetched).nonEmpty)
+    assert(all(fetched) == all(viaIsin))
   }
 
   test("level-aware ingest: batches append generations, inserted nodes are " +

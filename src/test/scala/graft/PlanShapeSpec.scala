@@ -170,11 +170,16 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bnlj <= 1, s"expected only the broadcast-N join, saw $bnlj BNLJs")
   }
 
-  test("q151 merge-on-read snapshot applies deletes via a broadcast anti-join") {
+  test("q151 merge-on-read snapshot applies deletes by the driver-held rid filter") {
     val s = finalPlan("q151_dml_merge_on_read")
-    assert(s.contains("LeftAnti"), "MoR read must anti-join the delete deltas")
-    assert(s.contains("BroadcastHashJoin") || s.contains("BroadcastExchange"),
-      "small delete-deltas should broadcast (the in-memory delete-registry analog)")
+    // small delete deltas are an in-memory delete registry (Hive 2.2's
+    // VectorizedOrcAcidRowBatchReader): their rids filter the one scan.
+    // TxnMorSpec pins the broadcast anti-join a larger delete set keeps
+    assert(s.contains(graft.operators.TxnMergeOnRead.LIVE_RID),
+      "MoR read must filter the scan by the live delete rids")
+    assert(!s.contains("LeftAnti") && !s.contains("BroadcastExchange"),
+      "deletes in hand need no anti-join and no broadcast job")
+    assert("FileScan parquet".r.findAllIn(s).size == 1, s)
   }
 
   test("q146 cached dimension is scanned from the in-memory columnar cache") {

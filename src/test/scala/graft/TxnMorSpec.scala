@@ -980,13 +980,15 @@ class TxnMorSpec extends AnyFunSuite with BeforeAndAfterAll {
     TxnMergeOnRead.delete(spark, root, "k >= 290")
     val preRows = TxnMergeOnRead.read(spark, root).orderBy("k").collect()
     val prePlan = TxnMergeOnRead.read(spark, root).queryExecution.executedPlan.toString
-    assert(prePlan.contains("Anti"), "pre-compaction read must merge delete events")
+    assert(prePlan.contains(TxnMergeOnRead.LIVE_RID),
+      "pre-compaction read must apply delete events")
     val foldedDeltas = logEntries(root).filter(_._1 == "mutate").map(_._2)
     assert(TxnMergeOnRead.compact(spark, root))
     val postRows = TxnMergeOnRead.read(spark, root).orderBy("k").collect()
     assert(postRows.sameElements(preRows), "compaction must not change the snapshot")
     val postPlan = TxnMergeOnRead.read(spark, root).queryExecution.executedPlan.toString
-    assert(!postPlan.contains("Anti"), "post-compaction read must be a plain scan")
+    assert(!postPlan.contains("Anti") && !postPlan.contains(TxnMergeOnRead.LIVE_RID),
+      "post-compaction read must be a plain scan")
     assert(TxnMergeOnRead.liveBase(spark, root)._2.isEmpty,
       "no delta is live on the new base")
     TxnMergeOnRead.vacuum(spark, root, retainVersions = 1)
@@ -1088,18 +1090,84 @@ class TxnMorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (df, buildJobs) = JobCounter.during(spark)(TxnMergeOnRead.read(spark, root))
     assert(buildJobs.count === 0, "building the snapshot lists in no job")
     val (rows, readJobs) = JobCounter.during(spark)(df.collect())
-    assert(readJobs.count === 2, "the delete broadcast and the result, nothing before")
+    assert(readJobs.count === 1, "the result, nothing before")
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
-    assert("FileScan parquet".r.findAllIn(plan).size === 2, plan)
-    assert(plan.contains("BroadcastExchange") && plan.contains("LeftAnti"), plan)
+    assert("FileScan parquet".r.findAllIn(plan).size === 1, plan)
+    assert(plan.contains(TxnMergeOnRead.LIVE_RID), plan)
+    assert(!plan.contains("BroadcastExchange") && !plan.contains("LeftAnti"), plan)
     assert(rows.length === model.size)
     assert(rows.map(r => r.getLong(0) -> r.getLong(1)).toMap === model.toMap)
-    // cold file lists (a fresh JVM) are listed on the driver: still no job
+    // cold file lists and rid sets (a fresh JVM) are read on the driver:
+    // still no job to build, one to collect
     deltas.foreach(d => MetaCache.purge(s"$root/$d"))
     val (cold, coldJobs) = JobCounter.during(spark)(TxnMergeOnRead.read(spark, root))
     assert(coldJobs.count === 0)
-    assert(rendered(cold) === rendered(df))
+    val (coldRows, coldReadJobs) = JobCounter.during(spark)(rendered(cold))
+    assert(coldReadJobs.count === 1)
+    assert(coldRows === rendered(df))
+  }
+
+  test("a delete set above ID_CAP reads through the broadcast anti-join") {
+    val root = s"$base/bigdelete"
+    val n = Stores.ID_CAP + 5000
+    mk(root, n)
+    // a Spark-written delete half of more than ID_CAP rows, then small
+    // driver-written ones beside it
+    TxnMergeOnRead.delete(spark, root, "k >= 3000")
+    TxnMergeOnRead.update(spark, root, Seq("v" -> "v + 1"), "k % 7 = 0")
+    TxnMergeOnRead.delete(spark, root, "k < 10")
+    val model = (10L until 3000L).map(k => k -> (k * 10 + (if (k % 7 == 0) 1 else 0)))
+    val df = TxnMergeOnRead.read(spark, root)
+    val rows = df.collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(rows.sorted.toSeq === model)
+    val plan = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert(plan.contains("BroadcastExchange") && plan.contains("LeftAnti"), plan)
+    assert(!plan.contains(TxnMergeOnRead.LIVE_RID), plan)
+    assert("FileScan parquet".r.findAllIn(plan).size === 2, plan)
+  }
+
+  test("a mixed INSERT/UPDATE/DELETE/MERGE/RESTORE sequence and readAt read the model's rows") {
+    val root = s"$base/mixed"
+    mk(root, 300)
+    var model = (0L until 300L).map(k => k -> k * 10).toMap
+    val at = scala.collection.mutable.Map(1L -> model)
+    def step(run: => Unit)(next: Map[Long, Long] => Map[Long, Long]): Unit = {
+      run
+      model = next(model)
+      at(TxnMergeOnRead.currentVersion(spark, root)) = model
+    }
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+      val rs = df.collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(rs.map(_._1).distinct.length === rs.length, "a key read twice")
+      rs.toMap
+    }
+    step(TxnMergeOnRead.insert(spark, root, spark.range(300, 320)
+      .select(col("id").as("k"), lit(-1L).as("v"))))(
+      _ ++ (300L until 320L).map(_ -> -1L))
+    step(TxnMergeOnRead.update(spark, root, Seq("v" -> "v + 5"), "k % 4 = 1"))(
+      _.map { case (k, v) => k -> (if (k % 4 == 1) v + 5 else v) })
+    step(TxnMergeOnRead.delete(spark, root, "k % 5 = 0"))(_.filter(_._1 % 5 != 0))
+    val src = spark.range(290, 330).select(col("id").as("k"),
+      (col("id") * 100).as("nv"))
+    step(TxnMergeOnRead.merge(spark, root, src, "t.k = s.k",
+      matchedSet = Seq("v" -> "s.nv"), matchedDelete = Some("s.k % 3 = 0"),
+      notMatchedInsert = Some(Seq("k" -> "s.k", "v" -> "s.nv")))) { m =>
+      val srcKeys = (290L until 330L)
+      m.filter { case (k, _) => !(srcKeys.contains(k) && k % 3 == 0) }
+        .map { case (k, v) => k -> (if (srcKeys.contains(k)) k * 100 else v) } ++
+        srcKeys.filter(k => !m.contains(k)).map(k => k -> k * 100)
+    }
+    step(TxnMergeOnRead.delete(spark, root, "k < 50"))(_.filter(_._1 >= 50))
+    step(TxnMergeOnRead.restore(spark, root, 3))(_ => at(3))
+    step(TxnMergeOnRead.update(spark, root, Seq("v" -> "0"), "k BETWEEN 100 AND 120"))(
+      _.map { case (k, v) => k -> (if (k >= 100 && k <= 120) 0L else v) })
+    step(TxnMergeOnRead.delete(spark, root, "k % 11 = 0"))(_.filter(_._1 % 11 != 0))
+    assert(rowsOf(TxnMergeOnRead.read(spark, root)) === model)
+    at.foreach { case (v, m) =>
+      assert(rowsOf(TxnMergeOnRead.readAt(spark, root, v)) === m, s"at version $v")
+    }
   }
 
   test("schema epochs, RESTORE, time travel around a checkpoint, pruned reads, CDC and a minor fold read the expected rows") {

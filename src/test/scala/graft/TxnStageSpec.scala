@@ -266,13 +266,13 @@ class TxnStageSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT AGGREGATE" -> (() => spark.sql(TxnSql.rewriteReads(spark,
         "SELECT count(*), sum(i) FROM stage_jobs")).collect())
     ).map { case (k, run) => k -> jobsDuring(run()) }
-    // the stage is one job; the rest is the snapshot's own plan: once a
-    // delete dir exists its rid anti-join broadcasts (one job), and
-    // MERGE broadcasts the snapshot side of its join (one more). A
-    // snapshot SELECT is that broadcast plus its own jobs
+    // the stage is one job; the rest is the snapshot's own plan. Live
+    // deletes cost none: their rids are in hand on the driver and filter
+    // the one scan. MERGE broadcasts the snapshot side of its join (one
+    // more job), and a snapshot SELECT runs only its own jobs
     assert(counts == Seq("INSERT VALUES" -> 0, "INSERT SELECT" -> 1,
-      "UPDATE" -> 1, "DELETE" -> 2, "MERGE" -> 3, "INSERT BATCH" -> 1,
-      "SELECT" -> 2, "SELECT AGGREGATE" -> 3))
+      "UPDATE" -> 1, "DELETE" -> 1, "MERGE" -> 2, "INSERT BATCH" -> 1,
+      "SELECT" -> 1, "SELECT AGGREGATE" -> 2))
     assert(json(TxnMergeOnRead.read(spark, root)).size == 20 + 2 + 3 - 1 + 2 + 2)
   }
 
